@@ -13,8 +13,19 @@ Layout::
 
     <root>/
       manifests/v{N}.json   snapshot N: bucket -> data version, epochs, schema
-      _CURRENT              atomic pointer (tmp + os.replace)
+      _CURRENT              main's head version (tmp file + atomic rename)
+      _REFS.json            branch and tag heads (same atomic write)
       data/v{N}/_bucket=B/  parquet for bucket B, rewritten at snapshot N
+
+Every mutation commits through ``LakeTable._commit``: allocate ``N`` as 1 +
+the newest manifest on disk, write the dirty buckets into ``data/v{N}``,
+write ``manifests/v{N}.json``, then move the ref. The contract is ONE
+WRITER PER REF. ``N`` (and so the data dir) is chosen before the write job,
+so two concurrent writers on one ref can write the same ``data/v{N}`` and
+overwrite each other's files. The parent check at commit raises
+``CommitConflictError`` when the head moved, but it is a read followed by a
+rename, not an atomic compare-and-swap, and it cannot undo a shared data
+dir.
 
 Scale properties (the reasons for each design choice):
 
@@ -214,9 +225,10 @@ def cdf_classify_emit(
 
 
 class CommitConflictError(RuntimeError):
-    """Optimistic commit lost the race: the ref advanced after this
-    operation read its base snapshot. Re-read and retry (Iceberg's
-    compare-and-swap commit contract)."""
+    """The ref advanced after this operation read its base snapshot; the
+    commit was refused. Re-read and retry. This detects a moved head; it
+    does not make concurrent writers on one ref safe (see
+    ``LakeTable._commit``)."""
 
 
 class SchemaEvolutionError(TypeError):
@@ -291,30 +303,60 @@ class LakeTable:
             return int(refs["tags"][ref])
         raise KeyError(f"no branch or tag named {ref!r}")
 
+    def _manifest_versions(self) -> list[int]:
+        """Every version with a manifest on disk, ascending: the one
+        listing of ``manifests/``. An in-flight ``.tmp.<uuid>`` write is
+        outside the ``v*.json`` filter."""
+        return sorted(
+            int(name[1:-5])
+            for name in os.listdir(os.path.join(self.root, "manifests"))
+            if name.startswith("v") and name.endswith(".json")
+        )
+
     def _next_version(self) -> int:
         """Allocate the next snapshot version: 1 + the max manifest on disk.
 
         Equals head+1 on a linear history; with branches it keeps every
         manifest file and ``data/v{N}`` dir globally unique even when two
         branches commit interleaved. Single-writer-per-branch is assumed
-        (the same contract `_CURRENT` already carries).
+        (see ``_commit``).
         """
-        mdir = os.path.join(self.root, "manifests")
-        return 1 + max(
-            int(name[1:-5])
-            for name in os.listdir(mdir)
-            if name.startswith("v") and name.endswith(".json")
-        )
+        return 1 + self._manifest_versions()[-1]
+
+    @staticmethod
+    def _atomic_write(path: str, text: str) -> None:
+        """Write ``text`` to ``path`` through a ``.tmp.<uuid>`` sibling and
+        one rename: readers see the old file or the new one, never a torn
+        one. Every metadata file (manifests, ``_CURRENT``, ``_REFS.json``)
+        is written here."""
+        tmp = f"{path}.tmp.{uuid.uuid4().hex}"
+        with open(tmp, "w") as f:
+            f.write(text)
+        os.replace(tmp, path)
+
+    def _move_ref(self, ref: str, version: int) -> None:
+        """Point ``ref`` at ``version``: main is the ``_CURRENT`` pointer,
+        any other branch its entry in ``_REFS.json``."""
+        if ref == "main":
+            self._atomic_write(os.path.join(self.root, "_CURRENT"), str(version))
+            return
+        refs = self.refs()
+        if ref not in refs["branches"]:
+            raise KeyError(f"branch {ref!r} does not exist (create_branch first)")
+        refs["branches"][ref] = int(version)
+        self._write_refs(refs)
 
     def _write_manifest(self, manifest: dict) -> None:
         version = manifest["version"]
-        # Optimistic concurrency (Iceberg's compare-and-swap commit): the
-        # snapshot was prepared against its ``parent``; if the ref moved on
-        # since — a CLI maintenance op racing a live ingest is the real
-        # case — fail loudly instead of silently orphaning the other
-        # writer's commit. The loser re-reads and retries; the abandoned
-        # data dir is ``remove_orphans`` food. Root-snapshot commits
-        # (parent None) skip the check.
+        # Parent check: the snapshot was prepared against its ``parent``; if
+        # the ref moved on since (a CLI maintenance op racing a live
+        # ingest), fail loudly instead of silently orphaning the other
+        # writer's commit; the abandoned data dir is ``remove_orphans``
+        # food. This is a read followed by a rename, not an atomic
+        # compare-and-swap: two writers can both pass it, and by now they
+        # may have written the same data dir (see ``_commit``). One writer
+        # per ref is the contract. Root-snapshot commits (parent None) skip
+        # the check.
         parent = manifest.get("parent")
         if parent is not None:
             head = self._head_version(self.ref)
@@ -325,33 +367,94 @@ class LakeTable:
                     f"and retry (abandoned data dir v{version} will be "
                     f"vacuumed by remove_orphans)"
                 )
-        path = os.path.join(self.root, "manifests", f"v{version}.json")
-        # tmp + replace: a crash mid-write must not leave a TORN manifest —
-        # it would never publish (the `_CURRENT` swap below is the commit
-        # point), but maintenance walks every manifest file on disk
-        # (`remove_orphans`, `_next_version`), and one truncated JSON would
-        # poison those walks permanently. The `.tmp.<uuid>` suffix keeps the
-        # in-flight file outside their `v*.json` filter.
-        mtmp = path + f".tmp.{uuid.uuid4().hex}"
-        with open(mtmp, "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
-        os.replace(mtmp, path)
-        # Atomic pointer swap — the commit point (Iceberg's version-hint
-        # swap). A non-main handle advances its branch ref instead of the
+        # Atomic write: a crash mid-write must not leave a TORN manifest —
+        # it would never publish (the ref move below is the commit point),
+        # but maintenance walks every manifest file on disk, and one
+        # truncated JSON would poison those walks permanently.
+        self._atomic_write(
+            os.path.join(self.root, "manifests", f"v{version}.json"),
+            json.dumps(manifest, indent=1, sort_keys=True),
+        )
+        # Moving the ref is the commit point (Iceberg's version-hint swap).
+        # A non-main handle advances its branch ref instead of the
         # published pointer: staged commits are invisible to main readers.
-        if self.ref == "main":
-            tmp = os.path.join(self.root, f"_CURRENT.tmp.{uuid.uuid4().hex}")
-            with open(tmp, "w") as f:
-                f.write(str(version))
-            os.replace(tmp, os.path.join(self.root, "_CURRENT"))
-        else:
-            refs = self.refs()
-            if self.ref not in refs["branches"]:
-                raise KeyError(
-                    f"branch {self.ref!r} does not exist (create_branch first)"
-                )
-            refs["branches"][self.ref] = int(version)
-            self._write_refs(refs)
+        self._move_ref(self.ref, version)
+
+    def _commit(
+        self,
+        manifest: dict,
+        summary: dict,
+        *,
+        data: DataFrame | None = None,
+        dirty: list[int] | None = None,
+        append: bool = False,
+        parent: int | None = None,
+        phases: dict | None = None,
+    ) -> dict:
+        """Commit ``manifest`` as this ref's next snapshot: the one commit
+        step of every mutation. Returns the committed manifest.
+
+        Stamps ``version`` (allocated here and nowhere else), ``parent``
+        (the version ``manifest`` was derived from, unless given) and
+        ``summary`` plus ``committed_at_ms``. Metadata-only commits stop
+        there.
+
+        With ``dirty`` set this is also the one data-write path. ``data``
+        (None: nothing to write) goes through :meth:`_bucket_writer` into
+        ``data/v{N}``, and the bucket map is rebased on the buckets that
+        landed there. Each ``dirty`` bucket points at ``v{N}`` if written
+        and is dropped if not (all its rows were deleted); its pending
+        merge-on-read deltas are folded, since every rewrite reads its
+        buckets delta-collapsed. With ``append`` no base moves: each
+        written bucket gains ``v{N}`` as a delta (``merge(mode="defer")``).
+        The new dir's footer stats are attached. ``phases`` receives the
+        ``write`` and ``commit`` wall times.
+
+        Concurrency: one writer per ref. ``v{N}`` is chosen before the
+        write job, so two writers on one ref can write the same data dir
+        and overwrite each other's files. :meth:`_write_manifest` raises
+        :class:`CommitConflictError` when the head moved meanwhile, but
+        that check is not an atomic compare-and-swap and cannot undo a
+        shared data dir.
+        """
+        version = self._next_version()
+        new = {
+            **manifest,
+            "version": version,
+            "parent": int(manifest["version"]) if parent is None else parent,
+        }
+        if dirty is not None:
+            out_dir = os.path.join(self.root, "data", f"v{version}")
+            t_w = time.time()
+            if data is not None:
+                self._bucket_writer(data, manifest).parquet(out_dir)
+            t_c = time.time()
+            written = {
+                int(name.split("=", 1)[1])
+                for name in (os.listdir(out_dir) if os.path.isdir(out_dir) else [])
+                if name.startswith(f"{BUCKET_COL}=")
+            }
+            buckets = dict(manifest["buckets"])
+            deltas = {b: list(vs) for b, vs in manifest.get("deltas", {}).items()}
+            if append:
+                for b in sorted(written):
+                    deltas.setdefault(str(b), []).append(version)
+            else:
+                for b in dirty:
+                    if b in written:
+                        buckets[str(b)] = version
+                    else:
+                        buckets.pop(str(b), None)
+                    deltas.pop(str(b), None)
+            new = self._with_file_stats(
+                {**new, "buckets": buckets, "deltas": deltas}, out_dir
+            )
+        new["summary"] = {"committed_at_ms": int(time.time() * 1000), **summary}
+        self._write_manifest(new)
+        if phases is not None:
+            phases["write"] = round(t_c - t_w, 3)
+            phases["commit"] = round(time.time() - t_c, 3)
+        return new
 
     # ------------------------------------------------------------------
     # refs: tags, branches, write-audit-publish
@@ -365,10 +468,10 @@ class LakeTable:
             return json.load(f)
 
     def _write_refs(self, refs: dict) -> None:
-        tmp = os.path.join(self.root, f"_REFS.tmp.{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(refs, f, indent=1, sort_keys=True)
-        os.replace(tmp, os.path.join(self.root, "_REFS.json"))
+        self._atomic_write(
+            os.path.join(self.root, "_REFS.json"),
+            json.dumps(refs, indent=1, sort_keys=True),
+        )
 
     def create_tag(self, name: str, version: int | None = None) -> int:
         """Immutable named snapshot pointer (Iceberg tag analogue)."""
@@ -451,10 +554,7 @@ class LakeTable:
                 f"main (v{main_v}) diverged from branch {branch!r} fork "
                 f"point; refusing to fast-forward to v{head}"
             )
-        tmp = os.path.join(self.root, f"_CURRENT.tmp.{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            f.write(str(head))
-        os.replace(tmp, os.path.join(self.root, "_CURRENT"))
+        self._move_ref("main", head)
         if drop:
             refs = self.refs()
             refs["branches"].pop(branch, None)
@@ -484,20 +584,9 @@ class LakeTable:
                 f"v{version} is not an ancestor of {self.ref!r} head "
                 f"v{head_v}; cannot roll back across branches"
             )
-        target = self.manifest(version)
-        new_version = self._next_version()
-        self._write_manifest(
-            {
-                **target,
-                "version": new_version,
-                "parent": head_v,
-                "summary": {
-                    "committed_at_ms": int(time.time() * 1000),
-                    "rolled_back_to": version,
-                },
-            }
-        )
-        return new_version
+        return self._commit(
+            self.manifest(version), {"rolled_back_to": version}, parent=head_v
+        )["version"]
 
     # ------------------------------------------------------------------
     # reads
@@ -581,6 +670,22 @@ class LakeTable:
             out[name.split("=", 1)[1]] = stats
         return out
 
+    @staticmethod
+    def _live_files(manifest: dict) -> list[tuple[int, str]]:
+        """``(data version, bucket)`` of every file set a snapshot
+        references: each bucket's base plus each pending merge-on-read
+        delta. The one walk behind stats, pruning, reads and both GC
+        sweeps."""
+        return [(int(v), b) for b, v in manifest["buckets"].items()] + [
+            (int(v), b) for b, vs in manifest.get("deltas", {}).items() for v in vs
+        ]
+
+    def _referenced_data(self, versions: list[int]) -> set[int]:
+        """Data versions the manifests of ``versions`` reference."""
+        return {
+            dv for v in versions for dv, _ in self._live_files(self.manifest(v))
+        }
+
     def _with_file_stats(self, new_manifest: dict, out_dir: str) -> dict:
         """Attach ``file_stats`` to a manifest about to be committed.
 
@@ -597,13 +702,7 @@ class LakeTable:
         carried = dict(new_manifest.get("file_stats", {}))
         for b, st in fresh.items():
             carried[f"v{new_version}/{b}"] = st
-        live = {
-            f"v{int(v)}/{b}" for b, v in new_manifest.get("buckets", {}).items()
-        } | {
-            f"v{int(v)}/{b}"
-            for b, vs in new_manifest.get("deltas", {}).items()
-            for v in vs
-        }
+        live = {f"v{v}/{b}" for v, b in self._live_files(new_manifest)}
         return {
             **new_manifest,
             "file_stats": {k: v for k, v in carried.items() if k in live},
@@ -645,24 +744,16 @@ class LakeTable:
         which is exactly when no winner row can match.
         """
         fstats = manifest.get("file_stats", {})
-        deltas = manifest.get("deltas", {})
         if manifest.get("column_mapping"):
             # file stats are recorded under PHYSICAL names (read straight
             # from parquet footers); callers prune on logical names
             mapping = self._column_mapping(manifest)
             prune = {mapping.get(c, c): b for c, b in prune.items()}
-        keep = []
-        for b in {*manifest["buckets"], *deltas}:
-            pairs = []
-            if b in manifest["buckets"]:
-                pairs.append((int(manifest["buckets"][b]), b))
-            pairs += [(int(v), b) for v in deltas.get(b, [])]
-            if any(
-                self._stats_may_match(fstats.get(f"v{v}/{b}"), prune)
-                for v, b in pairs
-            ):
-                keep.append(int(b))
-        return sorted(keep)
+        return sorted({
+            int(b)
+            for v, b in self._live_files(manifest)
+            if self._stats_may_match(fstats.get(f"v{v}/{b}"), prune)
+        })
 
     def _read_buckets(
         self,
@@ -688,16 +779,12 @@ class LakeTable:
             buckets = pruned if buckets is None else sorted(
                 set(buckets) & set(pruned)
             )
-        assignments = manifest["buckets"]
+        pairs = self._live_files(manifest)
         deltas = manifest.get("deltas", {})
         if buckets is not None:
             sel = set(buckets)
-            assignments = {b: v for b, v in assignments.items() if int(b) in sel}
+            pairs = [(v, b) for v, b in pairs if int(b) in sel]
             deltas = {b: vs for b, vs in deltas.items() if int(b) in sel}
-        # (version, bucket) pairs: the base file of each bucket + every
-        # pending delta version that touched it.
-        pairs = [(int(v), b) for b, v in assignments.items()]
-        pairs += [(int(v), b) for b, vs in deltas.items() for v in vs]
         if not pairs:
             return None
         # Group by data version: one parquet scan per version dir with
@@ -1206,25 +1293,18 @@ class LakeTable:
             else f_
             for f_ in schema.fields
         ]
-        new_version = self._next_version()
-        self._write_manifest(
+        return self._commit(
             {
                 **manifest,
-                "version": new_version,
-                "parent": int(manifest["version"]),
                 "schema": json.loads(T.StructType(fields).json()),
                 "column_mapping": cm,
                 "next_column_id": next_id,
                 "key_columns": [
                     new if k == old else k for k in manifest["key_columns"]
                 ],
-                "summary": {
-                    "committed_at_ms": int(time.time() * 1000),
-                    "renamed_column": {"from": old, "to": new},
-                },
-            }
-        )
-        return new_version
+            },
+            {"renamed_column": {"from": old, "to": new}},
+        )["version"]
 
     def drop_column(self, name: str) -> int:
         """Metadata-only column drop (``ALTER TABLE DROP COLUMN``).
@@ -1253,23 +1333,16 @@ class LakeTable:
         retired = list(manifest.get("retired_physical", []))
         retired.append(entry["physical"])
         fields = [f_ for f_ in schema.fields if f_.name != name]
-        new_version = self._next_version()
-        self._write_manifest(
+        return self._commit(
             {
                 **manifest,
-                "version": new_version,
-                "parent": int(manifest["version"]),
                 "schema": json.loads(T.StructType(fields).json()),
                 "column_mapping": cm,
                 "next_column_id": next_id,
                 "retired_physical": retired,
-                "summary": {
-                    "committed_at_ms": int(time.time() * 1000),
-                    "dropped_column": name,
-                },
-            }
-        )
-        return new_version
+            },
+            {"dropped_column": name},
+        )["version"]
 
     def _bucket_writer(self, df: DataFrame, manifest: dict):
         """The one parquet writer every data path uses: bucket-partitioned,
@@ -1281,11 +1354,13 @@ class LakeTable:
         :meth:`lookup` skip row groups after bucket pruning has done the
         directory-level work. Key columns only: blooming the payload (the
         wide content column) would bloat every file for a predicate shape
-        the engine never pushes. parquet-mr materializes the filter only
-        when a chunk falls back from dictionary encoding — low-cardinality
-        chunks already carry exact membership in the dictionary page, so
-        the bloom appears precisely where it pays: high-cardinality keys at
-        scale. Disable per table with ``create(..., bloom_keys=False)``.
+        the engine never pushes. parquet-mr writes the filter whenever a
+        chunk falls back from dictionary to PLAIN encoding, which a small
+        chunk of distinct values does because its dictionary saves nothing,
+        and writes it unsized: about 1 MB per key column however few rows
+        the chunk holds. So tiny files carry them too: a data file of 1-3
+        rows measures 1-2 MB, of which the row group is 171-352 bytes.
+        Disable per table with ``create(..., bloom_keys=False)``.
         """
         cm = manifest.get("column_mapping") or {}
         if cm:
@@ -1679,8 +1754,16 @@ class LakeTable:
         if mapping_updates:
             manifest = {**manifest, **mapping_updates}
         phases = {"stats": prep.stats_seconds}
+        body = {
+            **manifest,
+            "epochs": {**manifest["epochs"]}
+            if epoch_id is None
+            else {**manifest["epochs"], stream_id: epoch_id},
+            "schema": new_schema_json or manifest["schema"],
+        }
         try:
             dirty = sorted(int(r[BUCKET_COL]) for r in bucket_counts)
+            summary = {"source_rows": src_rows, "dirty_buckets": len(dirty)}
 
             if mode == "defer":
                 # Bound read amplification: once a dirty bucket has
@@ -1696,51 +1779,23 @@ class LakeTable:
             if mode == "defer":
                 # Merge-on-read: append collapsed winners as delta files and
                 # commit; the target is never read, so epoch cost is O(batch).
-                collapsed = src_winners  # both plans pre-collapse to one row/key
-                new_version = self._next_version()
-                out_dir = os.path.join(self.root, "data", f"v{new_version}")
-                t_w = time.time()
-                self._bucket_writer(
-                    collapsed.repartition(max(len(dirty), 1), F.col(BUCKET_COL)),
-                    manifest,
-                ).parquet(out_dir)
-                phases["write"] = round(time.time() - t_w, 3)
-                t_c = time.time()
-                written = {
-                    int(name.split("=", 1)[1])
-                    for name in os.listdir(out_dir)
-                    if name.startswith(f"{BUCKET_COL}=")
-                }
-                delta_map = {
-                    b: list(vs) for b, vs in manifest.get("deltas", {}).items()
-                }
-                for b in sorted(written):
-                    delta_map.setdefault(str(b), []).append(new_version)
-                self._write_manifest(
-                    self._with_file_stats({
-                        **manifest,
-                        "version": new_version,
-                        "parent": int(manifest["version"]),
-                        "deltas": delta_map,
-                        "epochs": {**manifest["epochs"]}
-                        if epoch_id is None
-                        else {**manifest["epochs"], stream_id: epoch_id},
-                        "schema": new_schema_json or manifest["schema"],
-                        "summary": {
-                            "committed_at_ms": int(time.time() * 1000),
-                            "source_rows": src_rows,
-                            "dirty_buckets": len(dirty),
-                            "mode": "defer",
-                        },
-                    }, out_dir)
+                # Both plans pre-collapse src_winners to one row per key.
+                committed = self._commit(
+                    body,
+                    {**summary, "mode": "defer"},
+                    data=src_winners.repartition(
+                        max(len(dirty), 1), F.col(BUCKET_COL)
+                    ),
+                    dirty=dirty,
+                    append=True,
+                    phases=phases,
                 )
-                phases["commit"] = round(time.time() - t_c, 3)
                 return MergeStats(
                     epoch_id=epoch_id,
                     skipped=False,
                     source_rows=src_rows,
                     dirty_buckets=len(dirty),
-                    total_buckets=len(manifest["buckets"]),
+                    total_buckets=len(committed["buckets"]),
                     # the appended delta rows ARE the winner set (one
                     # LWW-collapsed row per key) — same meaning as the
                     # rewrite path's count; replicate() reports it
@@ -1873,63 +1928,25 @@ class LakeTable:
             # compacting path bounds output to one file per touched bucket;
             # the map-only path streams carried rows straight from their
             # bucket files into the new version.
-            new_version = self._next_version()
-            out_dir = os.path.join(self.root, "data", f"v{new_version}")
             if compact:
                 live = live.repartition(max(len(dirty), 1), F.col(BUCKET_COL))
-            t_w = time.time()
-            self._bucket_writer(live, manifest).parquet(out_dir)
-            phases["write"] = round(time.time() - t_w, 3)
+            # the rewrite folds the dirty buckets' pending deltas into the
+            # new base files (the target was delta-collapsed by _read_buckets)
+            committed = self._commit(
+                body, summary, data=live, dirty=dirty, phases=phases
+            )
         finally:
             # unpersist on every exit path -- a write/schema failure must
             # not leak the cached winners for the session's lifetime
             winner_counts.unpersist()
             if plan_b:
                 src_winners.unpersist()
-        t_c = time.time()
-        written = {
-            int(name.split("=", 1)[1])
-            for name in os.listdir(out_dir)
-            if name.startswith(f"{BUCKET_COL}=")
-        }
-
-        buckets = dict(manifest["buckets"])
-        for b in dirty:
-            if b in written:
-                buckets[str(b)] = new_version
-            else:
-                buckets.pop(str(b), None)  # bucket fully deleted
-        # A rewrite folds any pending deltas of its dirty buckets into the
-        # new base files (the target was delta-collapsed by _read_buckets).
-        delta_map = {
-            b: list(vs)
-            for b, vs in manifest.get("deltas", {}).items()
-            if int(b) not in set(dirty)
-        }
-        new_manifest = {
-            **manifest,
-            "version": new_version,
-            "parent": int(manifest["version"]),
-            "buckets": buckets,
-            "deltas": delta_map,
-            "epochs": {**manifest["epochs"]}
-            if epoch_id is None
-            else {**manifest["epochs"], stream_id: epoch_id},
-            "schema": new_schema_json or manifest["schema"],
-            "summary": {
-                "committed_at_ms": int(time.time() * 1000),
-                "source_rows": src_rows,
-                "dirty_buckets": len(dirty),
-            },
-        }
-        self._write_manifest(self._with_file_stats(new_manifest, out_dir))
-        phases["commit"] = round(time.time() - t_c, 3)
         return MergeStats(
             epoch_id=epoch_id,
             skipped=False,
             source_rows=src_rows,
             dirty_buckets=len(dirty),
-            total_buckets=len(buckets),
+            total_buckets=len(committed["buckets"]),
             rows_written=prep.n_winner_keys,
             schema_added_columns=added,
             schema_widened_columns=widened,
@@ -2086,8 +2103,6 @@ class LakeTable:
         if not todo:
             return 0
         folded = self._read_buckets(manifest, todo)
-        new_version = self._next_version()
-        out_dir = os.path.join(self.root, "data", f"v{new_version}")
         clustered = folded.repartition(len(todo), F.col(BUCKET_COL))
         if zorder_by:
             clustered = clustered.withColumn(
@@ -2098,34 +2113,15 @@ class LakeTable:
             # buckets in one task, and partitionBy splits them back into
             # separate files — each must stay internally sorted
             clustered = clustered.sortWithinPartitions(BUCKET_COL, *sort_by)
-        self._bucket_writer(clustered, manifest).parquet(out_dir)
-        written = {
-            int(name.split("=", 1)[1])
-            for name in os.listdir(out_dir)
-            if name.startswith(f"{BUCKET_COL}=")
-        }
-        bmap = dict(manifest["buckets"])
-        for b in todo:
-            if b in written:
-                bmap[str(b)] = new_version
-            else:
-                bmap.pop(str(b), None)
-        self._write_manifest(
-            self._with_file_stats({
-                **manifest,
-                "version": new_version,
-                "parent": int(manifest["version"]),
-                "buckets": bmap,
-                "deltas": {
-                    b: list(vs) for b, vs in pending.items() if int(b) not in set(todo)
-                },
-                "summary": {
-                    "committed_at_ms": int(time.time() * 1000),
-                    "compacted_buckets": len(todo),
-                    **({"sort_order": list(sort_by)} if sort_by else {}),
-                    **({"zorder": list(zorder_by)} if zorder_by else {}),
-                },
-            }, out_dir)
+        self._commit(
+            manifest,
+            {
+                "compacted_buckets": len(todo),
+                **({"sort_order": list(sort_by)} if sort_by else {}),
+                **({"zorder": list(zorder_by)} if zorder_by else {}),
+            },
+            data=clustered,
+            dirty=todo,
         )
         return len(todo)
 
@@ -2155,12 +2151,9 @@ class LakeTable:
         if n == int(manifest["num_buckets"]):
             return 0
         keys = manifest["key_columns"]
-        new_version = self._next_version()
         df = self._read_buckets(manifest, None)
-        bmap: dict[str, int] = {}
-        out_dir = os.path.join(self.root, "data", f"v{new_version}")
         if df is not None:
-            self._bucket_writer(
+            df = (
                 df.drop(BUCKET_COL)
                 .withColumn(
                     BUCKET_COL,
@@ -2168,29 +2161,17 @@ class LakeTable:
                         F.xxhash64(*[F.col(k) for k in keys]), F.lit(n)
                     ).cast("int"),
                 )
-                .repartition(n, F.col(BUCKET_COL)),
-                manifest,
-            ).parquet(out_dir)
-            bmap = {
-                name.split("=", 1)[1]: new_version
-                for name in os.listdir(out_dir)
-                if name.startswith(f"{BUCKET_COL}=")
-            }
-        self._write_manifest(
-            self._with_file_stats({
-                **manifest,
-                "version": new_version,
-                "parent": int(manifest["version"]),
-                "num_buckets": n,
-                "buckets": bmap,
-                "deltas": {},  # folded into the rewrite by _read_buckets
-                "summary": {
-                    "committed_at_ms": int(time.time() * 1000),
-                    "rebucketed_to": n,
-                },
-            }, out_dir)
+                .repartition(n, F.col(BUCKET_COL))
+            )
+        committed = self._commit(
+            # every old file is replaced: the new layout starts empty, and
+            # the deltas were folded into the rewrite by _read_buckets
+            {**manifest, "num_buckets": n, "buckets": {}, "deltas": {}},
+            {"rebucketed_to": n},
+            data=df,
+            dirty=list(range(n)),
         )
-        return len(bmap)
+        return len(committed["buckets"])
 
     # ------------------------------------------------------------------
     # retention
@@ -2223,9 +2204,7 @@ class LakeTable:
             "num_buckets": int(m["num_buckets"]),
             "buckets_with_data": len(m["buckets"]),
             "pending_delta_buckets": len(m.get("deltas", {})),
-            "data_versions_referenced": sorted({
-                int(v) for v in m["buckets"].values()
-            } | {int(v) for vs in m.get("deltas", {}).values() for v in vs}),
+            "data_versions_referenced": sorted({v for v, _ in self._live_files(m)}),
             "physical_rows": sum(counts),
             "rows_per_bucket": {
                 "min": counts[0] if counts else 0,
@@ -2275,11 +2254,13 @@ class LakeTable:
 
         Each merge writes dirty buckets into a fresh ``data/v{N}`` dir while
         clean buckets keep referencing older dirs, so storage grows with
-        UPDATE churn until expiry. A data dir is deleted only when no
-        retained manifest references it; retained = the newest ``keep_last``
-        manifests (older manifest files are removed too, ending their
-        time-travel window). Returns ``{"data_versions_removed": …,
-        "manifests_removed": …}``.
+        UPDATE churn until expiry. A data dir is deleted only when an
+        expired manifest references it and no retained manifest does;
+        retained = the newest ``keep_last`` manifests (older manifest files
+        are removed too, ending their time-travel window). A dir no
+        manifest references, such as an in-flight merge's write before its
+        commit, is left to :meth:`remove_orphans` and its grace window.
+        Returns ``{"data_versions_removed": …, "manifests_removed": …}``.
 
         ``older_than_ms`` adds Iceberg's time-based guard: a snapshot whose
         commit timestamp is at or after the cutoff is retained even beyond
@@ -2291,11 +2272,7 @@ class LakeTable:
             raise ValueError("keep_last must be >= 1")
         current = self._head_version("main")
         manifest_dir = os.path.join(self.root, "manifests")
-        versions = sorted(
-            int(name[1:-5])
-            for name in os.listdir(manifest_dir)
-            if name.startswith("v") and name.endswith(".json")
-        )
+        versions = self._manifest_versions()
         # Retained = the newest keep_last snapshots along MAIN's ancestry
         # (parent chain, so versions allocated to branches don't shrink
         # main's time-travel window) + every tag head + every branch's
@@ -2331,30 +2308,19 @@ class LakeTable:
                     )
                 if ts >= older_than_ms:
                     retained_set.add(v)
-        retained = sorted(v for v in versions if v in retained_set)
-        live_data: set[int] = set()
-        for v in retained:
-            m = self.manifest(v)
-            live_data.update(int(dv) for dv in m["buckets"].values())
-            # pending merge-on-read delta dirs are live data too
-            for vs in m.get("deltas", {}).values():
-                live_data.update(int(dv) for dv in vs)
-        data_dir = os.path.join(self.root, "data")
+        retained = [v for v in versions if v in retained_set]
+        expired = [v for v in versions if v not in retained_set]
         removed_data = 0
-        for name in sorted(os.listdir(data_dir)):
-            # Only v<digits> dirs are ours; skip stray artifacts (temp dirs,
-            # _SUCCESS-style markers) instead of aborting GC midway.
-            if not name.startswith("v") or not name[1:].isdigit():
-                continue
-            if int(name[1:]) not in live_data:
-                shutil.rmtree(os.path.join(data_dir, name))
+        for dv in sorted(
+            self._referenced_data(expired) - self._referenced_data(retained)
+        ):
+            path = os.path.join(self.root, "data", f"v{dv}")
+            if os.path.isdir(path):
+                shutil.rmtree(path)
                 removed_data += 1
-        removed_manifests = 0
-        for v in versions:
-            if v not in retained:
-                os.remove(os.path.join(manifest_dir, f"v{v}.json"))
-                removed_manifests += 1
-        return {"data_versions_removed": removed_data, "manifests_removed": removed_manifests}
+        for v in expired:
+            os.remove(os.path.join(manifest_dir, f"v{v}.json"))
+        return {"data_versions_removed": removed_data, "manifests_removed": len(expired)}
 
     def purge_tombstones(self, below_lsn: int) -> int:
         """Physically drop delete markers with ``_lsn < below_lsn``.
@@ -2380,41 +2346,11 @@ class LakeTable:
         if not dirty:
             return 0
         keep = self._read_buckets(manifest, dirty).filter(~is_purgeable)
-        new_version = self._next_version()
-        out_dir = os.path.join(self.root, "data", f"v{new_version}")
-        self._bucket_writer(
-            keep.repartition(len(dirty), F.col(BUCKET_COL)), manifest
-        ).parquet(out_dir)
-        written = {
-            int(name.split("=", 1)[1])
-            for name in os.listdir(out_dir)
-            if name.startswith(f"{BUCKET_COL}=")
-        }
-        buckets = dict(manifest["buckets"])
-        for b in dirty:
-            if b in written:
-                buckets[str(b)] = new_version
-            else:
-                buckets.pop(str(b), None)  # bucket held only purged markers
-        self._write_manifest(
-            self._with_file_stats({
-                **manifest,
-                "version": new_version,
-                "parent": int(manifest["version"]),
-                "buckets": buckets,
-                # rewritten buckets absorbed their pending deltas (the read
-                # above was delta-collapsed)
-                "deltas": {
-                    b: list(vs)
-                    for b, vs in manifest.get("deltas", {}).items()
-                    if int(b) not in set(dirty)
-                },
-                "summary": {
-                    "committed_at_ms": int(time.time() * 1000),
-                    "purged_below_lsn": below_lsn,
-                    "rewritten_buckets": len(dirty),
-                },
-            }, out_dir)
+        self._commit(
+            manifest,
+            {"purged_below_lsn": below_lsn, "rewritten_buckets": len(dirty)},
+            data=keep.repartition(len(dirty), F.col(BUCKET_COL)),
+            dirty=dirty,
         )
         return len(dirty)
 
@@ -2490,42 +2426,11 @@ class LakeTable:
                 if c in assignments else F.col(c)
                 for c in df.columns
             ])
-        new_version = self._next_version()
-        out_dir = os.path.join(self.root, "data", f"v{new_version}")
-        self._bucket_writer(
-            out.repartition(len(dirty), F.col(BUCKET_COL)), manifest
-        ).parquet(out_dir)
-        written = {
-            int(name.split("=", 1)[1])
-            for name in os.listdir(out_dir)
-            if name.startswith(f"{BUCKET_COL}=")
-        }
-        buckets = dict(manifest["buckets"])
-        for b in dirty:
-            if b in written:
-                buckets[str(b)] = new_version
-            else:
-                buckets.pop(str(b), None)  # a delete emptied the bucket
-        self._write_manifest(
-            self._with_file_stats({
-                **manifest,
-                "version": new_version,
-                "parent": int(manifest["version"]),
-                "buckets": buckets,
-                # rewritten buckets were read delta-collapsed: their pending
-                # merge-on-read deltas are folded into the new base files
-                "deltas": {
-                    b: list(vs)
-                    for b, vs in manifest.get("deltas", {}).items()
-                    if int(b) not in set(dirty)
-                },
-                "summary": {
-                    "committed_at_ms": int(time.time() * 1000),
-                    "op": op,
-                    "rows_matched": matched,
-                    "rewritten_buckets": len(dirty),
-                },
-            }, out_dir)
+        self._commit(
+            manifest,
+            {"op": op, "rows_matched": matched, "rewritten_buckets": len(dirty)},
+            data=out.repartition(len(dirty), F.col(BUCKET_COL)),
+            dirty=dirty,
         )
         return {"op": op, "rows_matched": matched, "buckets_rewritten": len(dirty)}
 
@@ -2804,44 +2709,18 @@ class LakeTable:
             out = with_action.filter(F.col("__a").isin("U", "I", "C")).select(
                 F.col(BUCKET_COL), *[out_col(c) for c in cur_cols]
             )
-            new_version = self._next_version()
-            out_dir = os.path.join(self.root, "data", f"v{new_version}")
-            self._bucket_writer(
-                out.repartition(len(dirty), F.col(BUCKET_COL)), manifest
-            ).parquet(out_dir)
-            written = {
-                int(name.split("=", 1)[1])
-                for name in os.listdir(out_dir)
-                if name.startswith(f"{BUCKET_COL}=")
-            }
-            buckets = dict(manifest["buckets"])
-            for b in dirty:
-                if b in written:
-                    buckets[str(b)] = new_version  # adds insert-only buckets too
-                else:
-                    buckets.pop(str(b), None)      # a delete emptied the bucket
-            self._write_manifest(
-                self._with_file_stats({
-                    **manifest,
-                    "version": new_version,
-                    "parent": int(manifest["version"]),
-                    "buckets": buckets,
-                    # dirty buckets were read delta-collapsed: their pending
-                    # merge-on-read deltas are folded into the new base files
-                    "deltas": {
-                        b: list(vs)
-                        for b, vs in manifest.get("deltas", {}).items()
-                        if int(b) not in set(dirty)
-                    },
-                    "summary": {
-                        "committed_at_ms": int(time.time() * 1000),
-                        "op": "merge_into",
-                        "rows_updated": result["rows_updated"],
-                        "rows_deleted": result["rows_deleted"],
-                        "rows_inserted": result["rows_inserted"],
-                        "rewritten_buckets": len(dirty),
-                    },
-                }, out_dir)
+            # insert-only buckets are dirty too: the commit adds them
+            self._commit(
+                manifest,
+                {
+                    "op": "merge_into",
+                    "rows_updated": result["rows_updated"],
+                    "rows_deleted": result["rows_deleted"],
+                    "rows_inserted": result["rows_inserted"],
+                    "rewritten_buckets": len(dirty),
+                },
+                data=out.repartition(len(dirty), F.col(BUCKET_COL)),
+                dirty=dirty,
             )
             result["buckets_rewritten"] = len(dirty)
             return result
@@ -2897,15 +2776,7 @@ class LakeTable:
 
         Returns ``{"removed": [version, …], "kept_young": n}``.
         """
-        manifest_dir = os.path.join(self.root, "manifests")
-        live: set[int] = set()
-        for name in os.listdir(manifest_dir):
-            if not (name.startswith("v") and name.endswith(".json")):
-                continue
-            m = self.manifest(int(name[1:-5]))
-            live.update(int(v) for v in m["buckets"].values())
-            for vs in m.get("deltas", {}).values():
-                live.update(int(v) for v in vs)
+        live = self._referenced_data(self._manifest_versions())
         data_dir = os.path.join(self.root, "data")
         now = time.time()
         removed, kept_young = [], 0

@@ -81,17 +81,20 @@ def _parse_env_once(df: DataFrame, json_col: str, env: T.StructType) -> DataFram
     codegen subexpression elimination cannot share — the envelope ends up
     parsed (and, when ``json_col`` is itself computed, e.g. a ``to_json``
     render in a test fixture, re-rendered) several times per row. Wrapping
-    the parse in a nondeterministic no-op guard (``rand() >= -1`` is always
-    true, so the value is unchanged and deterministic) pins it to a single
-    Project node: the optimizer may not duplicate, push past, or collapse
-    nondeterministic expressions, so the filter and all extracted columns
-    reference the one computed struct. Measured on a 1M-row rendered tail:
-    3 full render+parse evaluations -> 1 (8.6 s -> 3.1 s).
+    the parse in a nondeterministic no-op guard (``spark_partition_id() >=
+    0`` is always true, so the value is unchanged and deterministic) pins it
+    to a single Project node: the optimizer may not duplicate, push past, or
+    collapse nondeterministic expressions, so the filter and all extracted
+    columns reference the one computed struct. Measured on a 1M-row
+    rendered tail: 3 full render+parse evaluations -> 1 (8.6 s -> 3.1 s).
+    The guard must be one no rule can fold: the earlier ``rand(7) >= -1``
+    is rewritten to ``true`` by Spark 4's ``OptimizeRand``, after which the
+    validity filter was pushed below the parse with its own pruned copy.
     """
     return df.withColumn(
         "__env",
         F.when(
-            F.rand(7) >= F.lit(-1.0),
+            F.spark_partition_id() >= F.lit(0),
             F.from_json(F.col(json_col).cast("string"), env),
         ),
     )

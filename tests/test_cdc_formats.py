@@ -63,6 +63,22 @@ class TestDebezium:
         bad = kept.filter(F.col("_corrupt_record").isNotNull()).collect()
         assert len(bad) == 2  # both lines dead-lettered with the raw text
 
+    def test_envelope_parsed_once_in_optimized_plan(self, spark):
+        # the optimizer must not inline the envelope parse into the validity
+        # filter and every extracted column (_parse_env_once's rand guard);
+        # a computed (non-local) JSON column keeps the projection in the plan
+        env = F.struct(
+            F.struct(F.col("id"), F.lit("n").alias("name"),
+                     F.lit(1.0).alias("score")).alias("after"),
+            F.struct(F.col("id").alias("lsn")).alias("source"),
+            F.lit("c").alias("op"),
+        )
+        df = spark.range(3).select(F.to_json(env).alias("value"))
+        out = debezium_to_merge_source(df, ROW, ["id"])
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("from_json(") == 1, plan
+        assert out.count() == 3
+
     def test_bad_key_column(self, spark):
         df = spark.createDataFrame([("{}",)], "value string")
         with pytest.raises(ValueError, match="key columns"):

@@ -159,6 +159,18 @@ class TestRemoveOrphans:
         assert os.path.isdir(orphan)
         shutil.rmtree(orphan)
 
+    def test_expire_leaves_uncommitted_dir_alone(self, spark, table, tmp_path):
+        # an in-flight merge's freshly written dir: no manifest references it
+        # YET, and the writer's next commit will. Only remove_orphans, with
+        # its grace window, may reclaim a dir no manifest ever referenced.
+        data_dir = os.path.join(str(tmp_path / "lake"), "data")
+        inflight = os.path.join(data_dir, "v9999")
+        os.makedirs(inflight)
+        table.expire_snapshots(keep_last=1)
+        assert os.path.isdir(inflight)
+        assert table.read().count() == 400
+        shutil.rmtree(inflight)
+
     def test_branch_referenced_version_is_not_orphan(self, spark, table, tmp_path):
         # stage a WAP write on a branch: its data version is referenced only
         # by the branch manifest, and must survive vacuum
