@@ -596,6 +596,40 @@ class LakeTable:
             return None
         return T.StructType.fromJson(manifest["schema"])
 
+    def _empty_frame(self, schema: T.StructType) -> DataFrame:
+        """An empty frame of exactly ``schema`` (names, types, nullability,
+        metadata), built as a JVM ``LocalRelation``: no rows are pickled and
+        no Python worker starts, and the optimizer folds joins and unions
+        against it away."""
+        jspark = self.spark._jsparkSession
+        jdf = jspark.createDataFrame(
+            self.spark._jvm.java.util.ArrayList(),
+            jspark.parseDataType(schema.json()),
+        )
+        return DataFrame(jdf, self.spark)
+
+    def _key_rows(self, key_schema: T.StructType, rows: list[dict]) -> DataFrame:
+        """The requested key tuples as a JVM ``LocalRelation``: a ``VALUES``
+        query with one ``CAST(:param AS <key type>)`` per cell. The values are
+        bound parameters, never SQL text, and the relation is constant, so a
+        projection over it (the bucket expression) folds to a
+        ``LocalTableScan`` that collects on the driver without a Spark job."""
+        args: dict = {}
+        tuples = []
+        for i, r in enumerate(rows):
+            cells = []
+            for j, f_ in enumerate(key_schema.fields):
+                args[f"k{i}_{j}"] = r[f_.name]
+                cells.append(f"CAST(:k{i}_{j} AS {f_.dataType.simpleString()})")
+            tuples.append(f"({', '.join(cells)})")
+        names = ", ".join(
+            "`" + f_.name.replace("`", "``") + "`" for f_ in key_schema.fields
+        )
+        return self.spark.sql(
+            f"SELECT * FROM VALUES {', '.join(tuples)} AS __keys({names})",
+            args=args,
+        )
+
     # ------------------------------------------------------------------
     # file-level column statistics (manifest data skipping)
     # ------------------------------------------------------------------
@@ -881,7 +915,7 @@ class LakeTable:
         if df is None:
             if schema is None:
                 raise ValueError("empty table with no schema yet")
-            return self.spark.createDataFrame([], schema)
+            return self._empty_frame(schema)
         if TOMBSTONE_COL in df.columns:
             df = df.filter(~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)))
         if prune:
@@ -906,11 +940,11 @@ class LakeTable:
         table for ``k`` keys instead of a full snapshot scan. At 100 TB and
         the default 64 buckets, a single-key fetch touches ~1.6% of the
         data; real deployments size ``num_buckets`` so one bucket is a few
-        GB and a lookup is sub-second. The bucket ids come from ONE tiny
-        Spark job over the literal key rows (the SAME ``pmod(xxhash64(*keys),
-        n)`` expression the writer uses — never a Python reimplementation
-        that could drift), then directory pruning in ``_read_buckets`` does
-        the skipping.
+        GB and a lookup is sub-second. The bucket ids are constant-folded on
+        the driver, with no Spark job, from the literal key rows (the SAME
+        ``pmod(xxhash64(*keys), n)`` expression the writer uses — never a
+        Python reimplementation that could drift), then directory pruning
+        in ``_read_buckets`` does the skipping. No Python worker starts.
 
         ``keys``: one dict (or a list of dicts) mapping EVERY key column to
         a value; NULL components are legal (matched null-safely, mirroring
@@ -928,10 +962,9 @@ class LakeTable:
             missing = [k for k in key_cols if k not in r]
             if missing:
                 raise ValueError(f"lookup key missing columns: {missing}")
-        key_schema = T.StructType([f_ for f_ in schema.fields if f_.name in key_cols])
-        keys_df = self.spark.createDataFrame(
-            [tuple(r[k] for k in key_cols) for r in rows], key_schema
-        )
+        if not rows:
+            return self._empty_frame(schema)
+        keys_df = self._key_rows(T.StructType([schema[k] for k in key_cols]), rows)
         bucket_rows = keys_df.select(
             F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(n_buckets))
             .cast("int")
@@ -940,25 +973,23 @@ class LakeTable:
         buckets = sorted({r["__b"] for r in bucket_rows})
         df = self._read_buckets(manifest, buckets)
         if df is None:
-            return self.spark.createDataFrame([], schema)
-        if len(rows) == 1:
-            # single key: plain (null-safe) predicates — these PUSH DOWN to
-            # the parquet row-group stats inside the pruned bucket
-            for k in key_cols:
-                df = df.filter(F.col(k).eqNullSafe(F.lit(rows[0][k])))
+            return self._empty_frame(schema)
+        if len(rows) == 1 or any(r[k] is None for r in rows for k in key_cols):
+            # one key, or a NULL key component (a semi-join ON uses plain
+            # equality and would never match it): a null-safe disjunction of
+            # per-key conjunctions, bounded by the request size. A single
+            # key's predicates PUSH DOWN to the parquet row-group stats
+            # inside the pruned bucket.
+            conds = None
+            for r in rows:
+                c = None
+                for k in key_cols:
+                    e = F.col(k).eqNullSafe(F.lit(r[k]))
+                    c = e if c is None else (c & e)
+                conds = c if conds is None else (conds | c)
+            df = df.filter(conds)
         else:
             df = df.join(F.broadcast(keys_df), on=key_cols, how="left_semi")
-            if any(r[k] is None for r in rows for k in key_cols):
-                # semi-join ON uses plain equality; re-add null-keyed rows
-                # null-safely (rare path, bounded by the request size)
-                conds = None
-                for r in rows:
-                    c = F.lit(True)
-                    for k in key_cols:
-                        c = c & F.col(k).eqNullSafe(F.lit(r[k]))
-                    conds = c if conds is None else (conds | c)
-                base = self._read_buckets(manifest, buckets)
-                df = base.filter(conds)
         if TOMBSTONE_COL in df.columns:
             df = df.filter(~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)))
         return df.select(*[f_.name for f_ in schema.fields])
@@ -1024,18 +1055,16 @@ class LakeTable:
         if schema is None:
             raise ValueError("table has no schema yet (nothing was ever merged)")
         out_fields = [f_.name for f_ in schema.fields]
-        empty = self.spark.createDataFrame(
-            [],
-            T.StructType(
-                schema.fields
-                + [
-                    T.StructField("_change_type", T.StringType(), False),
-                    T.StructField("_commit_version", T.LongType(), False),
-                ]
-            ),
-        )
         if not changed:
-            return empty
+            return self._empty_frame(
+                T.StructType(
+                    schema.fields
+                    + [
+                        T.StructField("_change_type", T.StringType(), False),
+                        T.StructField("_commit_version", T.LongType(), False),
+                    ]
+                )
+            )
         # key/output names are the TO snapshot's logical names; the old side
         # is translated onto them through the stable physical identity, so
         # the feed stays well-formed across renames (and columns dropped
@@ -1049,7 +1078,7 @@ class LakeTable:
         def side(manifest: dict, tag: str) -> DataFrame:
             df = self._read_buckets(manifest, changed)
             if df is None:
-                df = self.spark.createDataFrame([], internal)
+                df = self._empty_frame(internal)
             else:
                 df = self._translate_columns(df, manifest, m_to)
             if TOMBSTONE_COL not in df.columns:
@@ -2600,7 +2629,7 @@ class LakeTable:
                 [f_ for f_ in schema.fields if f_.name != BUCKET_COL]
                 + [T.StructField(BUCKET_COL, T.IntegerType())]
             )
-            current = self.spark.createDataFrame([], cur_schema)
+            current = self._empty_frame(cur_schema)
         cur_cols = [c for c in current.columns if c != BUCKET_COL]
         left = current.withColumn(
             BUCKET_COL, F.col(BUCKET_COL).cast("int")

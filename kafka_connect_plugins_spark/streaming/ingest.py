@@ -28,6 +28,8 @@ order-insensitive (SURVEY.md §2.2). Stateful streaming operators live in
 
 from __future__ import annotations
 
+from collections import deque
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
@@ -49,6 +51,11 @@ CHANGELOG_VALUE_TYPE = T.StructType(
         T.StructField("deleted_at", T.LongType(), True),
     ]
 )
+
+# StreamingIngest keeps only the newest per-epoch stats in memory, so a
+# long-running tail does not grow without limit; a MetricsLog, when given,
+# keeps the full history on disk.
+_EPOCH_STATS_KEPT = 1_000
 
 
 def tail_changelog(
@@ -104,7 +111,7 @@ class StreamingIngest:
         # query — see Pipeline.apply_with_dlq.
         self.dlq_dir = dlq_dir
         self.merge_mode = merge_mode
-        self.epoch_stats: list[MergeStats] = []
+        self.epoch_stats: deque[MergeStats] = deque(maxlen=_EPOCH_STATS_KEPT)
 
     # foreachBatch body — runs on the driver once per microbatch.
     def _apply(self, batch: DataFrame, epoch_id: int) -> None:
@@ -191,7 +198,8 @@ class StreamingIngest:
         timeout_sec: float | None = None,
         stream: DataFrame | None = None,
     ) -> list[MergeStats]:
-        """Drain the current log contents into the table; returns epoch stats.
+        """Drain the current log contents into the table; returns the
+        newest epoch stats (at most ``_EPOCH_STATS_KEPT``).
 
         Pass ``stream`` to drain a pre-built tail (e.g. a Debezium/Mongo
         JSON-lines tail from :func:`sources.cdc_formats.tail_wire_format`)
@@ -206,4 +214,4 @@ class StreamingIngest:
             raise TimeoutError(f"ingest did not drain within {timeout_sec}s")
         if query.exception() is not None:
             raise query.exception()
-        return self.epoch_stats
+        return list(self.epoch_stats)

@@ -92,6 +92,50 @@ class TestLookup:
         assert then["content"] == probe["content"]
 
 
+class TestNullKeyLookup:
+    """NULL key components are a legal key value (merge and merge_into match
+    them null-safely), so a lookup must return exactly the NULL-keyed row."""
+
+    @pytest.fixture()
+    def null_table(self, spark, tmp_path):
+        t = LakeTable.create(
+            spark, str(tmp_path / "nulls"), key_columns=["repo", "path"], num_buckets=4
+        )
+        t.merge(spark.createDataFrame(
+            [
+                ("r", None, "null-path", 1, False),
+                ("r", "p", "keep", 2, False),
+                ("s", "q", "other", 3, False),
+                (None, None, "all-null", 4, False),
+            ],
+            "repo string, path string, content string, _lsn long, _tombstone boolean",
+        ))
+        return t
+
+    def test_single_null_component(self, null_table):
+        got = null_table.lookup({"repo": "r", "path": None}).collect()
+        assert [(r["repo"], r["path"], r["content"]) for r in got] == [
+            ("r", None, "null-path")
+        ]
+
+    def test_mixed_multi_key_with_null_component(self, null_table):
+        got = null_table.lookup(
+            [{"repo": "r", "path": None}, {"repo": "s", "path": "q"},
+             {"repo": "absent", "path": None}]
+        ).collect()
+        assert sorted((r["repo"], r["path"], r["content"]) for r in got) == [
+            ("r", None, "null-path"), ("s", "q", "other")
+        ]
+        # a NULL component never matches a non-NULL stored value
+        assert "keep" not in {r["content"] for r in got}
+
+    def test_all_null_key(self, null_table):
+        got = null_table.lookup(
+            [{"repo": None, "path": None}, {"repo": "r", "path": "p"}]
+        ).collect()
+        assert sorted(r["content"] for r in got) == ["all-null", "keep"]
+
+
 class TestRebucket:
     def test_rebucket_preserves_content_and_prunes_with_new_count(self, spark, table):
         before = {(r["repo"], r["path"], r["content"]) for r in table.read().collect()}

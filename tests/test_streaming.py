@@ -116,3 +116,25 @@ def test_progress_listener_captures_batches(spark, tmp_path):
     with open(listener.path) as f:
         lines = f.read().strip().splitlines()
     assert any('"event": "started"' in line for line in lines)
+
+
+def test_epoch_stats_stay_bounded_on_a_long_tail(spark, tmp_path):
+    # a long-running tail records one MergeStats per trigger; the in-memory
+    # list must keep only the newest entries, not grow for the life of the
+    # process. Replays of a committed epoch only record skipped stats.
+    table = create_repo_table(spark, str(tmp_path / "t"), num_buckets=4)
+    table.merge(
+        spark.range(3).select(
+            F.col("id").cast("string").alias("repo"),
+            F.lit("p").alias("path"),
+            F.col("id").alias("_lsn"),
+            F.lit(False).alias("_tombstone"),
+        ),
+        epoch_id=0,
+        stream_id="s",
+    )
+    ingest = StreamingIngest(table, stream_id="s")
+    for _ in range(1_100):
+        ingest._apply(None, 0)
+    assert len(ingest.epoch_stats) == 1_000
+    assert all(st.skipped and st.epoch_id == 0 for st in ingest.epoch_stats)
