@@ -35,16 +35,9 @@ from kafka_connect_plugins_spark.functions.text import (
     rolling_fingerprint,
 )
 from kafka_connect_plugins_spark.operators import neardup, similarity
-from kafka_connect_plugins_spark.operators.multimodal import (
-    media_features,
-    media_from_documents,
-)
 from kafka_connect_plugins_spark.plans.parallelism import spread
 
 EPOCH0 = 1_700_000_000_000
-
-# session-scoped fixture cache for q_streaming_dedup (sf_dir -> parquet dir)
-_STREAM_SRC_CACHE: dict[str, str] = {}
 
 # session-scoped cache of the verified MinHash-LSH pair set: three gates
 # (minhash_lsh_pairs, dedup_clusters, dedup_clusters_star) consume the SAME
@@ -307,72 +300,6 @@ def q_redshift_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time tumbling-window per-topic counts (streaming/stateful.py's
-    windowed_event_counts on its batch-replay path; the streaming path adds
-    only the watermark). Window bounds surface as epoch seconds so the
-    DuckDB oracle compares exactly."""
-    from kafka_connect_plugins_spark.streaming.stateful import windowed_event_counts
-
-    ev = _t(spark, sf_dir, "events")
-    env = ev.select(
-        F.col("event_type").alias("topic"),
-        (F.lit(EPOCH0) + F.col("event_id") * 37).alias("timestamp"),
-    )
-    out = windowed_event_counts(env, window="1 minute")
-    return out.select(
-        F.unix_timestamp("window_start").alias("window_start_sec"),
-        "topic",
-        "n_events",
-    )
-
-
-def q_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window (2 min window, 1 min slide) per-topic counts — each
-    event lands in exactly two windows; the oracle unions the two bucketings."""
-    from kafka_connect_plugins_spark.streaming.stateful import windowed_event_counts
-
-    ev = _t(spark, sf_dir, "events")
-    env = ev.select(
-        F.col("event_type").alias("topic"),
-        (F.lit(EPOCH0) + F.col("event_id") * 37).alias("timestamp"),
-    )
-    out = windowed_event_counts(env, window="2 minutes", slide="1 minute")
-    return out.select(
-        F.unix_timestamp("window_start").alias("window_start_sec"),
-        "topic",
-        "n_events",
-    )
-
-
-def q_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time SESSION windows per topic (streaming/stateful.py's
-    session_event_counts on its batch-replay path): deterministic bursty
-    timestamps — 100 events over 50 s, then a 150 s quiet gap — so a
-    60-second gap threshold closes a session per burst. The oracle states
-    the same sessionization as a gaps-and-islands window query (a new
-    island exactly when the inter-event gap STRICTLY exceeds the 60 000 ms
-    threshold — Spark merges touching ``[ts, ts+gap)`` intervals)."""
-    from kafka_connect_plugins_spark.streaming.stateful import session_event_counts
-
-    ev = _t(spark, sf_dir, "events")
-    env = ev.select(
-        F.col("event_type").alias("topic"),
-        (
-            F.lit(EPOCH0)
-            + F.expr("event_id DIV 100") * 200000
-            + (F.col("event_id") % 100) * 500
-        ).alias("timestamp"),
-    )
-    out = session_event_counts(env, gap="1 minute")
-    return out.select(
-        F.unix_timestamp("session_start").alias("session_start_sec"),
-        F.unix_timestamp("session_end").alias("session_end_sec"),
-        "topic",
-        "n_events",
-    )
-
-
 def q_doc_length_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT per-group percentiles (p50/p90/p99 of document length per
     language) — the sorts/percentile checklist row. Spark's ``percentile``
@@ -407,42 +334,6 @@ def q_top_docs_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_events_asof_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point-in-time join — each event picks the customer's latest order
-    at-or-before its as-of instant (``operators/asof_join.py``: one shuffle
-    on the key, union + carry-forward window, no range explosion). The
-    as-of instant is derived deterministically from event_id so it spans
-    the orders' 1995-2001 date range: early instants have NO prior order
-    and exercise the left-outer NULL path. The right side is pre-deduped
-    to one row per (custkey, orderdate) — greatest orderkey wins — so the
-    winner is well-defined on both engines (DuckDB: native ASOF LEFT
-    JOIN)."""
-    from kafka_connect_plugins_spark.operators.asof_join import asof_join
-
-    events = _t(spark, sf_dir, "events")
-    orders = _t(spark, sf_dir, "orders")
-    ev = events.select(
-        "event_id",
-        "user_id",
-        F.expr(
-            "timestamp'1995-01-01 00:00:00' + make_interval(0, 0, 0,"
-            " cast(event_id % 2400 as int), 0, 0, 0)"
-        ).alias("asof_ts"),
-    )
-    r = orders.groupBy("o_custkey", "o_orderdate").agg(
-        F.max("o_orderkey").alias("o_orderkey"),
-        F.max_by("o_totalprice", "o_orderkey").alias("o_totalprice"),
-    )
-    out = asof_join(
-        ev, r, "user_id", "o_custkey", "asof_ts", "o_orderdate",
-        direction="backward", how="left", prefix="r_",
-    )
-    return out.select(
-        "event_id", "user_id", "asof_ts",
-        "r_o_orderkey", "r_o_orderdate", "r_o_totalprice",
-    )
-
-
 def q_rollup_doc_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-level aggregate in ONE pass — ROLLUP(lang, source) produces
     per-(lang, source), per-lang, and grand-total rows from a single
@@ -459,42 +350,6 @@ def q_rollup_doc_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("lang", "source", "g_lang", "g_source", "n_docs", "sum_chars")
     )
-
-
-def q_events_in_order_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval (range) join — every (event, order) pair where the event's
-    as-of instant falls inside the order's 7-day window
-    (`operators/interval_join.py`: right intervals exploded to fixed
-    buckets, plain (key, bucket) equi-join + exact refine — never the
-    BroadcastNestedLoopJoin Spark would plan for the raw inequality
-    join). DuckDB runs the inequality join directly as ground truth."""
-    from kafka_connect_plugins_spark.operators.interval_join import interval_join
-
-    events = _t(spark, sf_dir, "events")
-    orders = _t(spark, sf_dir, "orders")
-    ev = events.select(
-        "event_id",
-        "user_id",
-        F.expr(
-            "timestamp'1995-01-01 00:00:00' + make_interval(0, 0, 0,"
-            " cast(event_id % 2400 as int), 0, 0, 0)"
-        ).alias("asof_ts"),
-    )
-    r = orders.select(
-        "o_custkey",
-        "o_orderkey",
-        "o_orderdate",
-        (F.col("o_orderdate") + F.expr("interval 7 days")).alias("o_window_end"),
-    )
-    # Guide §3.1: build the per-partition hash from the narrow event side
-    # (3 columns, never amplified by the bucket explode) instead of sorting
-    # BOTH sides for a sort-merge join — the hint rides the subtree into
-    # the operator's equi-join. Measured 3.2 -> 2.2 s at sf1.0.
-    out = interval_join(
-        ev.hint("shuffle_hash"), r, "user_id", "o_custkey", "asof_ts",
-        "o_orderdate", "o_window_end", bucket="7 days",
-    )
-    return out.select("event_id", "user_id", "asof_ts", "r_o_orderkey")
 
 
 _EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -1792,16 +1647,6 @@ def q_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: binary payloads → Arrow-batched byte features.
-
-    (entropy is computed by the operator but excluded here — the DuckDB
-    oracle states n_bytes/sha256/magic independently; entropy parity is
-    covered by unit tests.)"""
-    media = media_from_documents(_t(spark, sf_dir, "documents"))
-    return media_features(media).select("media_id", "kind", "n_bytes", "sha256", "magic")
-
-
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTER resolution: MinHash-LSH pairs -> connected
     components (iterative min-label propagation,
@@ -1904,109 +1749,6 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful streaming operator, oracle-gated: per-key LSN
-    high-watermark dedup (``applyInPandasWithState``,
-    streaming/stateful.py:streaming_lww_dedup) driven over a REAL
-    multi-microbatch file-source replay with duplicate re-deliveries.
-
-    The emitted set depends on how the file source cuts microbatches, but
-    its per-key LWW collapse is batch-boundary-INVARIANT: the dedup can
-    never drop a key's max-LSN event (nothing outranks it), so
-    ``LWW(emitted) == LWW(input)`` — which the DuckDB oracle states
-    directly over the events table. Duplicate deliveries (every 5th event
-    re-sent) exercise the suppression path.
-    """
-    import os
-    import tempfile
-    import uuid
-
-    from pyspark.sql import types as T
-
-    from kafka_connect_plugins_spark.envelope import envelope_schema
-    from kafka_connect_plugins_spark.streaming.stateful import streaming_lww_dedup
-
-    # Key-subset gate (user_id % 25): applyInPandasWithState pays a Python
-    # call per GROUP per microbatch, so gating on every key at sf0.1 costs
-    # ~100k group calls per batch for zero extra coverage — hundreds of
-    # keys exercise the state machinery identically. (Same scale posture as
-    # production: this operator suits the moderate-cardinality streaming
-    # tail; bulk dedup of 10^9 keys belongs to the batch LWW merge.)
-    env = _events_envelope(spark, sf_dir).filter(
-        F.col("key").cast("long") % 25 == 0
-    )
-    log = env.unionAll(env.filter(F.col("offset") % 5 == 0))  # re-deliveries
-    # the synthesized source log is deterministic in sf_dir: cache the
-    # parquet across bench rounds (the measured cost is the streaming
-    # replay, not the one-time fixture write); checkpoints stay per-run
-    src_dir = _STREAM_SRC_CACHE.get(sf_dir)
-    if src_dir is None or not os.path.isdir(src_dir):
-        src_dir = tempfile.mkdtemp(prefix="kcp_streaming_dedup_src_") + "/src"
-        # 3 files -> 3 microbatches under maxFilesPerTrigger=1: duplicate
-        # deliveries land both in-batch and across batches
-        log.repartition(3).write.mode("overwrite").parquet(src_dir)
-        _STREAM_SRC_CACHE[sf_dir] = src_dir
-    ckpt = tempfile.mkdtemp(prefix="kcp_streaming_dedup_") + "/ckpt"
-
-    value_t = T.StructType(
-        [
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", env.schema["value"].dataType["value"].dataType),
-            T.StructField("props", T.StringType()),
-            T.StructField("deleted_at", T.LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(envelope_schema(value_t))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    qname = f"dedup_{uuid.uuid4().hex[:8]}"
-    # A stateful query pins spark.sql.shuffle.partitions into its checkpoint
-    # as the state-store partition count. This gate tracks a few hundred
-    # keys: 64 state partitions mean 64 near-empty Python group-map tasks
-    # PER MICROBATCH of pure overhead, so pin a small count for the query's
-    # fresh checkpoint and restore the session value right after start.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        query = (
-            streaming_lww_dedup(stream, key_cols=["key"], lsn_col="offset")
-            .writeStream.format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    query.awaitTermination(300)
-    if query.isActive:
-        query.stop()
-        raise TimeoutError("streaming dedup did not drain")
-    if query.exception() is not None:
-        raise query.exception()
-    emitted = spark.table(qname)
-    pay = F.struct(
-        F.col("offset"),
-        F.col("value.event_type").alias("event_type"),
-        F.col("value.value").alias("value"),
-        F.col("value.props").alias("props"),
-    )
-    return (
-        emitted.groupBy("key")
-        .agg(F.max_by(pay, F.col("offset")).alias("__w"))
-        .select(
-            F.col("key").cast("long").alias("user_id"),
-            F.col("__w.offset").alias("last_lsn"),
-            F.col("__w.event_type").alias("last_event_type"),
-            F.col("__w.value").alias("last_value"),
-            F.col("__w.props").alias("last_props"),
-        )
-    )
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "unquote_record_key": q_unquote_record_key,
@@ -2050,13 +1792,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "token_bpe_stats": q_token_bpe_stats,
         "quality_features": q_quality_features,
         "rolling_fingerprint": q_rolling_fingerprint,
-        "media_features": q_media_features,
-        "windowed_counts": q_windowed_counts,
-        "sliding_counts": q_sliding_counts,
-        "session_counts": q_session_counts,
         "doc_length_percentiles": q_doc_length_percentiles,
         "top_docs_per_lang": q_top_docs_per_lang,
-        "events_asof_orders": q_events_asof_orders,
         "rollup_doc_counts": q_rollup_doc_counts,
         "sampled_docs": q_sampled_docs,
         "doc_split_counts": q_doc_split_counts,
@@ -2064,14 +1801,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "nation_revenue": q_nation_revenue,
         "stratified_sample": q_stratified_sample,
         "customers_without_orders": q_customers_without_orders,
-        "events_in_order_windows": q_events_in_order_windows,
         "pivot_user_events": q_pivot_user_events,
         "skew_salted_stats": q_skew_salted_stats,
         "user_running_value": q_user_running_value,
         "event_sessions_batch": q_event_sessions_batch,
         "token_postings": q_token_postings,
         "cluster_representatives": q_cluster_representatives,
-        "streaming_dedup": q_streaming_dedup,
         "dedup_clusters": q_dedup_clusters,
         "dedup_clusters_star": q_dedup_clusters_star,
         "chunk_dedup_docs": q_chunk_dedup_docs,
@@ -2863,33 +2598,6 @@ def oracle_sql() -> dict[str, str]:
                    {_rolling_fp_sql(_NORM_TEXT_SQL)} AS fp_norm
             FROM documents
         """,
-        "media_features": """
-            SELECT doc_id AS media_id,
-                   CASE (doc_id % 3) WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-                        ELSE 'video' END AS kind,
-                   (4 + octet_length(encode(text)))::BIGINT AS n_bytes,
-                   sha256((CASE (doc_id % 3) WHEN 0 THEN 'IMG0' WHEN 1 THEN 'AUD0'
-                           ELSE 'VID0' END) || text) AS sha256,
-                   CASE (doc_id % 3) WHEN 0 THEN '494d4730' WHEN 1 THEN '41554430'
-                        ELSE '56494430' END AS magic
-            FROM documents
-        """,
-        "windowed_counts": f"""
-            SELECT (({EPOCH0} + event_id * 37) // 60000) * 60 AS window_start_sec,
-                   event_type AS topic,
-                   count(*) AS n_events
-            FROM events GROUP BY 1, 2
-        """,
-        "sliding_counts": f"""
-            WITH b AS (SELECT (({EPOCH0} + event_id * 37) // 60000) * 60 AS m,
-                              event_type AS topic
-                       FROM events),
-            w AS (SELECT m AS window_start_sec, topic FROM b
-                  UNION ALL
-                  SELECT m - 60 AS window_start_sec, topic FROM b)
-            SELECT window_start_sec, topic, count(*) AS n_events
-            FROM w GROUP BY 1, 2
-        """,
         "doc_length_percentiles": """
             SELECT lang,
                    round(quantile_cont(n_chars, 0.5), 6) AS p50,
@@ -2905,25 +2613,6 @@ def oracle_sql() -> dict[str, str]:
                        AS rank
             FROM documents QUALIFY rank <= 3
         """,
-        "events_asof_orders": """
-            WITH e AS (
-                SELECT event_id, user_id,
-                       TIMESTAMP '1995-01-01'
-                           + (event_id % 2400) * INTERVAL 1 DAY AS asof_ts
-                FROM events
-            ), r AS (
-                SELECT o_custkey, o_orderdate,
-                       max(o_orderkey) AS o_orderkey,
-                       arg_max(o_totalprice, o_orderkey) AS o_totalprice
-                FROM orders GROUP BY 1, 2
-            )
-            SELECT e.event_id, e.user_id, e.asof_ts,
-                   r.o_orderkey   AS r_o_orderkey,
-                   r.o_orderdate  AS r_o_orderdate,
-                   r.o_totalprice AS r_o_totalprice
-            FROM e ASOF LEFT JOIN r
-              ON e.user_id = r.o_custkey AND e.asof_ts >= r.o_orderdate
-        """,
         "rollup_doc_counts": """
             SELECT lang, source,
                    CAST(GROUPING(lang) AS INT)   AS g_lang,
@@ -2931,20 +2620,6 @@ def oracle_sql() -> dict[str, str]:
                    count(*) AS n_docs,
                    sum(n_chars) AS sum_chars
             FROM documents GROUP BY ROLLUP(lang, source)
-        """,
-        "events_in_order_windows": """
-            WITH e AS (
-                SELECT event_id, user_id,
-                       TIMESTAMP '1995-01-01'
-                           + (event_id % 2400) * INTERVAL 1 DAY AS asof_ts
-                FROM events
-            )
-            SELECT e.event_id, e.user_id, e.asof_ts,
-                   r.o_orderkey AS r_o_orderkey
-            FROM e JOIN orders r
-              ON e.user_id = r.o_custkey
-             AND e.asof_ts >= r.o_orderdate
-             AND e.asof_ts < r.o_orderdate + INTERVAL 7 DAY
         """,
         "pivot_user_events": """
             SELECT user_id,
@@ -3079,40 +2754,6 @@ def oracle_sql() -> dict[str, str]:
                    count(*) AS n_docs,
                    sum(n_chars) AS sum_chars
             FROM u GROUP BY 1
-        """,
-        "session_counts": f"""
-            WITH e AS (
-              SELECT event_type AS topic,
-                     {EPOCH0} + (event_id::BIGINT // 100) * 200000
-                              + (event_id % 100) * 500 AS ts
-              FROM events),
-            o AS (
-              SELECT topic, ts,
-                     CASE WHEN ts - lag(ts) OVER (PARTITION BY topic ORDER BY ts)
-                               > 60000
-                          THEN 1 ELSE 0 END AS brk
-              FROM e),
-            s AS (
-              SELECT topic, ts,
-                     sum(brk) OVER (PARTITION BY topic ORDER BY ts
-                                    ROWS UNBOUNDED PRECEDING) AS sid
-              FROM o)
-            SELECT min(ts) // 1000 AS session_start_sec,
-                   (max(ts) + 60000) // 1000 AS session_end_sec,
-                   topic,
-                   count(*) AS n_events
-            FROM s GROUP BY topic, sid
-        """,
-        "streaming_dedup": """
-            SELECT user_id,
-                   event_id AS last_lsn,
-                   event_type AS last_event_type,
-                   value AS last_value,
-                   props AS last_props
-            FROM (SELECT *, row_number() OVER (
-                      PARTITION BY user_id ORDER BY event_id DESC) AS rn
-                  FROM events WHERE user_id % 25 = 0)
-            WHERE rn = 1
         """,
         "decontaminate_ngrams": """
             -- 4-token n-gram overlap vs the doc_id%50==0 eval slice; the

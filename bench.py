@@ -1710,13 +1710,6 @@ def write_bench_md(replay: dict, scaling_exec: dict, scaling_thr: dict, queries:
             if pair_recall
             else []
         ),
-        "`media_features` note: round 2's 1.10 s was measurement noise — warm",
-        "best-of-4 is 0.55 s with `spread()` and 0.32 s without. The ~0.24 s",
-        "delta is the round-robin exchange `spread` pays on a 1-partition scan",
-        "to unlock 32-way parallelism for the Arrow feature UDF; it is a",
-        "scale-oriented tradeoff that amortizes as soon as the per-partition",
-        "compute exceeds the exchange cost, and disengages entirely on",
-        "multi-split production inputs (plans/parallelism.py guard).",
     ]
     # Persistent run history: each full run APPENDS one line here and the
     # section survives the rewrite — the cross-run distribution (different

@@ -13,15 +13,18 @@ single-message transforms, see /root/reference) as an idiomatic Spark engine:
   lake table (``plans/lake_table.py``),
 - the Connect worker poll loop becomes Structured Streaming ``foreachBatch``
   with exactly-once epoch guards and checkpoint resume (``streaming/``),
-- plus the training-data-pipeline operators a 100 TB corpus needs: dedup
-  (exact / MinHash-LSH / SimHash), ANN similarity search, text analysis, and
-  multimodal binary-column plumbing (``dedup/``, ``sim/``, ``text/``,
-  ``multimodal/``).
+- Debezium and MongoDB change-stream wire formats parse into the
+  merge source (``sources/``), and the table serves a change feed, point
+  lookups, replication and incrementally maintained views (``plans/``),
+- off the CDC path, document-corpus operators: near-dup detection and
+  nearest-neighbour search (``operators/neardup.py``,
+  ``operators/similarity.py``), text features (``functions/text.py``) and
+  hash sampling (``functions/sampling.py``).
 
 Everything is public-API PySpark (DataFrame / SQL / Structured Streaming);
 no per-row Python in hot paths — native Columns first, Arrow-vectorized
-pandas UDFs only where column expressions genuinely cannot express the
-semantics.
+pandas UDFs only in ``operators/similarity.py``. No ``__init__`` imports the
+corpus operators, so importing the package loads no pandas.
 """
 
 __version__ = "0.1.0"

@@ -1,10 +1,12 @@
-"""Operator library: the reference's eight SMTs + engine-native stages +
-training-data-pipeline operators (near-dup detection, similarity search,
-multimodal plumbing)."""
+"""Operator library: the reference's eight SMTs plus the engine-native
+stages (LWW dedup, salted repartition, field redaction, outbox routing) that
+run between a change-event source and the lake-table MERGE.
 
-from kafka_connect_plugins_spark.operators import multimodal, neardup, similarity  # noqa: F401
-from kafka_connect_plugins_spark.operators.asof_join import asof_join, asof_join_bucketed  # noqa: F401
-from kafka_connect_plugins_spark.operators.interval_join import interval_join  # noqa: F401
+The document-corpus operators (``neardup``: exact / MinHash-LSH / SimHash
+dedup and connected components; ``similarity``: brute-force, IVF and LSH
+nearest neighbours) are submodules imported by path, not here: no CDC path
+uses them, and ``similarity`` loads pandas and numpy."""
+
 from kafka_connect_plugins_spark.operators.base import Pipeline, Stage, registry, stage
 from kafka_connect_plugins_spark.operators.clickhouse_flatten import ClickHouseFlatten
 from kafka_connect_plugins_spark.operators.json_to_hex import JsonToHex

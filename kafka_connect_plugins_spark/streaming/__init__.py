@@ -4,10 +4,6 @@ from kafka_connect_plugins_spark.streaming.ingest import (
     tail_changelog,
 )
 from kafka_connect_plugins_spark.streaming.metrics import MetricsLog, ProgressListener
-from kafka_connect_plugins_spark.streaming.stateful import (
-    streaming_lww_dedup,
-    windowed_event_counts,
-)
 
 __all__ = [
     "CHANGELOG_VALUE_TYPE",
@@ -15,6 +11,4 @@ __all__ = [
     "tail_changelog",
     "MetricsLog",
     "ProgressListener",
-    "streaming_lww_dedup",
-    "windowed_event_counts",
 ]

@@ -21,9 +21,8 @@ connector and an upsert sink (reference README.md:26-31). The moving parts:
 
 The ingest chain itself is stateless per record (like the reference); late
 and duplicate data are handled by the LWW-on-LSN merge, which is
-order-insensitive (SURVEY.md §2.2). Stateful streaming operators live in
-``streaming/stateful.py`` (watermarked windowed aggregation,
-``applyInPandasWithState`` LSN dedup) and compose upstream of this sink.
+order-insensitive (SURVEY.md §2.2), and a redelivered batch by the epoch
+guard above.
 """
 
 from __future__ import annotations

@@ -1,12 +1,10 @@
 """Round-5 review hardening: NULL three-valued logic in predicate
 mutations and merge_into keys, duplicate-delivery transaction markers,
-outer stream-join key retention, mixed-shape header resolution, NULL key
-components on the wire bridge, unorderable as-of payloads, outbox column
-collisions, and z-order boundary sampling past 64k distincts."""
+mixed-shape header resolution, NULL key components on the wire bridge,
+outbox column collisions, and z-order boundary sampling past 64k
+distincts."""
 
 from __future__ import annotations
-
-import datetime as dt
 
 import pytest
 from pyspark.sql import functions as F
@@ -100,30 +98,6 @@ class TestTransactionMarkerDuplicates:
         assert {r["_tx_id"] for r in held.collect()} == {"tx2"}  # no marker yet
 
 
-class TestStreamJoinOuterKeys:
-    def test_rightouter_unmatched_rows_keep_their_key(self, spark):
-        from kafka_connect_plugins_spark.streaming.joins import (
-            stream_stream_interval_join,
-        )
-
-        # batch DataFrames exercise the projection logic (withWatermark is
-        # a no-op on batch); an unmatched right row must keep its key.
-        t0 = dt.datetime(2024, 1, 1)
-        left = spark.createDataFrame(
-            [(1, t0, "a")], "k long, ts timestamp, page string"
-        )
-        right = spark.createDataFrame(
-            [(1, t0 + dt.timedelta(minutes=1), 5.0),
-             (2, t0 + dt.timedelta(minutes=1), 9.0)],  # no left for k=2
-            "k long, ts timestamp, amount double",
-        )
-        out = stream_stream_interval_join(
-            left, right, ["k"], "ts", "ts", upper="5 minutes", how="rightOuter"
-        ).collect()
-        got = {(r["k"], r["page"], r["amount"]) for r in out}
-        assert got == {(1, "a", 5.0), (2, None, 9.0)}  # k=2 NOT NULL-keyed
-
-
 class TestHeaderColumnMixedShapes:
     def test_map_only_rows_fall_back_to_map(self, spark):
         from kafka_connect_plugins_spark.envelope import header_column
@@ -161,32 +135,6 @@ class TestEnvelopeNullKeyComponents:
         # key (sharing the null identity, never a real key's); the DEFAULT
         # policy is 'error' — see test_review_fixes_r5c.py.
         assert keys == [None, None, "a|b"]
-
-
-class TestAsofBucketedMapPayload:
-    def test_map_typed_payload_column_works(self, spark):
-        from kafka_connect_plugins_spark.operators.asof_join import (
-            asof_join,
-            asof_join_bucketed,
-        )
-
-        t0 = dt.datetime(2024, 1, 1)
-        left = spark.createDataFrame(
-            [(1, t0 + dt.timedelta(days=40), "e")],
-            "k long, t timestamp, name string",
-        )
-        right = spark.createDataFrame(
-            [(1, t0, {"h": "v"})],
-            "k long, t timestamp, headers map<string,string>",
-        )
-        # maps are unorderable: a max(struct(..., payload)) seed would
-        # raise AnalysisException; max_by on (ts, tiebreak) must not.
-        out = asof_join_bucketed(
-            left, right, "k", "k", "t", "t", bucket="30 days"
-        ).collect()
-        ref = asof_join(left, right, "k", "k", "t", "t").collect()
-        assert [r["r_headers"] for r in out] == [{"h": "v"}]
-        assert [r["r_headers"] for r in ref] == [{"h": "v"}]
 
 
 class TestOutboxValueColumnCollision:

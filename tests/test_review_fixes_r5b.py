@@ -1,72 +1,14 @@
-"""Second round-5 review battery: as-of tiebreak type fidelity, replication
-ledger ids keyed on the full source path, and the wire adapters' dead-letter
-contract (invalid rows expose ONLY ``_corrupt_record``)."""
+"""Second round-5 review battery: replication ledger ids keyed on the full
+source path, and the wire adapters' dead-letter contract (invalid rows
+expose ONLY ``_corrupt_record``)."""
 
 from __future__ import annotations
 
-import datetime as dt
 import json
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from kafka_connect_plugins_spark.operators.asof_join import (
-    asof_join,
-    asof_join_bucketed,
-)
-
-
-def _ts(s):
-    return dt.datetime.fromisoformat(s)
-
-
-class TestAsofTiebreakTypes:
-    """The tiebreak must order on the RAW column type. The old double cast
-    collapsed long LSNs above 2^53 (nondeterministic winner) and turned a
-    string tiebreak into all-NULLs (silently disabled)."""
-
-    def _sides(self, spark, tb_type, tb_lo, tb_hi):
-        left = spark.createDataFrame(
-            [("k", _ts("2024-01-02T00:00:00"))], "k string, ts timestamp"
-        )
-        right = spark.createDataFrame(
-            [("k", _ts("2024-01-01T00:00:00"), tb_lo, "lo"),
-             ("k", _ts("2024-01-01T00:00:00"), tb_hi, "hi")],
-            f"k string, ts timestamp, v {tb_type}, tag string",
-        )
-        return left, right
-
-    def test_long_tiebreak_above_2_53_is_exact(self, spark):
-        lo, hi = (1 << 53), (1 << 53) + 1  # identical as doubles
-        left, right = self._sides(spark, "long", lo, hi)
-        for fn in (asof_join, asof_join_bucketed):
-            out = fn(left, right, "k", "k", "ts", "ts", tiebreak="v").collect()
-            assert len(out) == 1
-            assert out[0]["r_tag"] == "hi", fn.__name__  # greatest wins
-
-    def test_string_tiebreak_orders_lexically(self, spark):
-        left, right = self._sides(spark, "string", "v001", "v002")
-        for fn in (asof_join, asof_join_bucketed):
-            out = fn(left, right, "k", "k", "ts", "ts", tiebreak="v").collect()
-            assert len(out) == 1
-            assert out[0]["r_tag"] == "hi", fn.__name__
-
-    def test_forward_keeps_smallest_long_tiebreak(self, spark):
-        lo, hi = (1 << 53), (1 << 53) + 1
-        left = spark.createDataFrame(
-            [("k", _ts("2023-12-31T00:00:00"))], "k string, ts timestamp"
-        )
-        right = spark.createDataFrame(
-            [("k", _ts("2024-01-01T00:00:00"), lo, "lo"),
-             ("k", _ts("2024-01-01T00:00:00"), hi, "hi")],
-            "k string, ts timestamp, v long, tag string",
-        )
-        out = asof_join(
-            left, right, "k", "k", "ts", "ts",
-            direction="forward", tiebreak="v",
-        ).collect()
-        assert out[0]["r_tag"] == "lo"
 
 
 class TestReplicationStreamIdPath:

@@ -199,46 +199,6 @@ def test_header_list_routing_matches_map_routing(spark):
 
 
 # ----------------------------------------------------------------------
-# Stateful dedup: in-chunk duplicate deliveries of the same (key, LSN)
-# ----------------------------------------------------------------------
-
-def test_streaming_dedup_drops_in_chunk_duplicates(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from kafka_connect_plugins_spark.envelope import envelope_schema
-    from kafka_connect_plugins_spark.streaming.stateful import streaming_lww_dedup
-
-    val_t = T.StructType([T.StructField("x", T.LongType())])
-    src = str(tmp_path / "src")
-    rows = [  # duplicate (k1, 5) delivered twice IN THE SAME microbatch
-        ("t", 0, 5, 1, "k1", None, (1,)),
-        ("t", 0, 5, 2, "k1", None, (2,)),
-        ("t", 0, 7, 3, "k1", None, (3,)),
-    ]
-    spark.createDataFrame(rows, envelope_schema(val_t)).write.parquet(src)
-    seen = []
-
-    def sink(df, epoch):
-        seen.extend((r["key"], r["offset"], r["value"]["x"]) for r in df.collect())
-
-    stream = spark.readStream.schema(envelope_schema(val_t)).parquet(src)
-    q = (
-        streaming_lww_dedup(stream, key_cols=["key"], lsn_col="offset")
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    assert q.exception() is None
-    # exactly ONE copy of LSN 5 survives (which copy is arrival-order-
-    # dependent inside the chunk; the contract is the LSN-level dedup)
-    assert len(seen) == 2
-    assert sorted((k, lsn) for k, lsn, _ in seen) == [("k1", 5), ("k1", 7)]
-
-
-# ----------------------------------------------------------------------
 # DLQ replay semantics: a replayed already-committed epoch must not
 # duplicate DLQ rows, and clean epochs must not write empty files.
 # ----------------------------------------------------------------------

@@ -1,8 +1,6 @@
 """Round-4 defect fixes (ADVICE.md): negative-LSN domain guard and
 connected_components id-type validation."""
 
-import os
-
 import pytest
 from pyspark.sql import functions as F  # noqa: F401
 
@@ -64,101 +62,6 @@ def test_connected_components_rejects_mixed_edge_types(spark):
     edges = spark.createDataFrame([(1, "2")], "id_a long, id_b string")
     with pytest.raises(TypeError, match="edge dst"):
         connected_components(edges, nodes)
-
-
-# ----------------------------------------------------------------------
-# Streaming dedup idle-key TTL: an evicted key's watermark is forgotten
-# (its next event passes even if stale) and the LWW merge downstream is
-# the correctness backstop — state stays bounded by the working set.
-# ----------------------------------------------------------------------
-
-def test_streaming_dedup_idle_ttl_evicts_and_merge_backstops(spark, tmp_path):
-    import time as _time
-
-    from pyspark.sql import types as T
-
-    from kafka_connect_plugins_spark.envelope import envelope_schema
-    from kafka_connect_plugins_spark.streaming.stateful import streaming_lww_dedup
-
-    val_t = T.StructType([T.StructField("x", T.LongType())])
-    schema = envelope_schema(val_t)
-    src = str(tmp_path / "src")
-    seen = []
-
-    def sink(df, epoch):
-        seen.extend((r["key"], r["offset"]) for r in df.collect())
-
-    def drop(name, rows):
-        # the file stream source lists the directory non-recursively: write
-        # the batch to a staging dir and move its part file into src/
-        import glob
-        import shutil
-
-        stage = str(tmp_path / f"stage_{name}")
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(stage)
-        part = glob.glob(f"{stage}/part-*.parquet")[0]
-        shutil.move(part, f"{src}/{name}.parquet")
-
-    def _seen_lsn4_batch_done():
-        # b2 is consumed once the source has advanced past it: use a marker
-        # event in the same file
-        return ("k9", 2) in seen
-
-    def wait_for(pred, timeout=120):
-        t0 = _time.time()
-        while not pred():
-            assert _time.time() - t0 < timeout, f"timed out; seen={seen}"
-            _time.sleep(0.2)
-
-    # TTL 10 s >> trigger 500 ms (batches run ~1 s under load) so a
-    # just-armed watermark cannot expire between consecutive batches.
-    # TTL >> trigger so a just-armed watermark cannot expire
-    # between consecutive batches. idle-TTL needs a RECURRING trigger (processing-time timeouts cannot
-    # fire under availableNow/once — the engine keeps scheduling catch-up
-    # batches and never terminates; documented on streaming_lww_dedup)
-    os.makedirs(src, exist_ok=True)
-    drop("b1", [("t", 0, 10, 1, "k1", None, (10,)), ("t", 0, 1, 1, "k9", None, (1,))])
-    q = (
-        streaming_lww_dedup(
-            spark.readStream.schema(schema).parquet(src),
-            key_cols=["key"],
-            lsn_col="offset",
-            idle_ttl_ms=10_000,
-        )
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(processingTime="500 milliseconds")
-        .start()
-    )
-    try:
-        # batch 1: k1 reaches watermark 10; k9 is the keep-alive key
-        wait_for(lambda: ("k1", 10) in seen and ("k9", 1) in seen)
-        # WITHOUT the TTL this stale event would be suppressed forever;
-        # prove that baseline first, inside the same query's early life:
-        drop("b2", [("t", 0, 4, 3, "k1", None, (4,)), ("t", 0, 2, 3, "k9", None, (2,))])  # stale k1 + fresh k9 marker
-        wait_for(lambda: ("k1", 4) not in seen and _seen_lsn4_batch_done())
-        _time.sleep(15)  # then k1 idles past the 10 s TTL -> evicted
-        assert ("k1", 4) not in seen
-        # a STALE k1 event (lsn 5 < the forgotten watermark 10) now PASSES —
-        # the documented TTL tradeoff; the LWW merge below is the backstop
-        drop("b3", [("t", 0, 5, 4, "k1", None, (5,))])
-        wait_for(lambda: ("k1", 5) in seen)
-        assert q.exception() is None
-    finally:
-        q.stop()
-
-    # ...and the downstream LWW merge is the backstop: replaying both k1
-    # events through the table still converges to the lsn-10 content
-    t = _table(spark, tmp_path, "ttl_backstop")
-    t.merge(_src(spark, [
-        {"repo": "k1", "path": "p", "content": "v10", "_lsn": 10, "_tombstone": False},
-    ]))
-    t.merge(_src(spark, [
-        {"repo": "k1", "path": "p", "content": "v5", "_lsn": 5, "_tombstone": False},
-    ]))
-    rows = {(r["repo"], r["path"]): (r["content"], r["_lsn"]) for r in t.read().collect()}
-    assert rows[("k1", "p")] == ("v10", 10)
 
 
 def test_purge_below_watermark_wires_retention_to_lineage(spark, tmp_path):
