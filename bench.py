@@ -830,42 +830,6 @@ class _ScalingRun:
         )
 
 
-def bench_scaling(
-    tmp: str,
-    events_path: str,
-    mode: str = "threads",
-    deadline_ts: float | None = None,
-    on_window=None,
-) -> dict | None:
-    """Single-mode window loop (see ``_ScalingRun``). ``deadline_ts``
-    (absolute time.time()) stops the loop before a window that would not
-    finish in time — however many windows ran ARE the artifact;
-    ``on_window`` (summary-dict callback) is invoked after every window so
-    the caller can flush incremental results. Returns ``None`` if the
-    deadline left room for no window at all."""
-    run = _ScalingRun(tmp, events_path, mode)
-    if deadline_ts is not None:
-        run.deadline_ts = deadline_ts
-    while not run.done():
-        if deadline_ts is not None and time.time() + run.est_cost() > deadline_ts:
-            log(f"scaling[{mode}]: deadline — stopping after {run.w} window(s)")
-            break
-        run.step()
-        if on_window is not None:
-            on_window(run.summary())
-
-    out = run.summary()
-    if out is None:
-        log(f"scaling[{mode}]: no window fit inside the deadline")
-        return None
-    log(f"scaling[{mode}]: median eff {out['efficiency_median']} best "
-        f"{out['efficiency_best']} over {out['clean_windows']} clean windows;"
-        f" ceilings cpu {out['host_cpu_scaling_ceiling']}"
-        f" membw {out['host_membw_scaling_ceiling']}"
-        f" gather {out['host_randaccess_scaling_ceiling']}")
-    return out
-
-
 def _scaling_summary(
     mode: str,
     windows: list[dict],

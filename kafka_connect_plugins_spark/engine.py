@@ -219,10 +219,9 @@ def replay_pipelined(
 ) -> list[MergeStats]:
     """Replay consecutive epochs with a ONE-EPOCH stats/write pipeline.
 
-    ``merge_prepare(i+1)`` (the source-only narrow aggregation — the phase
-    that scales worst, a key-stats shuffle + one driver collect) runs on a
-    helper thread CONCURRENTLY with ``merge(prep=i)`` (the map-only wide
-    write + commit). Spark schedules jobs from both threads onto the same
+    ``merge_prepare(i+1)`` (the source-only key-stats aggregation and its
+    one driver collect) runs on a helper thread CONCURRENTLY with
+    ``merge(prep=i)`` (the one-exchange LWW write + commit). Spark schedules jobs from both threads onto the same
     executors; with ``spark.scheduler.mode=FAIR`` the two jobs share task
     slots by pool weight (pools ``kcp_stats`` / ``kcp_write`` are created on
     demand), and even under FIFO the stats tasks fill the write job's
@@ -263,13 +262,11 @@ def replay_pipelined(
         return prep, t0, _time.time()
 
     stats: list[MergeStats] = []
-    fut = None
     try:
         with ThreadPoolExecutor(max_workers=1) as pool:
             fut = pool.submit(_prepare, batches[0])
-            for i, _batch in enumerate(batches):
+            for i in range(len(batches)):
                 prep, p0, p1 = fut.result()
-                fut = None
                 if i + 1 < len(batches):
                     fut = pool.submit(_prepare, batches[i + 1])
                 sc.setLocalProperty("spark.scheduler.pool", "kcp_write")
@@ -290,20 +287,6 @@ def replay_pipelined(
                     )
                 st.phases["__apply_window"] = (a0, a1)
                 stats.append(st)
-    except Exception:
-        # merge() raised mid-loop: the already-submitted next-epoch prepare
-        # still completes on pool shutdown — consume it and drop its
-        # persisted caches (winner_counts, src_winners) so the executor
-        # storage it pinned does not leak past the failure.
-        if fut is not None:
-            try:
-                orphan, _, _ = fut.result()
-                orphan.winner_counts.unpersist()
-                if orphan.plan_b:
-                    orphan.src_winners.unpersist()
-            except Exception:
-                pass  # the orphan prepare failed too; nothing was cached
-        raise
     finally:
         # the reset must survive exceptions: the caller's thread would
         # otherwise keep scheduling every later job in the kcp_write pool

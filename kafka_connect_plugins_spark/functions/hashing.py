@@ -8,8 +8,6 @@ Parity targets from the reference:
   ``java.util.zip.CRC32`` computes. Golden values (PartitionerTest.kt:11-19):
   ``'04a96f30-3dfa-11ec-9bbc-0242ac130002' -> 7`` and ``'my-string' -> 0``
   with n=10.
-- the engine's own additions: xxhash64-salted shuffle keys for skewed-key
-  repartitioning, and the sha256 content invariant from BASELINE.json.
 """
 
 from __future__ import annotations
@@ -23,23 +21,3 @@ def crc32_pmod(key: Column, num_partitions: int) -> Column:
     if num_partitions <= 0:
         raise ValueError(f"number of partitions must be positive, got {num_partitions}")
     return F.pmod(F.crc32(key.cast("string").cast("binary")), F.lit(num_partitions)).cast("int")
-
-
-def salted_shuffle_key(key: Column, salt_buckets: int = 1) -> Column:
-    """A shuffle key that spreads a hot key over ``salt_buckets`` sub-keys.
-
-    ``xxhash64`` is Spark-native (JVM, codegen'd). With ``salt_buckets == 1``
-    this is plain hash partitioning; with more, each logical key fans out over
-    that many physical partitions and must be re-grouped afterwards (the LWW
-    window's own shuffle does that re-group).
-    """
-    base = F.xxhash64(key.cast("string"))
-    if salt_buckets <= 1:
-        return base
-    salt = F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets))
-    return F.xxhash64(key.cast("string"), salt)
-
-
-def sha256_hex(col: Column) -> Column:
-    """Lowercase hex sha256 of a string column (the per-row content invariant)."""
-    return F.sha2(col.cast("string"), 256)

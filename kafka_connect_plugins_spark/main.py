@@ -92,8 +92,8 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument(
         "--pipelined", action="store_true",
         help="batch replay with the one-epoch stats/write pipeline "
-             "(engine.replay_pipelined): epoch i+1's narrow stats "
-             "aggregation runs under epoch i's map-only wide write — the "
+             "(engine.replay_pipelined): epoch i+1's key-stats "
+             "aggregation runs under epoch i's one-exchange LWW write — the "
              "measured steady-state ingest shape. Batch-only: streaming "
              "(foreachBatch) commits offsets when the callback returns, so "
              "it cannot defer an epoch's write past its trigger; the batch "

@@ -101,8 +101,8 @@ class MergeStats:
     # Per-source-partition lineage: {partition: {"events": n, "max_lsn": m}}.
     # The CDC log-position record — filled when merge() gets lineage_col.
     lineage: dict = field(default_factory=dict)
-    # Wall time per merge phase: {"stats": narrow agg + one collect,
-    # "write": the data write job (includes the broadcast build),
+    # Wall time per merge phase: {"stats": key-stats agg + one collect,
+    # "write": the data write job (the LWW exchange + parquet write),
     # "commit": manifest swap + output listing}. The driver-serial share of
     # an epoch is everything except the write job's parallel portion.
     phases: dict = field(default_factory=dict)
@@ -113,29 +113,23 @@ class MergePrep:
     """Source-side merge preparation, separable from the table write.
 
     Everything here derives from the SOURCE batch alone (normalized frame,
-    narrow winner aggregation, domain guards, plan choice) — no target
-    state is read and nothing is committed, so a ``MergePrep`` for epoch
+    per-bucket key stats, domain guards, lineage) — no target state is
+    read and nothing is committed or cached, so a ``MergePrep`` for epoch
     ``i+1`` can be computed CONCURRENTLY with epoch ``i``'s write+commit
-    (see ``engine.replay_pipelined``): the stats phase is the part of an
-    epoch that scales worst (a narrow-agg shuffle + one driver collect),
-    and hiding it under the previous epoch's map-only wide write removes
-    it from the critical path entirely. Safe because the epoch guard,
-    schema evolution and every manifest read stay in :meth:`LakeTable.merge`.
+    (see ``engine.replay_pipelined``): the stats collect is a driver round
+    trip, and running it under the previous epoch's write removes it from
+    the critical path. Safe because the epoch guard, schema evolution and
+    every manifest read stay in :meth:`LakeTable.merge`.
     """
 
-    src: DataFrame                  # normalized source (+ __h, _bucket)
-    winner_counts: DataFrame        # persisted narrow agg (unpersist in merge)
-    winner_keys: DataFrame          # per-key winning LSN (lazy, cache-fed)
-    pre: DataFrame | None           # plan (a): hash-prefiltered source rows
-    src_winners: DataFrame          # exact per-key winner rows (lazy)
+    src: DataFrame                  # normalized source (+ _bucket), lazy
     bucket_counts: list             # collected per-bucket stats rows
     lineage: dict                   # per-source-partition event counts
     n_winner_keys: int
     src_rows: int
-    plan_b: bool
     user_fields: list               # non-key payload StructFields
     incoming: "T.StructType"        # schema offered for evolution
-    stats_seconds: float            # wall time of the narrow agg + collect
+    stats_seconds: float            # wall time of the stats agg + collect
     table_root: str                 # safety: prep is table-specific
 
 
@@ -1409,28 +1403,46 @@ class LakeTable:
                 w = w.option(f"parquet.bloom.filter.enabled#{phys}", "true")
         return w
 
-    def _max_files_per_dirty_bucket(self, manifest: dict, dirty: list[int]) -> int:
-        """Largest parquet-file count among the dirty buckets' current dirs.
+    @staticmethod
+    def _lww(frames: list[DataFrame], keys: list[str], buckets: list[int]) -> DataFrame:
+        """Per-key last-writer-wins over ``frames`` in ONE exchange: the one
+        LWW collapse of every merge path (rewrite, defer, empty target).
 
-        Drives amortized compaction-on-write: the map-only merge path adds
-        ~one file per bucket per epoch; once a bucket crosses the threshold
-        the next merge pays one bucket-repartition to fold it back to a
-        single file. Driver-side listing of <= len(dirty) directories.
+        ``frames`` (one or two) carry ``_bucket``, and ``buckets`` lists the
+        buckets they touch. A key's rows all hash to one bucket, so sending
+        each bucket to a task of its own (``repartitionById`` on the bucket's
+        slot in ``buckets``; hashing the small bucket ids would stack
+        several buckets in one task) co-locates every key, and the
+        ``groupBy`` that follows needs no second shuffle. Each bucket is
+        written by exactly one task, so as exactly one file.
+
+        On an equal LSN the LATER frame wins: its rows carry ``__src`` = 1
+        and the ordering packs ``lsn * 2 + __src`` into one long, a plain
+        column that stays inside whole-stage codegen (a struct ordering
+        drops to an interpreted comparator, measured 5-12x slower). Pass
+        ``[target, source]`` so that replaying an applied event is a no-op.
+        NULL key columns group like any other value.
         """
-        worst = 0
-        deltas = manifest.get("deltas", {})
-        for b in dirty:
-            # Pending merge-on-read delta versions are extra files a reader
-            # must collapse — they count toward the bucket's file budget just
-            # like base files (each delta version contributes >= 1 file).
-            n = len(deltas.get(str(b), []))
-            v = manifest["buckets"].get(str(b))
-            if v is not None:
-                bdir = os.path.join(self.root, "data", f"v{int(v)}", f"{BUCKET_COL}={b}")
-                if os.path.isdir(bdir):
-                    n += sum(1 for f_ in os.listdir(bdir) if f_.endswith(".parquet"))
-            worst = max(worst, n)
-        return worst
+        df = frames[0].withColumn("__src", F.lit(0))
+        for i, f_ in enumerate(frames[1:], 1):
+            df = df.unionByName(
+                f_.withColumn("__src", F.lit(i)), allowMissingColumns=True
+            )
+        pay = [c for c in df.columns if c not in (*keys, "__src")]
+        slot = F.array_position(
+            F.array(*[F.lit(b) for b in buckets]), F.col(BUCKET_COL)
+        ) - 1
+        return (
+            df.withColumn("__slot", slot.cast("int"))
+            .repartitionById(max(len(buckets), 1), "__slot")
+            .groupBy("__slot", *keys)
+            .agg(
+                F.max_by(
+                    F.struct(*pay), F.col(LSN_COL) * 2 + F.col("__src")
+                ).alias("__w")
+            )
+            .select(*keys, *[F.col(f"__w.{c}").alias(c) for c in pay])
+        )
 
     # ------------------------------------------------------------------
     # MERGE
@@ -1441,20 +1453,19 @@ class LakeTable:
         lsn_col: str = "_lsn",
         tombstone_col: str | None = "_tombstone",
         lineage_col: str | None = None,
-        broadcast_key_limit: int = 2_000_000,
     ) -> MergePrep:
-        """Run the SOURCE-side half of a merge: normalization, the narrow
-        winner aggregation (one shuffle + ONE driver collect), LSN-domain
-        guards, lineage, and the plan (a)/(b) choice.
+        """Run the SOURCE-side half of a merge: normalization, the per-bucket
+        key stats (one aggregation + ONE driver collect), LSN-domain guards
+        and lineage.
 
-        Nothing here reads target data or the epoch ledger and nothing is
-        committed, so this is safe to run for epoch ``i+1`` concurrently
-        with epoch ``i``'s :meth:`merge` — the pipelined-ingest shape
-        (``engine.replay_pipelined``) that hides the stats phase, the
-        worst-scaling part of an epoch, under the previous epoch's map-only
-        wide write. Pass the result to ``merge(prep=...)``; the epoch guard
-        and schema evolution still happen there, against the manifest as of
-        apply time.
+        Nothing here reads target data or the epoch ledger, and nothing is
+        committed or cached, so this is safe to run for epoch ``i+1``
+        concurrently with epoch ``i``'s :meth:`merge` — the pipelined-ingest
+        shape (``engine.replay_pipelined``) that hides the stats collect
+        under the previous epoch's write. The normalized source stays lazy:
+        the write re-reads it. Pass the result to ``merge(prep=...)``; the
+        epoch guard and schema evolution still happen there, against the
+        manifest as of apply time.
         """
         t0 = time.time()
         manifest = self.manifest()
@@ -1481,62 +1492,34 @@ class LakeTable:
             + user_fields
             + [T.StructField(LSN_COL, T.LongType(), True)]
         )
-
-        # __h is the 64-bit key hash: it derives the bucket AND serves as the
-        # cheap probe key of plan (a)'s winner prefilter (hashing/comparing
-        # one long per row instead of the string key columns — measured ~2x
-        # on the wide pass). It is bookkeeping only, never written.
         src = src.withColumn(
-            "__h", F.xxhash64(*[F.col(k) for k in keys])
-        ).withColumn(BUCKET_COL, F.pmod(F.col("__h"), F.lit(n_buckets)).cast("int"))
+            BUCKET_COL,
+            F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int"),
+        )
 
         # Lineage (per-source-partition event count + LSN high watermark, the
-        # CDC log-position record) is folded into the winner aggregation
-        # below: adding the lineage column to the narrow agg's grouping keys
-        # costs nothing when a key maps to one log partition (the engine's
-        # case) and avoids what used to be a SECOND full scan of the batch —
-        # epochs are driver-latency-sensitive, and a whole extra scan+collect
-        # per epoch is serial time 4x cores cannot shrink.
+        # CDC log-position record) is folded into the key-stats aggregation
+        # below: adding the lineage column to its grouping keys costs nothing
+        # when a key maps to one log partition (the engine's case) and avoids
+        # a SECOND full scan of the batch — epochs are driver-latency-
+        # sensitive, and a whole extra scan+collect per epoch is serial time
+        # 4x cores cannot shrink.
         lineage: dict = {}
-
-        # Collapse the source to its per-key LWW winners. Two physical plans:
-        #
-        # (a) argmax-via-join-back (default): a NARROW aggregation over
-        #     (keys, bucket, lsn) finds each key's winning LSN — parquet
-        #     column pruning keeps the payload (the content column dominates
-        #     the batch's bytes) out of that scan entirely. The full-width
-        #     pass then keeps exactly the winning rows via a broadcast
-        #     semi-join, so the wide path is MAP-ONLY: no payload byte ever
-        #     crosses a shuffle and no per-update struct copy churns an agg
-        #     buffer. Profiling showed the merge's heavy stage is
-        #     DRAM-bandwidth-bound at high core counts (per-task CPU triples
-        #     with stall cycles at 32 concurrent tasks), so removing payload
-        #     traffic is the N->4N scaling lever.
-        # (b) single-pass max_by(struct) partial agg: when the epoch touches
-        #     more keys than a broadcast can carry (> broadcast_key_limit),
-        #     the one-shuffle plan wins — map-side partial collapse bounds
-        #     the exchange at one row per key per task. Equal-LSN duplicates
-        #     survive plan (a)'s join; the final LWW agg below collapses them
-        #     identically in both plans.
         lineage_grouped = lineage_col is not None
         group_cols = [*keys, BUCKET_COL] + ([lineage_col] if lineage_grouped else [])
-        winner_counts = (
-            src.groupBy(*group_cols)
-            .agg(
-                F.max(LSN_COL).alias(LSN_COL),
-                F.count(F.lit(1)).alias("__cnt"),
-                # count(col) skips NULLs: __cnt - __cnt_lsn = null-LSN rows,
-                # guarded below (a NULL log position has no LWW meaning)
-                F.count(F.col(LSN_COL)).alias("__cnt_lsn"),
-                F.min(LSN_COL).alias("__min_lsn"),
-            )
-            .persist()
+        key_stats = src.groupBy(*group_cols).agg(
+            F.max(LSN_COL).alias(LSN_COL),
+            F.count(F.lit(1)).alias("__cnt"),
+            # count(col) skips NULLs: __cnt - __cnt_lsn = null-LSN rows,
+            # guarded below (a NULL log position has no LWW meaning)
+            F.count(F.col(LSN_COL)).alias("__cnt_lsn"),
+            F.min(LSN_COL).alias("__min_lsn"),
         )
-        # ONE driver action (a grouping-sets pass over the cached narrow agg)
-        # yields the touched-bucket set, the winner-key count, the batch row
-        # count, the LSN high watermark AND the per-partition lineage
-        # (epochs are driver-latency-sensitive: each extra job is a serial
-        # round trip that 4x cores cannot shrink).
+        # ONE driver action yields the touched-bucket set, the winner-key
+        # count, the batch row count, the LSN bounds AND the per-partition
+        # lineage (each extra job is a serial round trip that 4x cores cannot
+        # shrink). With lineage, a key spanning several log partitions counts
+        # once per partition in n_keys.
         stat_aggs = [
             F.count(F.lit(1)).alias("n_keys"),
             F.sum("__cnt").alias("n_events"),
@@ -1549,7 +1532,7 @@ class LakeTable:
         ]
         if lineage_grouped:
             stats = (
-                winner_counts.groupingSets(
+                key_stats.groupingSets(
                     [[BUCKET_COL], [lineage_col]], BUCKET_COL, lineage_col
                 )
                 .agg(*stat_aggs, F.grouping(BUCKET_COL).alias("__gb"))
@@ -1557,20 +1540,9 @@ class LakeTable:
             )
             bucket_counts = [r for r in stats if r["__gb"] == 0]
             src = src.drop(lineage_col)
-            # Tiny cache-fed regroup back to key grain for the broadcast set.
-            # (A key spanning several log partitions appears once per
-            # partition in the narrow agg; n_keys then overcounts distinct
-            # keys, which only flips to plan (b) EARLIER — safe.)
-            winner_keys = winner_counts.groupBy(*keys, BUCKET_COL).agg(
-                F.max(LSN_COL).alias(LSN_COL)
-            )
         else:
             stats = []
-            bucket_counts = (
-                winner_counts.groupBy(BUCKET_COL).agg(*stat_aggs).collect()
-            )
-            winner_keys = winner_counts.drop("__cnt", "__cnt_lsn", "__min_lsn")
-        pay_src = [c for c in src.columns if c not in keys and c != "__h"]
+            bucket_counts = key_stats.groupBy(BUCKET_COL).agg(*stat_aggs).collect()
         n_winner_keys = int(sum(r["n_keys"] for r in bucket_counts))
         src_rows = int(sum(r["n_events"] for r in bucket_counts))
         n_null_lsn = int(
@@ -1585,23 +1557,19 @@ class LakeTable:
             default=None,
         )
         if min_lsn_seen is not None and min_lsn_seen < 0:
-            winner_counts.unpersist()
             raise ValueError(
                 f"LSN {min_lsn_seen} is outside the supported domain "
                 f"[0, 2**62): log positions must be non-negative (see "
                 f"merge() docstring); re-scale or re-pack the log position "
                 f"before merging"
             )
-        if n_null_lsn or (
-            max_lsn_seen is not None and max_lsn_seen >= _LSN_DOMAIN_MAX
-        ):
-            winner_counts.unpersist()
-            if n_null_lsn:
-                raise ValueError(
-                    f"{n_null_lsn} source row(s) have a NULL LSN — a NULL log "
-                    f"position has no last-writer-wins meaning; assign every "
-                    f"event a position in [0, 2**62) before merging"
-                )
+        if n_null_lsn:
+            raise ValueError(
+                f"{n_null_lsn} source row(s) have a NULL LSN — a NULL log "
+                f"position has no last-writer-wins meaning; assign every "
+                f"event a position in [0, 2**62) before merging"
+            )
+        if max_lsn_seen is not None and max_lsn_seen >= _LSN_DOMAIN_MAX:
             raise ValueError(
                 f"LSN {max_lsn_seen} is outside the supported domain "
                 f"[0, 2**62): the equal-LSN tiebreak packs lsn*2+src into one "
@@ -1614,60 +1582,15 @@ class LakeTable:
                     "events": int(r["n_events"]),
                     "max_lsn": int(r["max_lsn"]),
                 }
-        plan_b = n_winner_keys > broadcast_key_limit
-        stats_seconds = round(time.time() - t0, 3)
-        if plan_b:
-            src_winners = (
-                src.groupBy(*keys)
-                .agg(F.max_by(F.struct(*pay_src), F.col(LSN_COL)).alias("__w"))
-                .select(*keys, *[F.col(f"__w.{c}").alias(c) for c in pay_src])
-                .persist()
-            )
-        else:
-            # Winner PREFILTER on the long key hash, then an exact collapse:
-            #
-            # 1. Broadcast semi-join on (__h, lsn) — two longs, so the probe
-            #    hashes/compares 16 bytes per row instead of the string key
-            #    columns (measured: the string-key join-back cost more than
-            #    the full-payload scan under it; the long-pair probe roughly
-            #    halves the wide pass). It passes a SUPERSET of the winner
-            #    rows: hash collisions (random 64-bit, or systematic — e.g.
-            #    xxhash64 skips NULL columns, so (a, NULL) and (NULL, a)
-            #    share a hash) admit a few extra stale rows.
-            # 2. groupBy on the REAL key columns with max_by — over the tiny
-            #    filtered set only — removes every collision artifact and
-            #    collapses equal-LSN replay duplicates in the same (small)
-            #    shuffle the dropDuplicates used to spend. NULL keys are safe
-            #    end-to-end: xxhash64 hashes them deterministically and
-            #    groupBy treats them as ordinary values.
-            wk_hl = winner_keys.select(
-                F.xxhash64(*[F.col(k) for k in keys]).alias("__h"),
-                F.col(LSN_COL),
-            )
-            pre = src.join(F.broadcast(wk_hl), ["__h", LSN_COL], "inner")
-            # Exact collapse of the prefiltered set — used as-is by defer
-            # mode and the empty-target insert path; the rewrite path below
-            # FUSES this aggregation with the contested-target resolution
-            # so the epoch pays one winner-sized shuffle, not two.
-            src_winners = (
-                pre.groupBy(*keys)
-                .agg(F.max_by(F.struct(*pay_src), F.col(LSN_COL)).alias("__w"))
-                .select(*keys, *[F.col(f"__w.{c}").alias(c) for c in pay_src])
-            )
         return MergePrep(
             src=src,
-            winner_counts=winner_counts,
-            winner_keys=winner_keys,
-            pre=pre if not plan_b else None,
-            src_winners=src_winners,
             bucket_counts=bucket_counts,
             lineage=lineage,
             n_winner_keys=n_winner_keys,
             src_rows=src_rows,
-            plan_b=plan_b,
             user_fields=user_fields,
             incoming=incoming,
-            stats_seconds=stats_seconds,
+            stats_seconds=round(time.time() - t0, 3),
             table_root=self.root,
         )
 
@@ -1679,7 +1602,6 @@ class LakeTable:
         epoch_id: int | None = None,
         stream_id: str = "default",
         lineage_col: str | None = None,
-        broadcast_key_limit: int = 2_000_000,
         compact_files_per_bucket: int = 4,
         mode: str = "rewrite",
         prep: MergePrep | None = None,
@@ -1700,8 +1622,8 @@ class LakeTable:
         tombstones for ``delete.retention.ms`` for exactly this reason.)
 
         ``source`` carries the user columns plus an LSN column; rows need not
-        be pre-deduplicated (an in-batch LWW collapse runs first). On equal
-        LSN the source row wins over the stored row — replaying an
+        be pre-deduplicated (the LWW collapse runs over the raw batch). On
+        equal LSN the source row wins over the stored row — replaying an
         already-applied event is therefore idempotent (the content is
         identical by determinism of the log). Two *distinct* source events
         sharing an LSN for the same key have no defined winner: the LSN must
@@ -1709,25 +1631,30 @@ class LakeTable:
         ``(partition_epoch << k) | offset`` for multi-partition logs before
         calling merge).
 
+        Plan: ONE exchange (see :meth:`_lww`). The source ∪ the dirty
+        buckets' current rows go one dirty bucket per task, are collapsed
+        per key there and written as one file per dirty bucket. Source and
+        carried target rows both cross that exchange; that is the price of
+        a single job chain and a layout that never accumulates files.
+
         **LSN domain**: ``0 <= lsn < 2**62``. The equal-LSN source-wins
-        tiebreak packs ``lsn * 2 + source_flag`` into one long so the LWW
-        ordering stays a plain column inside whole-stage codegen (a struct
-        ordering drops to an interpreted comparator, measured 5-12x slower);
-        a batch whose max LSN is outside the domain raises rather than
-        silently overflowing. **NULL keys** are legal: all merge joins use
-        null-safe (struct-wrapped) key equality, so a NULL key column
-        upserts like any other value in every plan (broadcast join-back,
-        union+LWW, and merge-on-read defer).
+        tiebreak packs ``lsn * 2 + source_flag`` into one long; a batch
+        whose LSNs fall outside the domain raises rather than silently
+        overflowing. **NULL keys** are legal: the LWW group-by treats a
+        NULL key column as an ordinary value, in rewrite and in
+        merge-on-read defer alike.
 
         ``mode="defer"`` is the **merge-on-read** path (Iceberg MOR
         analogue): the collapsed per-key winners are APPENDED as delta files
         — epoch cost is O(batch), never O(dirty buckets) — and readers
         LWW-collapse base ∪ deltas at scan time (see ``_read_buckets``).
         Deltas fold back into the base the next time a rewrite-mode merge,
-        ``purge_tombstones`` or :meth:`compact` touches their bucket. Use
-        defer for update-heavy ingest bursts, rewrite (default) for
-        read-optimized steady state; exactly-once, LWW and tombstone
-        semantics are identical in both modes.
+        ``purge_tombstones`` or :meth:`compact` touches their bucket; a
+        defer epoch itself rewrites once a dirty bucket holds
+        ``compact_files_per_bucket`` pending deltas. Use defer for
+        update-heavy ingest bursts, rewrite (default) for read-optimized
+        steady state; exactly-once, LWW and tombstone semantics are
+        identical in both modes.
 
         ``prep``: a :class:`MergePrep` from :meth:`merge_prepare` — the
         source-side stats half, precomputed (typically concurrently with the
@@ -1743,10 +1670,6 @@ class LakeTable:
         t0 = time.time()
         manifest = self.manifest()
         if epoch_id is not None and int(manifest["epochs"].get(stream_id, -1)) >= epoch_id:
-            if prep is not None:
-                prep.winner_counts.unpersist()
-                if prep.plan_b:
-                    prep.src_winners.unpersist()
             return MergeStats(epoch_id=epoch_id, skipped=True)
         if prep is None:
             if source is None:
@@ -1756,7 +1679,6 @@ class LakeTable:
                 lsn_col=lsn_col,
                 tombstone_col=tombstone_col,
                 lineage_col=lineage_col,
-                broadcast_key_limit=broadcast_key_limit,
             )
         elif prep.table_root != self.root:
             raise ValueError(
@@ -1765,20 +1687,11 @@ class LakeTable:
             )
 
         keys = manifest["key_columns"]
-        winner_counts = prep.winner_counts
-        winner_keys = prep.winner_keys
-        pre = prep.pre
-        src_winners = prep.src_winners
-        bucket_counts = prep.bucket_counts
-        lineage = prep.lineage
-        src_rows = prep.src_rows
-        plan_b = prep.plan_b
-        user_fields = prep.user_fields
         new_schema_json, added, widened = self._evolve_schema(manifest, prep.incoming)
         # Register added columns in the column mapping (no-op for tables
         # that never renamed/dropped): rebinding the local manifest here
-        # makes every _bucket_writer call below write the right physical
-        # names and every `{**manifest, ...}` commit carry the mapping.
+        # makes the _bucket_writer call below write the right physical
+        # names and the `{**manifest, ...}` commit carry the mapping.
         mapping_updates = self._mapping_after_add(manifest, added)
         if mapping_updates:
             manifest = {**manifest, **mapping_updates}
@@ -1790,197 +1703,67 @@ class LakeTable:
             else {**manifest["epochs"], stream_id: epoch_id},
             "schema": new_schema_json or manifest["schema"],
         }
-        try:
-            dirty = sorted(int(r[BUCKET_COL]) for r in bucket_counts)
-            summary = {"source_rows": src_rows, "dirty_buckets": len(dirty)}
+        dirty = sorted(int(r[BUCKET_COL]) for r in prep.bucket_counts)
+        summary = {"source_rows": prep.src_rows, "dirty_buckets": len(dirty)}
 
-            if mode == "defer":
-                # Bound read amplification: once a dirty bucket has
-                # accumulated compact_files_per_bucket pending deltas, this
-                # epoch pays the rewrite (folding them) instead of deferring.
-                pending = manifest.get("deltas", {})
-                max_pending = max(
-                    (len(pending.get(str(b), [])) for b in dirty), default=0
-                )
-                if max_pending >= compact_files_per_bucket:
-                    mode = "rewrite"
+        if mode == "defer":
+            # Bound read amplification: once a dirty bucket has
+            # accumulated compact_files_per_bucket pending deltas, this
+            # epoch pays the rewrite (folding them) instead of deferring.
+            pending = manifest.get("deltas", {})
+            if max(
+                (len(pending.get(str(b), [])) for b in dirty), default=0
+            ) >= compact_files_per_bucket:
+                mode = "rewrite"
 
-            if mode == "defer":
-                # Merge-on-read: append collapsed winners as delta files and
-                # commit; the target is never read, so epoch cost is O(batch).
-                # Both plans pre-collapse src_winners to one row per key.
-                committed = self._commit(
-                    body,
-                    {**summary, "mode": "defer"},
-                    data=src_winners.repartition(
-                        max(len(dirty), 1), F.col(BUCKET_COL)
-                    ),
-                    dirty=dirty,
-                    append=True,
-                    phases=phases,
-                )
-                return MergeStats(
-                    epoch_id=epoch_id,
-                    skipped=False,
-                    source_rows=src_rows,
-                    dirty_buckets=len(dirty),
-                    total_buckets=len(committed["buckets"]),
-                    # the appended delta rows ARE the winner set (one
-                    # LWW-collapsed row per key) — same meaning as the
-                    # rewrite path's count; replicate() reports it
-                    rows_written=prep.n_winner_keys,
-                    schema_added_columns=added,
-                    schema_widened_columns=widened,
-                    seconds=time.time() - t0,
-                    lineage=lineage,
-                    phases=phases,
-                )
-
+        if mode == "defer":
+            # Merge-on-read: append collapsed winners as delta files and
+            # commit; the target is never read, so epoch cost is O(batch).
+            committed = self._commit(
+                body,
+                {**summary, "mode": "defer"},
+                data=self._lww([prep.src], keys, dirty),
+                dirty=dirty,
+                append=True,
+                phases=phases,
+            )
+        else:
+            frames = [prep.src]
             target = self._read_buckets(manifest, dirty)
             if target is not None:
-                # Align target to the evolved column set. Stored rows carry their
-                # own tombstone flag: delete markers are RETAINED in the table
-                # (filtered at read) so their LSN keeps shielding the key from
-                # late-arriving lower-LSN inserts — batches need not be LSN-ordered.
-                for f_ in user_fields:
+                # Align target to the evolved column set. Stored rows carry
+                # their own tombstone flag: delete markers are RETAINED in
+                # the table (filtered at read) so their LSN keeps shielding
+                # the key from late-arriving lower-LSN inserts — batches
+                # need not be LSN-ordered.
+                for f_ in prep.user_fields:
                     if f_.name not in target.columns:
                         target = target.withColumn(f_.name, F.lit(None).cast(f_.dataType))
                 if TOMBSTONE_COL not in target.columns:
                     target = target.withColumn(TOMBSTONE_COL, F.lit(False))
-
-            # Combine source winners with the dirty-target rows. Two plans,
-            # matching the collapse above:
-            #
-            # (a) broadcast-merge (default): untouched target rows are carried
-            #     MAP-ONLY (one broadcast probe against the winner-key set);
-            #     rows whose key this epoch touched resolve in one
-            #     winner-sized aggregation shared with the source prefilter
-            #     (see the plan (a) construction above). NO shuffle is
-            #     proportional to table or batch size — at 100 TB an
-            #     update-heavy epoch rewrites its dirty buckets in place of a
-            #     cluster-wide exchange; the only exchange carries ~one row
-            #     per touched key.
-            #     File growth: carried rows write ~one file per input split, so
-            #     a bucket gains ~one file per epoch; once any dirty bucket
-            #     exceeds compact_files_per_bucket the epoch's write runs
-            #     through the compacting repartition below instead (amortized
-            #     compaction-on-write, Iceberg rewrite_data_files folded into
-            #     the merge).
-            # (b) union + LWW aggregation: when winners exceed the broadcast
-            #     limit — one key-hash shuffle of winners ∪ dirty-target rows.
-            #     Source wins equal-LSN ties by packing (lsn, src) into one
-            #     long: a plain-column max_by ordering stays inside whole-stage
-            #     codegen (struct orderings drop to an interpreted comparator
-            #     that measured 5-12x slower), and sessions should raise
-            #     spark.sql.objectHashAggregate.sortBased.fallbackThreshold
-            #     (default 128 keys => every epoch silently sorts; see
-            #     main.build_session).
-            # A delta-collapsed target already pays a key-hash aggregation in
-            # _read_buckets, scattering carried rows across shuffle
-            # partitions — force the compacting repartition then, or a bucket
-            # gains up to shuffle-partitions small files in one epoch.
-            has_deltas = any(
-                manifest.get("deltas", {}).get(str(b)) for b in dirty
-            )
-            compact = plan_b or has_deltas or self._max_files_per_dirty_bucket(
-                manifest, dirty
-            ) >= compact_files_per_bucket
-            if not plan_b:
-                if target is not None:
-                    # ONE probe of the target against the winner-key set
-                    # (struct-wrapped keys: null-safe equality, still a
-                    # BroadcastHashJoin) splits it into:
-                    #   carried  — keys this epoch never touched: rewritten
-                    #              MAP-ONLY, no shuffle, no comparison;
-                    #   contested — target rows whose key has a winner: the
-                    #              LWW decision (including the stale-late-
-                    #              arrival case) moves into the SAME small
-                    #              aggregation that collapses the prefiltered
-                    #              source rows, via the packed
-                    #              (lsn*2 + source_flag) ordering — source
-                    #              wins equal LSN, so replay is idempotent.
-                    # This removes the former second target probe + stale-set
-                    # broadcast build + anti-join: per epoch, two broadcast
-                    # builds and one winner-sized exchange, total.
-                    wk = winner_keys.select(
-                        F.struct(*keys).alias("__jk"), F.col(LSN_COL).alias("__w_lsn")
-                    )
-                    tj = target.withColumn("__jk", F.struct(*keys)).join(
-                        F.broadcast(wk), "__jk", "left"
-                    )
-                    carried = tj.filter(F.col("__w_lsn").isNull()).drop(
-                        "__jk", "__w_lsn"
-                    )
-                    contested = tj.filter(F.col("__w_lsn").isNotNull()).drop(
-                        "__jk", "__w_lsn"
-                    )
-                    combined = pre.withColumn("__src", F.lit(1)).unionByName(
-                        contested.withColumn("__src", F.lit(0)),
-                        allowMissingColumns=True,
-                    )
-                    pay2 = [
-                        c
-                        for c in combined.columns
-                        if c not in keys and c not in ("__h", "__src")
-                    ]
-                    ordering = F.col(LSN_COL) * 2 + F.col("__src")
-                    resolved = (
-                        combined.groupBy(*keys)
-                        .agg(F.max_by(F.struct(*pay2), ordering).alias("__w"))
-                        .select(*keys, *[F.col(f"__w.{c}").alias(c) for c in pay2])
-                    )
-                    live = carried.unionByName(
-                        resolved if compact else resolved.repartition(
-                            max(len(dirty), 1), F.col(BUCKET_COL)
-                        ),
-                        allowMissingColumns=True,
-                    )
-                else:
-                    live = src_winners
-            else:
-                tgt = (
-                    [target.withColumn("__src", F.lit(0))] if target is not None else []
-                )
-                combined = src_winners.withColumn("__src", F.lit(1))
-                for t_ in tgt:
-                    combined = combined.unionByName(t_, allowMissingColumns=True)
-                pay2 = [c for c in combined.columns if c not in keys]
-                ordering = F.col(LSN_COL) * 2 + F.col("__src")
-                live = (
-                    combined.groupBy(*keys)
-                    .agg(F.max_by(F.struct(*pay2), ordering).alias("__w"))
-                    .select(*keys, *[F.col(f"__w.{c}").alias(c) for c in pay2])
-                    .drop("__src")
-                )
-
-            # Write only dirty buckets into the new data version. The
-            # compacting path bounds output to one file per touched bucket;
-            # the map-only path streams carried rows straight from their
-            # bucket files into the new version.
-            if compact:
-                live = live.repartition(max(len(dirty), 1), F.col(BUCKET_COL))
-            # the rewrite folds the dirty buckets' pending deltas into the
-            # new base files (the target was delta-collapsed by _read_buckets)
+                frames = [target, prep.src]
+            # The rewrite folds the dirty buckets' pending deltas into the
+            # new base files (the target was delta-collapsed by _read_buckets).
             committed = self._commit(
-                body, summary, data=live, dirty=dirty, phases=phases
+                body,
+                summary,
+                data=self._lww(frames, keys, dirty),
+                dirty=dirty,
+                phases=phases,
             )
-        finally:
-            # unpersist on every exit path -- a write/schema failure must
-            # not leak the cached winners for the session's lifetime
-            winner_counts.unpersist()
-            if plan_b:
-                src_winners.unpersist()
         return MergeStats(
             epoch_id=epoch_id,
             skipped=False,
-            source_rows=src_rows,
+            source_rows=prep.src_rows,
             dirty_buckets=len(dirty),
             total_buckets=len(committed["buckets"]),
+            # the winner set: one LWW-collapsed row per key, which in defer
+            # mode is exactly the delta rows appended (replicate() reports it)
             rows_written=prep.n_winner_keys,
             schema_added_columns=added,
             schema_widened_columns=widened,
             seconds=time.time() - t0,
-            lineage=lineage,
+            lineage=prep.lineage,
             phases=phases,
         )
 

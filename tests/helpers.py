@@ -35,3 +35,16 @@ def make_envelope_df(
             }
         )
     return spark.createDataFrame(full, envelope_schema(value_type))
+
+
+def spark_jobs(spark: SparkSession, fn) -> int:
+    """The number of Spark jobs ``fn()`` runs, counted through a job group
+    of its own."""
+    sc = spark.sparkContext
+    group = f"jobs-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

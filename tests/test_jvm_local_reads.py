@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_connect_plugins_spark.plans.lake_table import LakeTable
+from tests.helpers import spark_jobs
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -49,7 +50,7 @@ def _rows(spark, n):
 
 _NO_WORKER_SCRIPT = textwrap.dedent(
     """
-    import json, os, sys
+    import json, os, sys, time
     sys.path.insert(0, {repo!r})
     from pyspark import SparkContext
     from pyspark.sql import SparkSession, functions as F, types as T
@@ -88,15 +89,37 @@ _NO_WORKER_SCRIPT = textwrap.dedent(
     ))["rows_inserted"]
 
     jvm = SparkContext._gateway.proc.pid
-    children = []
-    for tid in os.listdir(f"/proc/{{jvm}}/task"):
-        with open(f"/proc/{{jvm}}/task/{{tid}}/children") as f:
-            children += f.read().split()
-    cmds = []
-    for pid in children:
-        with open(f"/proc/{{pid}}/cmdline", "rb") as f:
-            cmds.append(f.read().replace(b"\\0", b" ").decode())
-    print("RESULT " + json.dumps({{"got": got, "children": cmds}}))
+
+    def children():
+        # {{pid: cmdline}} of the JVM's children. A child that exits between
+        # the listing and the read, or is mid-exit (empty cmdline), is
+        # skipped: it is transient, not a worker.
+        out = {{}}
+        for tid in os.listdir(f"/proc/{{jvm}}/task"):
+            try:
+                with open(f"/proc/{{jvm}}/task/{{tid}}/children") as f:
+                    pids = f.read().split()
+            except FileNotFoundError:
+                continue
+            for pid in pids:
+                try:
+                    with open(f"/proc/{{pid}}/cmdline", "rb") as f:
+                        cmd = f.read().replace(b"\\0", b" ").decode().strip()
+                except (FileNotFoundError, ProcessLookupError):
+                    continue
+                if cmd:
+                    out[pid] = cmd
+        return out
+
+    # re-read until two scans agree: a short-lived child (e.g. a shell
+    # command) is gone by the next scan, a Python worker daemon stays
+    cur = children()
+    for _ in range(20):
+        time.sleep(0.25)
+        prev, cur = cur, children()
+        if cur == prev:
+            break
+    print("RESULT " + json.dumps({{"got": got, "children": sorted(cur.values())}}))
     spark.stop()
     """
 )
@@ -121,19 +144,8 @@ def test_read_path_starts_no_python_worker(tmp_path):
         "feed": 20, "no_change": 0, "single": 1, "multi": 2, "null": 2,
         "empty_read": 0, "merge_into": 3,
     }
-    # no pyspark.daemon (or any other process) was started by the JVM
+    # no pyspark.daemon (or any other lasting process) was started by the JVM
     assert out["children"] == []
-
-
-def _jobs(spark, fn):
-    sc = spark.sparkContext
-    group = f"jobs-{id(fn)}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 class TestSparkJobs:
@@ -144,7 +156,7 @@ class TestSparkJobs:
         got = []
         # the parquet schema-inference job and the scan; the bucket id
         # itself costs no job
-        assert _jobs(spark, lambda: got.extend(
+        assert spark_jobs(spark, lambda: got.extend(
             t.lookup({"repo": "r", "path": "7"}).collect())) == 2
         assert [(r["path"], r["size"]) for r in got] == [("7", 7)]
 
@@ -154,7 +166,7 @@ class TestSparkJobs:
             {"repo": "r", "path": "7"}, {"repo": "r", "path": None},
         ])
         buckets = []
-        assert _jobs(spark, lambda: buckets.extend(keys.select(
+        assert spark_jobs(spark, lambda: buckets.extend(keys.select(
             F.pmod(F.xxhash64("repo", "path"), F.lit(8)).alias("b")
         ).collect())) == 0
         # the writer's expression over the same values

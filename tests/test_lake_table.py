@@ -1,5 +1,7 @@
 """LakeTable MERGE semantics: LWW, deletes, epochs, evolution, bucket pruning."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -7,6 +9,7 @@ from kafka_connect_plugins_spark.plans.lake_table import (
     LakeTable,
     SchemaEvolutionError,
 )
+from tests.helpers import spark_jobs
 
 
 def _table(spark, tmp_path, buckets=8):
@@ -221,10 +224,8 @@ def test_lineage_probe(spark, tmp_path):
 
 
 def test_plan_b_unionagg_matches_plan_a(spark, tmp_path):
-    """broadcast_key_limit=0 forces the union+LWW-agg plan; final state must
-    be identical to the default broadcast-merge plan on the same batches."""
-    import os
-
+    """Two batches through the one LWW merge plan: an update wins, a stale
+    late arrival loses to the stored LSN and a delete hides its key."""
     rows1 = [
         {"repo": "r", "path": f"p{i}", "commit": "c", "lang": "py",
          "content": f"v{i}", "_lsn": i, "_tombstone": False}
@@ -238,26 +239,27 @@ def test_plan_b_unionagg_matches_plan_a(spark, tmp_path):
          {"repo": "r", "path": "p5", "commit": None, "lang": None,
           "content": None, "_lsn": 101, "_tombstone": True}]     # delete
     )
-    states = {}
-    for name, limit in (("a", 2_000_000), ("b", 0)):
-        t = LakeTable.create(
-            spark, str(tmp_path / f"tbl_{name}"), key_columns=["repo", "path"],
-            num_buckets=4,
-        )
-        t.merge(_src(spark, rows1), broadcast_key_limit=limit)
-        t.merge(_src(spark, rows2), broadcast_key_limit=limit)
-        states[name] = _state(t)
-    assert states["a"] == states["b"]
-    assert states["a"][("r", "p3")] == ("updated", 100)
-    assert states["a"][("r", "p4")] == ("v4", 4)
-    assert ("r", "p5") not in states["a"]
+    t = _table(spark, tmp_path, buckets=4)
+    t.merge(_src(spark, rows1))
+    t.merge(_src(spark, rows2))
+    state = _state(t)
+    assert state[("r", "p3")] == ("updated", 100)
+    assert state[("r", "p4")] == ("v4", 4)
+    assert ("r", "p5") not in state
+
+
+def _parquet_files_per_bucket(t):
+    m = t.manifest()
+    counts = {}
+    for b, v in m["buckets"].items():
+        bdir = os.path.join(t.root, "data", f"v{v}", f"_bucket={b}")
+        counts[int(b)] = sum(1 for f_ in os.listdir(bdir) if f_.endswith(".parquet"))
+    return counts
 
 
 def test_map_only_path_file_growth_is_compacted(spark, tmp_path):
-    """The map-only merge adds ~one file per dirty bucket per epoch;
-    compaction-on-write must bound the per-bucket file count."""
-    import os
-
+    """Every rewrite writes each dirty bucket as exactly one file, so the
+    per-bucket file count never grows across epochs."""
     t = LakeTable.create(
         spark, str(tmp_path / "tbl"), key_columns=["repo", "path"], num_buckets=1
     )
@@ -267,16 +269,49 @@ def test_map_only_path_file_growth_is_compacted(spark, tmp_path):
                 {"repo": "r", "path": f"p{epoch}", "commit": "c", "lang": "py",
                  "content": f"v{epoch}", "_lsn": epoch, "_tombstone": False},
             ]),
-            compact_files_per_bucket=3,
         )
-    m = t.manifest()
-    v = m["buckets"]["0"]
-    bdir = os.path.join(str(tmp_path / "tbl"), "data", f"v{v}", "_bucket=0")
-    n_files = sum(1 for f_ in os.listdir(bdir) if f_.endswith(".parquet"))
-    assert n_files <= 4  # threshold 3 + this epoch's fresh file
+    assert _parquet_files_per_bucket(t) == {0: 1}
     # and the data is intact after all that rewriting
     assert len(_state(t)) == 10
     assert _state(t)[("r", "p7")] == ("v7", 7)
+
+    # multi-partition sources over several buckets, each epoch updating half
+    # of the previous epoch's keys and carrying the rest: still one file each
+    w = LakeTable.create(
+        spark, str(tmp_path / "wide"), key_columns=["repo", "path"], num_buckets=4
+    )
+    for epoch in range(4):
+        w.merge(spark.range(epoch * 150, epoch * 150 + 300, numPartitions=8).select(
+            F.lit("r").alias("repo"),
+            F.col("id").cast("string").alias("path"),
+            F.lit("py").alias("lang"),
+            F.lit(f"e{epoch}").alias("content"),
+            (F.lit(epoch * 1000) + F.col("id")).alias("_lsn"),
+            F.lit(False).alias("_tombstone"),
+        ))
+    assert _parquet_files_per_bucket(w) == {b: 1 for b in range(4)}
+    assert w.read().count() == 750
+
+
+def test_warm_rewrite_epoch_job_count(spark, tmp_path):
+    """A warm rewrite epoch that updates some keys and carries the rest runs
+    the stats collect and ONE exchange write: no broadcast builds, no
+    separate compaction pass."""
+    from kafka_connect_plugins_spark.engine import apply_batch, create_repo_table
+    from kafka_connect_plugins_spark.sources.changelog import changelog
+
+    events = changelog(spark, 6000, num_repos=20, paths_per_repo=200)
+    t = create_repo_table(spark, str(tmp_path / "tbl"), num_buckets=4)
+
+    def epoch(i):
+        batch = events.filter(
+            (F.col("offset") >= i * 2000) & (F.col("offset") < (i + 1) * 2000)
+        )
+        return apply_batch(t, batch, epoch_id=i)
+
+    epoch(0)
+    epoch(1)  # warm
+    assert spark_jobs(spark, lambda: epoch(2)) <= 8
 
 
 def test_equal_lsn_replay_dupes_collapse_in_plan_a(spark, tmp_path):

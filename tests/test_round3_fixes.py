@@ -71,13 +71,6 @@ def test_null_keys_plan_a_broadcast(spark, tmp_path):
     assert _state(t) == _EXPECT_AFTER_2
 
 
-def test_null_keys_plan_b_union_agg(spark, tmp_path):
-    t = _table(spark, tmp_path, "b")
-    t.merge(_src(spark, _NULL_BATCH_1), broadcast_key_limit=0)
-    t.merge(_src(spark, _NULL_BATCH_2), broadcast_key_limit=0)
-    assert _state(t) == _EXPECT_AFTER_2
-
-
 def test_null_keys_defer_mode(spark, tmp_path):
     t = _table(spark, tmp_path, "d")
     t.merge(_src(spark, _NULL_BATCH_1), mode="defer")

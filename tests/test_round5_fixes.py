@@ -124,10 +124,6 @@ def test_pipelined_replay_failure_resets_pool_and_caches(spark, tmp_path):
     def flaky_merge(*args, **kwargs):
         calls["n"] += 1
         if calls["n"] == 2:  # epoch 1's apply: fail AFTER epoch 2's prepare
-            prep = kwargs.get("prep")  # was submitted to the helper thread
-            prep.winner_counts.unpersist()  # merge() releases prep caches on
-            if prep.plan_b:  # its own failure paths; mirror that
-                prep.src_winners.unpersist()
             raise RuntimeError("injected write failure")
         return real_merge(*args, **kwargs)
 
