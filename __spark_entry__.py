@@ -2,9 +2,9 @@
 
 ``queries()`` exposes one entry per implemented operator from SURVEY.md §2
 (the eight reference SMTs + engine stages) plus the training-data-pipeline
-operators (dedup / minhash / knn / text analysis). Each has a matching
-``oracle_sql()`` ANSI-SQL string DuckDB runs on the same parquet tables;
-column names and types are aligned on both sides.
+operators (exact dedup / minhash signatures / text analysis). Each has a
+matching ``oracle_sql()`` ANSI-SQL string DuckDB runs on the same parquet
+tables; column names and types are aligned on both sides.
 
 The change-event queries synthesize an envelope in-query from the driver's
 ``events`` / ``lineitem`` / ``orders`` tables (deterministic column
@@ -34,17 +34,8 @@ from kafka_connect_plugins_spark.functions.text import (
     quality_features,
     rolling_fingerprint,
 )
-from kafka_connect_plugins_spark.operators import neardup, similarity
-from kafka_connect_plugins_spark.plans.parallelism import spread
 
 EPOCH0 = 1_700_000_000_000
-
-# session-scoped cache of the verified MinHash-LSH pair set: three gates
-# (minhash_lsh_pairs, dedup_clusters, dedup_clusters_star) consume the SAME
-# edge list, and pair mining (shingle hashing + band join + Jaccard verify)
-# is the expensive half of cluster resolution — mine once, cluster twice.
-# Keyed by applicationId so a cached frame never outlives its session.
-_LSH_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -53,7 +44,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 # session-scoped cache of the on-disk LakeTable built by q_cdc_pruned_tail
 # (replaying events into a real bucketed table is the expensive half; the
-# pruned read under test is cheap). Keyed like _LSH_PAIRS_CACHE.
+# pruned read under test is cheap). Keyed by applicationId so a cached
+# table never outlives its session.
 _PRUNED_TABLE_CACHE: dict[tuple[str, str], tuple[str, int]] = {}
 _REPLICA_CACHE: dict[tuple[str, str], str] = {}
 _SCHEMA_EVO_CACHE: dict[tuple[str, str], str] = {}
@@ -90,17 +82,6 @@ def _pruned_tail_table(spark: SparkSession, sf_dir: str):
         return table, int(w)
     root, w = cached
     return LakeTable.load(spark, root), w
-
-
-def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    pairs = _LSH_PAIRS_CACHE.get(key)
-    if pairs is None:
-        pairs = neardup.minhash_lsh_pairs(
-            _t(spark, sf_dir, "documents"), "doc_id", "text", verify_threshold=0.5
-        ).persist()
-        _LSH_PAIRS_CACHE[key] = pairs
-    return pairs
 
 
 # ----------------------------------------------------------------------
@@ -167,7 +148,7 @@ _STATUS_PLAIN = "CASE o_orderstatus WHEN 'O' THEN 'open' WHEN 'F' THEN 'finished
 def _orders_slack_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders → the Slack two-variant payload; even orderkeys are V1 (bot
     struct), odd are V2 (top-level token + nested team)."""
-    o = spread(_t(spark, sf_dir, "orders"))
+    o = _t(spark, sf_dir, "orders")
     is_v1 = F.col("o_orderkey") % 2 == 0
     token = F.concat(F.lit("tok-"), F.col("o_orderkey").cast("string"))
     team_id = F.concat(F.lit("T"), F.col("o_custkey").cast("string"))
@@ -454,30 +435,6 @@ def q_event_sessions_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("ts").alias("session_end"),
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 6).alias("sum_value"),
-    )
-
-
-def q_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The dedup pipeline's LAST step: keep ONE document per near-dup
-    cluster — the longest member, ties to the smallest doc_id. Composes
-    the mined pair set (shared LSH cache) -> connected components -> a
-    per-cluster argmax via ``max_by(x, struct(n_chars, -doc_id))``, which
-    Spark executes as a hash aggregate with map-side partial collapse —
-    one row per cluster crosses the shuffle, never the cluster's members
-    (the same argmax-not-sort pattern as the merge's LWW winner agg,
-    plans/lake_table.py). The DuckDB oracle re-derives clusters with the
-    recursive CTE and picks representatives with a window."""
-    docs = _t(spark, sf_dir, "documents")
-    labels = neardup.dedup_clusters(
-        docs, "doc_id", "text", verify_threshold=0.5,
-        pairs=_lsh_pairs(spark, sf_dir),
-    ).select("doc_id", "cluster_id")
-    j = labels.join(docs.select("doc_id", "n_chars"), "doc_id")
-    order = F.struct(F.col("n_chars"), (-F.col("doc_id")).alias("neg"))
-    return j.groupBy("cluster_id").agg(
-        F.max_by("doc_id", order).alias("rep_doc_id"),
-        F.max_by("n_chars", order).alias("rep_n_chars"),
-        F.count(F.lit(1)).alias("n_members"),
     )
 
 
@@ -1083,10 +1040,7 @@ def q_cdc_debezium_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         debezium_to_merge_source,
     )
 
-    # heavy map stage (to_json render + from_json parse) over a narrow
-    # scan: widen to full parallelism first (guide §2/§6 — the 4-split scan
-    # serialized the render; measured 11-27 s -> ~2-4 s at sf1.0)
-    ev = spread(_t(spark, sf_dir, "events"))
+    ev = _t(spark, sf_dir, "events")
     row = F.struct(
         F.col("user_id").cast("string").alias("user_id"),
         F.col("event_type"),
@@ -1154,10 +1108,7 @@ def q_mongo_changestream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         mongo_changestream_to_merge_source,
     )
 
-    # heavy map stage (to_json render + from_json parse) over a narrow
-    # scan: widen to full parallelism first (guide §2/§6 — the 4-split scan
-    # serialized the render; measured 11-27 s -> ~2-4 s at sf1.0)
-    ev = spread(_t(spark, sf_dir, "events"))
+    ev = _t(spark, sf_dir, "events")
     doc = F.struct(
         F.col("user_id").cast("string").alias("_id"),
         F.col("event_type"),
@@ -1222,10 +1173,7 @@ def q_cdc_tx_atomic(spark: SparkSession, sf_dir: str) -> DataFrame:
         split_complete_transactions,
     )
 
-    # heavy map stage (to_json render + from_json parse) over a narrow
-    # scan: widen to full parallelism first (guide §2/§6 — the 4-split scan
-    # serialized the render; measured 11-27 s -> ~2-4 s at sf1.0)
-    ev = spread(_t(spark, sf_dir, "events"))
+    ev = _t(spark, sf_dir, "events")
     txn = F.concat(F.lit("tx"), F.floor(F.col("event_id") / 5).cast("string"))
     row = F.struct(
         F.col("user_id").cast("string").alias("user_id"),
@@ -1309,7 +1257,7 @@ def q_outbox_route(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact/content-defined dedup: fingerprint = sha256 of the sorted
     distinct token set; keeper = min doc_id per fingerprint."""
-    docs = spread(_t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     fp = F.sha2(
         F.array_join(F.array_sort(F.array_distinct(F.split(F.col("text"), " "))), " "), 256
     )
@@ -1324,12 +1272,11 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures (8 permutations) over 5-char shingles.
 
     One fold over the (sha2-expensive) shingle hashes carries all eight
-    permutation minima in an array accumulator; the round-robin exchange in
-    ``spread`` doubles as a CollapseProject barrier so unpacking mh0..mh7
-    cannot re-inline the hashing into every output column."""
-    from kafka_connect_plugins_spark.plans.parallelism import spread
-
-    docs = spread(_t(spark, sf_dir, "documents"))
+    permutation minima in an array accumulator; the round-robin
+    ``repartition`` after the fold doubles as a CollapseProject barrier so
+    unpacking mh0..mh7 cannot re-inline the hashing into every output
+    column."""
+    docs = _t(spark, sf_dir, "documents")
     hashes = F.expr(
         "transform(transform(sequence(1, greatest(length(text) - 4, 1)),"
         " i -> substring(text, i, 5)),"
@@ -1348,27 +1295,6 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.select(
         "doc_id", *[F.col("__mh")[i].alias(f"mh{i}") for i in range(len(_MINHASH_PARAMS))]
     )
-
-
-def q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-10: query vecs (vec_id < 5) vs the rest.
-
-    Broadcast the tiny query side; per-pair dot products stay NATIVE Column
-    folds per the measured split in operators/similarity.py (a pandas_udf
-    pair-scorer regressed this query 0.65 -> 1.34 s: one dot per pair is
-    cheaper JVM-side than the Arrow round trip). Candidate side stays
-    partitioned; no shuffle until the per-query top-k — the plan 1000
-    executors would run."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        F.col("vec_id"), F.col("embedding").cast("array<double>").alias("e")
-    )
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    c = emb.filter(F.col("vec_id") >= 5).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("e").alias("ce")
-    )
-    return similarity.brute_force_topk(q, c, k=10)
 
 
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1395,7 +1321,7 @@ def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle rebuilds every chunk with generate_series + list slicing."""
     from kafka_connect_plugins_spark.functions.text import token_chunks
 
-    docs = spread(_t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     ch = docs.select(
         "doc_id",
         F.explode(token_chunks(F.col("text"), chunk_tokens=32, overlap=8)).alias("c"),
@@ -1445,176 +1371,9 @@ def q_redact_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs with exact-Jaccard verification."""
-    return _lsh_pairs(spark, sf_dir)
-
-
-def q_simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """60-bit SimHash signature per document."""
-    from kafka_connect_plugins_spark.plans.parallelism import spread
-
-    docs = spread(_t(spark, sf_dir, "documents"))
-    return docs.select("doc_id", neardup.simhash(F.col("text")).alias("simhash"))
-
-
-def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs: chunk-banding candidates, hamming <= 10."""
-    return neardup.simhash_pairs(
-        _t(spark, sf_dir, "documents"), "doc_id", "text", max_hamming=10
-    )
-
-
-def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 3-gram Jaccard pairs within the same (source, lang) block."""
-    docs = _t(spark, sf_dir, "documents").withColumn(
-        "blk", F.concat_ws("|", "source", "lang")
-    )
-    return neardup.ngram_jaccard_pairs(docs, "doc_id", "text", block_col="blk", n=3,
-                                       threshold=0.2)
-
-
-def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs, blocked by label (threshold matched to
-    the synthetic embeddings, whose top within-label cosine is ~0.45).
-
-    Candidate mining AND exact verification are one NumPy pass per label
-    block (``similarity.cosine_candidate_pairs`` with ``emit_sim=True``):
-    the r5 label self-join materialized 20M ordered pairs at sf1.0 and
-    paid an interpreted 64-term Column fold per pair (~8 s); the batched
-    gram matrix screens, then the group emits the exact sequential-fold
-    cosine for survivors — bit-identical to the Column fold and the SQL
-    oracle's ``list_reduce`` — so the r6 join-back + per-pair re-score
-    stage is gone outright (guide §4.2, §2.3)."""
-    e = spread(_t(spark, sf_dir, "embeddings")).select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("e")
-    )
-    cand = similarity.cosine_candidate_pairs(
-        e.select("vec_id", "label", "e"), "vec_id", "e", ["label"],
-        threshold=0.35, emit_sim=True,
-    )
-    return cand.select("id_a", "id_b", F.round("sim", 6).alias("sim_r"))
-
-
-N_CENTROIDS = 8
-N_PLANES = 8
-LSH_PLANES = 3   # bits per LSH table (q_ann_lsh)
-LSH_TABLES = 10  # independent tables (q_ann_lsh)
-EMB_DIM = 64
-
-
-def q_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup pairs via MULTI-TABLE RHP-LSH bucketing — the
-    scale path. Candidates are bucket collisions in ANY of LSH_TABLES
-    independent 3-plane tables (one fused matmul per Arrow batch builds all
-    signatures — similarity.rhp_buckets_multi), exact cosine verified
-    inside the colliding bucket only, post-verify DISTINCT collapsing
-    multi-table collisions. The label-blocked exact join
-    (q_embedding_neardup) stays as the quadratic verifier baseline.
-
-    Geometry is MEASURED, not assumed (bench.bench_pair_recall): this
-    corpus's near-dups sit at cosine ~0.35-0.45 (per-plane agreement
-    p~0.61), so one 6-plane table has structural recall p^6 ~ 0.04 —
-    round 5's sweep measured exactly that (0.037) and 10 tables x 3 planes
-    restores it to ~0.9 at bounded candidate volume. Plane count per table
-    is the corpus-scale knob (b ~ log2(n/target_bucket_size)); a 10^9-row
-    corpus raises b and re-runs the sweep rather than trusting this one.
-    """
-    from kafka_connect_plugins_spark.operators.similarity import (
-        cosine_candidate_pairs,
-        rhp_buckets_multi,
-    )
-
-    e = spread(_t(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    # Candidate mining is BUCKET-LOCAL: with b=3 planes a table has 8
-    # buckets, so bucket occupancy grows linearly with the corpus and the
-    # r5 (vec_id, t, bkt) self-join enumerated Σ C(n_bkt, 2) JVM rows —
-    # 253M at sf1.0 (59 s), pure quadratic collision traffic for ~1.5M
-    # survivors. Instead the vectors shuffle ONCE per table to their
-    # (t, bkt) group and each group scores itself as a blocked NumPy gram
-    # matrix (similarity.cosine_candidate_pairs), emitting only
-    # near-threshold pairs; DISTINCT then collapses multi-table collisions
-    # while the stream is already output-sized (guide §4.2, §2.3). At a
-    # 10^9-row corpus the plane count b rises with log2(n) to keep buckets
-    # bounded, and this shape's per-bucket dgemm is exactly the verifier
-    # every LSH pipeline runs.
-    sigs = e.select(
-        "vec_id",
-        "e",
-        F.posexplode(
-            rhp_buckets_multi(F.col("e"), LSH_PLANES, EMB_DIM, LSH_TABLES)
-        ).alias("t", "bkt"),
-    )
-    # Each (t, bkt) group screens with the gram matrix AND emits the exact
-    # sequential-fold cosine (emit_sim=True — bit-identical to the Column
-    # fold / the oracle's list_reduce), so the r6 tail (distinct ->
-    # two broadcast joins back to the vectors -> interpreted 64-term fold
-    # per candidate) collapses to one DISTINCT over the already-verified,
-    # output-sized pair stream. A pair colliding in several tables emits
-    # the same (id_a, id_b, sim) doubles from each group, so the distinct
-    # still collapses multi-table duplicates exactly (guide §2.3, §4.2).
-    cand = cosine_candidate_pairs(
-        sigs.select("vec_id", "e", "t", "bkt"), "vec_id", "e", ["t", "bkt"],
-        threshold=0.3, emit_sim=True,
-    )
-    return cand.select(
-        "id_a", "id_b", F.round("sim", 6).alias("sim_r")
-    ).distinct()
-
-
-def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF top-5: deterministic codebook (vec_id < 8), n_probe=2.
-
-    Multi-probe searches the query's two nearest posting lists — the
-    standard IVF recall knob (n_probe configurable on similarity.ivf_topk);
-    the oracle reproduces the probe set with a rank<=2 window over the same
-    (sim DESC, cid DESC) centroid ordering. A TRAINED codebook
-    (similarity.train_ivf_centroids, deterministic Lloyd) is benched for
-    recall in bench.py; this gate keeps the literal first-K codebook so the
-    SQL oracle can reconstruct it from the data alone."""
-    e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    cents = [
-        (int(r["vec_id"]), list(r["e"]))
-        for r in e.filter(F.col("vec_id") < N_CENTROIDS).collect()
-    ]
-    q = e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16)).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    c = e.filter(F.col("vec_id") >= 16).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("e").alias("ce")
-    )
-    return similarity.ivf_topk(q, c, cents, k=5, n_probe=2)
-
-
-def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-table RHP-LSH ANN top-5 (exact cosine within colliding buckets).
-
-    LSH_TABLES=10 independent 3-plane tables: the measured neighbor signal
-    in this corpus is cosine ~0.4 (per-plane agreement p~0.63), where ONE
-    8-plane table has ~2% recall; 10x3 tables measure recall@5 = 0.92
-    (sweep in BENCH.md). All 30 signatures come from one matmul per Arrow
-    batch; the oracle reproduces every salted table."""
-    e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    c = e.filter(F.col("vec_id") >= 5).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("e").alias("ce")
-    )
-    return similarity.lsh_topk(
-        q, c, n_planes=LSH_PLANES, dim=EMB_DIM, k=5, n_tables=LSH_TABLES
-    )
-
-
 def q_token_bpe_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE-ish pre-tokenizer counts (regex token classes)."""
-    docs = spread(_t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     toks = bpe_ish_tokens(F.col("text"))
     return docs.select(
         "doc_id",
@@ -1631,60 +1390,19 @@ def q_token_bpe_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_quality_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher/C4-style quality-filter features."""
-    docs = spread(_t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     feats = quality_features(F.col("text"))
     return docs.select("doc_id", *[v.alias(k) for k, v in feats.items()])
 
 
 def q_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rabin-Karp rolling-hash fingerprints (raw + normalized)."""
-    docs = spread(_t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     norm = F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
     return docs.select(
         "doc_id",
         rolling_fingerprint(F.col("text")).alias("fp"),
         rolling_fingerprint(norm).alias("fp_norm"),
-    )
-
-
-def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup CLUSTER resolution: MinHash-LSH pairs -> connected
-    components (iterative min-label propagation,
-    operators/neardup.connected_components) -> canonical keeper per
-    cluster. The oracle states the same transitive closure with a DuckDB
-    recursive CTE — a full correctness gate for an iterative Spark
-    algorithm."""
-    return neardup.dedup_clusters(
-        _t(spark, sf_dir, "documents"), "doc_id", "text", verify_threshold=0.5,
-        pairs=_lsh_pairs(spark, sf_dir),
-    )
-
-
-def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster resolution via the large-star/small-star contraction
-    (Kiveris et al., SoCC'14; ``connected_components(algorithm="star")``) —
-    O(log^2 n) rounds regardless of component diameter, the scale path for
-    adversarial (long-chain) near-dup graphs. Gated against the SAME
-    recursive-CTE oracle as ``dedup_clusters``: both algorithms must
-    produce the identical transitive closure, over the SAME (cached)
-    mined pair set — pair mining runs once for both gates."""
-    return neardup.dedup_clusters(
-        _t(spark, sf_dir, "documents"), "doc_id", "text",
-        verify_threshold=0.5, cc_algorithm="star",
-        pairs=_lsh_pairs(spark, sf_dir),
-    )
-
-
-def q_chunk_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-document boilerplate scrub (CCNet/RefinedWeb-style) at
-    32-token-chunk granularity: a chunk appearing in >= 2 distinct
-    documents is dropped everywhere and the survivors re-join in order
-    (``operators.neardup.drop_boilerplate_chunks``). One map-only explode,
-    one shuffle for the distinct-doc count, a broadcast anti-lookup of the
-    (small) hot set, one shuffle for reassembly."""
-    return neardup.drop_boilerplate_chunks(
-        _t(spark, sf_dir, "documents"), "doc_id", "text",
-        chunk_tokens=32, min_docs=2,
     )
 
 
@@ -1695,26 +1413,9 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality features. Map-only native Columns."""
     from kafka_connect_plugins_spark.functions.text import repetition_features
 
-    docs = spread(_t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     feats = repetition_features(F.col("text"))
     return docs.select("doc_id", *[v.alias(k) for k, v in feats.items()])
-
-
-def q_decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Eval-set decontamination: training docs sharing any 8-token n-gram
-    with the held-out slice (doc_id % 50 == 0 stands in for the benchmark
-    suite; n=4 because the synthetic word-soup corpus has no longer exact
-    overlaps — a real pipeline runs n=8..13 via the same operator). Gram strings hash to longs map-side; the distinct eval-gram set
-    broadcasts, so the corpus side never shuffles before the per-doc count
-    (``operators.neardup.decontaminate_ngrams``)."""
-    docs = _t(spark, sf_dir, "documents")
-    return neardup.decontaminate_ngrams(
-        docs.filter(F.col("doc_id") % 50 != 0),
-        docs.filter(F.col("doc_id") % 50 == 0),
-        "doc_id",
-        "text",
-        n=4,
-    )
 
 
 def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1725,7 +1426,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     / ``scrub_pii``). Map-only native regex Columns."""
     from kafka_connect_plugins_spark.functions.text import pii_features, scrub_pii
 
-    docs = spread(_t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     email = F.concat(
         F.lit("user"), F.col("doc_id").cast("string"), F.lit("@example.com")
     )
@@ -1775,20 +1476,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "outbox_route": q_outbox_route,
         "dedup_exact": q_dedup_exact,
         "minhash_signatures": q_minhash_signatures,
-        "knn_cosine": q_knn_cosine,
         "token_stats": q_token_stats,
         "doc_chunks": q_doc_chunks,
         "lang_id": q_lang_id,
         "doc_fingerprint": q_doc_fingerprint,
         "redact_fields": q_redact_fields,
-        "minhash_lsh_pairs": q_minhash_lsh_pairs,
-        "simhash_docs": q_simhash_docs,
-        "simhash_pairs": q_simhash_pairs,
-        "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
-        "embedding_neardup": q_embedding_neardup,
-        "embedding_neardup_lsh": q_embedding_neardup_lsh,
-        "ann_ivf": q_ann_ivf,
-        "ann_lsh": q_ann_lsh,
         "token_bpe_stats": q_token_bpe_stats,
         "quality_features": q_quality_features,
         "rolling_fingerprint": q_rolling_fingerprint,
@@ -1806,12 +1498,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "user_running_value": q_user_running_value,
         "event_sessions_batch": q_event_sessions_batch,
         "token_postings": q_token_postings,
-        "cluster_representatives": q_cluster_representatives,
-        "dedup_clusters": q_dedup_clusters,
-        "dedup_clusters_star": q_dedup_clusters_star,
-        "chunk_dedup_docs": q_chunk_dedup_docs,
         "repetition_stats": q_repetition_stats,
-        "decontaminate_ngrams": q_decontaminate_ngrams,
         "pii_scrub": q_pii_scrub,
     }
 
@@ -1820,21 +1507,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # oracles
 # ----------------------------------------------------------------------
 
-# sha256-derived 60-bit hash — mirrors functions/text.stable_hash60 exactly.
-def _h60_sql(expr: str) -> str:
-    return f"('0x' || substr(sha256({expr}), 1, 15))::BIGINT"
-
-
-_SHINGLES_SQL = (
-    "list_transform(range(1, greatest(length(text) - 4, 1) + 1), i -> substr(text, i, 5))"
-)
-# LSH geometry — must mirror operators/neardup.minhash_lsh_pairs defaults.
-_LSH_K, _LSH_R = 7, 4
-_LSH_SHINGLES_SQL = (
-    f"list_transform(range(1, greatest(length(text) - {_LSH_K - 1}, 1) + 1),"
-    f" i -> substr(text, i, {_LSH_K}))"
-)
-_LSH_BANDS_SQL = ", ".join(f"({b})" for b in range(len(_MINHASH_PARAMS) // _LSH_R))
 _WS_TOKENS_SQL = (
     # mirrors functions/text.py ws_tokens: blank text -> EMPTY token list
     # (string_split_regex of '' alone returns [''], a phantom token)
@@ -1842,7 +1514,6 @@ _WS_TOKENS_SQL = (
 )
 _NORM_TEXT_SQL = r"lower(trim(regexp_replace(text, '\s+', ' ', 'g')))"
 _BPE_PATTERN_SQL = "'[a-zA-Z]+|[0-9]|[^a-zA-Z0-9 ]'"
-_MERSENNE31 = 2147483647
 _FP_MOD = 9007199254740881
 
 
@@ -1854,76 +1525,12 @@ def _rolling_fp_sql(expr: str) -> str:
     )
 
 
-# 60-bit SimHash over whitespace tokens — mirrors operators/neardup.simhash.
-_SIMHASH_SQL = (
-    "list_sum(list_transform(range(0, 60), b -> CASE WHEN "
-    "list_sum(list_transform(hs, h -> ((h >> b) & 1) * 2 - 1)) > 0 "
-    "THEN (1::BIGINT << b) ELSE 0::BIGINT END))::BIGINT"
-)
-_HS_SQL = f"list_transform({_WS_TOKENS_SQL}, t -> {_h60_sql('t')})"
-
-_COS_SQL = (
-    "list_inner_product({a}, {b}) / "
-    "(sqrt(list_inner_product({a}, {a})) * sqrt(list_inner_product({b}, {b})))"
-)
-
-
-def _plane_sql(p: int, dim: int) -> str:
-    """Deterministic hyperplane — mirrors operators/similarity.hyperplane."""
-    comp = _h60_sql(f"'plane{p}:' || i::VARCHAR")
-    return f"list_transform(range(0, {dim}), i -> (({comp} % 2001) - 1000) / 1000.0)"
-
-
-def _rhp_bucket_sql(vec: str, n_planes: int, dim: int, table: int = 0) -> str:
-    terms = []
-    for p in range(n_planes):
-        seed = f"'plane{p}:'" if table == 0 else f"'t{table}:plane{p}:'"
-        comp = _h60_sql(f"{seed} || i::VARCHAR")
-        dotp = (
-            f"list_sum(list_transform(range(0, {dim}), "
-            f"i -> {vec}[i + 1] * ((({comp} % 2001) - 1000) / 1000.0)))"
-        )
-        terms.append(f"CASE WHEN {dotp} > 0 THEN {1 << p}::BIGINT ELSE 0::BIGINT END")
-    return "(" + " + ".join(terms) + ")"
-
-
-# Shared CTE block: LSH near-dup candidate generation + exact-Jaccard verify
-# (mirrors operators/neardup.minhash_lsh_pairs). Ends with relation ``v``
-# (id_a, id_b, jaccard); consumers append their own final SELECT.
-_LSH_PAIRS_CTES = f"""h AS (
-              SELECT doc_id,
-                     list_distinct(list_transform({_LSH_SHINGLES_SQL}, s -> {_h60_sql('s')})) AS hs
-              FROM documents),
-            sig AS (
-              SELECT doc_id, hs,
-                     [{", ".join(
-                         f"list_min(list_transform(hs, x -> ({a} * (x % {_MERSENNE31}) + {b}) % {_MERSENNE31}))"
-                         for (a, b) in _MINHASH_PARAMS
-                     )}] AS mh
-              FROM h),
-            bands AS (
-              SELECT doc_id, b.band,
-                     sha256(array_to_string(
-                       list_slice(mh, b.band * {_LSH_R} + 1, b.band * {_LSH_R} + {_LSH_R}),
-                       '_')) AS bucket
-              FROM sig, (VALUES {_LSH_BANDS_SQL}) b(band)),
-            cand AS (
-              SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-              FROM bands l JOIN bands r
-                ON l.band = r.band AND l.bucket = r.bucket AND l.doc_id < r.doc_id),
-            v AS (
-              SELECT id_a, id_b,
-                     len(list_intersect(a.hs, b.hs))::DOUBLE
-                       / len(list_distinct(list_concat(a.hs, b.hs))) AS jaccard
-              FROM cand JOIN h a ON a.doc_id = id_a JOIN h b ON b.doc_id = id_b)"""
-
-
 def oracle_sql() -> dict[str, str]:
     minhash_cols = ", ".join(
         f"list_min(list_transform(__h, h -> ({a} * h + {b}) % {_MERSENNE})) AS mh{i}"
         for i, (a, b) in enumerate(_MINHASH_PARAMS)
     )
-    sql = {
+    return {
         "unquote_record_key": """
             SELECT event_id,
                    CASE WHEN event_id % 3 = 2
@@ -2294,21 +1901,6 @@ def oracle_sql() -> dict[str, str]:
                        s -> ('0x' || substr(sha256(s), 1, 8))::BIGINT) AS __h
               FROM documents)
         """,
-        "knn_cosine": """
-            WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qe
-                       FROM embeddings WHERE vec_id < 5),
-                 c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS ce
-                       FROM embeddings WHERE vec_id >= 5),
-                 s AS (SELECT query_id, neighbor_id,
-                              list_inner_product(qe, ce) /
-                                (sqrt(list_inner_product(qe, qe)) * sqrt(list_inner_product(ce, ce))) AS sim
-                       FROM c, q)
-            SELECT query_id, neighbor_id,
-                   CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS INT) AS rank,
-                   round(sim, 6) AS sim_r
-            FROM s
-            QUALIFY rank <= 10
-        """,
         "doc_chunks": """
             -- rebuild every 32-token / 8-overlap window: stride 24, chunk
             -- count = max(ceil((n-8)/24), 1), final window = remainder
@@ -2329,42 +1921,6 @@ def oracle_sql() -> dict[str, str]:
                    array_to_string(t[i*24 + 1 : i*24 + 32], ' ') AS chunk,
                    CAST(least(n - i*24, 32) AS INT) AS n_tokens
             FROM idx
-        """,
-        "chunk_dedup_docs": """
-            -- CCNet-style boilerplate scrub: non-overlapping 32-token
-            -- chunks; a chunk hash in >= 2 DISTINCT docs drops everywhere;
-            -- survivors re-join in chunk order
-            WITH toks AS (
-              SELECT doc_id,
-                     regexp_split_to_array(trim(text), '\\s+') AS t
-              FROM documents),
-            base AS (SELECT doc_id, t, len(t) AS n FROM toks),
-            chunks AS (
-              SELECT doc_id, CAST(g.i AS INT) AS chunk_id,
-                     array_to_string(t[i*32 + 1 : i*32 + 32], ' ') AS chunk
-              FROM base,
-                   UNNEST(generate_series(
-                       0,
-                       CAST(greatest(ceil(n / 32.0), 1) AS BIGINT) - 1
-                   )) AS g(i)),
-            hashed AS (
-              SELECT doc_id, chunk_id, chunk,
-                     ('0x' || substr(sha256(chunk), 1, 15))::BIGINT AS chunk_hash
-              FROM chunks),
-            hot AS (
-              SELECT chunk_hash
-              FROM hashed GROUP BY chunk_hash
-              HAVING count(DISTINCT doc_id) >= 2),
-            flagged AS (
-              SELECT h.doc_id, h.chunk_id, h.chunk,
-                     (hot.chunk_hash IS NOT NULL) AS is_hot
-              FROM hashed h LEFT JOIN hot USING (chunk_hash))
-            SELECT doc_id,
-                   count(*)::BIGINT AS n_chunks,
-                   sum(CASE WHEN NOT is_hot THEN 1 ELSE 0 END)::BIGINT AS n_kept,
-                   coalesce(string_agg(CASE WHEN NOT is_hot THEN chunk END,
-                                       ' ' ORDER BY chunk_id), '') AS cleaned_text
-            FROM flagged GROUP BY doc_id
         """,
         "repetition_stats": """
             -- duplicate n-gram fractions, n = 1/2/3; 0.0 when too short
@@ -2420,151 +1976,6 @@ def oracle_sql() -> dict[str, str]:
                    sha256(props) AS props_hash,
                    3 AS n_value_fields
             FROM events
-        """,
-        "minhash_lsh_pairs": f"""
-            WITH {_LSH_PAIRS_CTES}
-            SELECT id_a, id_b, round(jaccard, 6) AS jaccard FROM v WHERE jaccard >= 0.5
-        """,
-        "dedup_clusters": f"""
-            WITH RECURSIVE
-            {_LSH_PAIRS_CTES},
-            pairs AS (SELECT id_a, id_b FROM v WHERE jaccard >= 0.5),
-            e AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                  UNION ALL
-                  SELECT id_b AS src, id_a AS dst FROM pairs),
-            reach(node, lab) AS (
-                SELECT doc_id, doc_id FROM documents
-                UNION
-                SELECT e.dst, r.lab FROM reach r JOIN e ON e.src = r.node
-            )
-            SELECT node AS doc_id,
-                   min(lab) AS cluster_id,
-                   (min(lab) = node) AS is_keeper
-            FROM reach GROUP BY node
-        """,
-        "cluster_representatives": f"""
-            WITH RECURSIVE
-            {_LSH_PAIRS_CTES},
-            pairs AS (SELECT id_a, id_b FROM v WHERE jaccard >= 0.5),
-            e AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                  UNION ALL
-                  SELECT id_b AS src, id_a AS dst FROM pairs),
-            reach(node, lab) AS (
-                SELECT doc_id, doc_id FROM documents
-                UNION
-                SELECT e.dst, r.lab FROM reach r JOIN e ON e.src = r.node
-            ),
-            labels AS (SELECT node AS doc_id, min(lab) AS cluster_id
-                       FROM reach GROUP BY node),
-            j AS (SELECT l.cluster_id, d.doc_id, d.n_chars
-                  FROM labels l JOIN documents d USING (doc_id))
-            SELECT cluster_id, doc_id AS rep_doc_id, n_chars AS rep_n_chars,
-                   n_members
-            FROM (SELECT *,
-                         row_number() OVER (PARTITION BY cluster_id
-                             ORDER BY n_chars DESC, doc_id) AS rn,
-                         count(*) OVER (PARTITION BY cluster_id) AS n_members
-                  FROM j)
-            WHERE rn = 1
-        """,
-        "simhash_docs": f"""
-            SELECT doc_id, {_SIMHASH_SQL} AS simhash
-            FROM (SELECT doc_id, {_HS_SQL} AS hs FROM documents)
-        """,
-        "simhash_pairs": f"""
-            WITH s AS (
-              SELECT doc_id, {_SIMHASH_SQL} AS sim
-              FROM (SELECT doc_id, {_HS_SQL} AS hs FROM documents))
-            SELECT l.doc_id AS id_a, r.doc_id AS id_b,
-                   CAST(bit_count(xor(l.sim, r.sim)) AS INT) AS hamming
-            FROM s l, s r
-            WHERE l.doc_id < r.doc_id
-              AND ({" OR ".join(
-                  f"((l.sim >> {c * 10}) & 1023) = ((r.sim >> {c * 10}) & 1023)"
-                  for c in range(6)
-              )})
-              AND bit_count(xor(l.sim, r.sim)) <= 10
-        """,
-        "ngram_jaccard_pairs": f"""
-            WITH g AS (
-              SELECT doc_id, source || '|' || lang AS blk,
-                     list_distinct(list_transform(
-                       range(1, greatest(len({_WS_TOKENS_SQL}) - 2, 1) + 1),
-                       i -> array_to_string(list_slice({_WS_TOKENS_SQL}, i, i + 2), ' '))) AS g
-              FROM documents)
-            SELECT l.doc_id AS id_a, r.doc_id AS id_b,
-                   round(len(list_intersect(l.g, r.g))::DOUBLE
-                         / len(list_distinct(list_concat(l.g, r.g))), 6) AS jaccard
-            FROM g l JOIN g r ON l.blk = r.blk AND l.doc_id < r.doc_id
-            WHERE len(list_intersect(l.g, r.g))::DOUBLE
-                  / len(list_distinct(list_concat(l.g, r.g))) >= 0.2
-        """,
-        "embedding_neardup": f"""
-            WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings)
-            SELECT l.vec_id AS id_a, r.vec_id AS id_b,
-                   round({_COS_SQL.format(a="l.e", b="r.e")}, 6) AS sim_r
-            FROM e l JOIN e r ON l.label = r.label AND l.vec_id < r.vec_id
-            WHERE {_COS_SQL.format(a="l.e", b="r.e")} >= 0.35
-        """,
-        "embedding_neardup_lsh": f"""
-            WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-            b AS (SELECT vec_id, e,
-                   {", ".join(
-                       f"{_rhp_bucket_sql('e', LSH_PLANES, EMB_DIM, table=t)} AS bkt{t}"
-                       for t in range(LSH_TABLES)
-                   )}
-                  FROM e)
-            SELECT DISTINCT l.vec_id AS id_a, r.vec_id AS id_b,
-                   round({_COS_SQL.format(a="l.e", b="r.e")}, 6) AS sim_r
-            FROM b l JOIN b r
-              ON ({" OR ".join(f"l.bkt{t} = r.bkt{t}" for t in range(LSH_TABLES))})
-                 AND l.vec_id < r.vec_id
-            WHERE {_COS_SQL.format(a="l.e", b="r.e")} >= 0.3
-        """,
-        "ann_ivf": f"""
-            WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-            cent AS (SELECT vec_id AS cid, e AS ce FROM e WHERE vec_id < {N_CENTROIDS}),
-            ranked AS (
-                SELECT v.vec_id, v.e, cent.cid AS list_id,
-                       row_number() OVER (PARTITION BY v.vec_id
-                         ORDER BY {_COS_SQL.format(a="v.e", b="cent.ce")} DESC, cent.cid DESC) AS rn
-                FROM e v, cent),
-            q AS (SELECT vec_id AS query_id, e AS qe, list_id FROM ranked
-                  WHERE vec_id >= 8 AND vec_id < 16 AND rn <= 2),
-            c AS (SELECT vec_id AS neighbor_id, e AS ce, list_id FROM ranked
-                  WHERE vec_id >= 16 AND rn = 1),
-            s AS (SELECT query_id, neighbor_id, {_COS_SQL.format(a="qe", b="ce")} AS sim
-                  FROM q JOIN c USING (list_id))
-            SELECT query_id, neighbor_id,
-                   CAST(row_number() OVER (PARTITION BY query_id
-                        ORDER BY sim DESC, neighbor_id) AS INT) AS rank,
-                   round(sim, 6) AS sim_r
-            FROM s QUALIFY rank <= 5
-        """,
-        "ann_lsh": f"""
-            WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-            b AS (SELECT vec_id, e,
-                   {_rhp_bucket_sql("e", LSH_PLANES, EMB_DIM, table=0)} AS bkt0,
-                   {_rhp_bucket_sql("e", LSH_PLANES, EMB_DIM, table=1)} AS bkt1,
-                   {_rhp_bucket_sql("e", LSH_PLANES, EMB_DIM, table=2)} AS bkt2,
-                   {_rhp_bucket_sql("e", LSH_PLANES, EMB_DIM, table=3)} AS bkt3,
-                   {_rhp_bucket_sql("e", LSH_PLANES, EMB_DIM, table=4)} AS bkt4,
-                   {_rhp_bucket_sql("e", LSH_PLANES, EMB_DIM, table=5)} AS bkt5,
-                   {_rhp_bucket_sql("e", LSH_PLANES, EMB_DIM, table=6)} AS bkt6,
-                   {_rhp_bucket_sql("e", LSH_PLANES, EMB_DIM, table=7)} AS bkt7,
-                   {_rhp_bucket_sql("e", LSH_PLANES, EMB_DIM, table=8)} AS bkt8,
-                   {_rhp_bucket_sql("e", LSH_PLANES, EMB_DIM, table=9)} AS bkt9
-                  FROM e),
-            q AS (SELECT vec_id AS query_id, e AS qe, * FROM b WHERE vec_id < 5),
-            c AS (SELECT vec_id AS neighbor_id, e AS ce, * FROM b WHERE vec_id >= 5),
-            s AS (SELECT query_id, neighbor_id,
-                         {_COS_SQL.format(a="qe", b="ce")} AS sim
-                  FROM q JOIN c ON (q.bkt0 = c.bkt0 OR q.bkt1 = c.bkt1 OR q.bkt2 = c.bkt2 OR q.bkt3 = c.bkt3 OR q.bkt4 = c.bkt4 OR q.bkt5 = c.bkt5 OR q.bkt6 = c.bkt6 OR q.bkt7 = c.bkt7 OR q.bkt8 = c.bkt8 OR q.bkt9 = c.bkt9))
-            SELECT query_id, neighbor_id,
-                   CAST(row_number() OVER (PARTITION BY query_id
-                        ORDER BY sim DESC, neighbor_id) AS INT) AS rank,
-                   round(sim, 6) AS sim_r
-            FROM s QUALIFY rank <= 5
         """,
         "token_bpe_stats": f"""
             SELECT doc_id,
@@ -2755,33 +2166,6 @@ def oracle_sql() -> dict[str, str]:
                    sum(n_chars) AS sum_chars
             FROM u GROUP BY 1
         """,
-        "decontaminate_ngrams": """
-            -- 4-token n-gram overlap vs the doc_id%50==0 eval slice; the
-            -- oracle joins on the gram STRING where Spark joins on its
-            -- 64-bit hash (collision-free at this scale, deterministic)
-            WITH toks AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(trim(text), '\\s+'),
-                                 t -> t <> '') AS t
-              FROM documents),
-            grams AS (
-              SELECT doc_id,
-                     list_distinct(list_transform(
-                         range(1, greatest(len(t) - 3, 0) + 1),
-                         i -> array_to_string(t[i : i + 3], ' '))) AS gs
-              FROM toks),
-            ex AS (
-              SELECT doc_id, len(gs)::BIGINT AS n_grams, g.gram
-              FROM grams, UNNEST(gs) AS g(gram)),
-            ev AS (SELECT DISTINCT gram FROM ex WHERE doc_id % 50 = 0)
-            SELECT doc_id,
-                   n_grams,
-                   count(*)::BIGINT AS n_contaminated,
-                   round(count(*) / n_grams, 4) AS contam_frac
-            FROM ex JOIN ev USING (gram)
-            WHERE doc_id % 50 <> 0
-            GROUP BY doc_id, n_grams
-        """,
         "pii_scrub": """
             -- seed every third doc with a constructible email+phone, then
             -- detect and mask with the same regexes in the same order
@@ -2812,11 +2196,6 @@ def oracle_sql() -> dict[str, str]:
             FROM seeded
         """,
     }
-    # Same transitive closure, different Spark algorithm: the star
-    # contraction must reproduce the propagation result exactly, so it is
-    # gated against the identical recursive-CTE oracle.
-    sql["dedup_clusters_star"] = sql["dedup_clusters"]
-    return sql
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -21,8 +21,8 @@ refreshes BENCH.md.
 Budget discipline (the round-4 lesson: a driver-side timeout that kills the
 process mid-scaling-loop must not erase the evidence):
 
-- FAST sections run FIRST (query suite, ANN + pair recall, small-epoch
-  replay — minutes), the open-ended scaling windows LAST.
+- FAST sections run FIRST (query suite, small-epoch replay — minutes),
+  the open-ended scaling windows LAST.
 - A wall-clock deadline (``SPARK_GRAFT_BENCH_DEADLINE_SEC``, default 40 min)
   stops the window loops early, reporting however many windows ran.
 - After every section and every scaling WINDOW the partial result dict is
@@ -277,11 +277,11 @@ def _builder(app: str, master: str, cores_total: int):
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.local.dir", os.path.join(SHM, "kcp_bench_spark_local"))
-        # The LWW max_by(struct) aggregation runs as ObjectHashAggregate; the
-        # default sort-based fallback threshold (128 distinct keys!) makes
-        # every merge SORT the batch — measured 4-13x slower at 32 cores and
-        # anti-scaling. The agg buffer here is one ~300B struct per key, so a
-        # multi-million-entry hash map is safe and keeps the agg hash-based.
+        # Only the object aggregates of the query suite (percentile_approx in
+        # doc_length_percentiles, collect_list in token_postings) plan as
+        # ObjectHashAggregate; the default fallback threshold (128 distinct
+        # keys) sorts their input past that. The merge's LWW max_by is a
+        # declarative aggregate (SortAggregate) that this setting never touches.
         .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
     )
 
@@ -1241,175 +1241,6 @@ def bench_queries(spark, rounds: int = 3) -> dict[str, float]:
     return times
 
 
-def bench_ann_recall(spark) -> dict:
-    """recall@5 of the ANN paths vs brute-force ground truth at SF_DIR.
-
-    Reported per the criterion, with the two knobs swept: multi-table LSH
-    (tables x planes) and IVF (first-K untrained vs Lloyd-trained codebook,
-    n_probe 1-3). Ground truth is the exact broadcast brute-force top-5 on
-    the same query/candidate splits the driver gate queries use.
-    """
-    from pyspark.sql import functions as F
-
-    import __spark_entry__ as entry
-    from kafka_connect_plugins_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-
-    def split(qlo, qhi, clo):
-        q = emb.filter((F.col("vec_id") >= qlo) & (F.col("vec_id") < qhi)).select(
-            F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-        )
-        c = emb.filter(F.col("vec_id") >= clo).select(
-            F.col("vec_id").alias("neighbor_id"), F.col("e").alias("ce")
-        )
-        return q, c
-
-    def pairs(df):
-        return {(r["query_id"], r["neighbor_id"]) for r in df.collect()}
-
-    out = {}
-    q, c = split(0, 5, 5)  # the q_ann_lsh split
-    truth = pairs(similarity.brute_force_topk(q, c, k=5))
-    for b, tables in ((entry.N_PLANES, 1), (4, 8), (entry.LSH_PLANES, entry.LSH_TABLES)):
-        got = pairs(similarity.lsh_topk(q, c, n_planes=b, dim=entry.EMB_DIM, k=5, n_tables=tables))
-        out[f"lsh_p{b}_t{tables}"] = round(len(got & truth) / len(truth), 3)
-
-    q, c = split(8, 16, 16)  # the q_ann_ivf split
-    truth = pairs(similarity.brute_force_topk(q, c, k=5))
-    first_k = [
-        (int(r["vec_id"]), list(r["e"]))
-        for r in emb.filter(F.col("vec_id") < entry.N_CENTROIDS).collect()
-    ]
-    trained10 = similarity.train_ivf_centroids(emb, "e", k=10, iters=10, id_col="vec_id")
-    # finer codebook: K=32 lists are ~3x smaller, so equal scan fraction buys
-    # more probes (n_probe/K is the scan-fraction knob: 10/K32p3 ~ 9% of the
-    # corpus vs K10p3's 30%) — the standard IVF recall/cost frontier.
-    trained32 = similarity.train_ivf_centroids(emb, "e", k=32, iters=10, id_col="vec_id")
-    for label, cents, probes in (
-        ("firstk8", first_k, (1, 2, 3)),
-        ("trained10", trained10, (1, 2, 3)),
-        ("trained32", trained32, (3, 6, 10)),
-    ):
-        for n_probe in probes:
-            got = pairs(similarity.ivf_topk(q, c, cents, k=5, n_probe=n_probe))
-            out[f"ivf_{label}_probe{n_probe}"] = round(len(got & truth) / len(truth), 3)
-    log(f"ann recall@5: {out}")
-    return out
-
-
-def bench_pair_recall(spark) -> dict:
-    """Recall of the PAIR-MINING detectors vs exact ground truth at SF_DIR —
-    the same measured-not-analyzed standard the ANN paths got in round 4.
-
-    - ``minhash_lsh``: |LSH-verified pairs ∩ exact pairs| / |exact pairs|
-      where the exact set is EXACT Jaccard >= 0.5 over the same distinct
-      7-shingle hash sets, found via a shared-shingle inverted index (any
-      pair with Jaccard > 0 shares a shingle, so the index is exhaustive —
-      no blocking approximation). Band geometry swept: rows_per_band 2/4/8
-      over the 8 fixed permutations (4/2/1 bands).
-    - ``embedding_rhp``: recall of the RHP-LSH bucket-collision pair miner
-      vs exact ALL-PAIRS cosine >= 0.35 (the unblocked truth — stricter
-      than the label-blocked gate query), swept over single-table plane
-      counts (the structural-blindness curve) AND multi-table geometries,
-      including the gate query's (LSH_TABLES x LSH_PLANES).
-    """
-    from pyspark.sql import functions as F
-
-    from kafka_connect_plugins_spark.functions.text import hash_array60, shingles
-    from kafka_connect_plugins_spark.operators import neardup
-    from kafka_connect_plugins_spark.operators.similarity import (
-        dot,
-        l2_norm,
-        rhp_buckets_multi,
-    )
-
-    out: dict = {}
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    hs = docs.select(
-        F.col("doc_id").alias("id"),
-        F.array_distinct(hash_array60(shingles(F.col("text"), 7))).alias("hs"),
-    ).persist()
-    post = hs.select("id", F.explode("hs").alias("sh"))
-    cand = (
-        post.alias("l")
-        .join(post.alias("r"), (F.col("l.sh") == F.col("r.sh")) & (F.col("l.id") < F.col("r.id")))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .distinct()
-    )
-    truth_df = (
-        cand.join(hs.select(F.col("id").alias("id_a"), F.col("hs").alias("ha")), "id_a")
-        .join(hs.select(F.col("id").alias("id_b"), F.col("hs").alias("hb")), "id_b")
-        .withColumn("ni", F.size(F.array_intersect("ha", "hb")))
-        .withColumn("j", F.col("ni") / (F.size("ha") + F.size("hb") - F.col("ni")).cast("double"))
-        .filter(F.col("j") >= 0.5)
-        .select("id_a", "id_b")
-    )
-    truth = {(r["id_a"], r["id_b"]) for r in truth_df.collect()}
-    out["minhash_exact_pairs"] = len(truth)
-    for rpb in (2, 4, 8):
-        got = {
-            (r["id_a"], r["id_b"])
-            for r in neardup.minhash_lsh_pairs(
-                docs, "doc_id", "text", rows_per_band=rpb, verify_threshold=0.5
-            ).collect()
-        }
-        # the verify step guarantees precision 1.0; recall is the question
-        out[f"minhash_lsh_rpb{rpb}_bands{8 // rpb}"] = (
-            round(len(got & truth) / len(truth), 3) if truth else 1.0
-        )
-    hs.unpersist()
-
-    import __spark_entry__ as entry
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    ).withColumn("n", l2_norm(F.col("e"))).persist()
-    l, r = emb.alias("l"), emb.alias("r")
-    etruth_df = (
-        l.join(r, F.col("l.vec_id") < F.col("r.vec_id"))
-        .withColumn("sim", dot(F.col("l.e"), F.col("r.e")) / (F.col("l.n") * F.col("r.n")))
-        .filter(F.col("sim") >= 0.35)
-        .select(F.col("l.vec_id").alias("id_a"), F.col("r.vec_id").alias("id_b"))
-    )
-    etruth = {(r_["id_a"], r_["id_b"]) for r_ in etruth_df.collect()}
-    out["embedding_exact_pairs"] = len(etruth)
-    # single-table plane sweep (the structural-blindness curve) plus the
-    # multi-table geometries; (tables=LSH_TABLES, planes=LSH_PLANES) is the
-    # gate query's production setting
-    for tables, planes in ((1, 4), (1, 6), (1, 8), (8, 4),
-                           (entry.LSH_TABLES, entry.LSH_PLANES)):
-        b = emb.select(
-            "vec_id", "e", "n",
-            F.posexplode(
-                rhp_buckets_multi(F.col("e"), planes, entry.EMB_DIM, tables)
-            ).alias("t", "bkt"),
-        )
-        lb, rb = b.alias("l"), b.alias("r")
-        got = {
-            (r_["id_a"], r_["id_b"])
-            for r_ in (
-                lb.join(rb, (F.col("l.t") == F.col("r.t"))
-                        & (F.col("l.bkt") == F.col("r.bkt"))
-                        & (F.col("l.vec_id") < F.col("r.vec_id")))
-                .withColumn("sim", dot(F.col("l.e"), F.col("r.e"))
-                            / (F.col("l.n") * F.col("r.n")))
-                .filter(F.col("sim") >= 0.35)
-                .select(F.col("l.vec_id").alias("id_a"), F.col("r.vec_id").alias("id_b"))
-                .distinct()
-            ).collect()
-        }
-        out[f"embedding_rhp_t{tables}xp{planes}"] = (
-            round(len(got & etruth) / len(etruth), 3) if etruth else 1.0
-        )
-    emb.unpersist()
-    log(f"pair recall: {out}")
-    return out
-
-
 def _scaling_table(scaling: dict) -> list[str]:
     lines = [
         f"{scaling['pipelined_epochs_per_level']} pipelined epochs x "
@@ -1465,7 +1296,7 @@ def _scaling_table(scaling: dict) -> list[str]:
     return lines
 
 
-def write_bench_md(replay: dict, scaling_exec: dict, scaling_thr: dict, queries: dict[str, float], scan: dict | None = None, ann_recall: dict | None = None, pair_recall: dict | None = None, scaling_small: dict | None = None) -> None:
+def write_bench_md(replay: dict, scaling_exec: dict, scaling_thr: dict, queries: dict[str, float], scan: dict | None = None, scaling_small: dict | None = None) -> None:
     lo, hi = replay["low"], replay["high"]
     lines = [
         "# BENCH — measured on this container (local mode, tmpfs I/O)",
@@ -1616,65 +1447,7 @@ def write_bench_md(replay: dict, scaling_exec: dict, scaling_thr: dict, queries:
         "| --- | --- |",
     ]
     lines += [f"| {k} | {v} |" for k, v in sorted(queries.items())]
-    lines += [
-        "",
-        *(
-            [
-                "## ANN recall@5 vs exact brute force (same splits as the gate queries)",
-                "",
-                "| variant | recall@5 |",
-                "| --- | --- |",
-                *[f"| {k} | {v} |" for k, v in ann_recall.items()],
-                "",
-                "The corpus's true top-5 neighbors sit at cosine ~0.4 (weak",
-                "signal: per-plane agreement p~0.63), so a single 8-plane LSH",
-                "table is structurally blind (p^8 ~ 2%) — the multi-table",
-                "geometry (10 tables x 3 planes, one fused matmul per batch) is",
-                "what reaches the reported recall. IVF coarse quantization is",
-                "bounded by how well the 10 weak clusters align with top-5",
-                "neighborhoods; the trained (Lloyd) codebook beats first-K at",
-                "equal n_probe, and recall rises with n_probe at linear scan",
-                "cost — the standard IVF trade, measured not guessed.",
-                "",
-            ]
-            if ann_recall
-            else []
-        ),
-        *(
-            [
-                "## Pair-mining recall vs exact ground truth",
-                "",
-                "Recall of the pair DETECTORS (same standard as the ANN",
-                "recall table): `minhash_lsh_*` is measured against EXACT",
-                "Jaccard >= 0.5 over the same distinct 7-shingle hash sets,",
-                "with the exact pair set found via a shared-shingle inverted",
-                "index — exhaustive, since Jaccard > 0 implies a shared",
-                "shingle — so the truth is not itself an approximation.",
-                "`embedding_rhp_*` is measured against exact ALL-PAIRS cosine",
-                ">= 0.35 (unblocked, stricter than the label-blocked gate",
-                "query). The detectors verify each candidate exactly, so",
-                "precision is 1.0 by construction; recall is the knob the",
-                "band geometry / plane count buys:",
-                "",
-                "| variant | recall |",
-                "| --- | --- |",
-                *[f"| {k} | {v} |" for k, v in pair_recall.items()],
-                "",
-                "Fewer rows per band (more, narrower bands), fewer",
-                "hyperplanes per table and more independent tables all widen",
-                "effective bucket coverage: recall rises, candidate volume",
-                "(the verify-join cost) rises with it. The single-table",
-                "plane sweep shows the structural-blindness curve at this",
-                "corpus's weak (~0.35-0.45 cosine) signal; the multi-table",
-                "rows show what the gate geometry buys back. Production",
-                "corpora re-run this sweep at their own scale, not the",
-                "analysis.",
-                "",
-            ]
-            if pair_recall
-            else []
-        ),
-    ]
+    lines += [""]
     # Persistent run history: each full run APPENDS one line here and the
     # section survives the rewrite — the cross-run distribution (different
     # host-noise phases) is part of the evidence, not a cherry-pick.
@@ -1797,7 +1570,6 @@ def main() -> None:
     flush_partial("scaling_history")
     replay = scaling_exec = scaling_thr = scan_scaling = None
     queries: dict[str, float] = {}
-    ann_recall = pair_recall = None
     try:
         # ---- FAST sections first: these are the non-negotiable artifact ----
         spark = _session(CPUS)
@@ -1805,12 +1577,6 @@ def main() -> None:
         OUT["queries"] = queries
         OUT["total_query_sec"] = round(sum(queries.values()), 2)
         flush_partial("queries")
-        ann_recall = _guard("ann_recall", lambda: bench_ann_recall(spark))
-        OUT["ann_recall_at_5"] = ann_recall
-        flush_partial("ann_recall")
-        pair_recall = _guard("pair_recall", lambda: bench_pair_recall(spark))
-        OUT["pair_recall"] = pair_recall
-        flush_partial("pair_recall")
         spark.stop()
 
         small_total = EPOCH_EVENTS * (N_EPOCHS + 1)
@@ -1938,7 +1704,7 @@ def main() -> None:
         log("bench sizes overridden via env; NOT refreshing BENCH.md")
     elif replay and scaling_exec and scaling_thr:
         write_bench_md(replay, scaling_exec, scaling_thr, queries,
-                       scan_scaling, ann_recall, pair_recall,
+                       scan_scaling,
                        scaling_small=OUT.get("scaling_executors_small"))
     elif isinstance(OUT.get("scaling_executors_small"), dict):
         log("secondary scaling modes incomplete; appending history line only")

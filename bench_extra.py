@@ -38,6 +38,8 @@ def _session(cores: int):
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        # as in bench.py: keeps the object aggregates of doc_length_percentiles
+        # and token_postings hash-based; the merge's LWW does not use it
         .config(
             "spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304"
         )

@@ -16,15 +16,12 @@ single-message transforms, see /root/reference) as an idiomatic Spark engine:
 - Debezium and MongoDB change-stream wire formats parse into the
   merge source (``sources/``), and the table serves a change feed, point
   lookups, replication and incrementally maintained views (``plans/``),
-- off the CDC path, document-corpus operators: near-dup detection and
-  nearest-neighbour search (``operators/neardup.py``,
-  ``operators/similarity.py``), text features (``functions/text.py``) and
-  hash sampling (``functions/sampling.py``).
+- off the CDC path, document-corpus column expressions: text features
+  (``functions/text.py``) and hash sampling (``functions/sampling.py``).
 
-Everything is public-API PySpark (DataFrame / SQL / Structured Streaming);
-no per-row Python in hot paths — native Columns first, Arrow-vectorized
-pandas UDFs only in ``operators/similarity.py``. No ``__init__`` imports the
-corpus operators, so importing the package loads no pandas.
+Everything is public-API PySpark (DataFrame / SQL / Structured Streaming)
+built from native Columns: no module runs per-row Python or pandas UDFs, so
+importing the package loads no pandas.
 """
 
 __version__ = "0.1.0"

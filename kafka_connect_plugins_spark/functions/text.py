@@ -1,10 +1,8 @@
 """Text-analysis column expressions for training-data pipelines.
 
 All pure native Columns (JVM-side, whole-stage-codegen'd) — the hot path
-never enters Python. Hashes are built from ``sha2`` so an independent ANSI
-SQL oracle (DuckDB) can reproduce every value bit-for-bit; Spark-only
-hashes (xxhash64) are reserved for partitioning, where only distribution
-matters (SURVEY.md §4).
+never enters Python. Every value, including the rolling fingerprint, is
+reproducible bit-for-bit by an independent ANSI SQL oracle (DuckDB).
 """
 
 from __future__ import annotations
@@ -12,9 +10,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# 60-bit hash space: 15 hex chars parse positive into a signed 64-bit long in
-# both Spark (conv) and DuckDB ('0x…'::BIGINT) — no sign-wrap disagreement.
-HASH_BITS = 60
 # Largest prime < 2^53: acc * 31 + 127 stays well inside a signed 64-bit long
 # in Spark AND DuckDB, so the fold never overflows in either engine.
 FINGERPRINT_MOD = 9007199254740881
@@ -36,22 +31,6 @@ def ws_tokens(text: Column) -> Column:
 def bpe_ish_tokens(text: Column) -> Column:
     """BPE-style pre-tokenization via regex (letters / digits / marks)."""
     return F.regexp_extract_all(text, F.lit(BPE_ISH_PATTERN), 0)
-
-
-def shingles(text: Column, k: int = 5) -> Column:
-    """All k-char shingles of the string (>= 1 even for short strings)."""
-    idx = F.sequence(F.lit(1), F.greatest(F.length(text) - (k - 1), F.lit(1)))
-    return F.transform(idx, lambda i: F.substring(text, i, F.lit(k)))
-
-
-def stable_hash60(s: Column) -> Column:
-    """sha256-derived 60-bit non-negative hash — identical in Spark and DuckDB."""
-    return F.conv(F.substring(F.sha2(s, 256), 1, 15), 16, 10).cast("long")
-
-
-def hash_array60(arr: Column) -> Column:
-    """Element-wise :func:`stable_hash60` over a string array."""
-    return F.transform(arr, stable_hash60)
 
 
 def rolling_fingerprint(text: Column, base: int = 31, mod: int = FINGERPRINT_MOD) -> Column:
@@ -148,8 +127,9 @@ def ngrams(toks: Column, n: int) -> Column:
     O(n·len) with one interpreted higher-order pass per level. The obvious
     ``transform(sequence(1, count), i -> concat_ws(slice(toks, i, n)))``
     is quadratic per evaluation AND gets re-evaluated once per reference
-    when Catalyst collapses projections (the minhash CollapseProject trap,
-    operators/neardup.py:70) — measured 31 s for the ``repetition_stats``
+    when Catalyst collapses projections (the CollapseProject trap that
+    ``q_minhash_signatures`` in ``__spark_entry__.py`` also guards
+    against) — measured 31 s for the ``repetition_stats``
     gate at sf0.1 vs sub-second for this shape. ``slice`` length must stay
     >= 0 (``greatest``): Spark's ``sequence(1, 0)`` alternative is a
     DESCENDING [1, 0], which feeds an invalid start=0 into ``slice``."""

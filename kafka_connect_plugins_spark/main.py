@@ -46,11 +46,6 @@ def build_session(
         # epoch i's write job; FAIR pools let the two share task slots
         b = b.config("spark.scheduler.mode", "FAIR")
     b = b.config("spark.sql.adaptive.enabled", "true")
-    # Keep the LWW max_by aggregation hash-based: the Spark default falls
-    # back to SORT-based object aggregation after 128 distinct keys, which
-    # measured 4-13x slower on merge epochs and anti-scaled with cores.
-    # The agg buffer is one small struct per key, so a large map is safe.
-    b = b.config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
     # Cluster deployment notes (measured on the bench harness, see BENCH.md):
     # - standalone/local-cluster executors take their scratch dirs from
     #   SPARK_LOCAL_DIRS, not spark.local.dir — point it at fast local disk.

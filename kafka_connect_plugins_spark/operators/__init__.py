@@ -1,11 +1,6 @@
 """Operator library: the reference's eight SMTs plus the engine-native
 stages (LWW dedup, salted repartition, field redaction, outbox routing) that
-run between a change-event source and the lake-table MERGE.
-
-The document-corpus operators (``neardup``: exact / MinHash-LSH / SimHash
-dedup and connected components; ``similarity``: brute-force, IVF and LSH
-nearest neighbours) are submodules imported by path, not here: no CDC path
-uses them, and ``similarity`` loads pandas and numpy."""
+run between a change-event source and the lake-table MERGE."""
 
 from kafka_connect_plugins_spark.operators.base import Pipeline, Stage, registry, stage
 from kafka_connect_plugins_spark.operators.clickhouse_flatten import ClickHouseFlatten

@@ -1,7 +1,6 @@
 """Physical plans: the lake-table sink (MERGE upsert, snapshots, evolution)."""
 
 from kafka_connect_plugins_spark.plans.lake_table import LakeTable, MergeStats
-from kafka_connect_plugins_spark.plans.parallelism import spread
 from kafka_connect_plugins_spark.plans.replication import (
     ensure_replica,
     export_changes_envelope,
@@ -11,7 +10,6 @@ from kafka_connect_plugins_spark.plans.replication import (
 __all__ = [
     "LakeTable",
     "MergeStats",
-    "spread",
     "ensure_replica",
     "export_changes_envelope",
     "replicate",

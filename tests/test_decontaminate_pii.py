@@ -1,32 +1,46 @@
-"""Eval-set n-gram decontamination (operators/neardup.py) and PII
+"""Eval-set n-gram decontamination built on ``ngrams`` and PII
 detect/scrub (functions/text.py)."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from kafka_connect_plugins_spark.functions.text import pii_features, scrub_pii
-from kafka_connect_plugins_spark.operators.neardup import decontaminate_ngrams
+from kafka_connect_plugins_spark.functions.text import (
+    ngrams,
+    pii_features,
+    scrub_pii,
+    ws_tokens,
+)
 
 
-def _docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, text string")
+def _contamination(spark, train_rows, eval_text, n):
+    """Per train doc: distinct n-grams, how many of them occur in the eval
+    text, and that share. Only docs with at least one shared gram are
+    returned."""
+    ev = {
+        r["g"]
+        for r in spark.createDataFrame([(eval_text,)], "text string")
+        .select(F.explode(ngrams(ws_tokens(F.col("text")), n)).alias("g"))
+        .collect()
+    }
+    grams = F.array_distinct(ngrams(ws_tokens(F.col("text")), n))
+    hit = F.array_intersect(grams, F.array(*[F.lit(g) for g in sorted(ev)]))
+    df = spark.createDataFrame(train_rows, "doc_id long, text string").select(
+        "doc_id",
+        F.size(grams).alias("n_grams"),
+        F.size(hit).alias("n_contaminated"),
+        F.when(F.size(grams) > 0, F.size(hit) / F.size(grams)).alias("contam_frac"),
+    )
+    return {r["doc_id"]: r.asDict() for r in df.where("n_contaminated > 0").collect()}
 
 
 class TestDecontaminate:
     def test_flags_only_overlapping_docs(self, spark):
-        train = _docs(
-            spark,
-            [
-                (1, "alpha beta gamma delta epsilon"),  # contains eval 4-gram
-                (2, "zeta eta theta iota kappa"),  # clean
-                (3, "x alpha beta gamma delta y"),  # overlap mid-document
-            ],
-        )
-        ev = _docs(spark, [(100, "alpha beta gamma delta")])
-        out = {
-            r["doc_id"]: r.asDict()
-            for r in decontaminate_ngrams(train, ev, "doc_id", "text", n=4).collect()
-        }
+        train = [
+            (1, "alpha beta gamma delta epsilon"),  # contains eval 4-gram
+            (2, "zeta eta theta iota kappa"),  # clean
+            (3, "x alpha beta gamma delta y"),  # overlap mid-document
+        ]
+        out = _contamination(spark, train, "alpha beta gamma delta", n=4)
         assert set(out) == {1, 3}
         assert out[1]["n_contaminated"] == 1
         assert out[1]["n_grams"] == 2  # 5 tokens -> two 4-grams
@@ -34,38 +48,21 @@ class TestDecontaminate:
         assert out[3]["n_contaminated"] == 1
 
     def test_short_docs_cannot_match(self, spark):
-        train = _docs(spark, [(1, "alpha beta gamma")])  # < n tokens
-        ev = _docs(spark, [(100, "alpha beta gamma delta")])
-        assert decontaminate_ngrams(train, ev, "doc_id", "text", n=4).count() == 0
+        train = [(1, "alpha beta gamma")]  # < n tokens: no 4-grams at all
+        assert _contamination(spark, train, "alpha beta gamma delta", n=4) == {}
 
     def test_duplicate_grams_count_once(self, spark):
         # the eval gram appears twice in the train doc; per-doc distinct
         # grams mean it is counted once
-        train = _docs(spark, [(1, "a b c d a b c d")])
-        ev = _docs(spark, [(100, "a b c d")])
-        row = decontaminate_ngrams(train, ev, "doc_id", "text", n=4).collect()
-        assert len(row) == 1
+        out = _contamination(spark, [(1, "a b c d a b c d")], "a b c d", n=4)
         # distinct grams of the train doc: "a b c d", "b c d a", "c d a b",
         # "d a b c" -> 4; one matches
-        assert row[0]["n_grams"] == 4
-        assert row[0]["n_contaminated"] == 1
+        assert out[1]["n_grams"] == 4
+        assert out[1]["n_contaminated"] == 1
 
     def test_n_below_one_rejected(self, spark):
-        d = _docs(spark, [(1, "a")])
         with pytest.raises(ValueError):
-            decontaminate_ngrams(d, d, "doc_id", "text", n=0)
-
-    def test_shuffle_join_variant_matches(self, spark):
-        train = _docs(
-            spark,
-            [(i, f"w{i} alpha beta gamma delta w{i+1}") for i in range(10)],
-        )
-        ev = _docs(spark, [(100, "alpha beta gamma delta")])
-        a = decontaminate_ngrams(train, ev, "doc_id", "text", n=4)
-        b = decontaminate_ngrams(
-            train, ev, "doc_id", "text", n=4, broadcast_eval=False
-        )
-        assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+            ngrams(ws_tokens(F.col("text")), 0)
 
 
 class TestPii:

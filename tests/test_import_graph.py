@@ -1,9 +1,11 @@
 """The CDC package imports without pandas.
 
-Nothing on the CDC path (operators, functions, plans, streaming, sources,
-engine, CLI) uses pandas, so an eager import of a pandas-backed module from
-any package ``__init__`` is a regression: it roughly doubles the time and
-resident memory of importing the engine. The check runs in a fresh
+No module of the package (operators, functions, plans, streaming, sources,
+engine, CLI) uses pandas, so importing any of them must not load it: a
+pandas-backed module roughly doubles the time and resident memory of
+importing the engine. The probe imports every submodule that
+``pkgutil.walk_packages`` finds, not only the package ``__init__``s, so a
+new module that pulls in pandas fails here too. The check runs in a fresh
 interpreter with no Spark session, because a started SparkContext loads
 pandas itself.
 """
@@ -15,15 +17,12 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 PROBE = """
+import importlib
+import pkgutil
 import sys
-import kafka_connect_plugins_spark
-import kafka_connect_plugins_spark.engine
-import kafka_connect_plugins_spark.operators
-import kafka_connect_plugins_spark.functions
-import kafka_connect_plugins_spark.plans
-import kafka_connect_plugins_spark.sources
-import kafka_connect_plugins_spark.streaming
-import kafka_connect_plugins_spark.main
+import kafka_connect_plugins_spark as pkg
+for info in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
+    importlib.import_module(info.name)
 loaded = sorted(m for m in sys.modules if m == "pandas" or m.startswith("pandas."))
 assert not loaded, f"pandas loaded by the CDC package: {loaded[:5]}"
 """

@@ -1,10 +1,8 @@
-"""Round-4 defect fixes (ADVICE.md): negative-LSN domain guard and
-connected_components id-type validation."""
+"""Round-4 defect fixes (ADVICE.md): negative-LSN domain guard."""
 
 import pytest
 from pyspark.sql import functions as F  # noqa: F401
 
-from kafka_connect_plugins_spark.operators.neardup import connected_components
 from kafka_connect_plugins_spark.plans.lake_table import LakeTable
 
 
@@ -43,25 +41,6 @@ def test_negative_lsn_raises(spark, tmp_path):
     assert {(r["repo"], r["path"]): r["content"] for r in t.read().collect()} == {
         ("r", "p"): "ok"
     }
-
-
-def test_connected_components_rejects_non_integral_ids(spark):
-    nodes_s = spark.createDataFrame([("a",), ("b",)], "id string")
-    edges_s = spark.createDataFrame([("a", "b")], "id_a string, id_b string")
-    with pytest.raises(TypeError, match="integral"):
-        connected_components(edges_s, nodes_s)
-    # integral ids still work end-to-end
-    nodes = spark.createDataFrame([(1,), (2,), (3,), (9,)], "id long")
-    edges = spark.createDataFrame([(2, 1), (2, 3)], "id_a long, id_b long")
-    got = {r["id"]: r["cluster_id"] for r in connected_components(edges, nodes).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 9: 9}
-
-
-def test_connected_components_rejects_mixed_edge_types(spark):
-    nodes = spark.createDataFrame([(1,), (2,)], "id long")
-    edges = spark.createDataFrame([(1, "2")], "id_a long, id_b string")
-    with pytest.raises(TypeError, match="edge dst"):
-        connected_components(edges, nodes)
 
 
 def test_purge_below_watermark_wires_retention_to_lineage(spark, tmp_path):

@@ -54,7 +54,6 @@ def main() -> None:
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.local.dir", os.path.join(SHM, "kcp_mor_spark_local"))
-        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
         .config("spark.driver.memory", "24g")
         .getOrCreate()
     )

@@ -52,7 +52,6 @@ def build(level: str, eventlog_dir: str):
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.local.dir", os.path.join(SHM, "kcp_profile_local"))
-        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
         .config("spark.eventLog.enabled", "true")
         .config("spark.eventLog.dir", f"file://{eventlog_dir}")
         .config("spark.eventLog.compress", "false")
