@@ -1420,27 +1420,6 @@ def write_bench_md(replay: dict, scaling_exec: dict, scaling_thr: dict, queries:
         f" {hi['cores']} cores {hi['median_events_per_sec']:,}/{hi['peak_events_per_sec']:,} ev/s"
         f" (median eff {replay['scaling_efficiency_median']}, peak {replay['scaling_efficiency_peak']}).",
         "",
-        "## Merge-on-read read path (tools/bench_mor.py)",
-        "",
-        "Defer-mode epochs append winner deltas (O(batch) writes); readers",
-        "LWW-collapse base ∪ deltas. Measured on a 904k-row table, 2M-event",
-        "epochs, local[32], best-of-3 reads (re-run `python tools/bench_mor.py`",
-        "to refresh):",
-        "",
-        "| pending deltas/bucket | defer-merge s | full-read s |",
-        "| --- | --- | --- |",
-        "| 0 (scan-only) | — | 1.72 |",
-        "| 1 | 8.03 | 2.83 |",
-        "| 2 | 6.33 | 3.84 |",
-        "| 3 | 6.91 | 4.37 |",
-        "| 4 | 6.74 | 5.43 |",
-        "",
-        "compact() folded all 64 buckets in 7.5 s (post-compact read 0.45 s);",
-        "a rewrite-mode epoch of the same size cost 13.0 s. So defer halves",
-        "epoch cost, read amplification reaches ~3x at 4 pending deltas, and",
-        "`compact_files_per_bucket=4` (the auto-fold threshold) is a measured",
-        "bound on that amplification, not a guess.",
-        "",
         f"Per-query wall times at `{SF_DIR}` on local[{CPUS}] (noop sink, full execution):",
         "",
         "| query | seconds |",

@@ -76,8 +76,7 @@ def apply_batch(
 ) -> MergeStats:
     """Run one microbatch of envelope events through the chain into the table.
 
-    ``merge_mode="defer"`` appends merge-on-read deltas instead of rewriting
-    dirty buckets (see LakeTable.merge) — for update-heavy ingest bursts.
+    ``merge_mode`` accepts only ``"rewrite"`` (see ``LakeTable.merge``).
     """
     chain = pipeline if pipeline is not None else cdc_transform_chain()
     transformed = chain.apply(events)
@@ -215,7 +214,6 @@ def replay_pipelined(
     start_epoch: int = 0,
     stream_id: str = "replay",
     pipeline: Pipeline | None = None,
-    merge_mode: str = "rewrite",
 ) -> list[MergeStats]:
     """Replay consecutive epochs with a ONE-EPOCH stats/write pipeline.
 
@@ -233,7 +231,7 @@ def replay_pipelined(
     epoch guard resumes from the last committed epoch exactly as in the
     serial loop. (Structured Streaming's ``foreachBatch`` cannot use this
     shape: the checkpoint commits batch ``i``'s offsets when the callback
-    returns, so deferring the write past the return would open a
+    returns, so moving the write past the return would open a
     lost-epoch window on crash. The replay driver commits epochs through
     the table manifest itself, which is why prefetching is safe HERE.)
 
@@ -275,7 +273,6 @@ def replay_pipelined(
                     prep=prep,
                     epoch_id=start_epoch + i,
                     stream_id=stream_id,
-                    mode=merge_mode,
                 )
                 a1 = _time.time()
                 st.phases["prep_wall"] = round(p1 - p0, 3)

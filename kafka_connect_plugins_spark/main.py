@@ -91,7 +91,7 @@ def main(argv: list[str] | None = None) -> int:
              "aggregation runs under epoch i's one-exchange LWW write — the "
              "measured steady-state ingest shape. Batch-only: streaming "
              "(foreachBatch) commits offsets when the callback returns, so "
-             "it cannot defer an epoch's write past its trigger; the batch "
+             "it cannot hold an epoch's write past its trigger; the batch "
              "driver commits epochs through the table manifest, which is "
              "what makes prefetching safe here. Needs --events/--table "
              "(no checkpoint: the manifest IS the epoch ledger).")
@@ -102,22 +102,16 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--shuffle-partitions", type=int, default=None)
     p.add_argument("--metrics", default=None, help="metrics JSONL path (default <table>/_metrics)")
     p.add_argument("--demo", action="store_true", help="self-contained local demo run")
-    p.add_argument(
-        "--merge-mode", choices=("rewrite", "defer"), default="rewrite",
-        help="defer = merge-on-read: append winner deltas (O(batch) epochs), "
-             "readers collapse; fold with --compact or on the next rewrite",
-    )
-    p.add_argument("--compact", action="store_true",
-                   help="maintenance: fold pending merge-on-read deltas, then exit")
     p.add_argument("--compact-sort-by", default=None, metavar="COL[,COL...]",
-                   help="sort-order compaction: cluster each rewritten bucket "
-                        "on these columns so row-group stats become disjoint "
-                        "(range scans skip inside files)")
+                   help="maintenance: sort-order compaction — rewrite every "
+                        "bucket sorted on these columns so row-group stats "
+                        "become disjoint (range scans skip inside files), "
+                        "then exit")
     p.add_argument("--compact-zorder-by", default=None, metavar="COL[,COL...]",
-                   help="z-order compaction: re-cluster ALL buckets on the "
-                        "interleaved-bit Morton key of these columns so "
-                        "row-group stats tighten on every listed column at "
-                        "once (multi-dimensional skipping)")
+                   help="maintenance: z-order compaction — rewrite every "
+                        "bucket clustered on the interleaved-bit Morton key "
+                        "of these columns so row-group stats tighten on "
+                        "every listed column at once, then exit")
     p.add_argument("--expire-keep", type=int, default=None,
                    help="maintenance: expire all but the newest N snapshots, then exit")
     p.add_argument("--expire-max-age-sec", type=float, default=None,
@@ -135,7 +129,7 @@ def main(argv: list[str] | None = None) -> int:
                         "must print identical digests")
     p.add_argument("--describe", action="store_true",
                    help="print a metadata-only table report (snapshot, "
-                        "schema, per-bucket rows + skew, pending deltas, "
+                        "schema, per-bucket rows + skew, "
                         "refs) and exit — no scan")
     p.add_argument("--purge-below-watermark", action="store_true",
                    help="maintenance: drop delete markers below the ingest's "
@@ -264,7 +258,8 @@ def main(argv: list[str] | None = None) -> int:
         maintenance_only = (
             args.lookup
             or args.refresh_view
-            or args.compact
+            or args.compact_sort_by
+            or args.compact_zorder_by
             or args.rebucket is not None
             or args.rename_column is not None
             or args.rollback is not None
@@ -363,7 +358,8 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if (
-        args.compact
+        args.compact_sort_by
+        or args.compact_zorder_by
         or args.expire_keep is not None
         or args.purge_below_watermark
         or args.rebucket is not None
@@ -393,18 +389,15 @@ def main(argv: list[str] | None = None) -> int:
                 num_buckets=args.replica_buckets,
             )
             out["replicate"] = replicate(
-                table, replica,
-                mode=args.merge_mode,
-                verify=args.verify_replica,
+                table, replica, verify=args.verify_replica
             )
-        if args.compact:
-            sort_by = args.compact_sort_by.split(",") if args.compact_sort_by else None
-            zorder = (
-                args.compact_zorder_by.split(",")
-                if args.compact_zorder_by else None
-            )
+        if args.compact_sort_by or args.compact_zorder_by:
             out["compacted_buckets"] = table.compact(
-                sort_by=sort_by, zorder_by=zorder
+                sort_by=args.compact_sort_by.split(",") if args.compact_sort_by else None,
+                zorder_by=(
+                    args.compact_zorder_by.split(",")
+                    if args.compact_zorder_by else None
+                ),
             )
         if args.delete_where is not None:
             out["delete"] = table.delete_where(F.expr(args.delete_where))
@@ -482,9 +475,7 @@ def main(argv: list[str] | None = None) -> int:
             events.filter((F.col("offset") >= e * per) & (F.col("offset") < (e + 1) * per))
             for e in range(n)
         ]
-        stats = replay_pipelined(
-            table, batches, stream_id=args.stream_id, merge_mode=args.merge_mode
-        )
+        stats = replay_pipelined(table, batches, stream_id=args.stream_id)
         applied = [s for s in stats if not s.skipped]
         print(json.dumps({
             "epochs": len(stats),
@@ -504,7 +495,7 @@ def main(argv: list[str] | None = None) -> int:
 
         replicas = [ensure_replica(spark, table, r) for r in args.replica]
     ingest = StreamingIngest(
-        table, stream_id=args.stream_id, metrics=metrics, merge_mode=args.merge_mode,
+        table, stream_id=args.stream_id, metrics=metrics,
         views=[view] if view is not None else None,
         replicas=replicas,
     )

@@ -6,8 +6,7 @@ ClickHouseFlattenTransformer.kt:18-57 and README.md:113-151); the north rule
 requires key-partitioned MERGE upserts into an Iceberg table with
 exactly-once epoch guards. This container has no Iceberg runtime jar, so the
 table format is implemented here with the same architectural properties
-Iceberg provides — on a real cluster the ``MergeSink`` swaps to
-``MERGE INTO`` against a genuine Iceberg catalog (see ``iceberg_merge_sql``).
+Iceberg provides.
 
 Layout::
 
@@ -35,8 +34,9 @@ Scale properties (the reasons for each design choice):
   aggregation, never a broadcast or a full-table sort-merge join.
 - **Dirty-bucket pruning**: a microbatch touches only the buckets its keys
   hash to; clean buckets are carried forward by manifest reference. Merge
-  I/O is proportional to the touched key space, not table size — the lake
-  analogue of Iceberg merge-on-read file pruning.
+  I/O is proportional to the touched key space, not table size. Every
+  bucket of a snapshot is one file set, written by the last rewrite that
+  touched it.
 - **Snapshot isolation**: readers resolve ``_CURRENT`` once and read an
   immutable file set; a crashed merge leaves only unreferenced garbage,
   never a torn table.
@@ -92,8 +92,7 @@ class MergeStats:
     source_rows: int = 0
     dirty_buckets: int = 0
     total_buckets: int = 0
-    # Distinct keys upserted this epoch (the winner set; in defer mode this
-    # is exactly the delta rows appended).
+    # Distinct keys upserted this epoch (the winner set).
     rows_written: int = 0
     schema_added_columns: list[str] = field(default_factory=list)
     schema_widened_columns: list[str] = field(default_factory=list)
@@ -282,7 +281,20 @@ class LakeTable:
         if version is None:
             version = self._head_version()
         with open(os.path.join(self.root, "manifests", f"v{version}.json")) as f:
-            return json.load(f)
+            m = json.load(f)
+        # Older versions of this engine could leave merge-on-read delta files
+        # per bucket. Every reader here reads one base file set per bucket,
+        # so a snapshot that still lists deltas would serve stale rows.
+        pending = m.pop("deltas", None)
+        if pending:
+            raise ValueError(
+                f"snapshot v{version} of {self.root} has pending merge-on-read "
+                f"deltas in buckets {sorted(int(b) for b in pending)}, which this "
+                f"version cannot read. With the version that wrote them, run "
+                f"compact() to fold them, then expire_snapshots() to drop the "
+                f"older snapshots that still list them."
+            )
+        return m
 
     def _head_version(self, ref: str | None = None) -> int:
         """Resolve a ref name (default: this handle's branch) to a version."""
@@ -381,7 +393,6 @@ class LakeTable:
         *,
         data: DataFrame | None = None,
         dirty: list[int] | None = None,
-        append: bool = False,
         parent: int | None = None,
         phases: dict | None = None,
     ) -> dict:
@@ -397,12 +408,9 @@ class LakeTable:
         (None: nothing to write) goes through :meth:`_bucket_writer` into
         ``data/v{N}``, and the bucket map is rebased on the buckets that
         landed there. Each ``dirty`` bucket points at ``v{N}`` if written
-        and is dropped if not (all its rows were deleted); its pending
-        merge-on-read deltas are folded, since every rewrite reads its
-        buckets delta-collapsed. With ``append`` no base moves: each
-        written bucket gains ``v{N}`` as a delta (``merge(mode="defer")``).
-        The new dir's footer stats are attached. ``phases`` receives the
-        ``write`` and ``commit`` wall times.
+        and is dropped if not (all its rows were deleted). The new dir's
+        footer stats are attached. ``phases`` receives the ``write`` and
+        ``commit`` wall times.
 
         Concurrency: one writer per ref. ``v{N}`` is chosen before the
         write job, so two writers on one ref can write the same data dir
@@ -429,20 +437,12 @@ class LakeTable:
                 if name.startswith(f"{BUCKET_COL}=")
             }
             buckets = dict(manifest["buckets"])
-            deltas = {b: list(vs) for b, vs in manifest.get("deltas", {}).items()}
-            if append:
-                for b in sorted(written):
-                    deltas.setdefault(str(b), []).append(version)
-            else:
-                for b in dirty:
-                    if b in written:
-                        buckets[str(b)] = version
-                    else:
-                        buckets.pop(str(b), None)
-                    deltas.pop(str(b), None)
-            new = self._with_file_stats(
-                {**new, "buckets": buckets, "deltas": deltas}, out_dir
-            )
+            for b in dirty:
+                if b in written:
+                    buckets[str(b)] = version
+                else:
+                    buckets.pop(str(b), None)
+            new = self._with_file_stats({**new, "buckets": buckets}, out_dir)
         new["summary"] = {"committed_at_ms": int(time.time() * 1000), **summary}
         self._write_manifest(new)
         if phases is not None:
@@ -701,12 +701,9 @@ class LakeTable:
     @staticmethod
     def _live_files(manifest: dict) -> list[tuple[int, str]]:
         """``(data version, bucket)`` of every file set a snapshot
-        references: each bucket's base plus each pending merge-on-read
-        delta. The one walk behind stats, pruning, reads and both GC
-        sweeps."""
-        return [(int(v), b) for b, v in manifest["buckets"].items()] + [
-            (int(v), b) for b, vs in manifest.get("deltas", {}).items() for v in vs
-        ]
+        references, one per bucket. The one walk behind stats, pruning,
+        reads and both GC sweeps."""
+        return [(int(v), b) for b, v in manifest["buckets"].items()]
 
     def _referenced_data(self, versions: list[int]) -> set[int]:
         """Data versions the manifests of ``versions`` reference."""
@@ -762,15 +759,8 @@ class LakeTable:
         return True
 
     def _prune_bucket_ids(self, manifest: dict, prune: dict) -> list[int]:
-        """Bucket ids whose live files might hold a matching row.
-
-        Pruning is decided per BUCKET, not per file: under merge-on-read a
-        key's winner may sit in a delta while the key also appears in the
-        base, so dropping individual files of a surviving bucket could
-        change LWW collapse. A bucket is skipped only when EVERY file of it
-        (base + pending deltas) is provably disjoint from the bounds —
-        which is exactly when no winner row can match.
-        """
+        """Bucket ids whose file set might hold a matching row: a bucket is
+        skipped only when its stats are provably disjoint from the bounds."""
         fstats = manifest.get("file_stats", {})
         if manifest.get("column_mapping"):
             # file stats are recorded under PHYSICAL names (read straight
@@ -789,13 +779,8 @@ class LakeTable:
         buckets: list[int] | None,
         prune: dict | None = None,
     ) -> DataFrame | None:
-        """Read the current rows of the given buckets (None = all).
-
-        Merge-on-read: buckets with pending delta files (``manifest["deltas"]``,
-        written by ``merge(mode="defer")``) are collapsed here with a per-key
-        LWW aggregation over base ∪ deltas, so every consumer — ``read``,
-        the rewrite merge, ``read_changes``, ``purge_tombstones`` — keeps the
-        one-row-per-key invariant. Delta-free reads stay scan-only.
+        """Read the current rows of the given buckets (None = all): a plain
+        scan, since each bucket's one file set holds one row per key.
 
         ``prune`` is a ``{col: (lo, hi)}`` bounds map (either end ``None``
         = unbounded): buckets whose file stats are disjoint from the bounds
@@ -808,11 +793,9 @@ class LakeTable:
                 set(buckets) & set(pruned)
             )
         pairs = self._live_files(manifest)
-        deltas = manifest.get("deltas", {})
         if buckets is not None:
             sel = set(buckets)
             pairs = [(v, b) for v, b in pairs if int(b) in sel]
-            deltas = {b: vs for b, vs in deltas.items() if int(b) in sel}
         if not pairs:
             return None
         # Group by data version: one parquet scan per version dir with
@@ -858,20 +841,6 @@ class LakeTable:
                     # files written before a type widening surface their
                     # narrow physical type; readers always see the manifest's
                     df = df.withColumn(f_.name, F.col(f_.name).cast(f_.dataType))
-        if deltas:
-            # Collapse ONLY the delta-bearing buckets; delta-free buckets in
-            # the same read stay on the scan-only path (no shuffle for them).
-            delta_ids = sorted(int(b) for b in deltas)
-            keys = manifest["key_columns"]
-            pay = [c for c in df.columns if c not in keys]
-            with_deltas = df.filter(F.col(BUCKET_COL).isin(delta_ids))
-            collapsed = (
-                with_deltas.groupBy(*keys)
-                .agg(F.max_by(F.struct(*pay), F.col(LSN_COL)).alias("__w"))
-                .select(*keys, *[F.col(f"__w.{c}").alias(c) for c in pay])
-            )
-            clean = df.filter(~F.col(BUCKET_COL).isin(delta_ids))
-            df = clean.unionByName(collapsed.select(*clean.columns))
         return df
 
     def read(
@@ -1031,19 +1000,10 @@ class LakeTable:
                 f"from_version ({from_version}) must be <= to_version "
                 f"({to_version}); swapped arguments would silently invert the feed"
             )
-        d_from, d_to = m_from.get("deltas", {}), m_to.get("deltas", {})
         changed = sorted(
-            {
-                int(b)
-                for b in (
-                    set(m_from["buckets"]) | set(m_to["buckets"])
-                    | set(d_from) | set(d_to)
-                )
-                # a bucket changed if its base version OR its pending-delta
-                # list differs between the two snapshots (merge-on-read)
-                if m_from["buckets"].get(b) != m_to["buckets"].get(b)
-                or d_from.get(b, []) != d_to.get(b, [])
-            }
+            int(b)
+            for b in set(m_from["buckets"]) | set(m_to["buckets"])
+            if m_from["buckets"].get(b) != m_to["buckets"].get(b)
         )
         schema = self._table_schema(m_to)
         if schema is None:
@@ -1406,7 +1366,7 @@ class LakeTable:
     @staticmethod
     def _lww(frames: list[DataFrame], keys: list[str], buckets: list[int]) -> DataFrame:
         """Per-key last-writer-wins over ``frames`` in ONE exchange: the one
-        LWW collapse of every merge path (rewrite, defer, empty target).
+        LWW collapse of every merge, into a populated or an empty target.
 
         ``frames`` (one or two) carry ``_bucket``, and ``buckets`` lists the
         buckets they touch. A key's rows all hash to one bucket, so sending
@@ -1602,7 +1562,6 @@ class LakeTable:
         epoch_id: int | None = None,
         stream_id: str = "default",
         lineage_col: str | None = None,
-        compact_files_per_bucket: int = 4,
         mode: str = "rewrite",
         prep: MergePrep | None = None,
     ) -> MergeStats:
@@ -1641,20 +1600,9 @@ class LakeTable:
         tiebreak packs ``lsn * 2 + source_flag`` into one long; a batch
         whose LSNs fall outside the domain raises rather than silently
         overflowing. **NULL keys** are legal: the LWW group-by treats a
-        NULL key column as an ordinary value, in rewrite and in
-        merge-on-read defer alike.
+        NULL key column as an ordinary value.
 
-        ``mode="defer"`` is the **merge-on-read** path (Iceberg MOR
-        analogue): the collapsed per-key winners are APPENDED as delta files
-        — epoch cost is O(batch), never O(dirty buckets) — and readers
-        LWW-collapse base ∪ deltas at scan time (see ``_read_buckets``).
-        Deltas fold back into the base the next time a rewrite-mode merge,
-        ``purge_tombstones`` or :meth:`compact` touches their bucket; a
-        defer epoch itself rewrites once a dirty bucket holds
-        ``compact_files_per_bucket`` pending deltas. Use defer for
-        update-heavy ingest bursts, rewrite (default) for read-optimized
-        steady state; exactly-once, LWW and tombstone semantics are
-        identical in both modes.
+        ``mode`` accepts only ``"rewrite"``, the one merge this table has.
 
         ``prep``: a :class:`MergePrep` from :meth:`merge_prepare` — the
         source-side stats half, precomputed (typically concurrently with the
@@ -1665,8 +1613,11 @@ class LakeTable:
         the apply-time manifest, so a prep computed against a pre-evolution
         manifest stays correct.
         """
-        if mode not in ("rewrite", "defer"):
-            raise ValueError(f"unknown merge mode: {mode!r}")
+        if mode != "rewrite":
+            raise ValueError(
+                f"merge mode {mode!r} is not supported: merge-on-read "
+                f"('defer') was removed, and 'rewrite' is the only mode"
+            )
         t0 = time.time()
         manifest = self.manifest()
         if epoch_id is not None and int(manifest["epochs"].get(stream_id, -1)) >= epoch_id:
@@ -1704,61 +1655,35 @@ class LakeTable:
             "schema": new_schema_json or manifest["schema"],
         }
         dirty = sorted(int(r[BUCKET_COL]) for r in prep.bucket_counts)
-        summary = {"source_rows": prep.src_rows, "dirty_buckets": len(dirty)}
-
-        if mode == "defer":
-            # Bound read amplification: once a dirty bucket has
-            # accumulated compact_files_per_bucket pending deltas, this
-            # epoch pays the rewrite (folding them) instead of deferring.
-            pending = manifest.get("deltas", {})
-            if max(
-                (len(pending.get(str(b), [])) for b in dirty), default=0
-            ) >= compact_files_per_bucket:
-                mode = "rewrite"
-
-        if mode == "defer":
-            # Merge-on-read: append collapsed winners as delta files and
-            # commit; the target is never read, so epoch cost is O(batch).
-            committed = self._commit(
-                body,
-                {**summary, "mode": "defer"},
-                data=self._lww([prep.src], keys, dirty),
-                dirty=dirty,
-                append=True,
-                phases=phases,
-            )
-        else:
-            frames = [prep.src]
-            target = self._read_buckets(manifest, dirty)
-            if target is not None:
-                # Align target to the evolved column set. Stored rows carry
-                # their own tombstone flag: delete markers are RETAINED in
-                # the table (filtered at read) so their LSN keeps shielding
-                # the key from late-arriving lower-LSN inserts — batches
-                # need not be LSN-ordered.
-                for f_ in prep.user_fields:
-                    if f_.name not in target.columns:
-                        target = target.withColumn(f_.name, F.lit(None).cast(f_.dataType))
-                if TOMBSTONE_COL not in target.columns:
-                    target = target.withColumn(TOMBSTONE_COL, F.lit(False))
-                frames = [target, prep.src]
-            # The rewrite folds the dirty buckets' pending deltas into the
-            # new base files (the target was delta-collapsed by _read_buckets).
-            committed = self._commit(
-                body,
-                summary,
-                data=self._lww(frames, keys, dirty),
-                dirty=dirty,
-                phases=phases,
-            )
+        frames = [prep.src]
+        target = self._read_buckets(manifest, dirty)
+        if target is not None:
+            # Align target to the evolved column set. Stored rows carry
+            # their own tombstone flag: delete markers are RETAINED in
+            # the table (filtered at read) so their LSN keeps shielding
+            # the key from late-arriving lower-LSN inserts — batches
+            # need not be LSN-ordered.
+            for f_ in prep.user_fields:
+                if f_.name not in target.columns:
+                    target = target.withColumn(f_.name, F.lit(None).cast(f_.dataType))
+            if TOMBSTONE_COL not in target.columns:
+                target = target.withColumn(TOMBSTONE_COL, F.lit(False))
+            frames = [target, prep.src]
+        committed = self._commit(
+            body,
+            {"source_rows": prep.src_rows, "dirty_buckets": len(dirty)},
+            data=self._lww(frames, keys, dirty),
+            dirty=dirty,
+            phases=phases,
+        )
         return MergeStats(
             epoch_id=epoch_id,
             skipped=False,
             source_rows=prep.src_rows,
             dirty_buckets=len(dirty),
             total_buckets=len(committed["buckets"]),
-            # the winner set: one LWW-collapsed row per key, which in defer
-            # mode is exactly the delta rows appended (replicate() reports it)
+            # the winner set: one LWW-collapsed row per key (replicate()
+            # reports it)
             rows_written=prep.n_winner_keys,
             schema_added_columns=added,
             schema_widened_columns=widened,
@@ -1793,7 +1718,7 @@ class LakeTable:
         (use :meth:`merge` to fold a snapshot into existing state).
         """
         manifest = self.manifest()
-        if manifest["buckets"] or manifest.get("deltas"):
+        if manifest["buckets"]:
             raise ValueError(
                 "bootstrap requires an empty table; this one has data "
                 "(merge the snapshot instead)"
@@ -1875,52 +1800,50 @@ class LakeTable:
         zorder_by: list[str] | None = None,
         zorder_bits: int = 8,
     ) -> int:
-        """Fold pending merge-on-read deltas into fresh base files.
+        """Re-cluster every data bucket (or the ``buckets`` subset) in one
+        new snapshot: Iceberg ``rewrite_data_files`` with a sort order. The
+        rows are unchanged; only their order inside each bucket's file is.
+        Returns the number of buckets rewritten.
 
-        The standalone Iceberg ``rewrite_data_files`` analogue for
-        ``merge(mode="defer")`` tables: every bucket with pending deltas
-        (or the given subset) is read delta-collapsed and rewritten as one
-        file in a new snapshot; the manifest drops the folded delta refs.
-        Returns the number of buckets compacted. Run it between ingest
-        bursts to restore scan-only reads.
-
-        ``sort_by`` clusters each rewritten bucket on the given columns
-        (Iceberg sort-order compaction): rows land in parquet row groups in
-        sorted order, so the per-row-group min/max stats become disjoint and
-        a pushed-down range predicate on those columns skips whole row
-        groups INSIDE the files that bucket- and manifest-level pruning
-        already narrowed to. Sorting is within-bucket only — one extra local
-        sort per task, no extra shuffle — and is recorded in the manifest as
+        ``sort_by`` clusters each bucket on the given columns (Iceberg
+        sort-order compaction): rows land in parquet row groups in sorted
+        order, so the per-row-group min/max stats become disjoint and a
+        pushed-down range predicate on those columns skips whole row groups
+        INSIDE the files that bucket- and manifest-level pruning already
+        narrowed to. Sorting is within-bucket only — one extra local sort
+        per task, no extra shuffle — and is recorded in the manifest as
         ``sort_order`` for audit.
 
         ``zorder_by`` is the multi-dimensional form (Delta OPTIMIZE ZORDER):
         rows cluster on an interleaved-bit Morton key, so row-group stats
         tighten on EVERY listed column at once — a lexicographic sort makes
         the first column's stats disjoint and leaves the others full-range
-        per group. Because z-ordering is a re-cluster, not just delta
-        folding, it rewrites ALL data buckets (or the given subset), pending
-        deltas or not. Costs one bounded boundary-sample job per column up
+        per group. Costs one bounded boundary-sample job per column up
         front; the rewrite itself stays one local sort per task.
+
+        Exactly one of ``sort_by`` and ``zorder_by`` must be given: every
+        merge already writes one file per bucket, so a rewrite without a
+        new order would change nothing.
         """
         if sort_by and zorder_by:
             raise ValueError("compact: sort_by and zorder_by are exclusive")
+        if not (sort_by or zorder_by):
+            raise ValueError("compact: pass sort_by or zorder_by")
         manifest = self.manifest()
-        pending = manifest.get("deltas", {})
-        candidates = (
-            set(pending) | set(manifest["buckets"]) if zorder_by else set(pending)
-        )
         todo = sorted(
-            int(b) for b in candidates if buckets is None or int(b) in set(buckets)
+            int(b)
+            for b in manifest["buckets"]
+            if buckets is None or int(b) in set(buckets)
         )
         if not todo:
             return 0
-        folded = self._read_buckets(manifest, todo)
-        clustered = folded.repartition(len(todo), F.col(BUCKET_COL))
+        current = self._read_buckets(manifest, todo)
+        clustered = current.repartition(len(todo), F.col(BUCKET_COL))
         if zorder_by:
             clustered = clustered.withColumn(
-                "__z", self._zorder_column(folded, zorder_by, zorder_bits)
+                "__z", self._zorder_column(current, zorder_by, zorder_bits)
             ).sortWithinPartitions(BUCKET_COL, "__z").drop("__z")
-        elif sort_by:
+        else:
             # BUCKET_COL leads the sort: hash repartition may co-locate two
             # buckets in one task, and partitionBy splits them back into
             # separate files — each must stay internally sorted
@@ -1943,9 +1866,8 @@ class LakeTable:
 
         A bucket count sized for the first 100 GB is wrong at 100 TB: too
         few buckets → giant merge tasks and useless lookup pruning; too many
-        → small files. ``rebucket`` reads the current rows (folding any
-        pending merge-on-read deltas), re-hashes every key under the new
-        count with the writer's own ``pmod(xxhash64(*keys), n)`` expression,
+        → small files. ``rebucket`` reads the current rows, re-hashes every
+        key under the new count with the writer's own ``pmod(xxhash64(*keys), n)`` expression,
         and commits ONE new snapshot whose manifest carries the new count —
         a full-table rewrite, the honest cost of re-hash-partitioning, run
         as a single wide job sized by ``new_num_buckets``. Epoch guards are
@@ -1976,9 +1898,8 @@ class LakeTable:
                 .repartition(n, F.col(BUCKET_COL))
             )
         committed = self._commit(
-            # every old file is replaced: the new layout starts empty, and
-            # the deltas were folded into the rewrite by _read_buckets
-            {**manifest, "num_buckets": n, "buckets": {}, "deltas": {}},
+            # every old file is replaced: the new layout starts empty
+            {**manifest, "num_buckets": n, "buckets": {}},
             {"rebucketed_to": n},
             data=df,
             dirty=list(range(n)),
@@ -1996,9 +1917,8 @@ class LakeTable:
         records) and the skew ratio between the hottest and the median
         bucket — the number that says whether :meth:`rebucket` or key
         salting is due BEFORE a 100 TB scan finds out the hard way. Row
-        counts are physical (delete markers and unfolded merge-on-read delta
-        rows included), matching what the next maintenance rewrite will
-        actually lift.
+        counts are physical (retained delete markers included), matching
+        what the next maintenance rewrite will actually lift.
         """
         m = self.manifest(version)
         rows_by_bucket: dict[str, int] = {}
@@ -2015,7 +1935,6 @@ class LakeTable:
             "key_columns": list(m["key_columns"]),
             "num_buckets": int(m["num_buckets"]),
             "buckets_with_data": len(m["buckets"]),
-            "pending_delta_buckets": len(m.get("deltas", {})),
             "data_versions_referenced": sorted({v for v, _ in self._live_files(m)}),
             "physical_rows": sum(counts),
             "rows_per_bucket": {
@@ -2054,7 +1973,6 @@ class LakeTable:
                 "committed_at_ms": m.get("summary", {}).get("committed_at_ms"),
                 "summary": m.get("summary", {}),
                 "buckets_referenced": len(m.get("buckets", {})),
-                "pending_delta_buckets": len(m.get("deltas", {})),
             })
         return out
 
@@ -2334,7 +2252,7 @@ class LakeTable:
         Execution is the bucket-wise copy-on-write of
         :meth:`delete_where`: source keys hash to their buckets with the
         writer's own ``pmod(xxhash64(*keys), n)``, ONLY those buckets are
-        read (delta-collapsed) and full-outer-joined to the source on the
+        read and full-outer-joined to the source on the
         key columns — a 100-row source against a 100 TB table touches a
         handful of buckets and never shuffles the table. Ambiguous merges
         (two source rows sharing a key) raise, as Delta does. Source
@@ -2579,9 +2497,8 @@ class LakeTable:
         leaves a ``data/v{N}`` dir nothing points at. Those dirs are
         invisible to readers but hold real bytes forever. This walks every
         manifest still present (main ancestry, branches, tags — all of
-        them), unions the data versions they reference (bases + pending
-        merge-on-read deltas), and removes unreferenced dirs older than
-        ``grace_seconds``. The grace window is what makes it safe to run
+        them), unions the data versions they reference, and removes
+        unreferenced dirs older than ``grace_seconds``. The grace window is what makes it safe to run
         concurrently with a writer: an in-flight merge's freshly written dir
         is unreferenced only for the instant before its manifest commits,
         and its mtime is new.
@@ -2606,25 +2523,3 @@ class LakeTable:
             removed.append(v)
         return {"removed": removed, "kept_young": kept_young}
 
-
-def iceberg_merge_sql(table: str, source_view: str, keys: list[str], columns: list[str]) -> str:
-    """The equivalent MERGE for a real Iceberg catalog (cluster deployment).
-
-    On a cluster with iceberg-spark-runtime on the classpath, ``foreachBatch``
-    runs this statement instead of :meth:`LakeTable.merge`; the epoch guard
-    moves into the Iceberg snapshot summary (``snapshot-property.epoch-id``).
-    Delete markers are retained (``_tombstone`` column) and filtered by the
-    reading view, mirroring :meth:`LakeTable.merge`'s order-insensitive
-    semantics; a periodic ``purge`` job deletes markers past the retention
-    LSN (Kafka's ``delete.retention.ms`` analogue).
-    """
-    on = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-    allcols = columns + ["_tombstone", "_lsn"]
-    sets = ", ".join(f"t.{c} = s.{c}" for c in allcols)
-    cols = ", ".join(keys + allcols)
-    svals = ", ".join(f"s.{c}" for c in keys + allcols)
-    return (
-        f"MERGE INTO {table} t USING {source_view} s ON {on} "
-        f"WHEN MATCHED AND s._lsn >= t._lsn THEN UPDATE SET {sets} "
-        f"WHEN NOT MATCHED THEN INSERT ({cols}) VALUES ({svals})"
-    )

@@ -206,7 +206,6 @@ def replicate(
     source: LakeTable,
     replica: LakeTable,
     stream_id: str | None = None,
-    mode: str = "rewrite",
     verify: bool = False,
 ) -> dict:
     """One incremental sync: ship the source's unapplied change feed into
@@ -235,9 +234,7 @@ def replicate(
         delta = changes_to_merge_source(
             source.read_changes(from_version, to_version)
         )
-        stats = replica.merge(
-            delta, epoch_id=to_version, stream_id=sid, mode=mode
-        )
+        stats = replica.merge(delta, epoch_id=to_version, stream_id=sid)
         out["skipped"] = stats.skipped
         out["rows_applied"] = stats.rows_written
     if verify:

@@ -307,7 +307,7 @@ def split_complete_transactions(
     END markers with per-transaction event counts
     (``provide.transaction.metadata``; the engine's ``_tx_id`` comes from
     :func:`debezium_to_merge_source` ``with_transaction=True``). This
-    operator defers the incomplete tail so an epoch's MERGE only ever
+    operator holds back the incomplete tail so an epoch's MERGE only ever
     applies whole transactions:
 
     - **Marker mode** (``markers`` given — columns ``(tx_col,
@@ -410,7 +410,7 @@ def mongo_changestream_schema(doc_type: T.StructType) -> T.StructType:
     ``documentKey._id`` (typed like the document's ``_id``),
     ``fullDocument`` (requires the connector's
     ``change.stream.full.document=updateLookup`` so updates carry the full
-    post-image — partial update deltas cannot LWW-merge), ``clusterTime``
+    post-image — partial updates cannot LWW-merge), ``clusterTime``
     as the ``$timestamp {t, i}`` BSON pair."""
     if "_id" not in doc_type.fieldNames():
         raise ValueError("document schema must contain _id")

@@ -84,7 +84,6 @@ class StreamingIngest:
         stream_id: str = "stream",
         metrics: MetricsLog | None = None,
         dlq_dir: str | None = None,
-        merge_mode: str = "rewrite",
         views: list | None = None,
         replicas: list | None = None,
     ):
@@ -109,7 +108,6 @@ class StreamingIngest:
         # here as parquet (partitioned by epoch) instead of failing the
         # query — see Pipeline.apply_with_dlq.
         self.dlq_dir = dlq_dir
-        self.merge_mode = merge_mode
         self.epoch_stats: deque[MergeStats] = deque(maxlen=_EPOCH_STATS_KEPT)
 
     # foreachBatch body — runs on the driver once per microbatch.
@@ -147,7 +145,6 @@ class StreamingIngest:
             epoch_id=int(epoch_id),
             stream_id=self.stream_id,
             pipeline=pipeline,
-            merge_mode=self.merge_mode,
         )
         self.epoch_stats.append(stats)
         if self.metrics is not None:

@@ -2,8 +2,8 @@
 
 Drives the deployment shape the north rule specifies — separate driver
 processes per invocation, exactly how `spark-submit --py-files` runs it —
-through the full maintenance lifecycle: streaming ingest (merge-on-read) →
-delta compaction → snapshot expiry, then validates the final table state
+through the full maintenance lifecycle: streaming ingest → sort-order
+compaction → snapshot expiry, then validates the final table state
 in-process against an independent LWW derivation from the same log.
 """
 
@@ -36,7 +36,7 @@ def _run_cli(*args: str) -> str:
 
 
 @pytest.mark.slow
-def test_cli_ingest_defer_compact_expire(spark, tmp_path):
+def test_cli_ingest_compact_expire(spark, tmp_path):
     from kafka_connect_plugins_spark.plans.lake_table import LakeTable
     from kafka_connect_plugins_spark.sources.changelog import changelog
 
@@ -45,25 +45,25 @@ def test_cli_ingest_defer_compact_expire(spark, tmp_path):
     ckpt_dir = str(tmp_path / "ckpt")
     changelog(spark, 5000, num_repos=10, paths_per_repo=40).write.parquet(log_dir)
 
-    # 1) ingest the log as merge-on-read epochs in a fresh driver process
+    # 1) ingest the log in a fresh driver process
     summary = json.loads(
         _run_cli(
             "--events", log_dir, "--table", table_dir, "--checkpoint", ckpt_dir,
-            "--create", "--available-now", "--merge-mode", "defer",
+            "--create", "--available-now",
             "--master", "local[4]", "--shuffle-partitions", "8",
         )
     )
     assert summary["events"] == 5000 and summary["epochs"] >= 1
     assert summary["high_watermarks"]  # lineage recorded per partition
 
-    # 2) compact pending deltas in a second process
+    # 2) re-cluster every bucket on _lsn in a second process
     maint = json.loads(
         _run_cli(
             "--events", log_dir, "--table", table_dir, "--checkpoint", ckpt_dir,
-            "--compact", "--master", "local[4]",
+            "--compact-sort-by", "_lsn", "--master", "local[4]",
         )
     )
-    assert maint["compacted_buckets"] >= 0
+    assert maint["compacted_buckets"] > 0
 
     # 3) expire old snapshots in a third process
     exp = json.loads(
@@ -76,7 +76,9 @@ def test_cli_ingest_defer_compact_expire(spark, tmp_path):
 
     # 4) validate final state in-process against an independent LWW oracle
     t = LakeTable.load(spark, table_dir)
-    assert t.manifest().get("deltas", {}) == {}  # compaction folded them
+    m = t.manifest()
+    assert m["summary"]["sort_order"] == ["_lsn"]
+    assert maint["compacted_buckets"] == len(m["buckets"])
     got = {
         (r["repo"], r["path"]): (r["commit"], r["_lsn"])
         for r in t.read().collect()

@@ -184,7 +184,7 @@ class TestMaintenanceUnderMapping:
             (r["repo"], r["path"], r["body"], r["_lsn"])
             for r in t.read().collect()
         )
-        t.compact()
+        t.compact(sort_by=["body"])
         after = sorted(
             (r["repo"], r["path"], r["body"], r["_lsn"])
             for r in t.read().collect()

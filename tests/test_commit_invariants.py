@@ -34,7 +34,7 @@ def table(spark, tmp_path):
     return t
 
 
-def _upsert(t, i, mode="rewrite"):
+def _upsert(t, i):
     # a fresh epoch per call: every invocation commits
     t.merge(
         _src(t, [
@@ -42,16 +42,11 @@ def _upsert(t, i, mode="rewrite"):
             ("repo-9", f"new{i}.py", 100 + i, False, "go", "n"),
         ]),
         epoch_id=i + 1,
-        mode=mode,
     )
 
 
 def _noop(t, i):
     return None
-
-
-def _deferred(t, i):
-    _upsert(t, i, mode="defer")
 
 
 def _tombstone(t, i):
@@ -71,8 +66,7 @@ def _head_then_upsert(t, i):
 # both calls (i = 0 checked, i = 1 failed at the manifest write)
 CASES = {
     "merge_rewrite": (_noop, lambda t, c, i: _upsert(t, i)),
-    "merge_defer": (_noop, lambda t, c, i: _upsert(t, i, mode="defer")),
-    "compact": (_deferred, lambda t, c, i: t.compact()),
+    "compact": (_noop, lambda t, c, i: t.compact(sort_by=[("_lsn", "path")[i]])),
     "rebucket": (_noop, lambda t, c, i: t.rebucket((4, 16)[i])),
     "purge_tombstones": (
         _tombstone, lambda t, c, i: t.purge_tombstones(below_lsn=10**6)
@@ -106,9 +100,7 @@ CASES = {
 
 
 def _live_files(m):
-    return {(int(v), b) for b, v in m["buckets"].items()} | {
-        (int(v), b) for b, vs in m.get("deltas", {}).items() for v in vs
-    }
+    return {(int(v), b) for b, v in m["buckets"].items()}
 
 
 @pytest.mark.parametrize("name", sorted(CASES))

@@ -54,9 +54,7 @@ def test_stats_stay_bounded_to_live_files(spark, tmp_path):
         t.merge(_src(spark, [("r", f"p{i}", "c", "py", f"v{e}", e * 100 + i,
                               False) for i in range(20)]), epoch_id=e)
     manifest = t.manifest()
-    live = {f"v{v}/{b}" for b, v in manifest["buckets"].items()} | {
-        f"v{v}/{b}" for b, vs in manifest.get("deltas", {}).items() for v in vs
-    }
+    live = {f"v{v}/{b}" for b, v in manifest["buckets"].items()}
     # O(live files), never O(history): superseded versions carry no entries
     assert set(t.file_stats()) == live
 
@@ -95,14 +93,14 @@ def test_pruning_skips_files(spark, tmp_path):
     assert nothing.count() == 0 and len(nothing.inputFiles()) == 0
 
 
-def test_merge_on_read_prune_keeps_lww_collapse(spark, tmp_path):
+def test_prune_after_merge_keeps_lww_winner(spark, tmp_path):
     t = _table(spark, tmp_path, buckets=4)
     t.merge(_src(spark, [("a", "p1", "c", "py", "v1", 1, False)]), epoch_id=0)
-    # the delta supersedes p1 and adds q; pruning must never split a
-    # bucket's base from its deltas, or LWW collapse would change
+    # the second merge supersedes p1 and adds q; a pruned read must see the
+    # winners only, never the superseded row
     t.merge(_src(spark, [("a", "p1", "c", "py", "v2", 50, False),
                          ("b", "q", "c", "py", "w", 60, False)]),
-            epoch_id=1, mode="defer")
+            epoch_id=1)
     got = t.read(prune={"_lsn": (50, 60)})
     want = t.read().filter((F.col("_lsn") >= 50) & (F.col("_lsn") <= 60))
     assert _rows(got) == _rows(want)
@@ -129,8 +127,8 @@ def test_maintenance_rewrites_refresh_stats(spark, tmp_path):
     t.merge(_src(spark, [("r", f"p{i}", "c", "py", "v", i, False)
                          for i in range(1, 21)]), epoch_id=0)
     t.merge(_src(spark, [("r", "p1", "c", "py", None, 100, True)]),
-            epoch_id=1, mode="defer")
-    t.compact()
+            epoch_id=1)
+    t.compact(sort_by=["_lsn"])
     stats = t.file_stats()
     assert stats and all(k.startswith("v") for k in stats)
     assert _rows(t.read(prune={"_lsn": (2, 20)})) == _rows(

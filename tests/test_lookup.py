@@ -172,18 +172,17 @@ class TestRebucket:
         got = table.lookup({"repo": probe["repo"], "path": probe["path"]}).first()
         assert got["content"] == "REBUCKETED"
 
-    def test_rebucket_folds_mor_deltas(self, spark, table):
+    def test_rebucket_carries_merged_update(self, spark, table):
         probe = table.read().first()
         upd = spark.createDataFrame(
-            [(probe["repo"], probe["path"], 88_888, False, "VIA-DELTA")],
+            [(probe["repo"], probe["path"], 88_888, False, "VIA-MERGE")],
             "repo string, path string, _lsn long, _tombstone boolean, content string",
         )
-        table.merge(upd, epoch_id=1, mode="defer")
-        assert table.manifest()["deltas"]
+        table.merge(upd, epoch_id=1)
         table.rebucket(8)
-        assert table.manifest()["deltas"] == {}
+        assert int(table.manifest()["num_buckets"]) == 8
         got = table.lookup({"repo": probe["repo"], "path": probe["path"]}).first()
-        assert got["content"] == "VIA-DELTA"
+        assert got["content"] == "VIA-MERGE"
 
     def test_noop_and_invalid(self, table):
         assert table.rebucket(16) == 0

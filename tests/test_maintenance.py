@@ -197,7 +197,8 @@ class TestSortedCompaction:
 
         root = str(tmp_path / "lake2")
         t = LakeTable.create(spark, root, key_columns=["repo", "path"], num_buckets=4)
-        # two merge-on-read epochs with interleaved LSNs -> unsorted deltas
+        # two epochs with interleaved LSNs: each merge writes a bucket's
+        # carried rows and new rows in no particular _lsn order
         for e, lo in enumerate((0, 1)):
             src = spark.range(200).select(
                 F.concat(F.lit("r"), (F.col("id") % 5).cast("string")).alias("repo"),
@@ -206,13 +207,11 @@ class TestSortedCompaction:
                 F.lit(False).alias("_tombstone"),
                 F.lit("x").alias("content"),
             )
-            t.merge(src, epoch_id=e, mode="defer")
-        assert t.manifest().get("deltas")
+            t.merge(src, epoch_id=e)
         n = t.compact(sort_by=["_lsn"])
         assert n > 0
         m = t.manifest()
         assert m["summary"]["sort_order"] == ["_lsn"]
-        assert m.get("deltas", {}) == {}
         # every rewritten bucket file holds its rows in _lsn order: parquet
         # preserves row order, so row-group min/max on _lsn are disjoint and
         # a pushed-down range predicate skips whole row groups
@@ -232,26 +231,21 @@ class TestDescribe:
         assert d["physical_rows"] == 400
         assert d["num_buckets"] == 16
         assert d["buckets_with_data"] == len(table.manifest()["buckets"])
-        assert d["pending_delta_buckets"] == 0
         assert {"repo", "path", "content", "_lsn"} <= set(d["columns"])
         assert d["streams"] == {"default": 0}
         assert d["rows_per_bucket"]["max"] >= d["rows_per_bucket"]["median"] > 0
         assert d["rows_per_bucket"]["skew_max_over_median"] >= 1.0
 
-    def test_counts_markers_and_deltas(self, spark, table):
-        import pyspark.sql.functions as F2
-
+    def test_counts_markers(self, spark, table):
         tomb = spark.createDataFrame(
             [("repo-3", "ghost.py", 10_000, True, None)],
             "repo string, path string, _lsn long, _tombstone boolean, content string",
         )
-        table.merge(tomb, epoch_id=1, mode="defer")
+        table.merge(tomb, epoch_id=1)
         d = table.describe()
-        assert d["pending_delta_buckets"] == 1
-        # physical rows include the marker delta row
+        # physical rows include the retained delete marker
         assert d["physical_rows"] == 401
         assert table.read().count() == 400  # live view unchanged (marker hidden)
-        _ = F2  # silence unused warning path
 
 
 class TestTimeBasedExpiry:
@@ -570,7 +564,7 @@ class TestZorderCompaction:
         try:
             root = str(tmp_path / "zlake")
             t = LakeTable.create(spark, root, key_columns=["id"], num_buckets=2)
-            for e in range(2):  # defer mode leaves deltas for the sort pass
+            for e in range(2):
                 src = spark.range(e * 20_000, (e + 1) * 20_000).select(
                     F.col("id"),
                     F.col("id").alias("_lsn"),
@@ -578,7 +572,7 @@ class TestZorderCompaction:
                     F.pmod(F.xxhash64(F.col("id")), F.lit(1000)).alias("x"),
                     F.pmod(F.xxhash64(F.col("id"), F.lit(7)), F.lit(1000)).alias("y"),
                 )
-                t.merge(src, epoch_id=e, mode="defer")
+                t.merge(src, epoch_id=e)
             d0 = t.state_digest()
 
             assert t.compact(sort_by=["x"]) > 0
@@ -587,8 +581,6 @@ class TestZorderCompaction:
             )
             assert t.state_digest() == d0
 
-            # z-order is a re-cluster: it must rewrite even with NO deltas
-            assert t.manifest().get("deltas", {}) == {}
             assert t.compact(zorder_by=["x", "y"]) > 0
             m = t.manifest()
             assert m["summary"]["zorder"] == ["x", "y"]

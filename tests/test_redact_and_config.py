@@ -1,4 +1,4 @@
-"""RedactFields stage, config-provider resolution, schema registry."""
+"""RedactFields stage and config-provider resolution."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -7,8 +7,6 @@ from pyspark.sql import types as T
 from kafka_connect_plugins_spark.config import ConfigException, resolve_config_providers
 from kafka_connect_plugins_spark.operators import Pipeline
 from kafka_connect_plugins_spark.operators.redact import RedactFields
-from kafka_connect_plugins_spark.plans.lake_table import SchemaEvolutionError
-from kafka_connect_plugins_spark.plans.schema_registry import SchemaRegistry
 from tests.helpers import make_envelope_df
 
 VALUE_TYPE = T.StructType(
@@ -104,32 +102,3 @@ def test_pipeline_resolves_providers(spark, monkeypatch):
     )
     out = pipe.apply(_df(spark))
     assert "email" not in out.schema["value"].dataType.fieldNames()
-
-
-def test_schema_registry_evolution(tmp_path, spark):
-    reg = SchemaRegistry(str(tmp_path / "registry"))
-    v1_schema = T.StructType(
-        [T.StructField("repo", T.StringType(), False), T.StructField("lang", T.StringType())]
-    )
-    v1 = reg.register("repo-content", v1_schema, defaults={"lang": "unknown"})
-    assert v1.version == 1
-    # idempotent re-register of the same shape
-    assert reg.register("repo-content", v1_schema).version == 1
-
-    v2_schema = T.StructType(v1_schema.fields + [T.StructField("stars", T.LongType())])
-    v2 = reg.register("repo-content", v2_schema)
-    assert v2.version == 2 and [f.name for f in v2.schema.fields] == ["repo", "lang", "stars"]
-    assert v2.schema["stars"].nullable  # add-only: new fields land nullable
-
-    with pytest.raises(SchemaEvolutionError):
-        reg.register(
-            "repo-content",
-            T.StructType([T.StructField("repo", T.LongType())]),  # type change
-        )
-
-    # conform: old-shape batch widens with null/default columns
-    old_batch = spark.createDataFrame([("r1", None)], "repo string, lang string")
-    conformed = reg.conform(old_batch, v2)
-    row = conformed.first()
-    assert row["lang"] == "unknown" and row["stars"] is None
-    assert conformed.columns == ["repo", "lang", "stars"]

@@ -160,7 +160,7 @@ def test_maintenance_only_commit_syncs_cleanly(spark, tmp_path, source):
     # compact rewrites buckets without changing visible rows: the feed for
     # that range is empty, but the sync must still advance the ledger (or
     # stay a no-op) without erroring, and digests must keep matching
-    source.compact()
+    source.compact(sort_by=["_lsn"])
     out = replicate(source, replica, verify=True)
     assert out["verified"]
     assert replicate(source, replica)["rows_applied"] == 0

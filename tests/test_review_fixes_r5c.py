@@ -11,9 +11,9 @@ an adversarial read of the round-5 diff.
 3. ``merge_source_to_envelope`` collapsed ALL distinct NULL-component
    composite keys into the single NULL envelope identity, silently losing
    rows in the downstream LWW merge.
-4. Defer-mode ``merge()`` returned ``rows_written=0``, so
-   ``replicate(mode='defer')`` reported ``rows_applied=0`` after applying
-   rows.
+4. ``merge()`` must report the LWW-collapsed winner set as
+   ``rows_written``, which ``replicate()`` reports as ``rows_applied``
+   (a merge path once returned 0 after applying rows).
 5. ``agg_delta`` mishandled NULL measure values: retracting a group's
    last non-NULL value left the maintained sum at 0 where recomputation
    says NULL, breaking ``advance(full(v0), v0, v1) == full(v1)``.
@@ -198,8 +198,8 @@ class TestEnvelopeNullKeyPolicy:
             merge_source_to_envelope(self._src(spark), ["ka"], null_key_policy="x")
 
 
-class TestDeferModeRowsWritten:
-    def test_defer_reports_winner_keys(self, table):
+class TestRowsWritten:
+    def test_merge_reports_winner_keys(self, table):
         stats = table.merge(
             table.spark.createDataFrame(
                 [
@@ -212,12 +212,11 @@ class TestDeferModeRowsWritten:
             lsn_col="_lsn",
             tombstone_col="_tombstone",
             epoch_id=0,
-            mode="defer",
         )
-        # 2 distinct keys = the delta rows actually appended (LWW-collapsed)
+        # 2 distinct keys = the LWW-collapsed rows written
         assert stats.rows_written == 2
 
-    def test_replicate_defer_reports_rows(self, spark, tmp_path, table):
+    def test_replicate_reports_rows(self, spark, tmp_path, table):
         from kafka_connect_plugins_spark.plans.replication import replicate
 
         _merge(
@@ -228,7 +227,7 @@ class TestDeferModeRowsWritten:
         replica = LakeTable.create(
             spark, str(tmp_path / "rep2"), key_columns=["repo", "path"], num_buckets=4
         )
-        out = replicate(table, replica, mode="defer", verify=True)
+        out = replicate(table, replica, verify=True)
         assert out["rows_applied"] == 1 and out["verified"]
 
 

@@ -1,6 +1,5 @@
 """Round-2 features: struct record keys, parent-struct defaults, the
-transform-stage dead-letter route, the Kafka value:binary seam, and the
-Iceberg MERGE statement's parseability.
+transform-stage dead-letter route, and the Kafka value:binary seam.
 
 Reference parity targets:
 - UnquoteRecordKeyTest.kt:76-90 — non-String (Int / Struct) keys pass
@@ -197,22 +196,6 @@ class TestKafkaSeam:
         dl = parse_json_envelope(raw.select("value"), VAL_T, keep_corrupt=True)
         assert dl.count() == 2
         assert dl.filter(F.col("_corrupt_record").isNotNull()).count() == 1
-
-
-class TestIcebergMergeSql:
-    def test_statement_parses_in_sparks_own_parser(self, spark):
-        """Parse-check the emitted MERGE with Spark's SQL parser so the
-        cluster path (plans/lake_table.iceberg_merge_sql) can't rot —
-        parsePlan validates syntax without needing an Iceberg catalog."""
-        from kafka_connect_plugins_spark.plans.lake_table import iceberg_merge_sql
-
-        sql = iceberg_merge_sql(
-            "lake.repos", "updates", ["repo", "path"], ["commit", "lang", "content"]
-        )
-        parser = spark._jsparkSession.sessionState().sqlParser()
-        plan = parser.parsePlan(sql)  # raises ParseException on bad syntax
-        assert "MergeIntoTable" in plan.getClass().getSimpleName()
-        assert "WHEN MATCHED AND s._lsn >= t._lsn THEN UPDATE" in sql
 
 
 class TestStreamingDlq:

@@ -1,8 +1,6 @@
-"""Round-3 fixes: null-key merge safety, LSN domain guard, delta-aware
-compaction trigger, DLQ exactly-once-ish replay behavior, header multi-map
-fidelity (reference: ModifyPartition.kt:36 lastWithName)."""
-
-import os
+"""Round-3 fixes: null-key merge safety, LSN domain guard, DLQ
+exactly-once-ish replay behavior, header multi-map fidelity (reference:
+ModifyPartition.kt:36 lastWithName)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -71,12 +69,12 @@ def test_null_keys_plan_a_broadcast(spark, tmp_path):
     assert _state(t) == _EXPECT_AFTER_2
 
 
-def test_null_keys_defer_mode(spark, tmp_path):
+def test_null_keys_survive_compact(spark, tmp_path):
     t = _table(spark, tmp_path, "d")
-    t.merge(_src(spark, _NULL_BATCH_1), mode="defer")
-    t.merge(_src(spark, _NULL_BATCH_2), mode="defer")
+    t.merge(_src(spark, _NULL_BATCH_1))
+    t.merge(_src(spark, _NULL_BATCH_2))
     assert _state(t) == _EXPECT_AFTER_2
-    t.compact()
+    t.compact(sort_by=["_lsn"])
     assert _state(t) == _EXPECT_AFTER_2
 
 
@@ -117,37 +115,6 @@ def test_null_lsn_raises(spark, tmp_path):
         t.merge(_src(spark, [
             {"repo": "r", "path": "p", "content": "x", "_lsn": None, "_tombstone": False},
         ]))
-
-
-# ----------------------------------------------------------------------
-# Delta-aware compaction trigger: a rewrite over pending deltas must fold
-# the bucket back to few files (the delta-collapsed carried path scatters
-# across shuffle partitions without the forced compacting repartition).
-# ----------------------------------------------------------------------
-
-def test_rewrite_over_deltas_compacts_bucket_files(spark, tmp_path):
-    t = _table(spark, tmp_path, "mor", buckets=2)
-    t.merge(_src(spark, [
-        {"repo": "r", "path": f"p{i}", "content": "a", "_lsn": i, "_tombstone": False}
-        for i in range(20)
-    ]))
-    t.merge(_src(spark, [
-        {"repo": "r", "path": f"p{i}", "content": "b", "_lsn": 100 + i, "_tombstone": False}
-        for i in range(20)
-    ]), mode="defer")
-    # rewrite while deltas are pending -> forced compacting repartition
-    t.merge(_src(spark, [
-        {"repo": "r", "path": f"p{i}", "content": "c", "_lsn": 200 + i, "_tombstone": False}
-        for i in range(20)
-    ]))
-    m = t.manifest()
-    assert m.get("deltas", {}) == {}
-    root = str(tmp_path / "mor")
-    for b, v in m["buckets"].items():
-        bdir = os.path.join(root, "data", f"v{v}", f"_bucket={b}")
-        n = sum(1 for f_ in os.listdir(bdir) if f_.endswith(".parquet"))
-        assert n <= 1, f"bucket {b} has {n} files after delta-folding rewrite"
-    assert _state(t) == {("r", f"p{i}"): ("c", 200 + i) for i in range(20)}
 
 
 # ----------------------------------------------------------------------

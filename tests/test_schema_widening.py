@@ -62,15 +62,15 @@ def test_incompatible_change_still_raises(spark, tmp_path):
         _merge(t, bad, [Row(repo="r", path="b", size="big", ratio=0.5, _lsn=2, _tombstone=False)], 1)
 
 
-def test_widening_survives_defer_and_compact(spark, tmp_path):
+def test_widening_survives_compact(spark, tmp_path):
     t = LakeTable.create(spark, str(tmp_path / "t"), key_columns=["repo", "path"], num_buckets=4)
     _merge(t, NARROW, [Row(repo="r", path="a", size=1, ratio=0.5, _lsn=1, _tombstone=False)], 0)
     df = spark.createDataFrame(
         [Row(repo="r", path="b", size=2**40, ratio=0.5, _lsn=2, _tombstone=False)], WIDE
     )
-    t.merge(df, lsn_col="_lsn", tombstone_col="_tombstone", epoch_id=1, mode="defer")
+    t.merge(df, lsn_col="_lsn", tombstone_col="_tombstone", epoch_id=1)
     got = {r.path: r.size for r in t.read().collect()}
     assert got == {"a": 1, "b": 2**40}
-    t.compact()
+    t.compact(sort_by=["size"])
     assert {r.path: r.size for r in t.read().collect()} == got
     assert dict(t.read().dtypes)["size"] == "bigint"
