@@ -2,7 +2,7 @@
 
 ``queries()`` exposes one entry per implemented operator from SURVEY.md §2
 (the eight reference SMTs + engine stages) plus the training-data-pipeline
-operators (exact dedup / minhash signatures / text analysis). Each has a
+operators (exact dedup / minhash signatures / token statistics). Each has a
 matching ``oracle_sql()`` ANSI-SQL string DuckDB runs on the same parquet
 tables; column names and types are aligned on both sides.
 
@@ -29,11 +29,6 @@ from kafka_connect_plugins_spark.operators import (
     UnquoteRecordKey,
 )
 from kafka_connect_plugins_spark.functions.hashing import crc32_pmod
-from kafka_connect_plugins_spark.functions.text import (
-    bpe_ish_tokens,
-    quality_features,
-    rolling_fingerprint,
-)
 
 EPOCH0 = 1_700_000_000_000
 
@@ -460,36 +455,6 @@ def q_token_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_sampled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 5% sample — membership derives from md5(doc_id), not
-    from an RNG, so the SAME rows are selected on any cluster size, any
-    partitioning, any engine (the oracle reproduces the exact row set in
-    DuckDB — row-level agreement, not just counts). Map-only: a filter on
-    the scan (`functions/sampling.py`)."""
-    from kafka_connect_plugins_spark.functions.sampling import deterministic_sample
-
-    docs = _t(spark, sf_dir, "documents")
-    return docs.filter(deterministic_sample("doc_id", 0.05)).select(
-        "doc_id", "lang", "n_chars"
-    )
-
-
-def q_doc_split_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train/val/test split assignment (98/1/1) — the dataset-split op a
-    training pipeline runs over every corpus. Hash-derived (md5 uniform
-    draw), so stable under repartition/backfill and auditable by the
-    DuckDB oracle; aggregated per split for the gate."""
-    from kafka_connect_plugins_spark.functions.sampling import hash_split
-
-    docs = _t(spark, sf_dir, "documents")
-    split = hash_split("doc_id", {"train": 0.98, "val": 0.01, "test": 0.01})
-    return (
-        docs.withColumn("split", split)
-        .groupBy("split")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("n_chars").alias("sum_chars"))
-    )
-
-
 def q_scd2_user_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD Type-2 history build — the warehouse-side materialization a CDC
     ingest feeds (the reference's RedShift/ClickHouse sinks land the raw
@@ -548,31 +513,6 @@ def q_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(rev).cast("double").alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
-    )
-
-
-def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stratified (per-group quota) sampling: exactly ceil(n/10) documents
-    from EVERY language — the corpus-balancing op a training pipeline runs
-    so low-resource strata aren't washed out by a global Bernoulli draw
-    (`sampled_docs` is that global draw; this is its quota twin). Selection
-    ranks each stratum by the same md5-uniform draw, so membership is
-    deterministic and engine-auditable. lang cardinality is tiny, so the
-    per-group sort is ONE skew-prone shuffle: the scale path is per-stratum
-    salted TOP-(quota/salt) pre-ranking, or a two-phase hash-threshold
-    (count -> broadcast per-group threshold -> map-only filter) when
-    near-exact quotas suffice."""
-    from kafka_connect_plugins_spark.functions.sampling import hash_uniform
-
-    docs = _t(spark, sf_dir, "documents")
-    wr = Window.partitionBy("lang").orderBy("__u", "doc_id")
-    wc = Window.partitionBy("lang")
-    return (
-        docs.withColumn("__u", hash_uniform("doc_id"))
-        .withColumn("__rk", F.row_number().over(wr))
-        .withColumn("__n", F.count(F.lit(1)).over(wc))
-        .where(F.col("__rk") <= F.ceil(F.col("__n") / F.lit(10.0)))
-        .select("doc_id", "lang", "n_chars")
     )
 
 
@@ -1314,26 +1254,6 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Context-window chunking (32-token windows, 8-token overlap): the
-    splitter an embedding/training pipeline runs before long documents meet
-    a model. Map-only native Columns (sequence → transform → slice); the
-    oracle rebuilds every chunk with generate_series + list slicing."""
-    from kafka_connect_plugins_spark.functions.text import token_chunks
-
-    docs = _t(spark, sf_dir, "documents")
-    ch = docs.select(
-        "doc_id",
-        F.explode(token_chunks(F.col("text"), chunk_tokens=32, overlap=8)).alias("c"),
-    )
-    return ch.select(
-        "doc_id",
-        F.col("c.chunk_id").alias("chunk_id"),
-        F.col("c.chunk").alias("chunk"),
-        F.col("c.n_tokens").alias("n_tokens"),
-    )
-
-
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-word language heuristic (the rule IS the spec; oracle encodes
     the same rule independently)."""
@@ -1371,85 +1291,6 @@ def q_redact_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_token_bpe_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE-ish pre-tokenizer counts (regex token classes)."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = bpe_ish_tokens(F.col("text"))
-    return docs.select(
-        "doc_id",
-        F.size(toks).cast("long").alias("n_bpe_tokens"),
-        F.size(F.filter(toks, lambda t: t.rlike("^[a-zA-Z]+$")))
-        .cast("long")
-        .alias("n_word_tokens"),
-        F.size(F.filter(toks, lambda t: t.rlike("^[0-9]$"))).cast("long").alias("n_digit_tokens"),
-        F.size(F.filter(toks, lambda t: ~t.rlike("^[a-zA-Z0-9]")))
-        .cast("long")
-        .alias("n_mark_tokens"),
-    )
-
-
-def q_quality_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher/C4-style quality-filter features."""
-    docs = _t(spark, sf_dir, "documents")
-    feats = quality_features(F.col("text"))
-    return docs.select("doc_id", *[v.alias(k) for k, v in feats.items()])
-
-
-def q_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rabin-Karp rolling-hash fingerprints (raw + normalized)."""
-    docs = _t(spark, sf_dir, "documents")
-    norm = F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
-    return docs.select(
-        "doc_id",
-        rolling_fingerprint(F.col("text")).alias("fp"),
-        rolling_fingerprint(norm).alias("fp_norm"),
-    )
-
-
-def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style within-document repetition signals: duplicate token /
-    bigram / trigram fractions (``functions.text.repetition_features``) —
-    the degenerate-text filters a training pipeline runs alongside the
-    quality features. Map-only native Columns."""
-    from kafka_connect_plugins_spark.functions.text import repetition_features
-
-    docs = _t(spark, sf_dir, "documents")
-    feats = repetition_features(F.col("text"))
-    return docs.select("doc_id", *[v.alias(k) for k, v in feats.items()])
-
-
-def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII detect + mask over documents. The synthetic corpus carries no
-    real PII, so every third document is deterministically seeded with an
-    email + phone both engines can construct from doc_id alone; detection
-    and masking then run on the seeded text (``functions.text.pii_features``
-    / ``scrub_pii``). Map-only native regex Columns."""
-    from kafka_connect_plugins_spark.functions.text import pii_features, scrub_pii
-
-    docs = _t(spark, sf_dir, "documents")
-    email = F.concat(
-        F.lit("user"), F.col("doc_id").cast("string"), F.lit("@example.com")
-    )
-    phone = F.concat(
-        F.lit("+1-555-"),
-        F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-    )
-    seeded = F.when(
-        F.col("doc_id") % 3 == 0,
-        F.concat(
-            F.col("text"), F.lit(" contact "), email, F.lit(" or call "), phone
-        ),
-    ).otherwise(F.col("text"))
-    feats = pii_features(seeded)
-    return docs.select(
-        "doc_id",
-        feats["n_emails"].alias("n_emails"),
-        feats["n_phones"].alias("n_phones"),
-        ((feats["n_emails"] + feats["n_phones"]) > 0).alias("has_pii"),
-        scrub_pii(seeded).alias("clean_text"),
-    )
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "unquote_record_key": q_unquote_record_key,
@@ -1477,52 +1318,26 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_exact": q_dedup_exact,
         "minhash_signatures": q_minhash_signatures,
         "token_stats": q_token_stats,
-        "doc_chunks": q_doc_chunks,
         "lang_id": q_lang_id,
         "doc_fingerprint": q_doc_fingerprint,
         "redact_fields": q_redact_fields,
-        "token_bpe_stats": q_token_bpe_stats,
-        "quality_features": q_quality_features,
-        "rolling_fingerprint": q_rolling_fingerprint,
         "doc_length_percentiles": q_doc_length_percentiles,
         "top_docs_per_lang": q_top_docs_per_lang,
         "rollup_doc_counts": q_rollup_doc_counts,
-        "sampled_docs": q_sampled_docs,
-        "doc_split_counts": q_doc_split_counts,
         "scd2_user_history": q_scd2_user_history,
         "nation_revenue": q_nation_revenue,
-        "stratified_sample": q_stratified_sample,
         "customers_without_orders": q_customers_without_orders,
         "pivot_user_events": q_pivot_user_events,
         "skew_salted_stats": q_skew_salted_stats,
         "user_running_value": q_user_running_value,
         "event_sessions_batch": q_event_sessions_batch,
         "token_postings": q_token_postings,
-        "repetition_stats": q_repetition_stats,
-        "pii_scrub": q_pii_scrub,
     }
 
 
 # ----------------------------------------------------------------------
 # oracles
 # ----------------------------------------------------------------------
-
-_WS_TOKENS_SQL = (
-    # mirrors functions/text.py ws_tokens: blank text -> EMPTY token list
-    # (string_split_regex of '' alone returns [''], a phantom token)
-    r"list_filter(string_split_regex(trim(text), '\s+'), t -> t <> '')"
-)
-_NORM_TEXT_SQL = r"lower(trim(regexp_replace(text, '\s+', ' ', 'g')))"
-_BPE_PATTERN_SQL = "'[a-zA-Z]+|[0-9]|[^a-zA-Z0-9 ]'"
-_FP_MOD = 9007199254740881
-
-
-def _rolling_fp_sql(expr: str) -> str:
-    return (
-        f"list_reduce(list_prepend(0::BIGINT, "
-        f"list_transform(split({expr}, ''), c -> ord(c)::BIGINT)), "
-        f"(acc, c) -> (acc * 31 + c) % {_FP_MOD})"
-    )
 
 
 def oracle_sql() -> dict[str, str]:
@@ -1901,52 +1716,6 @@ def oracle_sql() -> dict[str, str]:
                        s -> ('0x' || substr(sha256(s), 1, 8))::BIGINT) AS __h
               FROM documents)
         """,
-        "doc_chunks": """
-            -- rebuild every 32-token / 8-overlap window: stride 24, chunk
-            -- count = max(ceil((n-8)/24), 1), final window = remainder
-            WITH toks AS (
-              SELECT doc_id,
-                     regexp_split_to_array(trim(text), '\\s+') AS t
-              FROM documents),
-            base AS (SELECT doc_id, t, len(t) AS n FROM toks),
-            idx AS (
-              SELECT doc_id, t, n, g.i
-              FROM base,
-                   UNNEST(generate_series(
-                       0,
-                       CAST(greatest(ceil((n - 8) / 24.0), 1) AS BIGINT) - 1
-                   )) AS g(i))
-            SELECT doc_id,
-                   CAST(i AS INT) AS chunk_id,
-                   array_to_string(t[i*24 + 1 : i*24 + 32], ' ') AS chunk,
-                   CAST(least(n - i*24, 32) AS INT) AS n_tokens
-            FROM idx
-        """,
-        "repetition_stats": """
-            -- duplicate n-gram fractions, n = 1/2/3; 0.0 when too short
-            WITH toks AS (
-              SELECT doc_id,
-                     regexp_split_to_array(trim(text), '\\s+') AS t
-              FROM documents),
-            grams AS (
-              SELECT doc_id, t,
-                     [array_to_string(t[i : i+1], ' ')
-                      FOR i IN generate_series(1, greatest(len(t) - 1, 0))] AS g2,
-                     [array_to_string(t[i : i+2], ' ')
-                      FOR i IN generate_series(1, greatest(len(t) - 2, 0))] AS g3
-              FROM toks)
-            SELECT doc_id,
-                   CASE WHEN len(t) <= 0 THEN 0.0 ELSE
-                     round((len(t) - len(list_distinct(t)))::DOUBLE / len(t), 4)
-                   END AS dup_token_frac,
-                   CASE WHEN len(g2) <= 0 THEN 0.0 ELSE
-                     round((len(g2) - len(list_distinct(g2)))::DOUBLE / len(g2), 4)
-                   END AS dup_bigram_frac,
-                   CASE WHEN len(g3) <= 0 THEN 0.0 ELSE
-                     round((len(g3) - len(list_distinct(g3)))::DOUBLE / len(g3), 4)
-                   END AS dup_trigram_frac
-            FROM grams
-        """,
         "token_stats": """
             SELECT doc_id,
                    len(string_split(text, ' '))::BIGINT AS n_tokens,
@@ -1976,38 +1745,6 @@ def oracle_sql() -> dict[str, str]:
                    sha256(props) AS props_hash,
                    3 AS n_value_fields
             FROM events
-        """,
-        "token_bpe_stats": f"""
-            SELECT doc_id,
-                   len(regexp_extract_all(text, {_BPE_PATTERN_SQL}))::BIGINT AS n_bpe_tokens,
-                   len(list_filter(regexp_extract_all(text, {_BPE_PATTERN_SQL}),
-                       t -> regexp_matches(t, '^[a-zA-Z]+$')))::BIGINT AS n_word_tokens,
-                   len(list_filter(regexp_extract_all(text, {_BPE_PATTERN_SQL}),
-                       t -> regexp_matches(t, '^[0-9]$')))::BIGINT AS n_digit_tokens,
-                   len(list_filter(regexp_extract_all(text, {_BPE_PATTERN_SQL}),
-                       t -> NOT regexp_matches(t, '^[a-zA-Z0-9]')))::BIGINT AS n_mark_tokens
-            FROM documents
-        """,
-        "quality_features": f"""
-            SELECT doc_id,
-                   len({_WS_TOKENS_SQL})::BIGINT AS n_tokens,
-                   len(list_distinct({_WS_TOKENS_SQL}))::BIGINT AS n_unique_tokens,
-                   length(text)::BIGINT AS n_chars,
-                   round(length(regexp_replace(text, '[^a-zA-Z]', '', 'g'))::DOUBLE
-                         / greatest(length(text), 1), 4) AS alpha_ratio,
-                   round(length(regexp_replace(text, '[^.,;:!?]', '', 'g'))::DOUBLE
-                         / greatest(length(text), 1), 4) AS punct_ratio,
-                   round(len(list_distinct({_WS_TOKENS_SQL}))::DOUBLE
-                         / greatest(len({_WS_TOKENS_SQL}), 1), 4) AS uniq_ratio,
-                   round(coalesce(length(array_to_string({_WS_TOKENS_SQL}, '')), 0)::DOUBLE
-                         / greatest(len({_WS_TOKENS_SQL}), 1), 4) AS mean_token_len
-            FROM documents
-        """,
-        "rolling_fingerprint": f"""
-            SELECT doc_id,
-                   {_rolling_fp_sql("text")} AS fp,
-                   {_rolling_fp_sql(_NORM_TEXT_SQL)} AS fp_norm
-            FROM documents
         """,
         "doc_length_percentiles": """
             SELECT lang,
@@ -2092,11 +1829,6 @@ def oracle_sql() -> dict[str, str]:
                    count(*) AS df
             FROM t GROUP BY term
         """,
-        "sampled_docs": """
-            SELECT doc_id, lang, n_chars FROM documents
-            WHERE CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                       AS UBIGINT) / 4294967296.0 < 0.05
-        """,
         "scd2_user_history": """
             SELECT user_id, event_id AS lsn, event_type, value,
                    ts AS valid_from,
@@ -2123,22 +1855,6 @@ def oracle_sql() -> dict[str, str]:
               AND o_orderdate <  TIMESTAMP '1997-01-01'
             GROUP BY n_name
         """,
-        "stratified_sample": """
-            WITH u AS (
-                SELECT doc_id, lang, n_chars,
-                       CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                            AS UBIGINT) / 4294967296.0 AS draw
-                FROM documents
-            ), r AS (
-                SELECT doc_id, lang, n_chars,
-                       row_number() OVER (PARTITION BY lang
-                                          ORDER BY draw, doc_id) AS rk,
-                       count(*) OVER (PARTITION BY lang) AS n
-                FROM u
-            )
-            SELECT doc_id, lang, n_chars FROM r
-            WHERE rk <= ceil(n / 10.0)
-        """,
         "customers_without_orders": """
             SELECT c_nationkey,
                    count(*) AS n_orphans,
@@ -2151,49 +1867,6 @@ def oracle_sql() -> dict[str, str]:
                   AND o.o_orderdate < TIMESTAMP '1996-01-01'
             )
             GROUP BY c_nationkey
-        """,
-        "doc_split_counts": """
-            WITH u AS (
-                SELECT n_chars,
-                       CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                            AS UBIGINT) / 4294967296.0 AS draw
-                FROM documents
-            )
-            SELECT CASE WHEN draw < 0.98 THEN 'train'
-                        WHEN draw < 0.99 THEN 'val'
-                        ELSE 'test' END AS split,
-                   count(*) AS n_docs,
-                   sum(n_chars) AS sum_chars
-            FROM u GROUP BY 1
-        """,
-        "pii_scrub": """
-            -- seed every third doc with a constructible email+phone, then
-            -- detect and mask with the same regexes in the same order
-            WITH seeded AS (
-              SELECT doc_id,
-                     CASE WHEN doc_id % 3 = 0
-                          THEN text || ' contact user' || doc_id
-                               || '@example.com or call +1-555-'
-                               || lpad((doc_id % 10000)::VARCHAR, 4, '0')
-                          ELSE text END AS t
-              FROM documents)
-            SELECT doc_id,
-                   CAST(len(regexp_extract_all(t,
-                       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}')) AS INT)
-                       AS n_emails,
-                   CAST(len(regexp_extract_all(t,
-                       '\\+\\d{1,2}-\\d{3}-\\d{4}')) AS INT) AS n_phones,
-                   (len(regexp_extract_all(t,
-                        '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}'))
-                    + len(regexp_extract_all(t,
-                        '\\+\\d{1,2}-\\d{3}-\\d{4}'))) > 0 AS has_pii,
-                   regexp_replace(
-                       regexp_replace(t,
-                           '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}',
-                           '<EMAIL>', 'g'),
-                       '\\+\\d{1,2}-\\d{3}-\\d{4}', '<PHONE>', 'g')
-                       AS clean_text
-            FROM seeded
         """,
     }
 

@@ -15,9 +15,7 @@ single-message transforms, see /root/reference) as an idiomatic Spark engine:
   with exactly-once epoch guards and checkpoint resume (``streaming/``),
 - Debezium and MongoDB change-stream wire formats parse into the
   merge source (``sources/``), and the table serves a change feed, point
-  lookups, replication and incrementally maintained views (``plans/``),
-- off the CDC path, document-corpus column expressions: text features
-  (``functions/text.py``) and hash sampling (``functions/sampling.py``).
+  lookups, replication and incrementally maintained views (``plans/``).
 
 Everything is public-API PySpark (DataFrame / SQL / Structured Streaming)
 built from native Columns: no module runs per-row Python or pandas UDFs, so

@@ -3,11 +3,6 @@
 from kafka_connect_plugins_spark.functions.hashing import crc32_pmod
 from kafka_connect_plugins_spark.functions.strings import hex_of_utf8, unquote_both_ends
 from kafka_connect_plugins_spark.functions.paths import dot_path_col, dot_path_exists
-from kafka_connect_plugins_spark.functions.sampling import (
-    deterministic_sample,
-    hash_split,
-    hash_uniform,
-)
 
 __all__ = [
     "crc32_pmod",

@@ -250,8 +250,10 @@ class LakeTable:
         key_columns: list[str],
         num_buckets: int = 64,
         schema: T.StructType | None = None,
-        bloom_keys: bool = True,
     ) -> "LakeTable":
+        """Create an empty table at ``root``. Every data write puts a parquet
+        bloom filter on each key column, sized from the row counts the
+        manifest already keeps (see :meth:`_bucket_writer`)."""
         if os.path.exists(os.path.join(root, "_CURRENT")):
             raise FileExistsError(f"table already exists at {root}")
         os.makedirs(os.path.join(root, "manifests"), exist_ok=True)
@@ -263,8 +265,6 @@ class LakeTable:
             "num_buckets": int(num_buckets),
             "buckets": {},  # bucket id (str) -> data version (int)
             "epochs": {},  # stream id -> last committed epoch
-            # parquet bloom filters on key columns (see _bucket_writer)
-            "bloom_keys": bool(bloom_keys),
             "schema": json.loads(schema.json()) if schema is not None else None,
             "summary": {"created_at_ms": int(time.time() * 1000)},
         }
@@ -395,6 +395,7 @@ class LakeTable:
         dirty: list[int] | None = None,
         parent: int | None = None,
         phases: dict | None = None,
+        key_ndv: int | None = None,
     ) -> dict:
         """Commit ``manifest`` as this ref's next snapshot: the one commit
         step of every mutation. Returns the committed manifest.
@@ -406,11 +407,11 @@ class LakeTable:
 
         With ``dirty`` set this is also the one data-write path. ``data``
         (None: nothing to write) goes through :meth:`_bucket_writer` into
-        ``data/v{N}``, and the bucket map is rebased on the buckets that
-        landed there. Each ``dirty`` bucket points at ``v{N}`` if written
-        and is dropped if not (all its rows were deleted). The new dir's
-        footer stats are attached. ``phases`` receives the ``write`` and
-        ``commit`` wall times.
+        ``data/v{N}`` (``key_ndv`` sizes its key blooms), and the bucket
+        map is rebased on the buckets that landed there. Each ``dirty``
+        bucket points at ``v{N}`` if written and is dropped if not (all its
+        rows were deleted). The new dir's footer stats are attached.
+        ``phases`` receives the ``write`` and ``commit`` wall times.
 
         Concurrency: one writer per ref. ``v{N}`` is chosen before the
         write job, so two writers on one ref can write the same data dir
@@ -429,7 +430,7 @@ class LakeTable:
             out_dir = os.path.join(self.root, "data", f"v{version}")
             t_w = time.time()
             if data is not None:
-                self._bucket_writer(data, manifest).parquet(out_dir)
+                self._bucket_writer(data, manifest, key_ndv).parquet(out_dir)
             t_c = time.time()
             written = {
                 int(name.split("=", 1)[1])
@@ -1327,7 +1328,9 @@ class LakeTable:
             {"dropped_column": name},
         )["version"]
 
-    def _bucket_writer(self, df: DataFrame, manifest: dict):
+    def _bucket_writer(
+        self, df: DataFrame, manifest: dict, key_ndv: int | None = None
+    ):
         """The one parquet writer every data path uses: bucket-partitioned,
         with a parquet BLOOM FILTER on each key column.
 
@@ -1339,11 +1342,16 @@ class LakeTable:
         wide content column) would bloat every file for a predicate shape
         the engine never pushes. parquet-mr writes the filter whenever a
         chunk falls back from dictionary to PLAIN encoding, which a small
-        chunk of distinct values does because its dictionary saves nothing,
-        and writes it unsized: about 1 MB per key column however few rows
-        the chunk holds. So tiny files carry them too: a data file of 1-3
-        rows measures 1-2 MB, of which the row group is 171-352 bytes.
-        Disable per table with ``create(..., bloom_keys=False)``.
+        chunk of distinct values does because its dictionary saves nothing.
+
+        ``key_ndv`` bounds the distinct keys of any one bucket file (see
+        :meth:`_key_ndv`) and sizes every bloom through
+        ``parquet.bloom.filter.expected.ndv``: about 1.2 bytes per key at
+        parquet's default 1% false-positive rate, so a 1,000-key bucket
+        carries a 2 KB bloom. Unsized (``None``), parquet-mr writes each
+        bloom at its 1 MB maximum however few rows the chunk holds. An
+        underestimate only raises the false-positive rate; a bloom never
+        hides a key it holds.
         """
         cm = manifest.get("column_mapping") or {}
         if cm:
@@ -1357,11 +1365,51 @@ class LakeTable:
             if ren:
                 df = df.withColumnsRenamed(ren)
         w = df.write.partitionBy(BUCKET_COL).mode("overwrite")
-        if manifest.get("bloom_keys", True):
-            for k in manifest["key_columns"]:
-                phys = cm.get(k, {}).get("physical", k)
-                w = w.option(f"parquet.bloom.filter.enabled#{phys}", "true")
+        for k in manifest["key_columns"]:
+            phys = cm.get(k, {}).get("physical", k)
+            w = w.option(f"parquet.bloom.filter.enabled#{phys}", "true")
+            if key_ndv is not None:
+                w = w.option(
+                    f"parquet.bloom.filter.expected.ndv#{phys}", str(max(key_ndv, 1))
+                )
         return w
+
+    @staticmethod
+    def _key_ndv(manifest: dict, added: dict[int, int]) -> int | None:
+        """Upper bound on the distinct keys of any one bucket file that a
+        rewrite of ``added``'s buckets writes: the bucket's live ``__rows``
+        file stat plus the ``added[b]`` keys the rewrite brings in (one row
+        per key, delete markers included). None when a live file has no
+        stats (a snapshot from before stats, or a driver without pyarrow):
+        the blooms are then written unsized."""
+        stats = manifest.get("file_stats", {})
+        bound = 0
+        for b, n in added.items():
+            v = manifest["buckets"].get(str(b))
+            rows = 0 if v is None else stats.get(f"v{v}/{b}", {}).get("__rows")
+            if rows is None:
+                return None
+            bound = max(bound, rows + n)
+        return bound
+
+    @staticmethod
+    def _by_bucket(
+        df: DataFrame, buckets: list[int], keep_slot: bool = False
+    ) -> DataFrame:
+        """Place ``df``'s rows for a bucket rewrite: each of ``buckets`` goes
+        to a task of its own (``repartitionById`` on the bucket's slot in
+        ``buckets``), so each bucket is written by exactly one task, as
+        exactly one file. Hashing the few, small bucket ids instead would
+        stack several buckets in one task and leave others empty.
+        ``keep_slot`` keeps the slot as column ``__slot``: :meth:`_lww`
+        groups on it, so its aggregation reuses this exchange."""
+        slot = F.array_position(
+            F.array(*[F.lit(b) for b in buckets]), F.col(BUCKET_COL)
+        ) - 1
+        out = df.withColumn("__slot", slot.cast("int")).repartitionById(
+            max(len(buckets), 1), "__slot"
+        )
+        return out if keep_slot else out.drop("__slot")
 
     @staticmethod
     def _lww(frames: list[DataFrame], keys: list[str], buckets: list[int]) -> DataFrame:
@@ -1369,12 +1417,9 @@ class LakeTable:
         LWW collapse of every merge, into a populated or an empty target.
 
         ``frames`` (one or two) carry ``_bucket``, and ``buckets`` lists the
-        buckets they touch. A key's rows all hash to one bucket, so sending
-        each bucket to a task of its own (``repartitionById`` on the bucket's
-        slot in ``buckets``; hashing the small bucket ids would stack
-        several buckets in one task) co-locates every key, and the
-        ``groupBy`` that follows needs no second shuffle. Each bucket is
-        written by exactly one task, so as exactly one file.
+        buckets they touch. A key's rows all hash to one bucket, so placing
+        each bucket in a task of its own (:meth:`_by_bucket`) co-locates
+        every key, and the ``groupBy`` that follows needs no second shuffle.
 
         On an equal LSN the LATER frame wins: its rows carry ``__src`` = 1
         and the ordering packs ``lsn * 2 + __src`` into one long, a plain
@@ -1389,12 +1434,8 @@ class LakeTable:
                 f_.withColumn("__src", F.lit(i)), allowMissingColumns=True
             )
         pay = [c for c in df.columns if c not in (*keys, "__src")]
-        slot = F.array_position(
-            F.array(*[F.lit(b) for b in buckets]), F.col(BUCKET_COL)
-        ) - 1
         return (
-            df.withColumn("__slot", slot.cast("int"))
-            .repartitionById(max(len(buckets), 1), "__slot")
+            LakeTable._by_bucket(df, buckets, keep_slot=True)
             .groupBy("__slot", *keys)
             .agg(
                 F.max_by(
@@ -1675,6 +1716,10 @@ class LakeTable:
             data=self._lww(frames, keys, dirty),
             dirty=dirty,
             phases=phases,
+            key_ndv=self._key_ndv(
+                manifest,
+                {int(r[BUCKET_COL]): int(r["n_keys"]) for r in prep.bucket_counts},
+            ),
         )
         return MergeStats(
             epoch_id=epoch_id,
@@ -1838,15 +1883,16 @@ class LakeTable:
         if not todo:
             return 0
         current = self._read_buckets(manifest, todo)
-        clustered = current.repartition(len(todo), F.col(BUCKET_COL))
+        clustered = self._by_bucket(current, todo)
+        # BUCKET_COL leads the sort although each task holds one bucket: the
+        # partitioned writer requires its input ordered by BUCKET_COL and
+        # re-sorts any input whose ordering does not start with it, which
+        # scrambles the order within the bucket
         if zorder_by:
             clustered = clustered.withColumn(
                 "__z", self._zorder_column(current, zorder_by, zorder_bits)
             ).sortWithinPartitions(BUCKET_COL, "__z").drop("__z")
         else:
-            # BUCKET_COL leads the sort: hash repartition may co-locate two
-            # buckets in one task, and partitionBy splits them back into
-            # separate files — each must stay internally sorted
             clustered = clustered.sortWithinPartitions(BUCKET_COL, *sort_by)
         self._commit(
             manifest,
@@ -1857,6 +1903,7 @@ class LakeTable:
             },
             data=clustered,
             dirty=todo,
+            key_ndv=self._key_ndv(manifest, dict.fromkeys(todo, 0)),
         )
         return len(todo)
 
@@ -1895,14 +1942,18 @@ class LakeTable:
                         F.xxhash64(*[F.col(k) for k in keys]), F.lit(n)
                     ).cast("int"),
                 )
-                .repartition(n, F.col(BUCKET_COL))
             )
+            df = self._by_bucket(df, list(range(n)))
+        # a new bucket may gather keys from every old one: the bound is the
+        # table's row count
+        old = [self._key_ndv(manifest, {int(b): 0}) for b in manifest["buckets"]]
         committed = self._commit(
             # every old file is replaced: the new layout starts empty
             {**manifest, "num_buckets": n, "buckets": {}},
             {"rebucketed_to": n},
             data=df,
             dirty=list(range(n)),
+            key_ndv=None if None in old else sum(old),
         )
         return len(committed["buckets"])
 
@@ -2079,8 +2130,9 @@ class LakeTable:
         self._commit(
             manifest,
             {"purged_below_lsn": below_lsn, "rewritten_buckets": len(dirty)},
-            data=keep.repartition(len(dirty), F.col(BUCKET_COL)),
+            data=self._by_bucket(keep, dirty),
             dirty=dirty,
+            key_ndv=self._key_ndv(manifest, dict.fromkeys(dirty, 0)),
         )
         return len(dirty)
 
@@ -2159,8 +2211,9 @@ class LakeTable:
         self._commit(
             manifest,
             {"op": op, "rows_matched": matched, "rewritten_buckets": len(dirty)},
-            data=out.repartition(len(dirty), F.col(BUCKET_COL)),
+            data=self._by_bucket(out, dirty),
             dirty=dirty,
+            key_ndv=self._key_ndv(manifest, dict.fromkeys(dirty, 0)),
         )
         return {"op": op, "rows_matched": matched, "buckets_rewritten": len(dirty)}
 
@@ -2449,8 +2502,12 @@ class LakeTable:
                     "rows_inserted": result["rows_inserted"],
                     "rewritten_buckets": len(dirty),
                 },
-                data=out.repartition(len(dirty), F.col(BUCKET_COL)),
+                data=self._by_bucket(out, dirty),
                 dirty=dirty,
+                key_ndv=self._key_ndv(
+                    manifest,
+                    {int(r[BUCKET_COL]): int(r["__keys"]) for r in stats},
+                ),
             )
             result["buckets_rewritten"] = len(dirty)
             return result

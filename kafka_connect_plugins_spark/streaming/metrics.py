@@ -22,10 +22,12 @@ from kafka_connect_plugins_spark.plans.lake_table import MergeStats
 class MetricsLog:
     """Append-only JSONL epoch log: one line per applied (or skipped) epoch.
 
-    Each line carries the stream id, epoch id, event count, merge timings,
-    events/sec, and the per-source-partition lineage ``{partition:
-    {events, max_lsn}}`` — the CDC log-position record that lets an operator
-    answer "how far has partition 3 been applied?" without scanning data.
+    Each line carries the stream id, epoch id, event count, the winner-key
+    count (``rows_written``), merge timings (total ``seconds`` and the
+    per-phase ``phases`` walls), events/sec, and the per-source-partition
+    lineage ``{partition: {events, max_lsn}}`` — the CDC log-position record
+    that lets an operator answer "how far has partition 3 been applied?"
+    without scanning data.
     """
 
     def __init__(self, path: str):
@@ -39,10 +41,12 @@ class MetricsLog:
             "epoch_id": stats.epoch_id,
             "skipped": stats.skipped,
             "source_rows": stats.source_rows,
+            "rows_written": stats.rows_written,
             "dirty_buckets": stats.dirty_buckets,
             "total_buckets": stats.total_buckets,
             "schema_added_columns": stats.schema_added_columns,
             "seconds": round(stats.seconds, 3),
+            "phases": dict(stats.phases),
             "events_per_sec": round(stats.source_rows / stats.seconds)
             if stats.seconds > 0 and not stats.skipped
             else 0,

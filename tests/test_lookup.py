@@ -196,10 +196,13 @@ class TestKeyBloomFilters:
     """Every data write attaches a parquet bloom filter to the KEY columns
     (and only those): inside a bucket the keys are hash-scattered so
     row-group min/max is useless for a point predicate — the bloom is what
-    lets lookup() skip row groups after bucket pruning."""
+    lets lookup() skip row groups after bucket pruning. Each bloom is sized
+    from the bucket's row count, not written at parquet-mr's 1 MB default."""
 
     @staticmethod
     def _bloom_columns(spark, root, version):
+        """``{column: largest bloom length in bytes}`` over a data version's
+        files; 0 for a column without blooms."""
         import glob
 
         jvm = spark._jvm
@@ -214,8 +217,11 @@ class TestKeyBloomFilters:
             for block in footer.getBlocks():
                 for col in block.getColumns():
                     name = col.getPath().toDotString()
-                    has = col.getBloomFilterOffset() >= 0
-                    seen[name] = seen.get(name, False) or has
+                    size = (
+                        col.getBloomFilterLength()
+                        if col.getBloomFilterOffset() >= 0 else 0
+                    )
+                    seen[name] = max(seen.get(name, 0), size)
         return seen
 
     def test_blooms_on_keys_only_and_lookup_still_exact(self, spark, tmp_path):
@@ -247,27 +253,55 @@ class TestKeyBloomFilters:
             seen = self._bloom_columns(spark, root, t.manifest()["version"])
             assert seen["repo"] and seen["path"]
             assert not seen["content"] and not seen["_lsn"]
+            # sized from at most 300 keys per bucket, not parquet-mr's 1 MB
+            assert max(seen["repo"], seen["path"]) < 64 * 1024
             row = t.lookup({"repo": "r1", "path": "f7"}).collect()
             assert len(row) == 1 and row[0]["_lsn"] == 7
+            # a merge into populated buckets sizes from their __rows stats
+            t.merge(
+                spark.range(250, 350).select(
+                    F.concat(F.lit("r"), (F.col("id") % 6).cast("string")).alias("repo"),
+                    F.concat(F.lit("f"), F.col("id").cast("string")).alias("path"),
+                    (F.col("id") + 1000).alias("_lsn"),
+                    F.lit(False).alias("_tombstone"),
+                    F.lit("body2").alias("content"),
+                ),
+                epoch_id=1,
+            )
+            seen = self._bloom_columns(spark, root, t.manifest()["version"])
+            assert 0 < max(seen["repo"], seen["path"]) < 64 * 1024
+            row = t.lookup({"repo": "r1", "path": "f301"}).collect()
+            assert len(row) == 1 and row[0]["_lsn"] == 1301
         finally:
             if old_dict is None:
                 hconf.unset("parquet.enable.dictionary")
             else:
                 hconf.set("parquet.enable.dictionary", old_dict)
 
-    def test_bloom_opt_out(self, spark, tmp_path):
+    def test_manifest_with_legacy_bloom_keys_field_reads(self, spark, tmp_path):
+        """Older tables recorded a per-table ``bloom_keys`` switch in the
+        manifest. The field is ignored now, but such a table still reads
+        and merges."""
+        import json
+
         from pyspark.sql import functions as F
 
-        root = str(tmp_path / "plain")
-        t = LakeTable.create(
-            spark, root, key_columns=["id"], num_buckets=2, bloom_keys=False
-        )
-        t.merge(
-            spark.range(50).select(
+        root = str(tmp_path / "legacy")
+        t = LakeTable.create(spark, root, key_columns=["id"], num_buckets=2)
+
+        def rows(lo, hi):
+            return spark.range(lo, hi).select(
                 F.col("id"), F.col("id").alias("_lsn"),
                 F.lit(False).alias("_tombstone"), F.lit("x").alias("c"),
-            ),
-            epoch_id=0,
-        )
-        seen = self._bloom_columns(spark, root, t.manifest()["version"])
-        assert not seen["id"]
+            )
+
+        t.merge(rows(0, 50), epoch_id=0)
+        path = os.path.join(root, "manifests", f"v{t.manifest()['version']}.json")
+        with open(path) as f:
+            m = json.load(f)
+        with open(path, "w") as f:
+            json.dump({**m, "bloom_keys": False}, f)
+        t = LakeTable.load(spark, root)
+        t.merge(rows(40, 60), epoch_id=1)
+        assert t.read().count() == 60
+        assert t.lookup({"id": 55}).collect()[0]["c"] == "x"

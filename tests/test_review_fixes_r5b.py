@@ -7,7 +7,6 @@ from __future__ import annotations
 import json
 
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -102,57 +101,6 @@ class TestDeadLetterContract:
         assert bad["_lsn"] is None and bad["_tombstone"] is None
         assert bad["_id"] is None
         assert ok["_lsn"] == (1 << 32) + 2 and ok["_id"] == "a"
-
-
-class TestSamplingNullKeys:
-    def test_hash_split_null_key_gets_null_label(self, spark):
-        from kafka_connect_plugins_spark.functions.sampling import hash_split
-
-        df = spark.createDataFrame([("a",), (None,)], "k string")
-        out = {r["k"]: r["s"] for r in df.select(
-            "k", hash_split(F.col("k"),
-                            {"train": 0.98, "val": 0.01, "test": 0.01}).alias("s")
-        ).collect()}
-        assert out["a"] in ("train", "val", "test")
-        # pre-fix: every null-key row silently landed in the LAST (1%) split
-        assert out[None] is None
-
-    def test_deterministic_sample_null_key_is_false_not_null(self, spark):
-        from kafka_connect_plugins_spark.functions.sampling import (
-            deterministic_sample,
-        )
-
-        df = spark.createDataFrame([("a",), (None,)], "k string")
-        rows = df.select(
-            "k", deterministic_sample(F.col("k"), 0.5).alias("s")
-        ).collect()
-        by_k = {r["k"]: r["s"] for r in rows}
-        assert by_k[None] is False  # not NULL: ~s must also see the row
-        assert isinstance(by_k["a"], bool)
-
-
-class TestBlankTextTokens:
-    def test_ws_tokens_blank_is_empty(self, spark):
-        from kafka_connect_plugins_spark.functions.text import (
-            quality_features,
-            ws_tokens,
-        )
-
-        df = spark.createDataFrame(
-            [("", ), ("   ",), ("a  b",)], "text string"
-        )
-        toks = {r["text"]: r["t"] for r in df.select(
-            "text", ws_tokens(F.col("text")).alias("t")).collect()}
-        assert toks[""] == [] and toks["   "] == []
-        assert toks["a  b"] == ["a", "b"]
-        q = df.select("text", *[
-            c.alias(n) for n, c in quality_features(F.col("text")).items()
-        ]).collect()
-        by_t = {r["text"]: r for r in q}
-        # pre-fix: blank docs read n_tokens=1, uniq_ratio=1.0
-        assert by_t[""]["n_tokens"] == 0 and by_t[""]["uniq_ratio"] == 0.0
-        # mean token len from the tokens themselves, not separator math
-        assert by_t["a  b"]["mean_token_len"] == 1.0
 
 
 class TestOutboxPlaceholderEveryOccurrence:

@@ -138,3 +138,20 @@ def test_epoch_stats_stay_bounded_on_a_long_tail(spark, tmp_path):
         ingest._apply(None, 0)
     assert len(ingest.epoch_stats) == 1_000
     assert all(st.skipped and st.epoch_id == 0 for st in ingest.epoch_stats)
+
+
+def test_metrics_log_records_phases_and_rows_written(tmp_path):
+    from kafka_connect_plugins_spark.plans.lake_table import MergeStats
+
+    metrics = MetricsLog(str(tmp_path / "metrics.jsonl"))
+    phases = {"stats": 0.2, "write": 1.5, "commit": 0.05}
+    metrics.record(
+        "s1",
+        MergeStats(
+            epoch_id=3, skipped=False, source_rows=40, rows_written=12,
+            seconds=1.75, phases=phases,
+        ),
+    )
+    (entry,) = metrics.entries()
+    assert entry["phases"] == phases
+    assert entry["rows_written"] == 12
