@@ -118,12 +118,10 @@ N_EPOCHS = int(os.environ.get("SPARK_GRAFT_BENCH_EPOCHS", "4"))  # + 1 warmup
 # under ~10% at 32 cores — the Amdahl point where >=0.8 N->4N efficiency
 # becomes observable at all. (~13 GB of events on tmpfs.)
 SCALE_MULT = int(os.environ.get("SPARK_GRAFT_BENCH_SCALE_MULT", "96"))
-# Consecutive pipelined epochs per scaling measurement: the next epoch's
-# stats aggregation overlaps the current epoch's wide write
-# (engine.replay_pipelined), so the measured steady state is the write
-# path. The SCALE_MULT budget is split across them (2 x 48M by default —
-# same cached event file).
-PIPE_EPOCHS = int(os.environ.get("SPARK_GRAFT_BENCH_PIPE_EPOCHS", "2"))
+# Consecutive epochs per scaling measurement, applied one after another
+# through engine.apply_batch. The SCALE_MULT budget is split across them
+# (2 x 48M by default — same cached event file).
+SCALE_EPOCHS = int(os.environ.get("SPARK_GRAFT_BENCH_SCALE_EPOCHS", "2"))
 SHM = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
 
 # ---------------------------------------------------------------------------
@@ -271,8 +269,6 @@ def _builder(app: str, master: str, cores_total: int):
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(max(cores_total * 2, 8)))
         .config("spark.sql.adaptive.enabled", "true")
-        # stats/write jobs from the pipelined replay share task slots
-        .config("spark.scheduler.mode", "FAIR")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
@@ -566,11 +562,8 @@ class _ScalingRun:
     raw numbers emitted so the distribution — not a cherry-pick — is the
     artifact.
 
-    Within a level, ``PIPE_EPOCHS`` consecutive epochs run through
-    ``engine.replay_pipelined``: epoch i+1's narrow stats aggregation (the
-    worst-scaling phase: a key-stats shuffle + one driver collect) overlaps
-    epoch i's map-only wide write on a FAIR pool, so the steady-state epoch
-    cost the window measures is the write path, as in production.
+    Within a level, ``SCALE_EPOCHS`` consecutive epochs run through
+    ``engine.apply_batch``, one after another.
 
     ``mode="executors"``: local-cluster[1,8] vs [4,8] — real executor JVMs,
     RPC + inter-process shuffle. ``mode="threads"``: local[8] vs local[32].
@@ -601,7 +594,7 @@ class _ScalingRun:
                 low: (lambda: _session(low), f"local[{low}]"),
                 high: (lambda: _session(high), f"local[{high}]"),
             }
-        self.per_epoch = EPOCH_EVENTS * max(SCALE_MULT // PIPE_EPOCHS, 1)
+        self.per_epoch = EPOCH_EVENTS * max(SCALE_MULT // SCALE_EPOCHS, 1)
         self.target_clean = int(os.environ.get("SPARK_GRAFT_BENCH_CLEAN", "3"))
         self.max_windows = int(os.environ.get("SPARK_GRAFT_BENCH_MAX_WINDOWS", "8"))
         # Clean gate: every probe must read >= this fraction of the best
@@ -671,7 +664,7 @@ class _ScalingRun:
     def _run_level(self, cores: int, window: int, stream_id: str = "scale") -> dict:
         from pyspark.sql import functions as F
 
-        from kafka_connect_plugins_spark.engine import apply_batch, replay_pipelined
+        from kafka_connect_plugins_spark.engine import apply_batch
         from kafka_connect_plugins_spark.plans.lake_table import LakeTable
 
         factory, label = self.levels[cores]
@@ -693,12 +686,13 @@ class _ScalingRun:
                 (F.col("offset") >= EPOCH_EVENTS + e * self.per_epoch)
                 & (F.col("offset") < EPOCH_EVENTS + (e + 1) * self.per_epoch)
             )
-            for e in range(PIPE_EPOCHS)
+            for e in range(SCALE_EPOCHS)
         ]
         t0 = time.time()
-        stats = replay_pipelined(
-            table, batches, start_epoch=window * PIPE_EPOCHS, stream_id=stream_id
-        )
+        stats = [
+            apply_batch(table, batch, epoch_id=window * SCALE_EPOCHS + e, stream_id=stream_id)
+            for e, batch in enumerate(batches)
+        ]
         dt = time.time() - t0
         steal = _steal_frac(st0, _proc_stat())
         spark.stop()
@@ -868,7 +862,7 @@ def _scaling_summary(
                        "windows; run-level ceilings = median of per-window "
                        "one-trial N-vs-4N process probes",
         "epoch_events": per_epoch,
-        "pipelined_epochs_per_level": PIPE_EPOCHS,
+        "epochs_per_level": SCALE_EPOCHS,
         "windows": windows,
         "clean_windows": sum(1 for win in windows if win["clean"]),
         "low": {
@@ -1243,7 +1237,7 @@ def bench_queries(spark, rounds: int = 3) -> dict[str, float]:
 
 def _scaling_table(scaling: dict) -> list[str]:
     lines = [
-        f"{scaling['pipelined_epochs_per_level']} pipelined epochs x "
+        f"{scaling['epochs_per_level']} epochs x "
         f"{scaling['epoch_events']:,} events per level per window; a window "
         f"is CLEAN when all three membw probes (before / between levels / "
         f"after) read >= {scaling.get('clean_gate_rel', 0.8)} of the best "
@@ -1320,8 +1314,7 @@ def write_bench_md(replay: dict, scaling_exec: dict, scaling_thr: dict, queries:
         "commit — is under ~10%), same input every window. `local-cluster[n,8,m]`",
         "forks n REAL executor JVMs (separate processes, RPC, inter-process",
         "shuffle) — one vs four 8-core executors. Each level runs its epochs",
-        "PIPELINED (the next epoch's stats aggregation overlaps the current",
-        "epoch's wide write on a FAIR pool — engine.replay_pipelined):",
+        "one after another through engine.apply_batch:",
         "",
         *_scaling_table(scaling_exec),
         "",
@@ -1388,11 +1381,6 @@ def write_bench_md(replay: dict, scaling_exec: dict, scaling_thr: dict, queries:
         "aggregation, dirty-bucket rewrite) + `commit` (manifest swap, ~1 ms).",
         "Round 3 removed a second full scan (the lineage probe), one broadcast",
         "build (the stale set), one anti-join and one winner shuffle per epoch.",
-        "Round 4 takes the stats phase OFF the critical path: from the second",
-        "epoch of a pipelined run, `prep_wall`/`prep_overlap` in the window",
-        "phases show the next epoch's stats running concurrently under the",
-        "current epoch's write — the steady-state epoch cost is the write",
-        "phase alone.",
         "",
         "**Noise reality on this host**: identical lc4 epochs have measured",
         "29.1s (verified-quiet window) and 205.7s (mid-epoch co-tenant burst)",
@@ -1670,7 +1658,7 @@ def main() -> None:
         per_epoch = (scaling_thr or scaling_exec)["epoch_events"]
         OUT["metric"] = (
             f"change-events/sec sustained MERGE-apply ({_fmt_events(per_epoch)}"
-            f"-event pipelined epoch, {CPUS} cores)"
+            f"-event epoch, {CPUS} cores)"
         )
 
     # The deadline only bounds HOW MANY windows run — each window is the

@@ -34,17 +34,12 @@ def build_session(
     app: str,
     master: str | None,
     shuffle_partitions: int | None,
-    fair: bool = False,
 ) -> SparkSession:
     b = SparkSession.builder.appName(app)
     if master:
         b = b.master(master)
     if shuffle_partitions:
         b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    if fair:
-        # pipelined replay schedules epoch i+1's stats job concurrently with
-        # epoch i's write job; FAIR pools let the two share task slots
-        b = b.config("spark.scheduler.mode", "FAIR")
     b = b.config("spark.sql.adaptive.enabled", "true")
     # Cluster deployment notes (measured on the bench harness, see BENCH.md):
     # - standalone/local-cluster executors take their scratch dirs from
@@ -84,19 +79,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--wire-keys", default="repo,path", metavar="COL[,COL...]",
                    help="key columns inside the wire row (debezium only; "
                         "mongo always keys on _id)")
-    p.add_argument(
-        "--pipelined", action="store_true",
-        help="batch replay with the one-epoch stats/write pipeline "
-             "(engine.replay_pipelined): epoch i+1's key-stats "
-             "aggregation runs under epoch i's one-exchange LWW write — the "
-             "measured steady-state ingest shape. Batch-only: streaming "
-             "(foreachBatch) commits offsets when the callback returns, so "
-             "it cannot hold an epoch's write past its trigger; the batch "
-             "driver commits epochs through the table manifest, which is "
-             "what makes prefetching safe here. Needs --events/--table "
-             "(no checkpoint: the manifest IS the epoch ledger).")
-    p.add_argument("--pipelined-epochs", type=int, default=4,
-                   help="LSN-range epochs to cut the log into for --pipelined")
     p.add_argument("--create", action="store_true", help="create the table if missing")
     p.add_argument("--master", default=None, help="local master override (tests only)")
     p.add_argument("--shuffle-partitions", type=int, default=None)
@@ -279,18 +261,12 @@ def main(argv: list[str] | None = None) -> int:
             or args.tag
             or args.publish
         )
-        if args.pipelined:
-            if not (args.events and args.table):
-                p.error("--pipelined requires --events and --table")
-        elif maintenance_only:
+        if maintenance_only:
             if not args.table:
                 p.error("maintenance commands require --table")
         elif not (args.events and args.table and args.checkpoint):
             p.error("--events, --table and --checkpoint are required (or --demo)")
-        spark = build_session(
-            "kcp-cdc-ingest", args.master, args.shuffle_partitions,
-            fair=args.pipelined,
-        )
+        spark = build_session("kcp-cdc-ingest", args.master, args.shuffle_partitions)
 
     if args.create:
         try:
@@ -460,32 +436,6 @@ def main(argv: list[str] | None = None) -> int:
         if args.state_digest:
             out["state_digest"] = table.state_digest()
         print(json.dumps(out))
-        return 0
-
-    if args.pipelined:
-        from pyspark.sql import functions as F
-
-        from kafka_connect_plugins_spark.engine import replay_pipelined
-
-        events = spark.read.parquet(args.events)
-        n = max(args.pipelined_epochs, 1)
-        hi = events.agg(F.max("offset")).first()[0] or 0
-        per = (hi + n) // n
-        batches = [
-            events.filter((F.col("offset") >= e * per) & (F.col("offset") < (e + 1) * per))
-            for e in range(n)
-        ]
-        stats = replay_pipelined(table, batches, stream_id=args.stream_id)
-        applied = [s for s in stats if not s.skipped]
-        print(json.dumps({
-            "epochs": len(stats),
-            "skipped_epochs": len(stats) - len(applied),
-            "events": sum(s.source_rows for s in stats),
-            "final_rows": table.read().count(),
-            "prep_overlap_sec": round(
-                sum(s.phases.get("prep_overlap", 0.0) for s in applied), 3
-            ),
-        }))
         return 0
 
     metrics = MetricsLog(args.metrics or f"{args.table}/_metrics/{args.stream_id}.jsonl")

@@ -69,6 +69,17 @@ BUCKET_COL = "_bucket"
 _RESERVED = {LSN_COL, TOMBSTONE_COL, BUCKET_COL}
 
 
+def _bucket_id(keys: list, num_buckets: int) -> Column:
+    """The bucket a key lives in: ``pmod(xxhash64(*keys), num_buckets)``.
+
+    The one definition that every writer (merge, rebucket, merge_into) and
+    the lookup's reader use, so no reader can route a key to a different
+    bucket than its writer. ``keys`` are key column names or Columns, in
+    key-column order.
+    """
+    return F.pmod(F.xxhash64(*keys), F.lit(num_buckets)).cast("int")
+
+
 def _contains_map_type(dt: T.DataType) -> bool:
     """True when ``dt`` contains a MapType anywhere — such columns are not
     null-safe-comparable in Spark (``EqualNullSafe`` rejects map ordering),
@@ -113,12 +124,10 @@ class MergePrep:
 
     Everything here derives from the SOURCE batch alone (normalized frame,
     per-bucket key stats, domain guards, lineage) — no target state is
-    read and nothing is committed or cached, so a ``MergePrep`` for epoch
-    ``i+1`` can be computed CONCURRENTLY with epoch ``i``'s write+commit
-    (see ``engine.replay_pipelined``): the stats collect is a driver round
-    trip, and running it under the previous epoch's write removes it from
-    the critical path. Safe because the epoch guard, schema evolution and
-    every manifest read stay in :meth:`LakeTable.merge`.
+    read and nothing is committed or cached. The split lets a caller time
+    the stats half (one aggregation + one driver collect) apart from the
+    write+commit half, as a traced benchmark epoch does. The epoch guard,
+    schema evolution and every manifest read stay in :meth:`LakeTable.merge`.
     """
 
     src: DataFrame                  # normalized source (+ _bucket), lazy
@@ -906,7 +915,7 @@ class LakeTable:
         data; real deployments size ``num_buckets`` so one bucket is a few
         GB and a lookup is sub-second. The bucket ids are constant-folded on
         the driver, with no Spark job, from the literal key rows (the SAME
-        ``pmod(xxhash64(*keys), n)`` expression the writer uses — never a
+        ``_bucket_id`` expression the writer uses — never a
         Python reimplementation that could drift), then directory pruning
         in ``_read_buckets`` does the skipping. No Python worker starts.
 
@@ -930,9 +939,7 @@ class LakeTable:
             return self._empty_frame(schema)
         keys_df = self._key_rows(T.StructType([schema[k] for k in key_cols]), rows)
         bucket_rows = keys_df.select(
-            F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(n_buckets))
-            .cast("int")
-            .alias("__b")
+            _bucket_id(key_cols, n_buckets).alias("__b")
         ).collect()
         buckets = sorted({r["__b"] for r in bucket_rows})
         df = self._read_buckets(manifest, buckets)
@@ -1460,13 +1467,10 @@ class LakeTable:
         and lineage.
 
         Nothing here reads target data or the epoch ledger, and nothing is
-        committed or cached, so this is safe to run for epoch ``i+1``
-        concurrently with epoch ``i``'s :meth:`merge` — the pipelined-ingest
-        shape (``engine.replay_pipelined``) that hides the stats collect
-        under the previous epoch's write. The normalized source stays lazy:
-        the write re-reads it. Pass the result to ``merge(prep=...)``; the
-        epoch guard and schema evolution still happen there, against the
-        manifest as of apply time.
+        committed or cached. The normalized source stays lazy: the write
+        re-reads it. Pass the result to ``merge(prep=...)``; the epoch guard
+        and schema evolution still happen there, against the manifest as of
+        apply time.
         """
         t0 = time.time()
         manifest = self.manifest()
@@ -1493,10 +1497,7 @@ class LakeTable:
             + user_fields
             + [T.StructField(LSN_COL, T.LongType(), True)]
         )
-        src = src.withColumn(
-            BUCKET_COL,
-            F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int"),
-        )
+        src = src.withColumn(BUCKET_COL, _bucket_id(keys, n_buckets))
 
         # Lineage (per-source-partition event count + LSN high watermark, the
         # CDC log-position record) is folded into the key-stats aggregation
@@ -1646,11 +1647,9 @@ class LakeTable:
         ``mode`` accepts only ``"rewrite"``, the one merge this table has.
 
         ``prep``: a :class:`MergePrep` from :meth:`merge_prepare` — the
-        source-side stats half, precomputed (typically concurrently with the
-        previous epoch's write; see ``engine.replay_pipelined``). When given,
-        ``source`` is ignored, ``phases["stats"]`` reports the prep's own
-        wall time, and ``seconds`` covers only the apply (write+commit)
-        half. The epoch guard and schema evolution always run HERE against
+        source-side stats half, precomputed. When given, ``source`` is
+        ignored, ``phases["stats"]`` reports the prep's own wall time, and
+        ``seconds`` covers only the apply (write+commit) half. The epoch guard and schema evolution always run HERE against
         the apply-time manifest, so a prep computed against a pre-evolution
         manifest stays correct.
         """
@@ -1914,7 +1913,7 @@ class LakeTable:
         A bucket count sized for the first 100 GB is wrong at 100 TB: too
         few buckets → giant merge tasks and useless lookup pruning; too many
         → small files. ``rebucket`` reads the current rows, re-hashes every
-        key under the new count with the writer's own ``pmod(xxhash64(*keys), n)`` expression,
+        key under the new count with the writer's own ``_bucket_id`` expression,
         and commits ONE new snapshot whose manifest carries the new count —
         a full-table rewrite, the honest cost of re-hash-partitioning, run
         as a single wide job sized by ``new_num_buckets``. Epoch guards are
@@ -1934,15 +1933,7 @@ class LakeTable:
         keys = manifest["key_columns"]
         df = self._read_buckets(manifest, None)
         if df is not None:
-            df = (
-                df.drop(BUCKET_COL)
-                .withColumn(
-                    BUCKET_COL,
-                    F.pmod(
-                        F.xxhash64(*[F.col(k) for k in keys]), F.lit(n)
-                    ).cast("int"),
-                )
-            )
+            df = df.drop(BUCKET_COL).withColumn(BUCKET_COL, _bucket_id(keys, n))
             df = self._by_bucket(df, list(range(n)))
         # a new bucket may gather keys from every old one: the bound is the
         # table's row count
@@ -2304,7 +2295,7 @@ class LakeTable:
 
         Execution is the bucket-wise copy-on-write of
         :meth:`delete_where`: source keys hash to their buckets with the
-        writer's own ``pmod(xxhash64(*keys), n)``, ONLY those buckets are
+        writer's own ``_bucket_id``, ONLY those buckets are
         read and full-outer-joined to the source on the
         key columns — a 100-row source against a 100 TB table touches a
         handful of buckets and never shuffles the table. Ambiguous merges
@@ -2354,9 +2345,7 @@ class LakeTable:
         kcast = [F.col(k).cast(key_types[k]) for k in keys]
         src = source.select(
             *[c.alias(k) for c, k in zip(kcast, keys)],
-            F.pmod(F.xxhash64(*kcast), F.lit(n_buckets))
-            .cast("int")
-            .alias(BUCKET_COL),
+            _bucket_id(kcast, n_buckets).alias(BUCKET_COL),
             F.struct(*[F.col(c) for c in src_payload]).alias("src"),
         )
         # one job: per-bucket source-key counts AND the ambiguity check
@@ -2525,8 +2514,8 @@ class LakeTable:
         by name, NULL distinguished from empty string by a sentinel). The
         digest folds the per-row hashes with addition — order-insensitive,
         so it is invariant to partitioning, task count, and epoch split:
-        two replays of the same log at N and 4N cores (or serial vs
-        pipelined) must produce byte-identical digests. The row hashes are
+        two replays of the same log at N and 4N cores (or cut into
+        different epochs) must produce byte-identical digests. The row hashes are
         summed as two 60-bit halves in decimal(38,0) (exact at any scale
         Spark can hold; no float, no overflow below ~10^20 rows), then the
         ``count-sumA-sumB`` triple is itself sha256'd into one token.

@@ -3,12 +3,11 @@ from kafka_connect_plugins_spark.streaming.ingest import (
     StreamingIngest,
     tail_changelog,
 )
-from kafka_connect_plugins_spark.streaming.metrics import MetricsLog, ProgressListener
+from kafka_connect_plugins_spark.streaming.metrics import MetricsLog
 
 __all__ = [
     "CHANGELOG_VALUE_TYPE",
     "StreamingIngest",
     "tail_changelog",
     "MetricsLog",
-    "ProgressListener",
 ]

@@ -16,8 +16,7 @@ connector and an upsert sink (reference README.md:26-31). The moving parts:
   the data pointer, so a batch that already committed is recognized and
   skipped on redelivery (Iceberg snapshot-summary epoch pattern).
 - **Metrics**: per-epoch JSONL (events/sec, dirty buckets, per-partition
-  LSN high-watermarks) via :class:`MetricsLog`; optional Spark
-  ``StreamingQueryListener`` progress capture.
+  LSN high-watermarks) via :class:`MetricsLog`.
 
 The ingest chain itself is stateless per record (like the reference); late
 and duplicate data are handled by the LWW-on-LSN merge, which is

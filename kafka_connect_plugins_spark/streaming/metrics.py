@@ -4,8 +4,8 @@ The reference's observability story is per-record fail-fast logging plus
 external dashboards (RedShiftComplexDataTypeTransformer.kt:47-55,
 DEPLOY.md:97). The north rule upgrades this to first-class per-partition
 lineage + throughput metrics; here they are a JSONL log written once per
-microbatch epoch (driver-side, O(partitions) bytes — never per record) plus
-an optional ``StreamingQueryListener`` capturing Spark's own progress events.
+microbatch epoch (driver-side, O(partitions) bytes — never per record).
+Spark's own per-trigger progress stays on the query (``recentProgress``).
 """
 
 from __future__ import annotations
@@ -13,8 +13,6 @@ from __future__ import annotations
 import json
 import os
 import time
-
-from pyspark.sql.streaming import StreamingQueryListener
 
 from kafka_connect_plugins_spark.plans.lake_table import MergeStats
 
@@ -72,37 +70,3 @@ class MetricsLog:
                 hw[p] = max(hw.get(p, -1), int(v["max_lsn"]))
         return hw
 
-
-class ProgressListener(StreamingQueryListener):
-    """Captures Spark's native streaming progress as JSONL (batch duration,
-    input rate, processed-rows/sec) alongside the engine's epoch log."""
-
-    def __init__(self, path: str):
-        self.path = path
-        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-
-    def onQueryStarted(self, event) -> None:
-        self._append({"event": "started", "id": str(event.id), "name": event.name})
-
-    def onQueryProgress(self, event) -> None:
-        p = event.progress
-        self._append(
-            {
-                "event": "progress",
-                "id": str(p.id),
-                "batchId": p.batchId,
-                "numInputRows": p.numInputRows,
-                "processedRowsPerSecond": p.processedRowsPerSecond,
-                "durationMs": dict(p.durationMs or {}),
-            }
-        )
-
-    def onQueryIdle(self, event) -> None:  # noqa: B027
-        pass
-
-    def onQueryTerminated(self, event) -> None:
-        self._append({"event": "terminated", "id": str(event.id)})
-
-    def _append(self, entry: dict) -> None:
-        with open(self.path, "a") as f:
-            f.write(json.dumps(entry) + "\n")

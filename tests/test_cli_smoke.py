@@ -1,14 +1,18 @@
 """End-to-end smoke of the spark-submit CLI surface (main.py).
 
-Drives the deployment shape the north rule specifies — separate driver
-processes per invocation, exactly how `spark-submit --py-files` runs it —
-through the full maintenance lifecycle: streaming ingest → sort-order
-compaction → snapshot expiry, then validates the final table state
-in-process against an independent LWW derivation from the same log.
+``test_cli_ingest_compact_expire`` drives the deployment shape the north
+rule specifies — a separate driver process per invocation, exactly how
+`spark-submit --py-files` runs it — through streaming ingest → sort-order
+compaction → snapshot expiry. Every other test runs its CLI steps through
+``main.main(argv)`` in the test process, on the shared session, so each
+step costs no JVM start. All of them validate the final table state
+against an independent derivation from the same log.
 """
 
 from __future__ import annotations
 
+import contextlib
+import io
 import json
 import os
 import subprocess
@@ -19,8 +23,30 @@ from pyspark.sql import functions as F
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+# runtime settings that main.build_session applies to a running session
+_SESSION_CONF = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+
+
+def _main_cli(spark, *args: str) -> str:
+    """Run one CLI invocation in this process and return its last stdout
+    line (the JSON summary). ``build_session`` gets the test session back,
+    so the settings it changes on it are restored afterwards."""
+    from kafka_connect_plugins_spark import main
+
+    conf = {k: spark.conf.get(k) for k in _SESSION_CONF}
+    out = io.StringIO()
+    try:
+        with contextlib.redirect_stdout(out):
+            rc = main.main(list(args))
+    finally:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+    assert rc == 0
+    return out.getvalue().strip().splitlines()[-1]
+
 
 def _run_cli(*args: str) -> str:
+    """Run one CLI invocation as its own driver process (own JVM)."""
     env = dict(os.environ, PYTHONPATH=REPO)
     proc = subprocess.run(
         [sys.executable, "-m", "kafka_connect_plugins_spark.main", *args],
@@ -101,38 +127,35 @@ def test_cli_ingest_compact_expire(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_cli_pipelined_batch_replay(spark, tmp_path):
-    """--pipelined: the steady-state (stats-under-write) replay shape on the
-    operational surface — fresh driver process, resumable via the manifest
-    epoch ledger, same final state as the streaming drain."""
+def test_cli_available_now_rerun_is_exactly_once(spark, tmp_path):
+    """--available-now drains the log once: a second drain with the same
+    checkpoint applies no event and leaves the table state unchanged, and
+    that state matches the independent LWW derivation from the log."""
     from kafka_connect_plugins_spark.plans.lake_table import LakeTable
     from kafka_connect_plugins_spark.sources.changelog import changelog
 
     log_dir = str(tmp_path / "log")
     table_dir = str(tmp_path / "table")
+    ckpt_dir = str(tmp_path / "ckpt")
     changelog(spark, 5000, num_repos=10, paths_per_repo=40).write.parquet(log_dir)
-
-    summary = json.loads(
-        _run_cli(
-            "--events", log_dir, "--table", table_dir, "--create", "--pipelined",
-            "--pipelined-epochs", "3", "--master", "local[4]",
-            "--shuffle-partitions", "8",
-        )
+    drain = (
+        "--events", log_dir, "--table", table_dir, "--checkpoint", ckpt_dir,
+        "--create", "--available-now", "--master", "local[4]",
+        "--shuffle-partitions", "8",
     )
-    assert summary["epochs"] == 3 and summary["skipped_epochs"] == 0
+    digest = ("--table", table_dir, "--state-digest", "--master", "local[4]")
+
+    summary = json.loads(_main_cli(spark, *drain))
+    assert summary["epochs"] >= 1 and summary["skipped_epochs"] == 0
     assert summary["events"] == 5000
+    first = json.loads(_main_cli(spark, *digest))["state_digest"]
 
-    # re-running the same replay is exactly-once: the manifest epoch ledger
-    # (not a streaming checkpoint) skips all three epochs
-    again = json.loads(
-        _run_cli(
-            "--events", log_dir, "--table", table_dir, "--pipelined",
-            "--pipelined-epochs", "3", "--master", "local[4]",
-            "--shuffle-partitions", "8",
-        )
-    )
-    assert again["skipped_epochs"] == 3
+    # re-running the same drain is exactly-once: the checkpoint has every
+    # log file committed, so no epoch applies an event
+    again = json.loads(_main_cli(spark, *drain))
+    assert again["events"] == 0
     assert again["final_rows"] == summary["final_rows"]
+    assert json.loads(_main_cli(spark, *digest))["state_digest"] == first
 
     # final state matches the independent LWW derivation from the log
     t = LakeTable.load(spark, table_dir)
@@ -157,7 +180,8 @@ def test_cli_lookup_and_rebucket(spark, tmp_path):
     table_dir = str(tmp_path / "table")
     ckpt_dir = str(tmp_path / "ckpt")
     changelog(spark, 3000, num_repos=8, paths_per_repo=30).write.parquet(log_dir)
-    _run_cli(
+    _main_cli(
+        spark,
         "--events", log_dir, "--table", table_dir, "--checkpoint", ckpt_dir,
         "--create", "--available-now", "--buckets", "16",
         "--master", "local[4]", "--shuffle-partitions", "8",
@@ -166,9 +190,10 @@ def test_cli_lookup_and_rebucket(spark, tmp_path):
     probe = LakeTable.load(spark, table_dir).read().first()
     key = {"repo": probe["repo"], "path": probe["path"]}
 
-    # point lookup from a fresh driver process
+    # point lookup through the CLI
     row = json.loads(
-        _run_cli(
+        _main_cli(
+            spark,
             "--events", log_dir, "--table", table_dir, "--checkpoint", ckpt_dir,
             "--lookup", json.dumps(key), "--master", "local[4]",
         )
@@ -176,16 +201,18 @@ def test_cli_lookup_and_rebucket(spark, tmp_path):
     assert (row["repo"], row["path"]) == (probe["repo"], probe["path"])
     assert row["commit"] == probe["commit"]
 
-    # rebucket 16 -> 4 in another process, then the same lookup still works
+    # rebucket 16 -> 4, then the same lookup still works
     maint = json.loads(
-        _run_cli(
+        _main_cli(
+            spark,
             "--events", log_dir, "--table", table_dir, "--checkpoint", ckpt_dir,
             "--rebucket", "4", "--master", "local[4]",
         )
     )
     assert 0 < maint["rebucketed_buckets"] <= 4
     row2 = json.loads(
-        _run_cli(
+        _main_cli(
+            spark,
             "--events", log_dir, "--table", table_dir, "--checkpoint", ckpt_dir,
             "--lookup", json.dumps(key), "--master", "local[4]",
         )
@@ -209,7 +236,8 @@ def test_cli_view_refresh(spark, tmp_path):
     )
 
     summary = json.loads(
-        _run_cli(
+        _main_cli(
+            spark,
             "--events", log_dir, "--table", table_dir,
             "--checkpoint", str(tmp_path / "ckpt"),
             "--create", "--available-now", "--view", spec,
@@ -235,9 +263,10 @@ def test_cli_view_refresh(spark, tmp_path):
     }
     assert got == want
 
-    # standalone refresh in a fresh process is a no-op at the same version
+    # a standalone refresh is a no-op at the same version
     meta2 = json.loads(
-        _run_cli(
+        _main_cli(
+            spark,
             "--table", table_dir, "--view", spec, "--refresh-view",
             "--master", "local[4]",
         )
@@ -247,8 +276,8 @@ def test_cli_view_refresh(spark, tmp_path):
 
 @pytest.mark.slow
 def test_cli_bootstrap_branch_publish(spark, tmp_path):
-    """Snapshot bootstrap + write-audit-publish, each step its own driver
-    process: bootstrap main, stage the tail on a branch, audit it, publish."""
+    """Snapshot bootstrap + write-audit-publish, each step its own CLI
+    invocation: bootstrap main, stage the tail on a branch, audit it, publish."""
     from kafka_connect_plugins_spark.engine import create_repo_table, replay
     from kafka_connect_plugins_spark.plans.lake_table import LakeTable
     from kafka_connect_plugins_spark.sources.changelog import changelog
@@ -267,7 +296,8 @@ def test_cli_bootstrap_branch_publish(spark, tmp_path):
     # 1) bootstrap an empty table from the snapshot
     create_repo_table(spark, table_dir, num_buckets=8)
     boot = json.loads(
-        _run_cli(
+        _main_cli(
+            spark,
             "--table", table_dir, "--bootstrap", snap_dir,
             "--bootstrap-lsn", str(split),
             "--master", "local[4]", "--shuffle-partitions", "8",
@@ -276,12 +306,16 @@ def test_cli_bootstrap_branch_publish(spark, tmp_path):
     assert boot["source_rows"] > 0 and not boot["skipped"]
 
     # 2) fork a staging branch, ingest the tail INTO THE BRANCH
-    json.loads(_run_cli("--table", table_dir, "--create-branch", "audit",
-                        "--master", "local[4]"))
+    json.loads(_main_cli(spark, "--table", table_dir, "--create-branch", "audit",
+                         "--master", "local[4]"))
+    # the tail is its own stream: epoch guards are per stream, and the
+    # bootstrap committed epoch 0 of stream "default"
     json.loads(
-        _run_cli(
+        _main_cli(
+            spark,
             "--events", tail_dir, "--table", table_dir, "--branch", "audit",
-            "--pipelined", "--pipelined-epochs", "2",
+            "--checkpoint", str(tmp_path / "ckpt"), "--stream-id", "tail",
+            "--available-now",
             "--master", "local[4]", "--shuffle-partitions", "8",
         )
     )
@@ -295,8 +329,8 @@ def test_cli_bootstrap_branch_publish(spark, tmp_path):
     )
 
     # 4) publish, then verify final state == an independent full replay
-    pub = json.loads(_run_cli("--table", table_dir, "--publish", "audit",
-                              "--master", "local[4]"))
+    pub = json.loads(_main_cli(spark, "--table", table_dir, "--publish", "audit",
+                               "--master", "local[4]"))
     assert pub["published_version"] == LakeTable.load(
         spark, table_dir
     ).manifest()["version"]
@@ -315,7 +349,7 @@ def test_cli_bootstrap_branch_publish(spark, tmp_path):
 @pytest.mark.slow
 def test_cli_mutations_and_vacuum(spark, tmp_path):
     """--delete-where / --update-where / --remove-orphans: the compliance and
-    storage-hygiene maintenance verbs, each from a fresh driver process."""
+    storage-hygiene maintenance verbs, each its own CLI invocation."""
     from kafka_connect_plugins_spark.plans.lake_table import LakeTable
     from kafka_connect_plugins_spark.sources.changelog import changelog
 
@@ -323,7 +357,8 @@ def test_cli_mutations_and_vacuum(spark, tmp_path):
     table_dir = str(tmp_path / "table")
     ckpt_dir = str(tmp_path / "ckpt")
     changelog(spark, 3000, num_repos=8, paths_per_repo=30).write.parquet(log_dir)
-    _run_cli(
+    _main_cli(
+        spark,
         "--events", log_dir, "--table", table_dir, "--checkpoint", ckpt_dir,
         "--create", "--available-now", "--buckets", "16",
         "--master", "local[4]", "--shuffle-partitions", "8",
@@ -334,7 +369,8 @@ def test_cli_mutations_and_vacuum(spark, tmp_path):
 
     # redact one repo's contents, then erase it entirely
     upd = json.loads(
-        _run_cli(
+        _main_cli(
+            spark,
             "--table", table_dir, "--update-where", f"repo = '{victim['repo']}'",
             "--set", json.dumps({"content": "'[redacted]'"}),
             "--master", "local[4]",
@@ -342,7 +378,8 @@ def test_cli_mutations_and_vacuum(spark, tmp_path):
     )
     assert upd["update"]["rows_matched"] == victim["count"]
     dele = json.loads(
-        _run_cli(
+        _main_cli(
+            spark,
             "--table", table_dir, "--delete-where", f"repo = '{victim['repo']}'",
             "--master", "local[4]",
         )
@@ -353,7 +390,8 @@ def test_cli_mutations_and_vacuum(spark, tmp_path):
     orphan = os.path.join(table_dir, "data", "v9999")
     os.makedirs(orphan)
     vac = json.loads(
-        _run_cli(
+        _main_cli(
+            spark,
             "--table", table_dir, "--remove-orphans", "--orphan-grace-sec", "0",
             "--master", "local[4]",
         )
@@ -368,8 +406,8 @@ def test_cli_mutations_and_vacuum(spark, tmp_path):
 @pytest.mark.slow
 def test_cli_merge_into_describe_history(spark, tmp_path):
     """--merge-into (clause-form MERGE from a parquet source) plus the
-    metadata-only observability verbs --describe / --history, each from a
-    fresh driver process."""
+    metadata-only observability verbs --describe / --history, each its own
+    CLI invocation."""
     from kafka_connect_plugins_spark.plans.lake_table import LakeTable
     from kafka_connect_plugins_spark.sources.changelog import changelog
 
@@ -377,7 +415,8 @@ def test_cli_merge_into_describe_history(spark, tmp_path):
     table_dir = str(tmp_path / "table")
     ckpt_dir = str(tmp_path / "ckpt")
     changelog(spark, 3000, num_repos=8, paths_per_repo=30).write.parquet(log_dir)
-    _run_cli(
+    _main_cli(
+        spark,
         "--events", log_dir, "--table", table_dir, "--checkpoint", ckpt_dir,
         "--create", "--available-now", "--buckets", "16",
         "--master", "local[4]", "--shuffle-partitions", "8",
@@ -397,7 +436,8 @@ def test_cli_merge_into_describe_history(spark, tmp_path):
     ).write.parquet(src_dir)
 
     out = json.loads(
-        _run_cli(
+        _main_cli(
+            spark,
             "--table", table_dir, "--merge-into", src_dir,
             "--matched-update", json.dumps({"content": "src.content"}),
             "--matched-update-cond", "src.op = 'upsert'",
@@ -417,14 +457,14 @@ def test_cli_merge_into_describe_history(spark, tmp_path):
     assert state[("brand/new", "fresh.py")] == "[fresh]"
     assert (del_key["repo"], del_key["path"]) not in state
 
-    # metadata-only verbs from another process
+    # metadata-only verbs
     desc = json.loads(
-        _run_cli("--table", table_dir, "--describe", "--master", "local[4]")
+        _main_cli(spark, "--table", table_dir, "--describe", "--master", "local[4]")
     )["describe"]
     assert desc["physical_rows"] > 0 and desc["num_buckets"] == 16
     assert desc["rows_per_bucket"]["skew_max_over_median"] >= 1.0
     hist = json.loads(
-        _run_cli("--table", table_dir, "--history", "--master", "local[4]")
+        _main_cli(spark, "--table", table_dir, "--history", "--master", "local[4]")
     )["history"]
     assert hist[0]["summary"]["op"] == "merge_into"
     assert hist[0]["summary"]["rows_inserted"] == 1
@@ -435,7 +475,7 @@ def test_cli_merge_into_describe_history(spark, tmp_path):
 
 @pytest.mark.slow
 def test_cli_replicate(spark, tmp_path):
-    """--replicate-to from a fresh driver process: bootstrap sync with
+    """--replicate-to through the CLI: bootstrap sync with
     digest verification, then an idempotent re-run."""
     from pyspark.sql import functions as F
 
@@ -451,13 +491,15 @@ def test_cli_replicate(spark, tmp_path):
         epoch_id=0,
     )
     rep = str(tmp_path / "rep")
-    out = json.loads(_run_cli(
+    out = json.loads(_main_cli(
+        spark,
         "--table", root, "--replicate-to", rep, "--verify-replica",
         "--replica-buckets", "2",
         "--master", "local[4]", "--shuffle-partitions", "4",
     ))["replicate"]
     assert out["verified"] and out["rows_applied"] == 100
-    again = json.loads(_run_cli(
+    again = json.loads(_main_cli(
+        spark,
         "--table", root, "--replicate-to", rep,
         "--master", "local[4]", "--shuffle-partitions", "4",
     ))["replicate"]

@@ -1,8 +1,6 @@
 """Structured-Streaming ingest: drain-matches-oracle, checkpoint resume,
 exactly-once under epoch replay, and per-partition lineage metrics."""
 
-import os
-
 from pyspark.sql import functions as F
 
 from kafka_connect_plugins_spark.engine import create_repo_table
@@ -95,27 +93,6 @@ def test_replayed_epoch_after_crash_is_skipped(spark, tmp_path):
     assert st.skipped
     assert table.manifest()["version"] == version_before
     assert _state_hashes(table.read()) == _state_hashes(expected_final_state(events))
-
-
-def test_progress_listener_captures_batches(spark, tmp_path):
-    from kafka_connect_plugins_spark.streaming import ProgressListener
-
-    events = changelog(spark, 500, num_repos=4, paths_per_repo=10)
-    log_dir = str(tmp_path / "log")
-    _write_log(events, log_dir, n_files=2)
-    listener = ProgressListener(str(tmp_path / "progress.jsonl"))
-    spark.streams.addListener(listener)
-    try:
-        table = create_repo_table(spark, str(tmp_path / "t"), num_buckets=4)
-        StreamingIngest(table, stream_id="s").run_available(
-            spark, log_dir, str(tmp_path / "ckpt"), timeout_sec=120
-        )
-    finally:
-        spark.streams.removeListener(listener)
-    assert os.path.exists(listener.path)
-    with open(listener.path) as f:
-        lines = f.read().strip().splitlines()
-    assert any('"event": "started"' in line for line in lines)
 
 
 def test_epoch_stats_stay_bounded_on_a_long_tail(spark, tmp_path):
