@@ -361,8 +361,7 @@ def q_skew_salted_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a double sum would differ in the last ulp); the final cast to DOUBLE
     is exact-from-decimal on both engines. AQE's skew handling splits
     oversized *partitions*, not a single hot *key* inside one task — the
-    salt handles the case AQE can't (same trade documented in
-    operators/salted_repartition.py). Ref context: the reference's CRC32
+    salt handles the case AQE can't. Ref context: the reference's CRC32
     router (ModifyPartition.kt:39-40) is one-partition-per-key with no
     skew story at all."""
     events = _t(spark, sf_dir, "events")

@@ -6,8 +6,8 @@ single-message transforms, see /root/reference) as an idiomatic Spark engine:
 
 - the eight SMT operators become plan-time Column projections / filters over a
   change-event DataFrame (``operators/``),
-- partition routing becomes hash repartitioning with skew salting
-  (``operators/salted_repartition.py``),
+- partition routing becomes hash repartitioning
+  (``operators/modify_partition.py``),
 - the implicit downstream upsert-by-key idempotence becomes an explicit
   last-writer-wins dedup + MERGE upsert into a bucketed, snapshot-versioned
   lake table (``plans/lake_table.py``),

@@ -203,8 +203,11 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--bootstrap", default=None, metavar="PARQUET",
                    help="initial-snapshot load (Debezium snapshot-then-stream): "
                         "merge the snapshot table as epoch 0 of --stream-id, "
-                        "then exit; follow up with a normal ingest run over "
-                        "events with lsn > --bootstrap-lsn")
+                        "then exit. Ingest the events with lsn > "
+                        "--bootstrap-lsn in a run with a DIFFERENT --stream-id: "
+                        "under this one, the tail's batch 0 counts as the "
+                        "already-committed epoch 0 and is skipped without an "
+                        "error")
     p.add_argument("--bootstrap-lsn", type=int, default=0,
                    help="log position the --bootstrap snapshot was taken at "
                         "(stamped on rows lacking a _lsn column)")

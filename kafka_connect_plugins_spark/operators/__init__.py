@@ -1,5 +1,5 @@
 """Operator library: the reference's eight SMTs plus the engine-native
-stages (LWW dedup, salted repartition, field redaction, outbox routing) that
+stages (LWW dedup, field redaction, outbox routing) that
 run between a change-event source and the lake-table MERGE."""
 
 from kafka_connect_plugins_spark.operators.base import Pipeline, Stage, registry, stage
@@ -10,7 +10,6 @@ from kafka_connect_plugins_spark.operators.modify_partition import ModifyPartiti
 from kafka_connect_plugins_spark.operators.outbox_router import OutboxEventRouter
 from kafka_connect_plugins_spark.operators.redact import RedactFields
 from kafka_connect_plugins_spark.operators.redshift_flatten import RedshiftFlatten
-from kafka_connect_plugins_spark.operators.salted_repartition import SaltedRepartition
 from kafka_connect_plugins_spark.operators.slack_payload import SlackPayloadUnify
 from kafka_connect_plugins_spark.operators.soft_delete_to_tombstone import SoftDeleteToTombstone
 from kafka_connect_plugins_spark.operators.unquote_record_key import UnquoteRecordKey
@@ -27,7 +26,6 @@ __all__ = [
     "OutboxEventRouter",
     "RedactFields",
     "RedshiftFlatten",
-    "SaltedRepartition",
     "SlackPayloadUnify",
     "SoftDeleteToTombstone",
     "UnquoteRecordKey",

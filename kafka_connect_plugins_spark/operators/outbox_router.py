@@ -18,7 +18,7 @@ ModifyPartition.kt:29-44); this stage is the topic-level counterpart:
 
 Pure plan transformation, one projection, no shuffle: routing is a value
 computation, not a repartition — partition assignment stays with
-:class:`ModifyPartition`/:class:`SaltedRepartition` downstream.
+:class:`ModifyPartition` downstream.
 """
 
 from __future__ import annotations

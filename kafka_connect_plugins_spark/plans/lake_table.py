@@ -19,12 +19,13 @@ Layout::
 Every mutation commits through ``LakeTable._commit``: allocate ``N`` as 1 +
 the newest manifest on disk, write the dirty buckets into ``data/v{N}``,
 write ``manifests/v{N}.json``, then move the ref. The contract is ONE
-WRITER PER REF. ``N`` (and so the data dir) is chosen before the write job,
-so two concurrent writers on one ref can write the same ``data/v{N}`` and
-overwrite each other's files. The parent check at commit raises
-``CommitConflictError`` when the head moved, but it is a read followed by a
-rename, not an atomic compare-and-swap, and it cannot undo a shared data
-dir.
+WRITER PER REF: ``N`` is chosen before the write job, so writers racing on
+one ref write into one ``data/v{N}``, each with its own copy of the carried
+rows, and the parent check at commit is not a compare-and-swap. Racing
+merges have published the loser's rows under the winner's commit (two live
+rows for a carried key) while the ledger records only the winner, or
+killed the loser with a raw ``Py4JJavaError`` instead of
+``CommitConflictError``.
 
 Scale properties (the reasons for each design choice):
 
@@ -58,8 +59,9 @@ import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
+from typing import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -227,10 +229,9 @@ def cdf_classify_emit(
 
 
 class CommitConflictError(RuntimeError):
-    """The ref advanced after this operation read its base snapshot; the
-    commit was refused. Re-read and retry. This detects a moved head; it
-    does not make concurrent writers on one ref safe (see
-    ``LakeTable._commit``)."""
+    """The ref advanced after this operation read its base snapshot, so
+    its manifest was not written. Its rows may still be live: a writer
+    racing on one ref shares its data dir (see the module docstring)."""
 
 
 class SchemaEvolutionError(TypeError):
@@ -365,22 +366,19 @@ class LakeTable:
         version = manifest["version"]
         # Parent check: the snapshot was prepared against its ``parent``; if
         # the ref moved on since (a CLI maintenance op racing a live
-        # ingest), fail loudly instead of silently orphaning the other
-        # writer's commit; the abandoned data dir is ``remove_orphans``
-        # food. This is a read followed by a rename, not an atomic
-        # compare-and-swap: two writers can both pass it, and by now they
-        # may have written the same data dir (see ``_commit``). One writer
-        # per ref is the contract. Root-snapshot commits (parent None) skip
-        # the check.
+        # ingest), this manifest is not written. It follows the data write
+        # and is a read, then a rename, not a compare-and-swap, so it keeps
+        # neither racer's rows out of the other's commit (module docstring).
+        # Root-snapshot commits (parent None) skip the check.
         parent = manifest.get("parent")
         if parent is not None:
             head = self._head_version(self.ref)
             if int(head) != int(parent):
                 raise CommitConflictError(
                     f"ref {self.ref!r} advanced to v{head} while this "
-                    f"operation was prepared against v{parent}; re-read "
-                    f"and retry (abandoned data dir v{version} will be "
-                    f"vacuumed by remove_orphans)"
+                    f"operation was prepared against v{parent}; its manifest "
+                    f"was not written, but its rows in data/v{version} are live "
+                    f"if a racing commit shares that dir (one writer per ref)"
                 )
         # Atomic write: a crash mid-write must not leave a TORN manifest —
         # it would never publish (the ref move below is the commit point),
@@ -398,14 +396,14 @@ class LakeTable:
     def _commit(
         self,
         manifest: dict,
-        summary: dict,
+        summary: dict | Callable[[], dict | None],
         *,
         data: DataFrame | None = None,
         dirty: list[int] | None = None,
         parent: int | None = None,
         phases: dict | None = None,
         key_ndv: int | None = None,
-    ) -> dict:
+    ) -> dict | None:
         """Commit ``manifest`` as this ref's next snapshot: the one commit
         step of every mutation. Returns the committed manifest.
 
@@ -420,14 +418,13 @@ class LakeTable:
         map is rebased on the buckets that landed there. Each ``dirty``
         bucket points at ``v{N}`` if written and is dropped if not (all its
         rows were deleted). The new dir's footer stats are attached.
-        ``phases`` receives the ``write`` and ``commit`` wall times.
+        ``phases`` receives the ``write`` and ``commit`` wall times. A
+        callable ``summary`` runs after the write; if it returns None, the
+        written dir is removed and None is returned, with nothing committed
+        (removing ``data/v{N}`` is safe only under the one-writer contract).
 
-        Concurrency: one writer per ref. ``v{N}`` is chosen before the
-        write job, so two writers on one ref can write the same data dir
-        and overwrite each other's files. :meth:`_write_manifest` raises
-        :class:`CommitConflictError` when the head moved meanwhile, but
-        that check is not an atomic compare-and-swap and cannot undo a
-        shared data dir.
+        Concurrency: one writer per ref. The module docstring says what
+        writers racing on one ref do to the table.
         """
         version = self._next_version()
         new = {
@@ -440,6 +437,11 @@ class LakeTable:
             t_w = time.time()
             if data is not None:
                 self._bucket_writer(data, manifest, key_ndv).parquet(out_dir)
+            if callable(summary):
+                summary = summary()
+                if summary is None:
+                    shutil.rmtree(out_dir, ignore_errors=True)
+                    return None
             t_c = time.time()
             written = {
                 int(name.split("=", 1)[1])
@@ -889,8 +891,7 @@ class LakeTable:
             if schema is None:
                 raise ValueError("empty table with no schema yet")
             return self._empty_frame(schema)
-        if TOMBSTONE_COL in df.columns:
-            df = df.filter(~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)))
+        df = df.filter(~self._is_marker(df))
         if prune:
             for col, (lo, hi) in prune.items():
                 if lo is not None:
@@ -961,8 +962,7 @@ class LakeTable:
             df = df.filter(conds)
         else:
             df = df.join(F.broadcast(keys_df), on=key_cols, how="left_semi")
-        if TOMBSTONE_COL in df.columns:
-            df = df.filter(~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)))
+        df = df.filter(~self._is_marker(df))
         return df.select(*[f_.name for f_ in schema.fields])
 
     def read_changes(
@@ -1043,8 +1043,7 @@ class LakeTable:
                 df = self._empty_frame(internal)
             else:
                 df = self._translate_columns(df, manifest, m_to)
-            if TOMBSTONE_COL not in df.columns:
-                df = df.withColumn(TOMBSTONE_COL, F.lit(False))
+            df = df.withColumn(TOMBSTONE_COL, self._is_marker(df))
             for f_ in internal.fields:  # columns added after this snapshot
                 if f_.name not in df.columns:
                     df = df.withColumn(f_.name, F.lit(None).cast(f_.dataType))
@@ -1061,12 +1060,9 @@ class LakeTable:
         cond = [F.col(f"o_{k}").eqNullSafe(F.col(f"n_{k}")) for k in keys]
         joined = o.join(n, on=cond, how="full_outer")
 
-        o_live = F.col(f"o_{LSN_COL}").isNotNull() & ~F.coalesce(
-            F.col(f"o_{TOMBSTONE_COL}"), F.lit(False)
-        )
-        n_live = F.col(f"n_{LSN_COL}").isNotNull() & ~F.coalesce(
-            F.col(f"n_{TOMBSTONE_COL}"), F.lit(False)
-        )
+        # a side without the key has a NULL _lsn: FALSE AND NULL is FALSE
+        o_live = F.col(f"o_{LSN_COL}").isNotNull() & ~F.col(f"o_{TOMBSTONE_COL}")
+        n_live = F.col(f"n_{LSN_COL}").isNotNull() & ~F.col(f"n_{TOMBSTONE_COL}")
         # carried-forward = same LSN and same values: update_where /
         # merge_into matched-updates rewrite rows WITHOUT bumping _lsn
         # (LWW ordering stays the ingest's property), so the LSN alone
@@ -1452,6 +1448,73 @@ class LakeTable:
             .select(*keys, *[F.col(f"__w.{c}").alias(c) for c in pay])
         )
 
+    @staticmethod
+    def _is_marker(df: DataFrame) -> Column:
+        """True on a retained delete marker of ``df`` (see :meth:`merge`)."""
+        if TOMBSTONE_COL not in df.columns:
+            return F.lit(False)
+        return F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))
+
+    def _dirty_buckets(
+        self,
+        manifest: dict,
+        match: Callable[[DataFrame], Column],
+        prune: dict | None,
+    ) -> dict[int, int]:
+        """``{bucket: rows}`` where ``match(frame)`` holds: one narrow scan
+        and a <= num_buckets-row aggregation. Buckets whose file stats rule
+        out ``prune`` (a :meth:`read` bounds map the match implies) are not
+        scanned; when that is every bucket, no job runs."""
+        current = self._read_buckets(manifest, None, prune=prune)
+        if current is None:
+            return {}
+        hits = current.filter(match(current)).groupBy(BUCKET_COL).count().collect()
+        return {int(r[BUCKET_COL]): int(r["count"]) for r in hits}
+
+    def _rewrite(
+        self,
+        manifest: dict,
+        dirty: list[int],
+        transform: Callable[[DataFrame], DataFrame],
+        summary: dict | Callable[[], dict | None],
+        *,
+        added: dict[int, int] | None = None,
+        order: list[str] | None = None,
+    ) -> dict | None:
+        """The copy-on-write step of every mutation but :meth:`merge` (its
+        own :meth:`_lww` plan) and :meth:`rebucket` (it reads one layout and
+        writes another): Delta's DML shape, one rewrite and one commit.
+
+        ``transform`` maps the ``dirty`` buckets' current rows (a bucket
+        with no file yet reads as empty) to the rows they keep; each bucket
+        then gets a task of its own (:meth:`_by_bucket`), sorted by
+        ``order`` if given, and :meth:`_commit` writes it. ``added[b]``
+        counts the keys the rewrite brings into bucket ``b``, for the bloom
+        sizing (:meth:`_key_ndv`). Untouched buckets keep their files.
+        """
+        current = self._read_buckets(manifest, dirty)
+        if current is None:
+            current = self._empty_frame(T.StructType(
+                self._table_schema(manifest).fields
+                + [T.StructField(BUCKET_COL, T.IntegerType())]
+            ))
+        data = self._by_bucket(transform(current), dirty)
+        if order:
+            # BUCKET_COL leads although each task holds one bucket: the
+            # partitioned writer re-sorts any input whose ordering does not
+            # start with it, which scrambles the order within the bucket.
+            # Order columns the transform added are sort keys, not data.
+            data = data.sortWithinPartitions(BUCKET_COL, *order).drop(
+                *[c for c in order if c not in current.columns]
+            )
+        return self._commit(
+            manifest,
+            summary,
+            data=data,
+            dirty=dirty,
+            key_ndv=self._key_ndv(manifest, added or dict.fromkeys(dirty, 0)),
+        )
+
     # ------------------------------------------------------------------
     # MERGE
     # ------------------------------------------------------------------
@@ -1751,12 +1814,14 @@ class LakeTable:
         snapshot's log position. ``snapshot`` is that consistent read —
         key + payload columns, optionally its own ``_lsn`` column (kept
         per-row if present; else every row is stamped ``snapshot_lsn``, the
-        log position the snapshot was taken at). The load is epoch 0 of
-        ``stream_id``, so a crashed-and-restarted bootstrap is idempotent
-        under the same exactly-once guard as every other epoch, and the
-        subsequent tail (events with ``lsn > snapshot_lsn``) continues as
-        epochs 1.. — final state is identical to a full-log replay (see
-        ``tests/test_bootstrap.py``).
+        log position the snapshot was taken at). The load is epoch
+        ``epoch_id`` of ``stream_id``, so a crashed-and-restarted bootstrap
+        is idempotent under the same exactly-once guard as every other
+        epoch. Apply the tail (events with ``lsn > snapshot_lsn``) under a
+        stream id of its own: a streamed tail's fresh checkpoint starts at
+        batch 0, which under ``stream_id`` counts as the committed bootstrap
+        epoch and is skipped without an error. The final state is then
+        identical to a full-log replay (see ``tests/test_bootstrap.py``).
 
         Requires an empty table: bootstrap is a beginning, not an upsert
         (use :meth:`merge` to fold a snapshot into existing state).
@@ -1881,28 +1946,21 @@ class LakeTable:
         )
         if not todo:
             return 0
-        current = self._read_buckets(manifest, todo)
-        clustered = self._by_bucket(current, todo)
-        # BUCKET_COL leads the sort although each task holds one bucket: the
-        # partitioned writer requires its input ordered by BUCKET_COL and
-        # re-sorts any input whose ordering does not start with it, which
-        # scrambles the order within the bucket
-        if zorder_by:
-            clustered = clustered.withColumn(
-                "__z", self._zorder_column(current, zorder_by, zorder_bits)
-            ).sortWithinPartitions(BUCKET_COL, "__z").drop("__z")
-        else:
-            clustered = clustered.sortWithinPartitions(BUCKET_COL, *sort_by)
-        self._commit(
+        z = self._zorder_column(
+            self._read_buckets(manifest, todo), zorder_by, zorder_bits
+        ) if zorder_by else None
+        self._rewrite(
             manifest,
+            todo,
+            # the Morton key as a column: a sort evaluates a key expression
+            # in every comparison, a column once per row
+            (lambda df: df.withColumn("__z", z)) if zorder_by else (lambda df: df),
             {
                 "compacted_buckets": len(todo),
                 **({"sort_order": list(sort_by)} if sort_by else {}),
                 **({"zorder": list(zorder_by)} if zorder_by else {}),
             },
-            data=clustered,
-            dirty=todo,
-            key_ndv=self._key_ndv(manifest, dict.fromkeys(todo, 0)),
+            order=sort_by or ["__z"],
         )
         return len(todo)
 
@@ -2102,29 +2160,23 @@ class LakeTable:
         no in-flight event can carry a lower LSN, so markers below it can no
         longer shield anything and are safe to remove. Rewrites every bucket
         that still holds such markers into a new snapshot; returns the number
-        of buckets rewritten.
+        of buckets rewritten. A bucket whose file stats show no marker, or
+        no ``_lsn`` below the bound, is not even scanned.
         """
         manifest = self.manifest()
-        current = self._read_buckets(manifest, None)
-        if current is None or TOMBSTONE_COL not in current.columns:
-            return 0
-        is_purgeable = F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)) & (
-            F.col(LSN_COL) < below_lsn
-        )
-        dirty = [
-            int(r[BUCKET_COL])
-            for r in current.filter(is_purgeable).select(BUCKET_COL).distinct().collect()
-        ]
-        if not dirty:
-            return 0
-        keep = self._read_buckets(manifest, dirty).filter(~is_purgeable)
-        self._commit(
-            manifest,
-            {"purged_below_lsn": below_lsn, "rewritten_buckets": len(dirty)},
-            data=self._by_bucket(keep, dirty),
-            dirty=dirty,
-            key_ndv=self._key_ndv(manifest, dict.fromkeys(dirty, 0)),
-        )
+
+        def purgeable(df: DataFrame) -> Column:
+            return self._is_marker(df) & (F.col(LSN_COL) < below_lsn)
+
+        prune = {TOMBSTONE_COL: (True, None), LSN_COL: (None, below_lsn - 1)}
+        dirty = sorted(self._dirty_buckets(manifest, purgeable, prune))
+        if dirty:
+            self._rewrite(
+                manifest,
+                dirty,
+                lambda df: df.filter(~purgeable(df)),
+                {"purged_below_lsn": below_lsn, "rewritten_buckets": len(dirty)},
+            )
         return len(dirty)
 
     def purge_below_watermark(self, metrics, stream_id: str | None = None) -> dict:
@@ -2154,6 +2206,17 @@ class LakeTable:
             "partitions": len(hw),
         }
 
+    def _check_assignments(self, manifest: dict, assignments: dict, op: str) -> None:
+        """Raise unless ``assignments`` sets payload columns of the table
+        only (see :meth:`update_where`)."""
+        bad = sorted(set(assignments) & (set(manifest["key_columns"]) | _RESERVED))
+        if bad:
+            raise ValueError(f"{op} cannot assign key/bookkeeping columns: {bad}")
+        schema = self._table_schema(manifest)
+        known = {f_.name for f_ in schema.fields} if schema is not None else set()
+        unknown = sorted(set(assignments) - known)
+        if unknown:
+            raise ValueError(f"{op}: no such columns: {unknown}")
 
     def _rewrite_where(
         self,
@@ -2162,51 +2225,43 @@ class LakeTable:
         prune: dict | None,
         op: str,
     ) -> dict:
-        """Shared copy-on-write skeleton for :meth:`delete_where` /
-        :meth:`update_where`: find the buckets holding live rows that match
-        ``condition`` (one narrow scan + a <= num_buckets-row aggregation),
-        rewrite ONLY those buckets, commit one new snapshot. Untouched
-        buckets keep referencing their existing files — the rewrite cost is
-        proportional to the matched data, not the table.
-        """
+        """:meth:`delete_where` / :meth:`update_where`: :meth:`_rewrite` the
+        buckets holding live rows that match ``condition``."""
         manifest = self.manifest()
-        current = self._read_buckets(manifest, None, prune=prune)
-        if current is None:
-            return {"op": op, "rows_matched": 0, "buckets_rewritten": 0}
-        # Three-valued logic: a NULL predicate row must be treated as
-        # unmatched (kept by DELETE, untouched by UPDATE) — `filter(~NULL)`
-        # would silently DROP it from the rewrite, losing the row.
-        live = F.coalesce(condition, F.lit(False))
-        if TOMBSTONE_COL in current.columns:
-            # mutations address live rows only; delete markers are retention's
-            # business (purge_tombstones), never a predicate DELETE/UPDATE's
-            live = live & ~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))
-        hits = current.filter(live).groupBy(BUCKET_COL).count().collect()
-        if not hits:
-            return {"op": op, "rows_matched": 0, "buckets_rewritten": 0}
-        dirty = sorted(int(r[BUCKET_COL]) for r in hits)
-        matched = int(sum(r["count"] for r in hits))
-        df = self._read_buckets(manifest, dirty)
-        if assignments is None:
-            out = df.filter(~live)
-        else:
+        if assignments is not None:
+            self._check_assignments(manifest, assignments, op)
+
+        def live(df: DataFrame) -> Column:
+            # Three-valued logic: a NULL predicate row must be treated as
+            # unmatched (kept by DELETE, untouched by UPDATE) — `filter(~NULL)`
+            # would silently DROP it from the rewrite, losing the row. Delete
+            # markers are retention's business (purge_tombstones), never a
+            # predicate DELETE/UPDATE's.
+            return F.coalesce(condition, F.lit(False)) & ~self._is_marker(df)
+
+        def transform(df: DataFrame) -> DataFrame:
+            if assignments is None:
+                return df.filter(~live(df))
             # cast the new value INSIDE the branch: when/otherwise unifies
             # branch types first, and letting it coerce the OLD column toward
             # the literal's type would corrupt (or fail) unmatched rows
-            out = df.select(*[
-                F.when(live, assignments[c].cast(df.schema[c].dataType))
+            return df.select(*[
+                F.when(live(df), assignments[c].cast(df.schema[c].dataType))
                 .otherwise(F.col(c)).alias(c)
                 if c in assignments else F.col(c)
                 for c in df.columns
             ])
-        self._commit(
-            manifest,
-            {"op": op, "rows_matched": matched, "rewritten_buckets": len(dirty)},
-            data=self._by_bucket(out, dirty),
-            dirty=dirty,
-            key_ndv=self._key_ndv(manifest, dict.fromkeys(dirty, 0)),
-        )
-        return {"op": op, "rows_matched": matched, "buckets_rewritten": len(dirty)}
+
+        hits = self._dirty_buckets(manifest, live, prune)
+        matched = sum(hits.values())
+        if hits:
+            self._rewrite(
+                manifest,
+                sorted(hits),
+                transform,
+                {"op": op, "rows_matched": matched, "rewritten_buckets": len(hits)},
+            )
+        return {"op": op, "rows_matched": matched, "buckets_rewritten": len(hits)}
 
     def delete_where(self, condition: Column, prune: dict | None = None) -> dict:
         """Predicate DELETE as one copy-on-write snapshot (Iceberg
@@ -2249,18 +2304,6 @@ class LakeTable:
         ingest's property. Bucket selection, stats pruning, and commit
         mechanics are exactly :meth:`delete_where`'s.
         """
-        keys = set(self.manifest().get("key_columns", []))
-        forbidden = keys | {LSN_COL, BUCKET_COL, TOMBSTONE_COL}
-        bad = sorted(set(assignments) & forbidden)
-        if bad:
-            raise ValueError(
-                f"update_where cannot assign key/bookkeeping columns: {bad}"
-            )
-        schema = self._table_schema(self.manifest())
-        known = {f_.name for f_ in schema.fields} if schema is not None else set()
-        unknown = sorted(set(assignments) - known)
-        if unknown:
-            raise ValueError(f"update_where: no such columns: {unknown}")
         return self._rewrite_where(condition, assignments, prune, "update_where")
 
     def merge_into(
@@ -2293,17 +2336,13 @@ class LakeTable:
         keep their ``_lsn`` (same contract as :meth:`update_where`); brand
         new keys take the source's ``_lsn`` (0 when the source has none).
 
-        Execution is the bucket-wise copy-on-write of
-        :meth:`delete_where`: source keys hash to their buckets with the
-        writer's own ``_bucket_id``, ONLY those buckets are
-        read and full-outer-joined to the source on the
-        key columns — a 100-row source against a 100 TB table touches a
-        handful of buckets and never shuffles the table. Ambiguous merges
-        (two source rows sharing a key) raise, as Delta does. Source
-        columns outside the table schema are conditions-only (visible
-        under ``src``, never inserted — schema evolution is
-        :meth:`merge`'s business); table columns the source lacks insert
-        as NULL.
+        Execution is one :meth:`_rewrite`: source keys hash to their
+        buckets with the writer's own ``_bucket_id``, and ONLY those buckets
+        are read and full-outer-joined to the source on the key columns, so
+        a 100-row source touches a handful of buckets. Ambiguous merges (two
+        source rows sharing a key) raise, as Delta does. Source columns
+        outside the table schema are conditions-only (visible under ``src``,
+        never inserted); table columns the source lacks insert as NULL.
 
         Returns ``{"op", "rows_updated", "rows_deleted", "rows_inserted",
         "buckets_rewritten"}``; a no-op (no clause fired) commits nothing.
@@ -2314,8 +2353,7 @@ class LakeTable:
         schema = self._table_schema(manifest)
         if schema is None:
             raise ValueError("merge_into on an empty table with no schema yet")
-        table_cols = [f_.name for f_ in schema.fields if f_.name != BUCKET_COL]
-        if "src" in table_cols:
+        if "src" in schema.fieldNames():
             raise ValueError(
                 "merge_into reserves the name 'src' for the source-row "
                 "struct; this table has a column named 'src'"
@@ -2323,26 +2361,13 @@ class LakeTable:
         missing = [k for k in keys if k not in source.columns]
         if missing:
             raise ValueError(f"source is missing key columns: {missing}")
-        # source columns OUTSIDE the table schema are legal: they're visible
-        # to conditions/assignments under ``src`` (e.g. an op discriminator)
-        # but never insert — only schema columns map into the table
-        # (merge_into does not evolve schemas; that's merge()'s business).
-        forbidden = set(keys) | {LSN_COL, BUCKET_COL, TOMBSTONE_COL}
-        bad = sorted(set(matched_update or {}) & forbidden)
-        if bad:
-            raise ValueError(
-                f"merge_into cannot assign key/bookkeeping columns: {bad}"
-            )
-        unknown = sorted(set(matched_update or {}) - set(table_cols))
-        if unknown:
-            raise ValueError(f"merge_into: no such columns: {unknown}")
+        self._check_assignments(manifest, matched_update or {}, "merge_into")
 
         src_payload = [c for c in source.columns if c not in keys]
         # cast source keys to the TABLE's key types before hashing: xxhash64
         # hashes int 7 and string '7' differently, so an uncast mismatch
         # would route the key to the wrong bucket and silently duplicate it
-        key_types = {f_.name: f_.dataType for f_ in schema.fields}
-        kcast = [F.col(k).cast(key_types[k]) for k in keys]
+        kcast = [F.col(k).cast(schema[k].dataType) for k in keys]
         src = source.select(
             *[c.alias(k) for c, k in zip(kcast, keys)],
             _bucket_id(kcast, n_buckets).alias(BUCKET_COL),
@@ -2365,88 +2390,59 @@ class LakeTable:
                 "LWW streams)"
             )
         dirty = sorted(int(r[BUCKET_COL]) for r in stats)
+        # the action counts come from the write itself: no second pass over
+        # the dirty buckets, and they describe exactly the rows written
+        counts = Observation()
 
-        current = self._read_buckets(manifest, dirty)
-        if current is None:
-            cur_schema = T.StructType(
-                [f_ for f_ in schema.fields if f_.name != BUCKET_COL]
-                + [T.StructField(BUCKET_COL, T.IntegerType())]
+        def transform(current: DataFrame) -> DataFrame:
+            cur_cols = [c for c in current.columns if c != BUCKET_COL]
+            left = current.withColumn("__t", F.lit(True))
+            # NULL-SAFE key join: merge() and lookup() treat NULL key
+            # components as a legal key value (eqNullSafe / IS NOT DISTINCT
+            # FROM); a plain USING join here would never match them, carrying
+            # the stored NULL-key row AND inserting the source's — two rows
+            # for one key.
+            cond = F.lit(True)
+            for k in keys:
+                cond = cond & left[k].eqNullSafe(src[k])
+            cond = cond & (left[BUCKET_COL] == src[BUCKET_COL])
+            joined = left.join(src, cond, "full_outer").select(
+                F.coalesce(left[BUCKET_COL], src[BUCKET_COL]).alias(BUCKET_COL),
+                *[F.coalesce(left[k], src[k]).alias(k) for k in keys],
+                *[left[c] for c in cur_cols if c not in keys],
+                src["src"],
+                left["__t"],
             )
-            current = self._empty_frame(cur_schema)
-        cur_cols = [c for c in current.columns if c != BUCKET_COL]
-        left = current.withColumn(
-            BUCKET_COL, F.col(BUCKET_COL).cast("int")
-        ).withColumn("__t", F.lit(True))
-        # NULL-SAFE key join: merge() and lookup() treat NULL key components
-        # as a legal key value (eqNullSafe / IS NOT DISTINCT FROM); a plain
-        # USING join here would never match them, carrying the stored
-        # NULL-key row AND inserting the source's — two rows for one key.
-        cond = F.lit(True)
-        for k in keys:
-            cond = cond & left[k].eqNullSafe(src[k])
-        cond = cond & (left[BUCKET_COL] == src[BUCKET_COL])
-        joined = left.join(src, cond, "full_outer").select(
-            F.coalesce(left[BUCKET_COL], src[BUCKET_COL]).alias(BUCKET_COL),
-            *[F.coalesce(left[k], src[k]).alias(k) for k in keys],
-            *[left[c] for c in cur_cols if c not in keys],
-            src["src"],
-            left["__t"],
-        )
 
-        t_exists = F.coalesce(F.col("__t"), F.lit(False))
-        s_exists = F.col("src").isNotNull()
-        if TOMBSTONE_COL in cur_cols:
-            is_marker = t_exists & F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))
-        else:
-            is_marker = F.lit(False)
-        live_match = t_exists & ~is_marker & s_exists
-        true_ = F.lit(True)
-        del_c = live_match & (
-            matched_delete_condition
-            if matched_delete_condition is not None else F.lit(False)
-        )
-        upd_c = live_match & (
-            (matched_update_condition
-             if matched_update_condition is not None else true_)
-            if matched_update is not None else F.lit(False)
-        )
-        ins_c = (
-            s_exists & ~live_match
-            & (F.lit(True) if not_matched_insert else F.lit(False))
-            & (not_matched_condition
-               if not_matched_condition is not None else true_)
-        )
-        action = (
-            F.when(del_c, F.lit("D"))   # order gives DELETE precedence
-            .when(upd_c, F.lit("U"))
-            .when(ins_c, F.lit("I"))
-            .when(t_exists, F.lit("C"))          # carry (incl. markers)
-            .otherwise(F.lit("X"))               # unmatched source, no insert
-        )
-        # persist: the action-count collect AND the write below consume this
-        # plan — uncached, the dirty-bucket read + full-outer join would run
-        # twice (doubling the dominant I/O), and a non-deterministic source
-        # could make the reported counts diverge from what was written
-        with_action = joined.withColumn("__a", action).persist()
-        # finally: a failing counts-collect, parquet write, or manifest
-        # commit must not leak the persisted full-outer join (merge()
-        # gives its caches the same guarantee)
-        try:
-            counts = {
-                r["__a"]: int(r["n"])
-                for r in with_action.groupBy("__a").agg(
-                    F.count(F.lit(1)).alias("n")
-                ).collect()
-            }
-            result = {
-                "op": "merge_into",
-                "rows_updated": counts.get("U", 0),
-                "rows_deleted": counts.get("D", 0),
-                "rows_inserted": counts.get("I", 0),
-                "buckets_rewritten": 0,
-            }
-            if not (counts.get("U") or counts.get("D") or counts.get("I")):
-                return result
+            t_exists = F.coalesce(F.col("__t"), F.lit(False))
+            s_exists = F.col("src").isNotNull()
+            live_match = t_exists & ~self._is_marker(joined) & s_exists
+
+            def clause(on: bool, cond: Column | None) -> Column:
+                # a clause that is off never fires; one with no condition does
+                return F.lit(bool(on)) if cond is None or not on else cond
+
+            del_c = live_match & clause(
+                matched_delete_condition is not None, matched_delete_condition
+            )
+            upd_c = live_match & clause(
+                matched_update is not None, matched_update_condition
+            )
+            ins_c = s_exists & ~live_match & clause(
+                not_matched_insert, not_matched_condition
+            )
+            action = (
+                F.when(del_c, F.lit("D"))   # order gives DELETE precedence
+                .when(upd_c, F.lit("U"))
+                .when(ins_c, F.lit("I"))
+                .when(t_exists, F.lit("C"))          # carry (incl. markers)
+                .otherwise(F.lit("X"))               # unmatched source, no insert
+            )
+            # observed BEFORE the filter below drops the deleted rows
+            with_action = joined.withColumn("__a", action).observe(counts, *[
+                F.count_if(F.col("__a") == a).alias(f"rows_{verb}")
+                for a, verb in (("U", "updated"), ("D", "deleted"), ("I", "inserted"))
+            ])
 
             def out_col(c: str) -> Column:
                 base = F.col(c)
@@ -2478,30 +2474,32 @@ class LakeTable:
                     )
                 return col.otherwise(base).alias(c)
 
-            out = with_action.filter(F.col("__a").isin("U", "I", "C")).select(
+            return with_action.filter(F.col("__a").isin("U", "I", "C")).select(
                 F.col(BUCKET_COL), *[out_col(c) for c in cur_cols]
             )
-            # insert-only buckets are dirty too: the commit adds them
-            self._commit(
-                manifest,
-                {
-                    "op": "merge_into",
-                    "rows_updated": result["rows_updated"],
-                    "rows_deleted": result["rows_deleted"],
-                    "rows_inserted": result["rows_inserted"],
-                    "rewritten_buckets": len(dirty),
-                },
-                data=self._by_bucket(out, dirty),
-                dirty=dirty,
-                key_ndv=self._key_ndv(
-                    manifest,
-                    {int(r[BUCKET_COL]): int(r["__keys"]) for r in stats},
-                ),
-            )
-            result["buckets_rewritten"] = len(dirty)
-            return result
-        finally:
-            with_action.unpersist()
+
+        def summary() -> dict | None:
+            if not any(counts.get.values()):
+                return None  # no clause fired: publish nothing
+            return {
+                "op": "merge_into",
+                **counts.get,
+                "rewritten_buckets": len(dirty),
+            }
+
+        # insert-only buckets are dirty too: the commit adds them
+        committed = self._rewrite(
+            manifest,
+            dirty,
+            transform,
+            summary,
+            added={int(r[BUCKET_COL]): int(r["__keys"]) for r in stats},
+        )
+        return {
+            "op": "merge_into",
+            **counts.get,
+            "buckets_rewritten": len(dirty) if committed else 0,
+        }
 
     def state_digest(
         self, version: int | None = None, ref: str | None = None

@@ -59,7 +59,6 @@ def test_registry_has_all_reference_operators():
         "SlackPayloadUnify",
         "JsonToHex",
         "LwwDedup",
-        "SaltedRepartition",
     } <= names
 
 
