@@ -585,9 +585,7 @@ def q_lww_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value"),
         F.col("props"),
     )
-    out = LwwDedup(
-        {"key.columns": "user_id,event_type", "lsn.column": "lsn", "strategy": "max_by"}
-    ).apply(src)
+    out = LwwDedup({"key.columns": "user_id,event_type", "lsn.column": "lsn"}).apply(src)
     return out.select(
         "user_id",
         "event_type",

@@ -134,7 +134,7 @@ SHM = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
 # measurement of the SAME job (same epoch geometry, same input generator,
 # same clean gate), so windows pool across invocations: bench_windows.jsonl
 # accumulates every window ever measured at default geometry/gates
-# (backfilled from BENCH.md's git history by tools/backfill_windows.py), and
+# (backfilled from BENCH.md's git history), and
 # _window_pool() folds it into the artifact with the evidence bar computed
 # over the pooled clean set. Geometry or gate overrides (epoch size, clean
 # threshold) change the measured job or what "clean" means, so those runs
@@ -1018,8 +1018,8 @@ def _pool_md_lines() -> list[str]:
         "Every N-vs-4N window ever measured at default geometry/gates,",
         "pooled across runs (same job, same clean gate; host noise is",
         "bimodal so single invocations under-sample quiet phases).",
-        "Backfilled from this file's git history by",
-        "tools/backfill_windows.py; bench.py appends live windows.",
+        "Backfilled from this file's git history; bench.py appends",
+        "live windows.",
         "Judged bracket = the unsaturated 4->16-core executor pair:",
         "",
         f"- executors_small: {s['clean_windows']} clean of"
@@ -1328,7 +1328,6 @@ def write_bench_md(replay: dict, scaling_exec: dict, scaling_thr: dict, queries:
                 "executors (local-cluster[1,4] vs [4,4]) sits where the box",
                 "still has headroom; together the two points bracket what a",
                 "real cluster (fresh DRAM per node, ceilings 1.0) would show.",
-                "Full bracket runs: tools/bench_exec_small.py.",
                 "",
                 *_scaling_table(scaling_small),
                 "",

@@ -103,7 +103,6 @@ def replay(
     table: LakeTable,
     events: DataFrame,
     batches: int = 1,
-    events_per_epoch: int | None = None,
     stream_id: str = "replay",
 ) -> list[MergeStats]:
     """Batch replay of an event log as ``batches`` consecutive epochs.
@@ -112,22 +111,17 @@ def replay(
     microbatches from the log. This is the serial in-process reference;
     the CLI drains a log through ``StreamingIngest`` (``--available-now``).
     """
-    if batches <= 1 and events_per_epoch is None:
+    if batches <= 1:
         return [apply_batch(table, events, epoch_id=0, stream_id=stream_id)]
-    if events_per_epoch is None:
-        hi = events.agg(F.max("offset")).first()[0] or 0
-        events_per_epoch = (hi + batches) // batches
+    hi = events.agg(F.max("offset")).first()[0] or 0
+    events_per_epoch = (hi + batches) // batches
     stats: list[MergeStats] = []
-    epoch = 0
-    while True:
+    for epoch in range(batches):
         lo, hi = epoch * events_per_epoch, (epoch + 1) * events_per_epoch
         batch = events.filter((F.col("offset") >= lo) & (F.col("offset") < hi))
         st = apply_batch(table, batch, epoch_id=epoch, stream_id=stream_id)
         stats.append(st)
         if st.source_rows == 0 and not st.skipped:
-            break
-        epoch += 1
-        if batches and epoch >= batches:
             break
     return stats
 

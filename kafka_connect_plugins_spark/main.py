@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
 from pyspark.sql import SparkSession
@@ -52,6 +53,27 @@ def build_session(
     #   spark.sql.parquet.columnarReaderBatchSize (e.g. 1024) or raise
     #   -XX:G1HeapRegionSize.
     return b.getOrCreate()
+
+
+# The ``args`` dests of the maintenance block: each op runs on the table,
+# they print one JSON report together, and the run exits without ingesting.
+MAINTENANCE_OPS = (
+    "compact_sort_by", "compact_zorder_by", "expire_keep",
+    "purge_below_watermark", "rebucket", "rename_column", "rollback",
+    "drop_column", "delete_where", "update_where", "merge_into",
+    "replicate_to", "remove_orphans", "describe", "history", "state_digest",
+)
+# Every command that needs --table but no event log or checkpoint: the
+# maintenance block plus the single-purpose commands handled before it.
+STANDALONE_OPS = MAINTENANCE_OPS + (
+    "lookup", "refresh_view", "bootstrap", "create_branch", "tag", "publish",
+)
+
+
+def _given(args: argparse.Namespace, dests: tuple[str, ...]) -> bool:
+    """True when any of ``dests`` was set: a flag is on, or an option holds
+    a value (``--rebucket 0`` and ``--rollback 0`` count)."""
+    return any(getattr(args, d) not in (None, False) for d in dests)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -205,9 +227,9 @@ def main(argv: list[str] | None = None) -> int:
                         "merge the snapshot table as epoch 0 of --stream-id, "
                         "then exit. Ingest the events with lsn > "
                         "--bootstrap-lsn in a run with a DIFFERENT --stream-id: "
-                        "under this one, the tail's batch 0 counts as the "
-                        "already-committed epoch 0 and is skipped without an "
-                        "error")
+                        "under this one, the tail's batch 0 would count as the "
+                        "already-committed epoch 0, so an ingest with a fresh "
+                        "checkpoint is refused")
     p.add_argument("--bootstrap-lsn", type=int, default=0,
                    help="log position the --bootstrap snapshot was taken at "
                         "(stamped on rows lacking a _lsn column)")
@@ -240,31 +262,7 @@ def main(argv: list[str] | None = None) -> int:
         args.events, args.table, args.checkpoint = f"{tmp}/log", f"{tmp}/table", f"{tmp}/ckpt"
         args.available_now, args.create = True, True
     else:
-        maintenance_only = (
-            args.lookup
-            or args.refresh_view
-            or args.compact_sort_by
-            or args.compact_zorder_by
-            or args.rebucket is not None
-            or args.rename_column is not None
-            or args.rollback is not None
-            or args.drop_column is not None
-            or args.expire_keep is not None
-            or args.purge_below_watermark
-            or args.delete_where is not None
-            or args.update_where is not None
-            or args.merge_into is not None
-            or args.replicate_to is not None
-            or args.remove_orphans
-            or args.describe
-            or args.history
-            or args.state_digest
-            or args.bootstrap
-            or args.create_branch
-            or args.tag
-            or args.publish
-        )
-        if maintenance_only:
+        if _given(args, STANDALONE_OPS):
             if not args.table:
                 p.error("maintenance commands require --table")
         elif not (args.events and args.table and args.checkpoint):
@@ -336,24 +334,7 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps(view.refresh()))
         return 0
 
-    if (
-        args.compact_sort_by
-        or args.compact_zorder_by
-        or args.expire_keep is not None
-        or args.purge_below_watermark
-        or args.rebucket is not None
-        or args.rename_column is not None
-        or args.rollback is not None
-        or args.drop_column is not None
-        or args.delete_where is not None
-        or args.update_where is not None
-        or args.merge_into is not None
-        or args.replicate_to is not None
-        or args.remove_orphans
-        or args.describe
-        or args.history
-        or args.state_digest
-    ):
+    if _given(args, MAINTENANCE_OPS):
         from pyspark.sql import functions as F
 
         out = {}
@@ -441,6 +422,20 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps(out))
         return 0
 
+    # A fresh checkpoint numbers its micro-batches from 0 again, and the
+    # ingest skips every batch at or below the stream's last committed
+    # epoch as a replay: under a used stream id it would drop the tail's
+    # first batches without an error.
+    last_epoch = table.last_epoch(args.stream_id)
+    if last_epoch >= 0 and not os.path.exists(
+        os.path.join(args.checkpoint, "metadata")
+    ):
+        p.error(
+            f"stream {args.stream_id!r} already committed epoch {last_epoch} "
+            f"to {args.table}, and the checkpoint {args.checkpoint} is new: its "
+            "batches would be skipped as replays. Resume from the checkpoint "
+            "that stream used, or ingest under a new --stream-id"
+        )
     metrics = MetricsLog(args.metrics or f"{args.table}/_metrics/{args.stream_id}.jsonl")
     replicas = None
     if args.replica:

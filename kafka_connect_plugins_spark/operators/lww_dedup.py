@@ -8,26 +8,21 @@ ClickHouseFlattenTransformer.kt:46-57) keyed on the SinkRecord's monotonic
 within any batch, keep only the event with the greatest (lsn, tiebreak) per
 key. Ties on equal LSN break deterministically on the tiebreak column.
 
-Two physical strategies:
-
-- ``max_by`` (default): ``groupBy(keys).agg(max_by(struct(*cols), ord))``.
-  Spark plans this as a hash aggregate with a MAP-SIDE PARTIAL phase, so each
-  input partition pre-collapses its duplicates before the shuffle — at
-  10^10-event scale with heavy per-key update rates this moves a small
-  fraction of the input over the network. This is the scale path.
-- ``window``: ``row_number() OVER (PARTITION BY keys ORDER BY ord DESC) = 1``.
-  Full shuffle + per-partition sort of ALL rows; kept for parity testing and
-  for when the full ordered history per key is needed downstream.
+The winner step is :func:`~kafka_connect_plugins_spark.functions.lww.latest_per_key`,
+the one the lake table's merge uses: a ``max_by`` aggregate whose map-side
+partial phase pre-collapses each input partition's duplicates before the
+shuffle, so heavy per-key update rates move a small fraction of the input.
 """
 
 from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafka_connect_plugins_spark.config import ConfigDef, ConfigException
+from kafka_connect_plugins_spark.functions.lww import latest_per_key
 from kafka_connect_plugins_spark.operators.base import Stage
 
 
@@ -37,7 +32,6 @@ class LwwDedup(Stage):
         .define("key.columns", str, "comma-separated dedup key columns")
         .define("lsn.column", str, "monotonic log sequence number", default="offset")
         .define("tiebreak.column", str, "deterministic tiebreak on equal LSN", default="")
-        .define("strategy", str, "max_by | window", default="max_by")
     )
 
     def configure(self, config: dict[str, Any]) -> None:
@@ -46,31 +40,13 @@ class LwwDedup(Stage):
             raise ConfigException("key.columns must name at least one column")
         self.lsn = config["lsn.column"]
         self.tiebreak = config["tiebreak.column"] or None
-        self.strategy = config["strategy"]
-        if self.strategy not in ("max_by", "window"):
-            raise ConfigException(f"unknown strategy {self.strategy!r}")
-
-    def _ordering(self) -> F.Column:
-        # A plain column ordering keeps max_by inside whole-stage codegen; a
-        # struct-valued ordering falls back to an interpreted comparator that
-        # measured 5-12x slower AND anti-scaled with cores (lock contention),
-        # so the struct form is used only when a tiebreak is requested.
-        if self.tiebreak:
-            return F.struct(F.col(self.lsn), F.col(self.tiebreak))
-        return F.col(self.lsn)
 
     def apply(self, df: DataFrame) -> DataFrame:
-        if self.strategy == "window":
-            order = [F.col(self.lsn).desc()]
-            if self.tiebreak:
-                order.append(F.col(self.tiebreak).desc())
-            w = Window.partitionBy(*self.keys).orderBy(*order)
-            return (
-                df.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-        payload = [c for c in df.columns if c not in self.keys]
-        winner = F.max_by(F.struct(*[F.col(c) for c in payload]), self._ordering()).alias("__w")
-        out = df.groupBy(*self.keys).agg(winner)
-        return out.select(*self.keys, *[F.col("__w").getField(c).alias(c) for c in payload])
+        # The tiebreak is a column of any orderable type, so it cannot be
+        # packed into the LSN: only then is the ordering a struct.
+        order = (
+            F.struct(F.col(self.lsn), F.col(self.tiebreak))
+            if self.tiebreak
+            else F.col(self.lsn)
+        )
+        return latest_per_key(df, self.keys, order)

@@ -3,7 +3,6 @@
 from kafka_connect_plugins_spark.plans.lake_table import LakeTable, MergeStats
 from kafka_connect_plugins_spark.plans.replication import (
     ensure_replica,
-    export_changes_envelope,
     replicate,
 )
 
@@ -11,6 +10,5 @@ __all__ = [
     "LakeTable",
     "MergeStats",
     "ensure_replica",
-    "export_changes_envelope",
     "replicate",
 ]

@@ -227,12 +227,10 @@ class IncrementalAggView:
         table,
         group_cols: list[str],
         measures: dict[str, Column],
-        count_col: str = "n_rows",
     ):
         self.table = table
         self.group_cols = list(group_cols)
         self.measures = dict(measures)
-        self.count_col = count_col
 
     def full(self, version: int | None = None) -> DataFrame:
         df = self.table.read(version)
@@ -244,21 +242,18 @@ class IncrementalAggView:
                 F.count(expr).alias(nn_col(name))
                 for name, expr in self.measures.items()
             ],
-            F.count(F.lit(1)).alias(self.count_col),
+            F.count(F.lit(1)).alias("n_rows"),
         )
 
     def delta(self, from_version: int, to_version: int | None = None) -> DataFrame:
         changes = self.table.read_changes(
             from_version, to_version, include_preimages=True
         )
-        return agg_delta(changes, self.group_cols, self.measures, self.count_col)
+        return agg_delta(changes, self.group_cols, self.measures)
 
     def advance(
         self, state: DataFrame, from_version: int, to_version: int | None = None
     ) -> DataFrame:
         return apply_agg_delta(
-            state,
-            self.delta(from_version, to_version),
-            self.group_cols,
-            self.count_col,
+            state, self.delta(from_version, to_version), self.group_cols
         )

@@ -65,6 +65,8 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kafka_connect_plugins_spark.functions.lww import latest_per_key
+
 LSN_COL = "_lsn"
 TOMBSTONE_COL = "_tombstone"
 BUCKET_COL = "_bucket"
@@ -1425,28 +1427,21 @@ class LakeTable:
         every key, and the ``groupBy`` that follows needs no second shuffle.
 
         On an equal LSN the LATER frame wins: its rows carry ``__src`` = 1
-        and the ordering packs ``lsn * 2 + __src`` into one long, a plain
-        column that stays inside whole-stage codegen (a struct ordering
-        drops to an interpreted comparator, measured 5-12x slower). Pass
-        ``[target, source]`` so that replaying an applied event is a no-op.
-        NULL key columns group like any other value.
+        and the ordering packs ``lsn * 2 + __src`` into one long (the
+        ordering rule of :func:`latest_per_key`). Pass ``[target, source]``
+        so that replaying an applied event is a no-op.
         """
         df = frames[0].withColumn("__src", F.lit(0))
         for i, f_ in enumerate(frames[1:], 1):
             df = df.unionByName(
                 f_.withColumn("__src", F.lit(i)), allowMissingColumns=True
             )
-        pay = [c for c in df.columns if c not in (*keys, "__src")]
-        return (
-            LakeTable._by_bucket(df, buckets, keep_slot=True)
-            .groupBy("__slot", *keys)
-            .agg(
-                F.max_by(
-                    F.struct(*pay), F.col(LSN_COL) * 2 + F.col("__src")
-                ).alias("__w")
-            )
-            .select(*keys, *[F.col(f"__w.{c}").alias(c) for c in pay])
-        )
+        return latest_per_key(
+            LakeTable._by_bucket(df, buckets, keep_slot=True),
+            ["__slot", *keys],
+            F.col(LSN_COL) * 2 + F.col("__src"),
+            payload=[c for c in df.columns if c not in (*keys, "__src")],
+        ).drop("__slot")
 
     @staticmethod
     def _is_marker(df: DataFrame) -> Column:
@@ -1907,7 +1902,6 @@ class LakeTable:
         buckets: list[int] | None = None,
         sort_by: list[str] | None = None,
         zorder_by: list[str] | None = None,
-        zorder_bits: int = 8,
     ) -> int:
         """Re-cluster every data bucket (or the ``buckets`` subset) in one
         new snapshot: Iceberg ``rewrite_data_files`` with a sort order. The
@@ -1947,7 +1941,7 @@ class LakeTable:
         if not todo:
             return 0
         z = self._zorder_column(
-            self._read_buckets(manifest, todo), zorder_by, zorder_bits
+            self._read_buckets(manifest, todo), zorder_by, bits=8
         ) if zorder_by else None
         self._rewrite(
             manifest,

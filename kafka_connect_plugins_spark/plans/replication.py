@@ -52,10 +52,7 @@ import zlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyspark.sql import types as T
-
-from ..functions.hashing import crc32_pmod
-from .lake_table import LSN_COL, TOMBSTONE_COL, LakeTable
+from .lake_table import TOMBSTONE_COL, LakeTable
 
 CHANGE_TYPE_COL = "_change_type"
 COMMIT_VERSION_COL = "_commit_version"
@@ -115,90 +112,6 @@ def ensure_replica(
         root,
         key_columns=list(m["key_columns"]),
         num_buckets=int(num_buckets or m["num_buckets"]),
-    )
-
-
-def export_changes_envelope(
-    source: LakeTable,
-    from_version: int,
-    to_version: int | None = None,
-    topic: str | None = None,
-    num_partitions: int = 16,
-) -> DataFrame:
-    """The egress direction: a table's change feed as Connect-envelope
-    records — what a Kafka Connect SOURCE connector would publish for this
-    table (the reference is the SINK half of that loop; this closes it, so
-    a lake table can feed the same downstream fan-out its own input topic
-    did).
-
-    Wire contract (the package's envelope schema, ``envelope.py``):
-
-    - ``key``   — canonical JSON of the key columns (one record key string)
-    - ``value`` — the non-key payload struct; **NULL for deletes** (Kafka's
-      tombstone encoding, the same one ``SoftDeleteToTombstone`` produces)
-    - ``partition`` — the REFERENCE's own CRC32-pmod router over the key
-      (``functions/hashing.py`` golden-parity partitioner), so the export
-      lands keys on the same partitions the reference's ``Partitioner``
-      would pick
-    - ``offset`` — the row's commit-LSN (the envelope contract: offset
-      generalizes to the LWW LSN; per-key monotone across exports)
-    - ``headers`` — ``_change_type`` and ``_commit_version`` for consumers
-      that want the CDF classification without inspecting the value
-
-    Map-only over the (bucket-pruned) change feed — no shuffle; write or
-    publish the result wherever the transport lives (JSON lines, parquet,
-    a real Kafka sink on a cluster). Re-ingest with
-    :func:`envelope_feed_to_merge_source` + ``merge()``.
-    """
-    m = source.manifest(to_version)
-    keys = m["key_columns"]
-    changes = source.read_changes(from_version, to_version)
-    payload = [
-        c
-        for c in changes.columns
-        if c not in keys
-        and c not in (LSN_COL, CHANGE_TYPE_COL, COMMIT_VERSION_COL)
-    ]
-    key_json = F.to_json(F.struct(*[F.col(k) for k in keys]))
-    return changes.select(
-        F.lit(topic or os.path.basename(os.path.abspath(source.root))).alias(
-            "topic"
-        ),
-        crc32_pmod(key_json, num_partitions).alias("partition"),
-        F.col(LSN_COL).alias("offset"),
-        F.lit(None).cast("long").alias("timestamp"),
-        key_json.alias("key"),
-        F.create_map(
-            F.lit(CHANGE_TYPE_COL),
-            F.col(CHANGE_TYPE_COL),
-            F.lit(COMMIT_VERSION_COL),
-            F.col(COMMIT_VERSION_COL).cast("string"),
-        ).alias("headers"),
-        F.when(
-            F.col(CHANGE_TYPE_COL) != "delete",
-            F.struct(*[F.col(c) for c in payload]),
-        ).alias("value"),
-    )
-
-
-def envelope_feed_to_merge_source(
-    env: DataFrame, schema: T.StructType, keys: list[str]
-) -> DataFrame:
-    """Inverse of :func:`export_changes_envelope`: envelope records back
-    into ``merge()`` input. ``schema``/``keys`` are the destination table's
-    contract (in a deployment, the schema registry's subject for the topic).
-    Key columns parse out of the record-key JSON — present on every record
-    including tombstones, which carry no value to parse."""
-    key_schema = T.StructType([schema[k] for k in keys])
-    payload = [
-        f_ for f_ in schema.fields if f_.name not in keys and f_.name != LSN_COL
-    ]
-    k = F.from_json(F.col("key"), key_schema)
-    return env.select(
-        *[k[kc].alias(kc) for kc in keys],
-        *[F.col("value")[f_.name].alias(f_.name) for f_ in payload],
-        F.col("offset").alias(LSN_COL),
-        F.col("value").isNull().alias(TOMBSTONE_COL),
     )
 
 

@@ -23,6 +23,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_connect_plugins_spark.plans.lake_table import LSN_COL, TOMBSTONE_COL
+from kafka_connect_plugins_spark.sources.json_envelope import (
+    _dead_letter_select,
+    _parse_env_once,
+)
 
 __all__ = [
     "TX_ID_COL",
@@ -38,66 +42,6 @@ __all__ = [
 
 TX_ID_COL = "_tx_id"
 TX_ORDER_COL = "_tx_order"
-
-
-def _dead_letter_select(
-    parsed: DataFrame,
-    cols: list,
-    valid,
-    json_col: str,
-    keep_corrupt: bool,
-) -> DataFrame:
-    """Shared adapter tail enforcing the dead-letter contract.
-
-    Valid rows keep their parsed columns and a null ``_corrupt_record``;
-    INVALID rows (unknown op — e.g. Debezium ``t``/``m``, Mongo ``drop``/
-    ``invalidate`` — or an unparseable envelope) expose ONLY
-    ``_corrupt_record``: every data column, the LSN, and the tombstone
-    flag are nulled, so a consumer that merges the output without
-    filtering on ``_corrupt_record`` cannot upsert a phantom row at a
-    real LSN. With ``keep_corrupt=False`` invalid rows are dropped."""
-    ok = F.coalesce(valid, F.lit(False))
-    if not keep_corrupt:
-        return parsed.filter(ok).select(*cols)
-    out = parsed.select(
-        *cols,
-        ok.alias("__ok"),
-        F.when(~ok, F.col(json_col).cast("string")).alias("_corrupt_record"),
-    )
-    data = [
-        F.when(F.col("__ok"), F.col(n)).alias(n)
-        for n in out.columns
-        if n not in ("__ok", "_corrupt_record")
-    ]
-    return out.select(*data, "_corrupt_record")
-
-
-def _parse_env_once(df: DataFrame, json_col: str, env: T.StructType) -> DataFrame:
-    """Attach ``__env`` = parsed envelope, evaluated exactly once per row.
-
-    A bare ``from_json(...)`` alias is inlined by CollapseProject into the
-    validity filter and every extracted column, and per-column JSON schema
-    pruning then specializes each copy into a *distinct* expression that
-    codegen subexpression elimination cannot share — the envelope ends up
-    parsed (and, when ``json_col`` is itself computed, e.g. a ``to_json``
-    render in a test fixture, re-rendered) several times per row. Wrapping
-    the parse in a nondeterministic no-op guard (``spark_partition_id() >=
-    0`` is always true, so the value is unchanged and deterministic) pins it
-    to a single Project node: the optimizer may not duplicate, push past, or
-    collapse nondeterministic expressions, so the filter and all extracted
-    columns reference the one computed struct. Measured on a 1M-row
-    rendered tail: 3 full render+parse evaluations -> 1 (8.6 s -> 3.1 s).
-    The guard must be one no rule can fold: the earlier ``rand(7) >= -1``
-    is rewritten to ``true`` by Spark 4's ``OptimizeRand``, after which the
-    validity filter was pushed below the parse with its own pruned copy.
-    """
-    return df.withColumn(
-        "__env",
-        F.when(
-            F.spark_partition_id() >= F.lit(0),
-            F.from_json(F.col(json_col).cast("string"), env),
-        ),
-    )
 
 
 def debezium_envelope_schema(row_type: T.StructType) -> T.StructType:
@@ -295,9 +239,7 @@ def merge_source_to_envelope(
 def split_complete_transactions(
     src: DataFrame,
     markers: DataFrame | None = None,
-    tx_col: str = TX_ID_COL,
     lsn_col: str = LSN_COL,
-    marker_count_col: str = "event_count",
 ) -> tuple[DataFrame, DataFrame]:
     """Split a merge source into ``(ready, held)`` at transaction boundaries.
 
@@ -310,10 +252,10 @@ def split_complete_transactions(
     operator holds back the incomplete tail so an epoch's MERGE only ever
     applies whole transactions:
 
-    - **Marker mode** (``markers`` given — columns ``(tx_col,
-      marker_count_col)`` from the transaction topic's END events): a
+    - **Marker mode** (``markers`` given — columns ``(_tx_id,
+      event_count)`` from the transaction topic's END events): a
       transaction is ready iff its observed row count equals the marker's
-      count. One count aggregate on ``tx_col`` (output is one row per
+      count. One count aggregate on ``_tx_id`` (output is one row per
       transaction — tiny next to the data) joined back semi/anti.
     - **Tail-holdback mode** (no markers): the WAL serializes commits, so
       in LSN order a transaction's events are contiguous and only the
@@ -321,12 +263,12 @@ def split_complete_transactions(
       transaction owning the max-LSN row; everything below it is committed.
       A one-row aggregate, broadcast back — no data shuffle.
 
-    Rows with a null ``tx_col`` are non-transactional (autocommit) and are
+    Rows with a null ``_tx_id`` are non-transactional (autocommit) and are
     always ready. ``held`` rows re-enter on the next epoch read: in
     tail-holdback mode every held LSN exceeds every ready LSN, so the
     ledger watermark ``max(ready._lsn)`` re-serves exactly the held rows.
     """
-    tx = F.col(tx_col)
+    tx = F.col(TX_ID_COL)
     if markers is not None:
         counts = (
             src.filter(tx.isNotNull())
@@ -336,8 +278,8 @@ def split_complete_transactions(
         complete = (
             counts.join(
                 markers.select(
-                    F.col(tx_col).alias("__tx"),
-                    F.col(marker_count_col).cast("long").alias("__expected"),
+                    F.col(TX_ID_COL).alias("__tx"),
+                    F.col("event_count").cast("long").alias("__expected"),
                 ),
                 "__tx",
             )

@@ -40,7 +40,6 @@ def changelog(
     paths_per_repo: int = 200,
     hot_fraction: float = 0.3,
     num_partitions: int | None = None,
-    envelope_partitions: int = 8,
     header_list: bool = False,
 ) -> DataFrame:
     """Generate ``num_events`` change events in the envelope schema.
@@ -109,11 +108,11 @@ def changelog(
         content.alias("content"),
         F.when(is_delete_final, ts).alias("deleted_at"),
     )
-    # Envelope partition = key-hash routing, exactly Kafka's default
-    # partitioner shape (and the reference's ModifyPartition.kt:39-40
+    # Envelope partition (one of 8) = key-hash routing, exactly Kafka's
+    # default partitioner shape (and the reference's ModifyPartition.kt:39-40
     # CRC32-mod routing) — gives the per-partition lineage record real teeth.
     env_part = F.pmod(
-        F.crc32(F.concat_ws("|", repo, path_final)), F.lit(envelope_partitions)
+        F.crc32(F.concat_ws("|", repo, path_final)), F.lit(8)
     ).cast("int")
     hlist = (
         [

@@ -347,6 +347,42 @@ def test_cli_bootstrap_branch_publish(spark, tmp_path):
 
 
 @pytest.mark.slow
+def test_cli_refuses_fresh_checkpoint_under_used_stream_id(spark, tmp_path, capsys):
+    """An ingest with a new checkpoint under the stream id the bootstrap
+    committed epoch 0 to would skip the tail's batch 0 as a replay: the CLI
+    exits non-zero before it ingests, and the table stays as it was."""
+    from kafka_connect_plugins_spark.engine import create_repo_table
+    from kafka_connect_plugins_spark.plans.lake_table import LakeTable
+    from kafka_connect_plugins_spark.sources.changelog import changelog
+
+    events = changelog(spark, 600, num_repos=4, paths_per_repo=20)
+    snap_dir = str(tmp_path / "snapshot")
+    events.filter(F.col("offset") <= 300).select(
+        "value.repo", "value.path", "value.commit", "value.lang", "value.content"
+    ).dropDuplicates(["repo", "path"]).write.parquet(snap_dir)
+    tail_dir = str(tmp_path / "tail")
+    events.filter(F.col("offset") > 300).write.parquet(tail_dir)
+    table_dir = str(tmp_path / "table")
+    create_repo_table(spark, table_dir, num_buckets=4)
+    _main_cli(
+        spark, "--table", table_dir, "--bootstrap", snap_dir,
+        "--bootstrap-lsn", "300", "--master", "local[4]",
+    )
+    version = LakeTable.load(spark, table_dir).manifest()["version"]
+
+    with pytest.raises(SystemExit) as exc:
+        _main_cli(
+            spark, "--events", tail_dir, "--table", table_dir,
+            "--checkpoint", str(tmp_path / "ckpt"), "--available-now",
+            "--master", "local[4]",
+        )
+    assert exc.value.code != 0
+    err = capsys.readouterr().err
+    assert "'default'" in err and "epoch 0" in err and "--stream-id" in err
+    assert LakeTable.load(spark, table_dir).manifest()["version"] == version
+
+
+@pytest.mark.slow
 def test_cli_mutations_and_vacuum(spark, tmp_path):
     """--delete-where / --update-where / --remove-orphans: the compliance and
     storage-hygiene maintenance verbs, each its own CLI invocation."""

@@ -74,3 +74,28 @@ def test_read_json_envelope_file_and_merge(spark, tmp_path):
         .collect()
     )
     assert {r.key: r.content for r in last} == {"r0|a": "c4", "r1|a": "c5"}
+
+
+def test_dead_letter_rows_carry_no_data_and_parse_once(spark):
+    """A line without ``topic`` is a dead letter like an unparseable one:
+    only ``_corrupt_record`` is set, so no phantom row keeps its offset,
+    key or value. A value-NULL tombstone stays a valid row. Each line is
+    parsed by one ``from_json``."""
+    no_topic = json.dumps(
+        {"partition": 0, "offset": 7, "key": "k7", "value": {"repo": "x"}}
+    )
+    tombstone = json.dumps({"topic": "t", "partition": 0, "offset": 8, "key": "r1|a"})
+    raw = spark.createDataFrame(
+        [(_env(1),), (no_topic,), (tombstone,), ("{nope",)], "value string"
+    )
+    out = parse_json_envelope(raw, VALUE_T, keep_corrupt=True)
+    dead = out.filter(F.col("_corrupt_record").isNotNull()).collect()
+    assert sorted(r._corrupt_record for r in dead) == sorted([no_topic, "{nope"])
+    for r in dead:
+        assert all(r[c] is None for c in out.columns if c != "_corrupt_record"), r
+    kept = parse_json_envelope(raw, VALUE_T)
+    assert sorted((r.offset, r.value is None) for r in kept.collect()) == [
+        (1, False), (8, True),
+    ]
+    plan = kept._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("from_json") == 1, plan

@@ -1,8 +1,9 @@
-"""LWW dedup: both strategies agree and pick max-(lsn, tiebreak) per key."""
+"""LWW dedup picks max-(lsn, tiebreak) per key."""
 
 import pytest
 from pyspark.sql import types as T
 
+from kafka_connect_plugins_spark.config import ConfigException
 from kafka_connect_plugins_spark.operators import LwwDedup
 from tests.helpers import make_envelope_df
 
@@ -18,10 +19,9 @@ ROWS = [
 ]
 
 
-@pytest.mark.parametrize("strategy", ["max_by", "window"])
-def test_keeps_max_lsn_per_key(spark, strategy):
+def test_keeps_max_lsn_per_key(spark):
     df = make_envelope_df(spark, VALUE_T, ROWS)
-    op = LwwDedup({"key.columns": "key", "lsn.column": "offset", "strategy": strategy})
+    op = LwwDedup({"key.columns": "key", "lsn.column": "offset"})
     got = {r["key"]: (r["offset"], r["value"]["content"]) for r in op.apply(df).collect()}
     assert got == {"a": (9, "a-new"), "b": (2, "b-only"), "c": (3, "c-old")}
 
@@ -32,19 +32,13 @@ def test_tiebreak_deterministic(spark):
         {"key": "k", "offset": 7, "timestamp": 200, "value": {"content": "second"}},
     ]
     df = make_envelope_df(spark, VALUE_T, rows)
-    for strategy in ("max_by", "window"):
-        op = LwwDedup(
-            {
-                "key.columns": "key",
-                "lsn.column": "offset",
-                "tiebreak.column": "timestamp",
-                "strategy": strategy,
-            }
-        )
-        assert op.apply(df).first()["value"]["content"] == "second"
+    op = LwwDedup(
+        {"key.columns": "key", "lsn.column": "offset", "tiebreak.column": "timestamp"}
+    )
+    assert op.apply(df).first()["value"]["content"] == "second"
 
 
-def test_strategies_agree_on_random_input(spark):
+def test_random_input_matches_python_oracle(spark):
     import random
 
     rng = random.Random(42)
@@ -52,10 +46,18 @@ def test_strategies_agree_on_random_input(spark):
         {"key": f"k{rng.randrange(20)}", "offset": i, "value": {"content": f"c{i}"}}
         for i in range(500)
     ]
+    oracle: dict[str, int] = {}
+    for r in rows:
+        oracle[r["key"]] = max(oracle.get(r["key"], -1), r["offset"])
     df = make_envelope_df(spark, VALUE_T, rows)
-    base = {"key.columns": "key", "lsn.column": "offset"}
-    a = LwwDedup({**base, "strategy": "max_by"}).apply(df)
-    b = LwwDedup({**base, "strategy": "window"}).apply(df)
-    rows_a = sorted((r["key"], r["offset"]) for r in a.collect())
-    rows_b = sorted((r["key"], r["offset"]) for r in b.collect())
-    assert rows_a == rows_b
+    out = LwwDedup({"key.columns": "key", "lsn.column": "offset"}).apply(df)
+    got = {r["key"]: (r["offset"], r["value"]["content"]) for r in out.collect()}
+    assert got == {k: (o, f"c{o}") for k, o in oracle.items()}
+
+
+def test_strategy_key_is_rejected():
+    assert [k.name for k in LwwDedup.config_def.keys] == [
+        "key.columns", "lsn.column", "tiebreak.column",
+    ]
+    with pytest.raises(ConfigException, match="strategy"):
+        LwwDedup({"key.columns": "k", "strategy": "window"})

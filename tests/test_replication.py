@@ -166,91 +166,6 @@ def test_maintenance_only_commit_syncs_cleanly(spark, tmp_path, source):
     assert replicate(source, replica)["rows_applied"] == 0
 
 
-class TestEnvelopeRoundTrip:
-    """Change feed -> Connect-envelope records -> re-ingest: the full loop
-    (the reference consumes such a topic; export_changes_envelope produces
-    one), over a real JSON-lines transport so the JsonConverter seam
-    (parse_json_envelope) is exercised, tombstones included."""
-
-    def _payload_type(self, source):
-        from pyspark.sql import types as T
-
-        return T.StructType([T.StructField("content", T.StringType(), True)])
-
-    def test_json_lines_round_trip_digest(self, spark, tmp_path, source):
-        from kafka_connect_plugins_spark.plans.replication import (
-            envelope_feed_to_merge_source,
-            export_changes_envelope,
-        )
-        from kafka_connect_plugins_spark.sources.json_envelope import (
-            parse_json_envelope,
-        )
-
-        # era 2 on the source: one update, one delete
-        source.merge(
-            spark.createDataFrame(
-                [("repo-1", "f1.py", 900, False, "patched"),
-                 ("repo-2", "f2.py", 901, True, None)],
-                "repo string, path string, _lsn long, _tombstone boolean, "
-                "content string",
-            ),
-            epoch_id=1,
-        )
-        # ship the two version ranges as two topic segments so the delete
-        # actually crosses the wire as a value-NULL tombstone record
-        head = source.manifest()["version"]
-        dest = LakeTable.create(
-            spark, str(tmp_path / "dest"), key_columns=["repo", "path"],
-            num_buckets=4,
-        )
-        for epoch, (lo, hi) in enumerate([(0, 1), (1, head)]):
-            env = export_changes_envelope(source, lo, hi, topic="repo_content")
-            wire = str(tmp_path / f"topic_{epoch}")
-            env.select(
-                F.to_json(F.struct(*env.columns)).alias("line")
-            ).write.text(wire)
-            raw = spark.read.text(wire).withColumnRenamed("value", "line")
-            parsed = parse_json_envelope(
-                raw, self._payload_type(source), json_col="line"
-            )
-            feed = envelope_feed_to_merge_source(
-                parsed, source.read().schema, ["repo", "path"]
-            )
-            dest.merge(feed, epoch_id=epoch)
-        assert dest.state_digest() == source.state_digest()
-        assert dest.read().filter(F.col("path") == "f2.py").count() == 0
-        assert (
-            dest.read().filter(F.col("path") == "f1.py").first()["content"]
-            == "patched"
-        )
-
-    def test_partitions_follow_reference_router(self, spark, tmp_path, source):
-        from kafka_connect_plugins_spark.functions.hashing import crc32_pmod
-        from kafka_connect_plugins_spark.plans.replication import (
-            export_changes_envelope,
-        )
-
-        env = export_changes_envelope(source, 0, num_partitions=10)
-        bad = env.filter(
-            F.col("partition") != crc32_pmod(F.col("key"), 10)
-        ).count()
-        assert bad == 0
-        # tombstone encoding: deletes are value-NULL records
-        source.merge(
-            spark.createDataFrame(
-                [("repo-2", "f2.py", 901, True, None)],
-                "repo string, path string, _lsn long, _tombstone boolean, "
-                "content string",
-            ),
-            epoch_id=1,
-        )
-        deletes = export_changes_envelope(source, 1).filter(
-            F.col("headers")["_change_type"] == "delete"
-        )
-        assert deletes.count() == 1
-        assert deletes.filter(F.col("value").isNull()).count() == 1
-
-
 def test_streaming_ingest_with_follower_replica(spark, tmp_path):
     """StreamingIngest(replicas=[...]): the replica follows every committed
     epoch; after the drain its digest equals the source's, and a second
