@@ -73,7 +73,10 @@ STANDALONE_OPS = MAINTENANCE_OPS + (
 def _given(args: argparse.Namespace, dests: tuple[str, ...]) -> bool:
     """True when any of ``dests`` was set: a flag is on, or an option holds
     a value (``--rebucket 0`` and ``--rollback 0`` count)."""
-    return any(getattr(args, d) not in (None, False) for d in dests)
+    # identity, not ``in``: ``0 == False``, so ``0 in (None, False)`` holds
+    return any(
+        v is not None and v is not False for v in (getattr(args, d) for d in dests)
+    )
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -24,7 +24,7 @@ as two narrow Spark plans:
   wide shuffle of the state.
 
 Group disappearance is exact, not heuristic: every delta carries a signed
-row count (``count_col``), and groups whose maintained count reaches zero
+row count (``COUNT_COL``), and groups whose maintained count reaches zero
 are dropped by ``apply_agg_delta`` — a group deleted and re-inserted within
 one feed nets out correctly because the folds are signed sums.
 
@@ -56,6 +56,8 @@ from .lake_table import cdf_classify_emit
 _ADD_TYPES = ("insert", "update_postimage")
 #: change types whose column values describe the OLD state (retract it)
 _SUB_TYPES = ("delete", "update_preimage")
+#: state column holding each group's signed live-row count
+COUNT_COL = "n_rows"
 
 
 def nn_col(measure: str) -> str:
@@ -75,7 +77,6 @@ def agg_delta(
     changes: DataFrame,
     group_cols: list[str],
     measures: dict[str, Column],
-    count_col: str = "n_rows",
 ) -> DataFrame:
     """Signed per-group aggregate contribution of a change feed.
 
@@ -83,7 +84,7 @@ def agg_delta(
     read (the shape ``read_changes(include_preimages=True)`` emits).
     ``measures`` maps output column name -> additive row expression
     (e.g. ``{"revenue": F.col("price") * (1 - F.col("discount"))}``).
-    A signed live-row count is always included as ``count_col`` — it is
+    A signed live-row count is always included as ``COUNT_COL`` — it is
     what lets ``apply_agg_delta`` drop emptied groups exactly — and each
     measure additionally carries a signed non-NULL contribution count
     ``__nn_<name>`` — what lets it emit NULL (not 0) for a group whose
@@ -93,8 +94,10 @@ def agg_delta(
     Plan shape: one narrow projection + one hash aggregate shuffled on the
     group keys, over the change feed only (never the table).
     """
-    if count_col in measures:
-        raise ValueError(f"measure name {count_col!r} collides with count_col")
+    if COUNT_COL in measures:
+        raise ValueError(
+            f"measure name {COUNT_COL!r} collides with the row-count column"
+        )
     sign = _sign()
     contribs = (
         [(sign.cast("long") * expr).alias(name) for name, expr in measures.items()]
@@ -104,10 +107,10 @@ def agg_delta(
             )
             for name, expr in measures.items()
         ]
-        + [sign.cast("long").alias(count_col)]
+        + [sign.cast("long").alias(COUNT_COL)]
     )
     out_names = (
-        list(measures) + [nn_col(n) for n in measures] + [count_col]
+        list(measures) + [nn_col(n) for n in measures] + [COUNT_COL]
     )
     return (
         changes.select(*group_cols, *contribs)
@@ -120,12 +123,11 @@ def apply_agg_delta(
     state: DataFrame,
     delta: DataFrame,
     group_cols: list[str],
-    count_col: str = "n_rows",
 ) -> DataFrame:
     """Fold one delta (from ``agg_delta``) into the maintained view state.
 
     ``state`` and ``delta`` must share the schema ``group_cols + measures
-    [+ their ``__nn_*`` non-NULL counts] + count_col``. Groups whose
+    [+ their ``__nn_*`` non-NULL counts] + COUNT_COL``. Groups whose
     maintained row count reaches zero disappear from the view, exactly as
     they would under recomputation; a measure whose non-NULL count reaches
     zero reads NULL, exactly as SQL ``sum`` over its all-NULL group would
@@ -141,8 +143,8 @@ def apply_agg_delta(
             f"state columns {sorted(state.columns)} != delta columns "
             f"{sorted(delta.columns)}"
         )
-    if count_col not in measure_cols:
-        raise ValueError(f"state is missing the row-count column {count_col!r}")
+    if COUNT_COL not in measure_cols:
+        raise ValueError(f"state is missing the row-count column {COUNT_COL!r}")
     folded = (
         state.unionByName(delta)
         .groupBy(*group_cols)
@@ -156,7 +158,7 @@ def apply_agg_delta(
         )
         for c in measure_cols
     ]
-    return folded.select(*group_cols, *out).filter(F.col(count_col) > 0)
+    return folded.select(*group_cols, *out).filter(F.col(COUNT_COL) > 0)
 
 
 def snapshot_diff(
@@ -242,7 +244,7 @@ class IncrementalAggView:
                 F.count(expr).alias(nn_col(name))
                 for name, expr in self.measures.items()
             ],
-            F.count(F.lit(1)).alias("n_rows"),
+            F.count(F.lit(1)).alias(COUNT_COL),
         )
 
     def delta(self, from_version: int, to_version: int | None = None) -> DataFrame:

@@ -98,6 +98,8 @@ def _contains_map_type(dt: T.DataType) -> bool:
 # The equal-LSN tiebreak packs lsn*2+src into one long (see merge()); LSNs at
 # or above 2**62 would overflow the packing silently.
 _LSN_DOMAIN_MAX = 1 << 62
+# Bits per column in compact()'s z-order key (255 range boundaries each).
+_ZORDER_BITS = 8
 
 
 @dataclass
@@ -1837,12 +1839,10 @@ class LakeTable:
     # ------------------------------------------------------------------
     # maintenance
     # ------------------------------------------------------------------
-    def _zorder_column(
-        self, df: DataFrame, zorder_by: list[str], bits: int
-    ) -> Column:
+    def _zorder_column(self, df: DataFrame, zorder_by: list[str]) -> Column:
         """Morton (Z-order) key over the given columns, scale-shaped.
 
-        Per column, ``2**bits - 1`` range boundaries come from an ordered,
+        Per column, ``2**_ZORDER_BITS - 1`` range boundaries come from an ordered,
         capped distinct sample (works for every orderable type — strings
         included — where quantile sketches only cover numerics; the collect
         is bounded at 64k values however big the table is). Each row's
@@ -1853,7 +1853,7 @@ class LakeTable:
         Iceberg z-order rewrite semantics; everything after the boundary
         sample is map-only.
         """
-        n_bound = (1 << bits) - 1
+        n_bound = (1 << _ZORDER_BITS) - 1
 
         def rank_of(col: Column, bounds: list) -> Column:
             return F.aggregate(
@@ -1892,7 +1892,7 @@ class LakeTable:
                     b * len(ranks) + i,
                 )
                 for i, rank in enumerate(ranks)
-                for b in range(bits)
+                for b in range(_ZORDER_BITS)
             ),
             start=F.lit(0).cast("long"),
         )
@@ -1941,7 +1941,7 @@ class LakeTable:
         if not todo:
             return 0
         z = self._zorder_column(
-            self._read_buckets(manifest, todo), zorder_by, bits=8
+            self._read_buckets(manifest, todo), zorder_by
         ) if zorder_by else None
         self._rewrite(
             manifest,

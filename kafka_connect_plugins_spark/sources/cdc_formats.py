@@ -239,7 +239,6 @@ def merge_source_to_envelope(
 def split_complete_transactions(
     src: DataFrame,
     markers: DataFrame | None = None,
-    lsn_col: str = LSN_COL,
 ) -> tuple[DataFrame, DataFrame]:
     """Split a merge source into ``(ready, held)`` at transaction boundaries.
 
@@ -299,7 +298,7 @@ def split_complete_transactions(
         )
         return ready, held
     open_tx = (
-        src.agg(F.max_by(tx, F.col(lsn_col)).alias("__tx"))
+        src.agg(F.max_by(tx, F.col(LSN_COL)).alias("__tx"))
         .filter(F.col("__tx").isNotNull())
     )
     # null tx never equals __tx, so autocommit rows pass the anti-join

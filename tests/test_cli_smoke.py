@@ -383,6 +383,35 @@ def test_cli_refuses_fresh_checkpoint_under_used_stream_id(spark, tmp_path, caps
 
 
 @pytest.mark.slow
+def test_cli_rollback_to_version_zero(spark, tmp_path):
+    """``--rollback 0`` is a maintenance command like any other version:
+    0 is falsy, but it still counts as given, so the run needs only
+    --table and commits the rollback."""
+    from kafka_connect_plugins_spark.plans.lake_table import LakeTable
+
+    root = str(tmp_path / "t")
+    t = LakeTable.create(spark, root, key_columns=["id"], num_buckets=4)
+    for epoch in range(2):
+        t.merge(
+            spark.range(10).select(
+                F.col("id"), F.lit(epoch).cast("long").alias("_lsn"),
+                F.lit(False).alias("_tombstone"), F.lit("x").alias("c"),
+            ),
+            epoch_id=epoch,
+        )
+    head = t.manifest()["version"]
+    assert head > 0
+    out = json.loads(_main_cli(
+        spark, "--table", root, "--rollback", "0", "--master", "local[4]",
+    ))
+    assert out["rollback_version"] == head + 1
+    m = LakeTable.load(spark, root).manifest()
+    assert m["version"] == head + 1
+    assert m["summary"]["rolled_back_to"] == 0
+    # version 0 is the empty table: no bucket files, no epoch guards
+    assert m["buckets"] == {} and m["epochs"] == {}
+
+
 def test_cli_mutations_and_vacuum(spark, tmp_path):
     """--delete-where / --update-where / --remove-orphans: the compliance and
     storage-hygiene maintenance verbs, each its own CLI invocation."""

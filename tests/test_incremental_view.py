@@ -121,7 +121,7 @@ def test_apply_rejects_mismatched_schema(spark):
 
 def test_agg_delta_rejects_count_collision(spark):
     changes = spark.createDataFrame([Row(lang="py", size=1, _change_type="insert")])
-    with pytest.raises(ValueError, match="count_col"):
+    with pytest.raises(ValueError, match="collides with the row-count column"):
         agg_delta(changes, ["lang"], {"n_rows": F.col("size")})
 
 

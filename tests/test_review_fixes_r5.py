@@ -163,7 +163,7 @@ class TestZorderBoundarySampling:
         # hash-ordered sample must spread boundaries over the full range.
         t = _table(spark, tmp_path)
         df = spark.range(0, 140_000).select(F.col("id").alias("x"))
-        z = t._zorder_column(df, ["x"], 8)
+        z = t._zorder_column(df, ["x"])
         top = df.filter(F.col("x") > 70_000).select(z.alias("z")).distinct()
         # old behavior: exactly 1 distinct rank for the whole upper half
         assert top.count() > 50
